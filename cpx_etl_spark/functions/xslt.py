@@ -1,6 +1,6 @@
-"""Minimal XSLT 1.0 subset interpreter on the stdlib xml.etree — so a
-REAL ``.xsl`` stylesheet executes in this container (libxslt/lxml are
-absent; lxml is used as the fast path when importable).
+"""Minimal XSLT 1.0 subset engine on the stdlib xml.etree — so a REAL
+``.xsl`` stylesheet executes without libxslt. Each stylesheet compiles
+once to bound closures; ``apply`` runs them per document.
 
 Parity: the reference's ``xslTransform``/``xslPipeline``
 (src/main/index.js:87-126) resolves a control document's ``xi:include``
@@ -49,7 +49,6 @@ from xml.sax.saxutils import escape, quoteattr
 
 XSL_NS = "http://www.w3.org/1999/XSL/Transform"
 _OPS = ("!=", ">=", "<=", "=", "<", ">")
-_MISSING = object()  # "kind not passed" sentinel for _run_node
 
 
 class XsltUnsupported(ValueError):
@@ -106,6 +105,14 @@ def _string(item) -> str:
     if isinstance(item, _Doc):
         return "".join(item.root.itertext())
     return "".join(item.itertext())
+
+
+def _fail(msg: str):
+    """fn(ctx) raising XsltUnsupported(msg) when it RUNS: an unsupported
+    instruction fails when executed, not when the stylesheet compiles."""
+    def fn(ctx):
+        raise XsltUnsupported(msg)
+    return fn
 
 
 import functools
@@ -272,12 +279,11 @@ def _split_args(inner: str) -> tuple[str, ...]:
 @functools.lru_cache(maxsize=8192)
 def _select_plan(path: str) -> tuple:
     """Classify a select expression once (selects are
-    stylesheet-static): the per-call string scans that dominated
-    _select's dispatch — strip, endswith/index, isalnum — run here a
-    single time per distinct expression. Returns (tag, payload,
-    stripped_path); tags: 0 '.', 1 position()/last(), 2 function call
-    (payload = (fname, inner)), 3 bare @attr, 4 bare name, 5 $var
-    (payload = the name), 6 general path."""
+    stylesheet-static): the string scans — strip, endswith/index,
+    isalnum — run a single time per distinct expression. Returns (tag,
+    payload, stripped_path); tags: 0 '.', 1 position()/last(), 2
+    function call (payload = (fname, inner)), 3 bare @attr, 4 bare name,
+    5 $var (payload = the name), 6 general path."""
     p = path.strip()
     if p == ".":
         return (0, None, p)
@@ -885,7 +891,7 @@ class MiniXslt:
                 # <xsl:copy-of select="@*"/> directly inside an element
                 # constructor copies the context node's attributes onto
                 # the element being built — the identity-transform
-                # idiom. Annotated as its own kind so _run_children
+                # idiom. Annotated as its own kind so _compile_body
                 # skips it (it is consumed by _element_markup) and a
                 # stray use outside an element start fails fast.
                 kind = "#attr-copy"
@@ -900,15 +906,14 @@ class MiniXslt:
             self._dynattrs[id(elem)] = tuple(
                 c for c in elem if _is_xsl(c, "attribute")
             )
-        # per-container instruction lists + per-element markup statics:
-        # the stylesheet tree is immutable across rows, so everything
+        # per-element markup statics: the stylesheet tree is immutable
+        # across rows, so everything
         # derivable from it alone (child kinds, whitespace-significant
         # text/tails, literal attributes without AVT expressions,
         # use-attribute-sets / attr-copy presence) compiles ONCE here
         # instead of being re-derived on every rendered node — ~25% of
         # apply() time at the q_xsl_execute row shape went to exactly
         # these re-derivations (profiled r13)
-        self._ops: dict[int, tuple] = {}
         self._emeta: dict[int, tuple] = {}
         self._lattrs: dict[int, tuple] = {}
         for elem in (e for r in self._sheet_roots for e in r.iter()):
@@ -960,14 +965,10 @@ class MiniXslt:
                     self._lattrs[id(elem)] = (tag, static, None)
                 else:
                     self._lattrs[id(elem)] = (tag, None, pairs)
-        # ops LAST: specializing a parent's child ops reads the
-        # children's _emeta/_lattrs, and iter() is preorder
-        for elem in (e for r in self._sheet_roots for e in r.iter()):
-            self._ops[id(elem)] = self._compile_ops(elem)
-        # r18 closure compilation: every static op list, select and test
-        # expression becomes a bound closure once per stylesheet — the
-        # per-row executor then runs closure bodies instead of tag-
-        # dispatch chains (see the compiled-evaluators section below)
+        # closure compilation: every instruction body, select, test and
+        # binding becomes a bound closure once per stylesheet, so the
+        # per-row executor runs closure bodies only (see the compiled-
+        # evaluators section below). Reads _emeta/_lattrs, built above.
         self._sel_fns: dict[str, object] = {}
         self._test_fns: dict[str, object] = {}
         self._bind_fns: dict[int, object] = {}
@@ -978,9 +979,7 @@ class MiniXslt:
         for root in self._sheet_roots:
             for elem in reversed(list(root.iter())):
                 if isinstance(elem.tag, str):
-                    self._cfns[id(elem)] = tuple(
-                        self._compile_fn(op) for op in self._ops[id(elem)]
-                    )
+                    self._cfns[id(elem)] = self._compile_body(elem)
         # fast template dispatch (r18): in a mode whose every match
         # pattern is '/' or a plain element name, the winning template
         # per node is a static function of the node's tag alone (equal
@@ -1016,137 +1015,95 @@ class MiniXslt:
             if ok:
                 self._fast_dispatch[mode] = (doc_rule, by_name)
 
-    # op tags for the precompiled _run_children lists
-    (_OP_TEXT, _OP_VAR, _OP_PARAM, _OP_NODE, _OP_BADCOPY, _OP_VALUEOF,
-     _OP_IF, _OP_LITELEM, _OP_APPLYT, _OP_CHOOSE) = range(10)
-
-    def _compile_ops(self, container: ET.Element) -> tuple:
-        """Compile a container's children into a flat instruction list
-        mirroring _run_children's dispatch — static text/tails are
-        escaped here, consumed-by-parent children (sort / with-param /
-        attribute / comments) are dropped, and a stray attr-copy keeps
-        its RENDER-time failure (emitted as a raising op) so behavior
-        matches the interpreted path exactly. The kinds that dominate
-        row stylesheets (value-of, xsl:text, xsl:if, choose,
-        apply-templates, literal elements with static attributes)
-        specialize to dedicated ops with their static payloads
-        extracted, skipping the generic _run_node dispatch; everything
-        else stays on the generic (_OP_NODE) path."""
-        ops: list[tuple] = []
+    def _compile_body(self, container: ET.Element) -> tuple:
+        """A container's children -> its fn(ctx) -> str closures, in
+        order. Static text/tails are escaped here; children consumed by
+        their parent (sort / with-param / attribute / comments) compile
+        to nothing; a stray attr-copy keeps its RENDER-time failure."""
+        fns: list = []
         t = container.text
         if t and t.strip():
-            ops.append((self._OP_TEXT, escape(t)))
+            fns.append(lambda ctx, _s=escape(t): _s)
         ckind = self._kind.get(id(container))
         for child in container:
-            kind = self._kind.get(id(child), None)
-            if kind is None:
-                la = self._lattrs.get(id(child))
-                if (
-                    la is not None
-                    and la[1] is not None
-                    and self._emeta.get(id(child)) == (None, False)
-                    and not self._dynattrs.get(id(child))
-                ):
-                    ops.append((self._OP_LITELEM, la[0], la[1], child))
-                else:
-                    ops.append((self._OP_NODE, child, None))
-            elif kind == "value-of":
-                ops.append((self._OP_VALUEOF, child.get("select", ".")))
-            elif kind == "text":
+            kind = self._kind.get(id(child))
+            if kind == "text":
                 txt = escape(child.text or "")
                 if txt:
-                    ops.append((self._OP_TEXT, txt))
-            elif kind == "if":
-                ops.append((self._OP_IF, child.get("test", ""), child))
-            elif kind == "choose":
-                whens = tuple(
-                    (b.get("test", ""), b)
-                    for b in child
-                    if _is_xsl(b, "when")
-                )
-                otherw = next(
-                    (b for b in child if _is_xsl(b, "otherwise")), None
-                )
-                ops.append((self._OP_CHOOSE, whens, otherw))
-            elif kind == "apply-templates":
-                ops.append((
-                    self._OP_APPLYT,
-                    child.get("select"),
-                    child.get("mode"),
-                    child,
-                    bool(self._sorts.get(id(child))),
-                    bool(self._wparams.get(id(child))),
-                ))
-            elif kind == "variable":
-                ops.append((self._OP_VAR, child))
-            elif kind == "param":
-                ops.append((self._OP_PARAM, child))
-            elif kind in ("sort", "with-param", "attribute", "#comment"):
-                pass  # consumed by the enclosing instruction/element
+                    fns.append(lambda ctx, _s=txt: _s)
             elif kind == "#attr-copy":
                 if ckind not in (None, "element", "copy"):
-                    ops.append((self._OP_BADCOPY, child))
-            else:
-                ops.append((self._OP_NODE, child, kind))
+                    fns.append(_fail(
+                        'copy-of select="@*" outside an element constructor'
+                    ))
+            elif kind not in ("sort", "with-param", "attribute", "#comment"):
+                fns.append(self._compile_instr(child, kind))
             tl = child.tail
             if tl and tl.strip():
-                ops.append((self._OP_TEXT, escape(tl)))
-        return tuple(ops)
+                fns.append(lambda ctx, _s=escape(tl): _s)
+        return tuple(fns)
 
-    def _compile_fn(self, op):
-        """One op tuple -> fn(ctx) -> str (r18). Each closure is the
-        exact body of the corresponding _run_children dispatch arm with
-        its static payload pre-bound (and selects/tests pre-compiled),
-        so the per-row loop never re-inspects op tags or re-plans
-        expressions. Side-effecting ops (variable/param bindings)
-        return ''."""
+    def _compile_instr(self, elem: ET.Element, kind: str | None):
+        """One instruction or literal result element -> fn(ctx) -> str,
+        its static payload pre-bound and its selects/tests pre-compiled.
+        Binding instructions (variable/param) fill the current scope
+        and return ''."""
 
-        def body(elem):
-            """Runner for a nested instruction body: when the body
-            declares no bindings (the common case), its already-
-            compiled closure list is inlined — no _run_children
-            re-entry, no scope push (identical semantics: the generic
-            path skips the scope for binding-free bodies too).
+        def body(e):
+            """Runner for a nested instruction body: a body that
+            declares no bindings (the common case) inlines its compiled
+            closures — no _run_children re-entry, no scope push.
             Requires children-first compilation order."""
-            fns = self._cfns.get(id(elem))
-            if fns is None or self._hasbind.get(id(elem), True):
-                return lambda ctx, _e=elem: self._run_children(_e, ctx)
+            fns = self._cfns[id(e)]
+            if self._hasbind[id(e)]:
+                return lambda ctx, _e=e: self._run_children(_e, ctx)
             if not fns:
                 return lambda ctx: ""
             if len(fns) == 1:
                 return fns[0]
             return lambda ctx, _f=fns: "".join(f(ctx) for f in _f)
 
-        tag = op[0]
-        if tag == self._OP_TEXT:
-            return lambda ctx, _s=op[1]: _s
-        if tag == self._OP_VALUEOF:
-            sel = self._compile_select(op[1])
+        if kind is None:  # literal result element
+            tag, static, pairs = self._lattrs[id(elem)]
+            if (
+                static is not None
+                and self._emeta[id(elem)] == (None, False)
+                and not self._dynattrs[id(elem)]
+            ):
+                def f_lit(ctx, _t=tag, _a=static, _b=body(elem)):
+                    inner = _b(ctx)
+                    return (f"<{_t}{_a}>{inner}</{_t}>" if inner
+                            else f"<{_t}{_a}/>")
+                return f_lit
 
-            def f_valueof(ctx, _s=sel):
+            def f_elem(ctx, _t=tag, _a=static, _p=pairs, _e=elem):
+                if _a is None:
+                    _a = "".join(
+                        f" {k}={quoteattr(self._avt(v, ctx))}" for k, v in _p
+                    )
+                return self._element_markup(_t, _e, ctx, _a)
+            return f_elem
+        if kind in ("value-of", "for-each", "copy-of"):
+            selfn = self._compile_select(elem.get("select", "."))
+        if kind == "value-of":
+            def f_valueof(ctx, _s=selfn):
                 items = _s(ctx)
                 return escape(_string(items[0])) if items else ""
             return f_valueof
-        if tag == self._OP_LITELEM:
-            sub = body(op[3])
-
-            def f_lit(ctx, _t=op[1], _a=op[2], _b=sub):
-                inner = _b(ctx)
-                return (f"<{_t}{_a}>{inner}</{_t}>" if inner
-                        else f"<{_t}{_a}/>")
-            return f_lit
-        if tag == self._OP_IF:
-            tst = self._compile_test(op[1])
-            sub = body(op[2])
-
-            def f_if(ctx, _t=tst, _b=sub):
+        if kind == "if":
+            def f_if(ctx, _t=self._compile_test(elem.get("test", "")),
+                     _b=body(elem)):
                 return _b(ctx) if _t(ctx) else ""
             return f_if
-        if tag == self._OP_CHOOSE:
+        if kind == "choose":
             whens = tuple(
-                (self._compile_test(t), body(b)) for t, b in op[1]
+                (self._compile_test(b.get("test", "")), body(b))
+                for b in elem
+                if _is_xsl(b, "when")
             )
-            otherw = body(op[2]) if op[2] is not None else None
+            otherw = next(
+                (body(b) for b in elem if _is_xsl(b, "otherwise")), None
+            )
 
             def f_choose(ctx, _w=whens, _o=otherw):
                 for t, br in _w:
@@ -1154,26 +1111,13 @@ class MiniXslt:
                         return br(ctx)
                 return _o(ctx) if _o is not None else ""
             return f_choose
-        if tag == self._OP_APPLYT:
-            _, sel, mode, elem2, has_sorts, has_wp = op
+        if kind == "apply-templates":
+            sel = elem.get("select")
             selfn = self._compile_select(sel) if sel is not None else None
-            if not has_sorts and not has_wp:
-                def f_applyt(ctx, _s=selfn, _m=mode):
-                    if _s is not None:
-                        nodes = _s(ctx)
-                    elif isinstance(ctx, ET.Element):
-                        nodes = self._node_children(ctx)
-                    elif isinstance(ctx, _Doc):
-                        nodes = [ctx.root]
-                    else:
-                        nodes = []
-                    return self._iterate(
-                        nodes, lambda n: self._apply_one(n, None, _m)
-                    )
-                return f_applyt
 
-            def f_applyt_full(ctx, _s=selfn, _m=mode, _e=elem2,
-                              _hs=has_sorts, _hw=has_wp):
+            def f_applyt(ctx, _s=selfn, _m=elem.get("mode"), _e=elem,
+                         _hs=bool(self._sorts[id(elem)]),
+                         _hw=bool(self._wparams[id(elem)])):
                 if _s is not None:
                     nodes = _s(ctx)
                 elif isinstance(ctx, ET.Element):
@@ -1188,75 +1132,76 @@ class MiniXslt:
                     (self._gather_params(_e, ctx) or None) if _hw else None
                 )
                 return self._iterate(
-                    nodes,
-                    lambda n, _p=tparams: self._apply_one(n, _p, _m),
+                    nodes, lambda n: self._apply_one(n, tparams, _m)
                 )
-            return f_applyt_full
-        if tag == self._OP_NODE:
-            elem, kind = op[1], op[2]
-            if kind == "for-each":
-                sel = self._compile_select(elem.get("select", "."))
-                has_sorts = bool(self._sorts.get(id(elem)))
-                sub = body(elem)
-                if not has_sorts and not self._needs_pos:
-                    def f_foreach(ctx, _s=sel, _b=sub):
-                        return "".join(_b(n) for n in _s(ctx))
-                    return f_foreach
-
-                def f_foreach_full(ctx, _s=sel, _e=elem, _b=sub,
-                                   _hs=has_sorts):
-                    nodes = _s(ctx)
-                    if _hs:
-                        nodes = self._sorted_nodes(nodes, _e, ctx)
-                    return self._iterate(nodes, _b)
-                return f_foreach_full
-            if kind == "call-template":
-                tname = elem.get("name", "")
-                telem = self.named.get(tname)
-                if telem is not None:
-                    wps = tuple(
-                        (wp.get("name", ""), self._compile_binding(wp))
-                        for wp in self._wparams.get(id(elem), ())
-                    )
-
-                    def f_callt(ctx, _t=telem, _w=wps):
-                        params = {n: f(ctx) for n, f in _w} or None
-                        self._enter_template()
-                        try:
-                            return self._run_children(_t, ctx,
-                                                      params=params)
-                        finally:
-                            self._tdepth -= 1
-                    return f_callt
-                # undeclared target: the interpreter raises when the
-                # call RUNS — preserve that timing
-                def f_callt_missing(ctx, _n=tname):
-                    raise XsltUnsupported(
-                        f"call to undeclared template {_n!r}"
-                    )
-                return f_callt_missing
-            return lambda ctx, _e=elem, _k=kind: self._run_node(_e, ctx, _k)
-        if tag == self._OP_VAR:
-            bind = self._compile_binding(op[1])
-
-            def f_var(ctx, _b=bind, _n=op[1].get("name", "")):
-                self._scopes[-1][_n] = _b(ctx)
-                return ""
-            return f_var
-        if tag == self._OP_PARAM:
-            bind = self._compile_binding(op[1])
-
-            def f_param(ctx, _b=bind, _n=op[1].get("name", "")):
-                if _n not in self._scopes[-1]:
-                    self._scopes[-1][_n] = _b(ctx)
-                return ""
-            return f_param
-
-        def f_badcopy(ctx):
-            raise XsltUnsupported(
-                'copy-of select="@*" outside an element constructor'
+            return f_applyt
+        if kind == "for-each":
+            def f_foreach(ctx, _s=selfn, _e=elem, _b=body(elem),
+                          _hs=bool(self._sorts[id(elem)])):
+                nodes = _s(ctx)
+                if _hs:
+                    nodes = self._sorted_nodes(nodes, _e, ctx)
+                return self._iterate(nodes, _b)
+            return f_foreach
+        if kind == "call-template":
+            tname = elem.get("name", "")
+            telem = self.named.get(tname)
+            if telem is None:
+                return _fail(f"call to undeclared template {tname!r}")
+            wps = tuple(
+                (wp.get("name", ""), self._compile_binding(wp))
+                for wp in self._wparams[id(elem)]
             )
-        return f_badcopy
+
+            def f_callt(ctx, _t=telem, _w=wps):
+                params = {n: f(ctx) for n, f in _w} or None
+                self._enter_template()
+                try:
+                    return self._run_children(_t, ctx, params=params)
+                finally:
+                    self._tdepth -= 1
+            return f_callt
+        if kind in ("variable", "param"):
+            # a param keeps a value already bound by with-param
+            def f_bind(ctx, _b=self._compile_binding(elem),
+                       _n=elem.get("name", ""), _v=kind == "variable"):
+                scope = self._scopes[-1]
+                if _v or _n not in scope:
+                    scope[_n] = _b(ctx)
+                return ""
+            return f_bind
+        if kind == "copy-of":
+            def f_copyof(ctx, _s=selfn):
+                return "".join(self._serialize(it) for it in _s(ctx))
+            return f_copyof
+        if kind == "apply-imports":
+            def f_applyimports(ctx):
+                if not self._tframes:
+                    raise XsltUnsupported(
+                        "xsl:apply-imports outside a matched template"
+                    )
+                cur_prec, cur_mode, _ = self._tframes[-1]
+                return self._apply_one(ctx, mode=cur_mode, max_prec=cur_prec)
+            return f_applyimports
+        if kind == "number":
+            return lambda ctx, _e=elem: self._xsl_number(_e, ctx)
+        if kind == "element":
+            def f_element(ctx, _e=elem, _n=elem.get("name", "")):
+                return self._element_markup(self._avt(_n, ctx), _e, ctx, "")
+            return f_element
+        if kind == "copy":
+            # shallow copy of the context node (XSLT 1.0 §7.5): elements
+            # copy the tag but NOT attributes (xsl:attribute children of
+            # the body add them); text copies through; the document node
+            # just runs the body
+            def f_copy(ctx, _e=elem):
+                if isinstance(ctx, str):
+                    return escape(ctx)
+                if isinstance(ctx, (_Doc, _RTF)):
+                    return self._run_children(_e, ctx)
+                return self._element_markup(_local(ctx.tag), _e, ctx, "")
+            return f_copy
+        return _fail(f"xsl:{kind}")
 
     # -- whitespace stripping (xsl:strip-space / xsl:preserve-space) -------
 
@@ -1325,7 +1270,7 @@ class MiniXslt:
         self._scopes = [{}]
         self._ctx_pos: list[tuple[int, int]] = []
         for g in self._globals:
-            self._scopes[0][g.get("name", "")] = self._eval_binding(g, doc)
+            self._scopes[0][g.get("name", "")] = self._compile_binding(g)(doc)
         # template-dispatch depth is bounded at _MAX_TDEPTH below, but
         # a legitimate deep recursion still needs ~8 CPython frames per
         # template level — lift the interpreter limit once per process
@@ -1529,7 +1474,7 @@ class MiniXslt:
         # three specificity levels mirroring XSLT 1.0 default priorities:
         # name test (0) > '*' (-0.25) > 'node()' (-0.5) — judge-advice r7:
         # scoring node() == '*' let declaration order decide where
-        # libxslt (the lxml fast path) always prefers '*'
+        # libxslt always prefers '*'
         spec = 0 if name0 == "node()" else (1 if name0 == "*" else 2)
         # XSLT 1.0 §5.5: anything beyond a single plain node test —
         # absolute, multi-step, '//'-reached, or predicated — has
@@ -1561,21 +1506,6 @@ class MiniXslt:
 
     # -- instruction execution --------------------------------------------
 
-    def _eval_binding(self, elem: ET.Element, ctx):
-        """Value of an xsl:variable / xsl:param / xsl:with-param: the
-        ``select`` expression — a quoted-string or numeric literal, or
-        a path's string-value — or the body as a result-tree fragment."""
-        sel = elem.get("select")
-        if sel is not None:
-            sel = sel.strip()
-            if len(sel) >= 2 and sel[0] == "'" and sel[-1] == "'":
-                return sel[1:-1]
-            if _literal(sel) is not None:
-                return sel  # numeric literal: keep its lexical form
-            items = self._select(ctx, sel)
-            return _string(items[0]) if items else ""
-        return _RTF(self._run_children(elem, ctx))
-
     def _lookup_var(self, name: str):
         for scope in reversed(self._scopes):
             if name in scope:
@@ -1586,99 +1516,14 @@ class MiniXslt:
                       params: dict | None = None) -> str:
         # scope push only when this body can bind anything — the common
         # body (pure output instructions) skips the stack churn
-        scoped = params is not None or self._hasbind.get(id(container), True)
+        scoped = params is not None or self._hasbind[id(container)]
         if scoped:
             self._scopes.append(dict(params) if params else {})
         try:
-            # compiled path (r18): every stylesheet-tree container has a
-            # closure list; run it directly
-            fns = self._cfns.get(id(container))
-            if fns is not None:
-                if len(fns) == 1:
-                    return fns[0](ctx)
-                return "".join(f(ctx) for f in fns)
-            ops = self._ops.get(id(container))
-            if ops is None:
-                # element outside the compiled sheet trees — compute
-                # WITHOUT memoizing: id() of a dead temporary can be
-                # reused by a different element, so caching by id is
-                # only sound for the immortal stylesheet nodes
-                ops = self._compile_ops(container)
-            frags: list[str] = []
-            run_node = self._run_node
-            select = self._select
-            # local bindings of the named opcodes: the dispatcher must
-            # track _compile_ops through any reorder of the constants
-            _OP_TEXT, _OP_VAR, _OP_PARAM, _OP_NODE, _OP_BADCOPY = (
-                self._OP_TEXT, self._OP_VAR, self._OP_PARAM,
-                self._OP_NODE, self._OP_BADCOPY)
-            _OP_VALUEOF, _OP_IF, _OP_LITELEM, _OP_APPLYT, _OP_CHOOSE = (
-                self._OP_VALUEOF, self._OP_IF, self._OP_LITELEM,
-                self._OP_APPLYT, self._OP_CHOOSE)
-            for op in ops:
-                tag = op[0]
-                if tag == _OP_VALUEOF:
-                    items = select(ctx, op[1])
-                    if items:
-                        frags.append(escape(_string(items[0])))
-                elif tag == _OP_LITELEM:  # static attrs, no dynattrs
-                    inner = self._run_children(op[3], ctx)
-                    t, a = op[1], op[2]
-                    frags.append(
-                        f"<{t}{a}>{inner}</{t}>" if inner else f"<{t}{a}/>"
-                    )
-                elif tag == _OP_TEXT:
-                    frags.append(op[1])
-                elif tag == _OP_APPLYT:
-                    _, sel, mode, elem2, has_sorts, has_wp = op
-                    if sel is not None:
-                        nodes = select(ctx, sel)
-                    elif isinstance(ctx, _Doc):
-                        nodes = [ctx.root]
-                    elif isinstance(ctx, ET.Element):
-                        nodes = self._node_children(ctx)
-                    else:
-                        nodes = []
-                    if has_sorts:
-                        nodes = self._sorted_nodes(nodes, elem2, ctx)
-                    # tparams, not params: rebinding the function
-                    # parameter would shadow the caller's with-param
-                    # dict for the rest of the loop (code-review r13)
-                    tparams = (
-                        (self._gather_params(elem2, ctx) or None)
-                        if has_wp else None
-                    )
-                    frags.append(self._iterate(
-                        nodes,
-                        lambda n, _p=tparams, _m=mode: self._apply_one(n, _p, _m),
-                    ))
-                elif tag == _OP_IF:
-                    if self._test(ctx, op[1]):
-                        frags.append(self._run_children(op[2], ctx))
-                elif tag == _OP_CHOOSE:
-                    for tst, br in op[1]:
-                        if self._test(ctx, tst):
-                            frags.append(self._run_children(br, ctx))
-                            break
-                    else:
-                        if op[2] is not None:
-                            frags.append(self._run_children(op[2], ctx))
-                elif tag == _OP_NODE:  # generic dispatch
-                    frags.append(run_node(op[1], ctx, op[2]))
-                elif tag == _OP_VAR:
-                    self._scopes[-1][op[1].get("name", "")] = (
-                        self._eval_binding(op[1], ctx)
-                    )
-                elif tag == _OP_PARAM:
-                    pname = op[1].get("name", "")
-                    if pname not in self._scopes[-1]:  # with-param wins
-                        self._scopes[-1][pname] = self._eval_binding(op[1], ctx)
-                else:  # _OP_BADCOPY: attr-copy outside an element
-                    # constructor — no element to attach to; fail fast
-                    raise XsltUnsupported(
-                        'copy-of select="@*" outside an element constructor'
-                    )
-            return "".join(frags)
+            fns = self._cfns[id(container)]
+            if len(fns) == 1:
+                return fns[0](ctx)
+            return "".join(f(ctx) for f in fns)
         finally:
             if scoped:
                 self._scopes.pop()
@@ -1730,101 +1575,6 @@ class MiniXslt:
         )
         tag = _local(item.tag)
         return f"<{tag}{attrs}>{inner}</{tag}>" if inner else f"<{tag}{attrs}/>"
-
-    def _run_node(self, elem: ET.Element, ctx, kind=_MISSING) -> str:
-        name = self._kind.get(id(elem)) if kind is _MISSING else kind
-        if name == "#comment":  # comments / PIs in the stylesheet
-            return ""
-        if name is not None:
-            if name == "value-of":
-                items = self._select(ctx, elem.get("select", "."))
-                return escape(_string(items[0])) if items else ""
-            if name == "copy-of":
-                items = self._select(ctx, elem.get("select", "."))
-                return "".join(self._serialize(it) for it in items)
-            if name == "for-each":
-                nodes = self._sorted_nodes(
-                    self._select(ctx, elem.get("select", ".")), elem, ctx
-                )
-                return self._iterate(nodes, lambda n: self._run_children(elem, n))
-            if name == "if":
-                return self._run_children(elem, ctx) if self._test(ctx, elem.get("test", "")) else ""
-            if name == "choose":
-                for branch in elem:
-                    if _is_xsl(branch, "when") and self._test(ctx, branch.get("test", "")):
-                        return self._run_children(branch, ctx)
-                for branch in elem:
-                    if _is_xsl(branch, "otherwise"):
-                        return self._run_children(branch, ctx)
-                return ""
-            if name == "apply-templates":
-                sel = elem.get("select")
-                if sel is not None:
-                    nodes = self._select(ctx, sel)
-                elif isinstance(ctx, _Doc):
-                    nodes = [ctx.root]
-                elif isinstance(ctx, ET.Element):
-                    nodes = self._node_children(ctx)
-                else:
-                    nodes = []
-                nodes = self._sorted_nodes(nodes, elem, ctx)
-                params = self._gather_params(elem, ctx)
-                mode = elem.get("mode")
-                return self._iterate(
-                    nodes, lambda n: self._apply_one(n, params or None, mode)
-                )
-            if name == "call-template":
-                tname = elem.get("name", "")
-                telem = self.named.get(tname)
-                if telem is None:
-                    raise XsltUnsupported(f"call to undeclared template {tname!r}")
-                params = self._gather_params(elem, ctx)
-                self._enter_template()
-                try:
-                    return self._run_children(telem, ctx, params=params or None)
-                finally:
-                    self._tdepth -= 1
-            if name == "apply-imports":
-                if not self._tframes:
-                    raise XsltUnsupported(
-                        "xsl:apply-imports outside a matched template"
-                    )
-                cur_prec, cur_mode, _ = self._tframes[-1]
-                return self._apply_one(ctx, mode=cur_mode, max_prec=cur_prec)
-            if name == "number":
-                return self._xsl_number(elem, ctx)
-            if name == "text":
-                return escape(elem.text or "")
-            if name == "element":
-                tag = self._avt(elem.get("name", ""), ctx)
-                return self._element_markup(tag, elem, ctx, "")
-            if name == "copy":
-                # shallow copy of the context node (XSLT 1.0 §7.5):
-                # elements copy the tag but NOT attributes (xsl:attribute
-                # children of the body add them); text copies through;
-                # the document node just runs the body
-                if isinstance(ctx, str):
-                    return escape(ctx)
-                if isinstance(ctx, (_Doc, _RTF)):
-                    return self._run_children(elem, ctx)
-                return self._element_markup(_local(ctx.tag), elem, ctx, "")
-            raise XsltUnsupported(f"xsl:{name}")
-        # literal result element; XSL-namespaced attributes
-        # (xsl:use-attribute-sets) are instructions, not output
-        la = self._lattrs.get(id(elem))
-        if la is None:  # element outside the compiled sheet trees
-            attrs = "".join(
-                f" {k}={quoteattr(self._avt(v, ctx))}"
-                for k, v in elem.attrib.items()
-                if not k.startswith("{" + XSL_NS + "}")
-            )
-            return self._element_markup(_local(elem.tag), elem, ctx, attrs)
-        tag, static, pairs = la
-        if static is None:
-            static = "".join(
-                f" {k}={quoteattr(self._avt(v, ctx))}" for k, v in pairs
-            )
-        return self._element_markup(tag, elem, ctx, static)
 
     def _iterate(self, nodes: list, render) -> str:
         """Run ``render`` per node with (position, last) context pushed,
@@ -1885,17 +1635,7 @@ class MiniXslt:
         ones per XSLT 1.0 §7.1.3/§7.1.4: attribute sets, then literal
         attrs, then copied, then xsl:attribute."""
         kind = self._kind.get(id(elem))
-        meta = self._emeta.get(id(elem))
-        if meta is None:
-            # element outside the compiled sheet trees — no memoizing
-            # (id() reuse hazard; see _run_children)
-            meta = (
-                elem.get("use-attribute-sets")
-                if kind in ("element", "copy")
-                else elem.get("{" + XSL_NS + "}use-attribute-sets"),
-                any(self._kind.get(id(c)) == "#attr-copy" for c in elem),
-            )
-        use_sets, has_copy = meta
+        use_sets, has_copy = self._emeta[id(elem)]
         if has_copy or use_sets:
             merged: dict[str, str] = {}
             if use_sets:
@@ -2052,53 +1792,13 @@ class MiniXslt:
             self._parents.update(ext)
         return doc
 
-    def _key_lookup(self, inner: str, ctx) -> list:
-        args = _split_args(inner)
-        if len(args) != 2:
-            raise XsltUnsupported(f"key() takes 2 arguments, got {len(args)}")
-        kname = _literal(args[0].strip())
-        if not isinstance(kname, str):
-            raise XsltUnsupported("key() name must be a string literal")
-        doc_root = self._containing_root(ctx)
-        ikey = (id(doc_root), kname)
-        if ikey not in self._key_index:
-            self._key_index[ikey] = self._build_key(kname, doc_root)
-        index = self._key_index[ikey]
-        arg = args[1].strip()
-        lit = _literal(arg)
-        if lit is not None:
-            if isinstance(lit, str):
-                values = [lit]
-            else:  # numeric literal: XPath number->string form
-                values = [str(int(lit)) if lit.is_integer() else str(lit)]
-        else:
-            values = [_string(it) for it in self._select(ctx, arg)]
-        hits: list = []
-        seen: set[int] = set()
-        for v in values:
-            for node in index.get(v, ()):
-                if id(node) not in seen:
-                    seen.add(id(node))
-                    hits.append(node)
-        # union in document order, as XPath node-sets require
-        hits.sort(key=lambda n: self._doc_orders[id(doc_root)][id(n)])
-        return hits
-
-    # -- path / test evaluation -------------------------------------------
-
-    # -- compiled evaluators (r18) ------------------------------------------
+    # -- compiled evaluators -------------------------------------------------
     #
-    # Selects, tests and instruction lists are stylesheet-static while
-    # apply() runs per row: the _select_plan/_test_plan caches already
-    # removed the string PARSING, but every evaluation still re-entered
-    # the generic dispatchers (plan-tag branch chains in _select/_test,
-    # the op-tag loop in _run_children, the per-rule _match_score loop
-    # in _apply_one). These compilers turn each static expression into
-    # a bound Python closure ONCE per stylesheet, so the per-row cost
-    # is the closure body alone. Semantics are identical by
-    # construction: every closure is a specialization of the exact
-    # branch the generic evaluator would have taken, and anything
-    # outside the specialized shapes falls back to the generic path.
+    # Selects, tests and bindings are stylesheet-static while apply()
+    # runs per row: each compiles to a bound Python closure ONCE per
+    # stylesheet (memoized), so the per-row cost is the closure body
+    # alone. Select shapes outside the specialized ones
+    # fall back to the step-by-step _select_generic.
 
     def _compile_select(self, path: str):
         """path -> fn(ctx) -> list, memoized per stylesheet."""
@@ -2188,64 +1888,66 @@ class MiniXslt:
                                 return cand
             if fn is None:
                 def fn(ctx, _p=path):
-                    return self._select(ctx, _p)
+                    return self._select_generic(ctx, _p)
         self._sel_fns[path] = fn
         return fn
 
     def _compile_key_select(self, p: str):
         """Specialize ``key('name', value)`` and
-        ``key('name', value)/child`` selects: the name literal, the
-        value select and the optional single trailing child step are
-        static. Returns None (caller falls back to the generic path)
-        for any other shape. The per-call work left is the index lookup
-        plus the trailing child filter; the document-order sort only
-        runs when a lookup actually returns multiple nodes."""
+        ``key('name', value)/child`` selects. Returns None (caller falls
+        back to the generic path) for any other shape."""
         open_at = p.index("(")
         try:
             end = _close_paren(p, open_at)
         except XsltUnsupported:
             return None
-        inner, rest = p[open_at + 1 : end], p[end + 1 :]
+        rest = p[end + 1 :]
+        if not rest:
+            return self._compile_key(p[open_at + 1 : end])
+        step = rest[1:]
+        if (
+            not rest.startswith("/")
+            or not step
+            or "/" in step
+            or "[" in step
+            or "(" in step
+            or step in (".", "*")
+            or step.startswith("@")
+        ):
+            return None
+
+        def fn(ctx, _h=self._compile_key(p[open_at + 1 : end]), _step=step):
+            out: list = []
+            for h in _h(ctx):
+                out.extend(c for c in h if _local(c.tag) == _step)
+            return out
+        return fn
+
+    def _compile_key(self, inner: str):
+        """key(name, value) -> fn(ctx) -> the nodes the named xsl:key
+        files under the value's string(s), in document order. The name
+        literal and the value select are static; the per-call work is
+        the index lookup, and the document-order sort only runs when a
+        lookup returns multiple nodes."""
         args = _split_args(inner)
         if len(args) != 2:
-            return None
+            return _fail(f"key() takes 2 arguments, got {len(args)}")
         kname = _literal(args[0].strip())
         if not isinstance(kname, str):
-            return None
+            return _fail("key() name must be a string literal")
         arg = args[1].strip()
         lit = _literal(arg)
         if lit is not None:
-            if isinstance(lit, str):
-                static_vals = [lit]
-            else:
-                static_vals = [
-                    str(int(lit)) if lit.is_integer() else str(lit)
-                ]
+            if not isinstance(lit, str):  # XPath number->string form
+                lit = str(int(lit)) if lit.is_integer() else str(lit)
 
-            def values_fn(ctx, _v=static_vals):
+            def values_fn(ctx, _v=[lit]):
                 return _v
         else:
-            vsel = self._compile_select(arg)
-
-            def values_fn(ctx, _s=vsel):
+            def values_fn(ctx, _s=self._compile_select(arg)):
                 return [_string(it) for it in _s(ctx)]
-        step_name = None
-        if rest:
-            if not rest.startswith("/"):
-                return None
-            step = rest[1:]
-            if (
-                not step
-                or "/" in step
-                or "[" in step
-                or "(" in step
-                or step in (".", "*")
-                or step.startswith("@")
-            ):
-                return None
-            step_name = step
 
-        def fn(ctx, _k=kname, _vals=values_fn, _step=step_name):
+        def fn(ctx, _k=kname, _vals=values_fn):
             doc_root = self._containing_root(ctx)
             ikey = (id(doc_root), _k)
             index = self._key_index.get(ikey)
@@ -2264,19 +1966,14 @@ class MiniXslt:
                 # union in document order, as XPath node-sets require
                 order = self._doc_orders[id(doc_root)]
                 hits.sort(key=lambda n: order[id(n)])
-            if _step is None:
-                return hits
-            out: list = []
-            for h in hits:
-                out.extend(c for c in h if _local(c.tag) == _step)
-            return out
+            return hits
         return fn
 
     def _compile_binding(self, elem: ET.Element):
         """xsl:variable/param/with-param -> fn(ctx) -> value, memoized
-        per element — the static classification of _eval_binding
-        (quoted literal / numeric literal / select path / body RTF)
-        done once."""
+        per element: a quoted-string literal, a numeric literal (kept in
+        its lexical form), a select path's string-value, or the body as
+        a result-tree fragment."""
         fn = self._bind_fns.get(id(elem))
         if fn is not None:
             return fn
@@ -2301,21 +1998,17 @@ class MiniXslt:
         return fn
 
     def _compile_test(self, expr: str):
-        """test expression -> fn(ctx) -> bool, memoized. Mirrors _test
-        branch for branch; the comparison kinds whose operand shapes
-        are static (literal / $var / path) specialize, everything else
-        delegates to the interpreted _test. An XsltUnsupported raised
-        while SPECIALIZING is deferred to evaluation time — the
-        interpreter only rejects an unsupported expression when it
-        actually runs, and a compiled stylesheet must behave the same."""
+        """test expression -> fn(ctx) -> bool, memoized. An
+        XsltUnsupported raised while compiling is deferred to evaluation
+        time: an unsupported expression fails only when it actually
+        runs, so an untaken branch never rejects a stylesheet."""
         fn = self._test_fns.get(expr)
         if fn is not None:
             return fn
         try:
             fn = self._compile_test_inner(expr)
         except XsltUnsupported as exc:
-            def fn(ctx, _e=exc):
-                raise _e
+            fn = _fail(str(exc))
         self._test_fns[expr] = fn
         return fn
 
@@ -2354,11 +2047,10 @@ class MiniXslt:
         return fn
 
     def _compile_comparison(self, expr: str, payload):
-        """kind-6 (comparison) specialization of _test. The operand
-        handling — literal-first swap, $var-as-number coercion,
-        node-set-vs-node-set sets — replays _test exactly, with the
-        static decisions (is the rhs a literal? a $var? a path?) made
-        once here."""
+        """kind-6 (comparison) test. The static decisions (is the rhs
+        a literal? a $var? a path?) are made once here; a literal-first
+        spelling swaps operands, and node-set vs node-set compares the
+        two string-value sets (XPath 1.0 §3.4)."""
         lhs, op, rhs = payload
 
         def run_compare(values, rhs_lit, _op):
@@ -2387,8 +2079,7 @@ class MiniXslt:
             )
 
         def side(tok):
-            """('lit', value) | ('var', name) | ('path', select_fn) —
-            mirrors operand_literal's classification, made static."""
+            """('lit', value) | ('var', name) | ('path', expr)."""
             if tok.startswith("$"):
                 return ("var", tok[1:])
             lit = _literal(tok)
@@ -2398,13 +2089,16 @@ class MiniXslt:
 
         rkind, rval = side(rhs)
         if rkind == "path":
-            # literal-first spelling: swap operands and mirror the
-            # ordered operator (code-review r7)
+            # literal-first spelling ('3 < n'): swap operands AND
+            # mirror the ordered operator — '3 < n' means 'n > 3'
             lhs, rhs = rhs, lhs
             op = {"<": ">", "<=": ">=", ">": "<", ">=": "<="}.get(op, op)
             rkind, rval = side(rhs)
             if rkind == "path":
-                # node-set vs node-set (XPath 1.0 §3.4)
+                # node-set vs node-set (XPath 1.0 §3.4): '=' is true
+                # iff ANY (a, b) pair matches; '!=' iff any pair
+                # differs. Ordered node-set comparisons stay out of
+                # the subset.
                 if op not in ("=", "!="):
                     raise XsltUnsupported(
                         f"ordered path-to-path comparison {expr!r}"
@@ -2436,35 +2130,26 @@ class MiniXslt:
         return fn
 
     def _select(self, ctx, path: str) -> list:
+        return self._compile_select(path)(ctx)
+
+    def _select_generic(self, ctx, path: str) -> list:
+        """The select shapes _compile_select does not specialize:
+        position()/last(), function calls, and multi-step or predicated
+        paths, evaluated step by step."""
         tag, payload, path = _select_plan(path)
-        if tag == 0:  # '.'
-            return [ctx]
-        if tag == 3:  # bare @attr — hot fast path
-            if isinstance(ctx, ET.Element):
-                v = ctx.attrib.get(payload)
-                return [v] if v is not None else []
-            return []
-        if tag == 4:  # bare element name — hot fast path
-            if isinstance(ctx, ET.Element):
-                return [c for c in ctx if _local(c.tag) == path]
-            if isinstance(ctx, _Doc):
-                return [ctx.root] if _local(ctx.root.tag) == path else []
-            return []
         if tag == 1:  # position() / last()
             if not self._ctx_pos:
                 raise XsltUnsupported(f"{path} outside an iteration context")
             pos, size = self._ctx_pos[-1]
             return [str(pos if path == "position()" else size)]
-        if tag == 5:  # $var reference
-            if "/" in payload or "[" in payload:
-                raise XsltUnsupported(f"path into variable {path!r}")
-            return [self._lookup_var(payload)]
+        if tag == 5:  # $var/... or $var[...]
+            raise XsltUnsupported(f"path into variable {path!r}")
         if tag == 2:
             fname, inner = payload
             if fname == "count":
                 return [str(len(self._select(ctx, inner)))]
             if fname == "key":
-                return self._key_lookup(inner, ctx)
+                return self._compile_key(inner)(ctx)
             if fname == "generate-id":
                 if inner.strip():
                     items = self._select(ctx, inner)
@@ -2556,8 +2241,6 @@ class MiniXslt:
                 return [self._test(ctx, inner)]
             # text() falls through to step parsing; anything else is an
             # unsupported XPath function and fails fast there too
-            # (the bare-@attr / bare-name / $var fast paths moved into
-            # the _select_plan dispatch above)
         if path.startswith(("key(", "document(")):
             # key(...)/<steps> or document(...)/<steps>: the node-set
             # result is the path head (the whole-expression forms are
@@ -2568,7 +2251,7 @@ class MiniXslt:
             end = _close_paren(path, open_at)
             inner = path[open_at + 1 : end]
             if path.startswith("key("):
-                cur: list = self._key_lookup(inner, ctx)
+                cur: list = self._compile_key(inner)(ctx)
             else:
                 cur = [self._document(inner, ctx)]
             path = path[end + 1 :]
@@ -2856,107 +2539,15 @@ class MiniXslt:
         return seq
 
     def _test(self, ctx, expr: str) -> bool:
-        # the structural parse (bool-operator split, group unwrap,
-        # comparison split) is stylesheet-static — classified once per
-        # distinct expression by _test_plan; only operand evaluation
-        # runs per node
-        kind, payload = _test_plan(expr)
-        if kind == 0:  # empty
-            return False
-        if kind == 1:  # or
-            return any(self._test(ctx, p) for p in payload)
-        if kind == 2:  # and
-            return all(self._test(ctx, p) for p in payload)
-        if kind == 3:  # parenthesized group
-            return self._test(ctx, payload)
-        if kind == 4:  # not(...)
-            return not self._test(ctx, payload)
-        if kind == 5:  # existence / boolean-function select
-            items = self._select(ctx, payload)
-            if len(items) == 1 and isinstance(items[0], bool):
-                return items[0]  # boolean function result, not a node-set
-            return bool(items)
-        lhs, op, rhs = payload
-        expr = expr.strip()
-
-        def operand_literal(tok: str):
-            # a $var operand compares as a numeric literal when its
-            # string value parses as a number, else as a string literal
-            if tok.startswith("$"):
-                v = _string(self._lookup_var(tok[1:]))
-                num = _literal(v)
-                return v if num is None else num
-            return _literal(tok)
-
-        rhs_lit = operand_literal(rhs)
-        if rhs_lit is None:
-            # literal-first spelling ('3 < n'): swap operands AND
-            # mirror the ordered operator — '3 < n' means 'n > 3',
-            # not 'n < 3' (code-review r7)
-            lhs, rhs = rhs, lhs
-            op = {"<": ">", "<=": ">=", ">": "<", ">=": "<="}.get(op, op)
-            rhs_lit = operand_literal(rhs)
-            if rhs_lit is None:
-                # node-set vs node-set (XPath 1.0 §3.4): '=' is true
-                # iff ANY (a, b) pair matches; '!=' iff any pair
-                # differs. Ordered node-set comparisons stay out of
-                # the subset.
-                if op not in ("=", "!="):
-                    raise XsltUnsupported(
-                        f"ordered path-to-path comparison {expr!r}"
-                    )
-                lvals = {_string(v) for v in self._select(ctx, lhs)}
-                rvals = {_string(v) for v in self._select(ctx, rhs)}
-                if op == "=":
-                    return bool(lvals & rvals)
-                return bool(lvals and rvals and len(lvals | rvals) > 1)
-        values = [_string(v) for v in self._select(ctx, lhs)]
-        if isinstance(rhs_lit, float):
-            nums = []
-            for v in values:
-                try:
-                    nums.append(float(v))
-                except ValueError:
-                    pass
-            values = nums
-        if op == "=":
-            return any(v == rhs_lit for v in values)
-        if op == "!=":
-            return any(v != rhs_lit for v in values)
-        if not isinstance(rhs_lit, float):
-            raise XsltUnsupported(f"ordered comparison with string literal {expr!r}")
-        return any(
-            (op == "<" and v < rhs_lit)
-            or (op == "<=" and v <= rhs_lit)
-            or (op == ">" and v > rhs_lit)
-            or (op == ">=" and v >= rhs_lit)
-            for v in values
-        )
+        return self._compile_test(expr)(ctx)
 
 
-def compile_stylesheet(src: str, base_dir: str | None = None,
-                       prefer_lxml: bool = True):
-    """``src`` -> callable(xml_string) -> transformed string. The
-    MiniXslt subset interpreter is the ENGINE OF RECORD; lxml's real
-    libxslt is a BEST-EFFORT fast path taken when importable (it never
-    is in this container — no install path — so the branch is
-    unexercised here; the cross-engine agreement test stays armed and
-    runs the comparison in any environment where lxml imports).
-    ``base_dir`` anchors relative document() references; for the lxml
-    path it becomes the parse base via a dummy base URL.
-    ``prefer_lxml=False`` pins the subset interpreter — required when
-    the caller depends on implementation-DEFINED behavior the spec
-    leaves open (generate-id() value shape: libxslt emits 'idm...'
-    strings, the subset emits document-order 'dNeM' ids)."""
-    if prefer_lxml:
-        try:
-            from lxml import etree as LX  # pragma: no cover - absent in container
-
-            base = f"{base_dir}/stylesheet.xsl" if base_dir else None
-            xslt = LX.XSLT(LX.fromstring(src.encode(), base_url=base))
-            return lambda xml: str(xslt(LX.fromstring(xml.encode())))
-        except ImportError:
-            pass
+def compile_stylesheet(src: str, base_dir: str | None = None):
+    """``src`` -> callable(xml_string) -> transformed string, run by
+    MiniXslt. ``base_dir`` anchors relative xsl:import/xsl:include and
+    document() references. generate-id() values follow MiniXslt's
+    document-order 'dNeM' scheme (the spec leaves their shape to the
+    implementation)."""
     return MiniXslt(src, base_dir=base_dir).apply
 
 

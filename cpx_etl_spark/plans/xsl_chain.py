@@ -73,7 +73,7 @@ def apply_chain_from_control(df: DataFrame, control_path: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# REAL stylesheet execution (functions/xslt.py MiniXslt; lxml fast path)
+# REAL stylesheet execution (functions/xslt.py MiniXslt)
 # ---------------------------------------------------------------------------
 
 def load_stylesheet_chain(control_path: str, base_dir: str | None = None) -> list[str]:
@@ -99,7 +99,6 @@ def load_stylesheet_chain(control_path: str, base_dir: str | None = None) -> lis
 def xslt_transform_column(
     df: DataFrame, xml_col: str, out_col: str, stylesheet_srcs: list[str],
     spread: bool = True, base_dir: str | None = None,
-    prefer_lxml: bool = True,
 ) -> DataFrame:
     """Run a stylesheet chain over an XML string column, Arrow-batched.
 
@@ -123,16 +122,12 @@ def xslt_transform_column(
         df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     srcs = tuple(stylesheet_srcs)
     bdir = base_dir  # closure-shipped; document() refs resolve per task
-    use_lxml = prefer_lxml
     state: dict = {}
 
     @F.pandas_udf("string")
     def run(batch: pd.Series) -> pd.Series:
         if "fns" not in state:
-            state["fns"] = [
-                compile_stylesheet(s, base_dir=bdir, prefer_lxml=use_lxml)
-                for s in srcs
-            ]
+            state["fns"] = [compile_stylesheet(s, base_dir=bdir) for s in srcs]
         fns = state["fns"]
         return batch.map(lambda x: xslt_pipeline(x, fns) if x is not None else None)
 

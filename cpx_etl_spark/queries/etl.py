@@ -834,8 +834,8 @@ def q_xsl_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     three actual .xsl stylesheets (template match / value-of / for-each
     / xsl:if / attribute-value-templates / named templates with params
     / xsl:key + key() lookups / moded templates), executed per row by the stdlib
-    MiniXslt subset interpreter (functions/xslt.py; lxml fast path when
-    present) in one Arrow-batched pandas UDF; the transformed XML's
+    MiniXslt subset engine (functions/xslt.py) in one Arrow-batched
+    pandas UDF; the transformed XML's
     fields come back out via Spark's built-in xpath_string — JVM-side
     again. Step 1 filters to open orders and reshapes fields; step 2
     flattens to the final record. FLOOR(x*100) keeps the numeric text
@@ -1714,16 +1714,14 @@ def q_xsl_toc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("</doc>"),
     )
     d = _write_xsl_toc_sheets()
-    # prefer_lxml=False pins the subset interpreter: generate-id() is
-    # implementation-DEFINED, and this oracle predicts the subset's
-    # dNeM scheme — libxslt's 'idm...' ids can never match it
+    # generate-id() is implementation-defined; the oracle predicts
+    # MiniXslt's dNeM scheme
     transformed = xslt_transform_column(
         docs.select("doc_id", xml.alias("doc_xml")),
         "doc_xml",
         "out_xml",
         [_XSL_TOC_MAIN],
         base_dir=d,
-        prefer_lxml=False,
     )
     return transformed.select(
         F.col("doc_id").alias("did"),

@@ -13,10 +13,9 @@ paths here:
 
 Literal XSLT (index.js:87-126) IS executed since r5: the
 ``xsl_transform`` entry point below delegates to the stdlib
-XSLT-1.0-subset interpreter in functions/xslt.py (lxml's libxslt when
-importable). The declarative-chain analogue — an xi:include-driven
-ORDERED CHAIN of mapping-spec reshapes fused by Catalyst — lives in
-plans/xsl_chain.py.
+XSLT-1.0-subset engine in functions/xslt.py. The declarative-chain
+analogue — an xi:include-driven ORDERED CHAIN of mapping-spec reshapes
+fused by Catalyst — lives in plans/xsl_chain.py.
 """
 
 from __future__ import annotations
@@ -94,10 +93,9 @@ def read_xml_file(path: str) -> dict:
 
 def xsl_transform(xml: str, stylesheets) -> str:
     """XSLT pipeline (reference index.js:87-126): apply the stylesheet
-    chain head-first over ``xml``. Delegates to functions/xslt.py —
-    lxml's libxslt when importable, the stdlib XSLT-1.0-subset
-    interpreter otherwise. ``stylesheets`` is an iterable of stylesheet
-    source strings."""
+    chain head-first over ``xml``. Delegates to the stdlib
+    XSLT-1.0-subset engine in functions/xslt.py. ``stylesheets`` is an
+    iterable of stylesheet source strings."""
     from cpx_etl_spark.functions.xslt import compile_stylesheet, xslt_pipeline
 
     return xslt_pipeline(xml, [compile_stylesheet(s) for s in stylesheets])

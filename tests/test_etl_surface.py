@@ -624,6 +624,21 @@ def test_xslt_variables_params_scoping():
     # $site per iteration and the outer binding is restored after
     assert out == ('<r><out site="corpus"><big n="42"/>rtf-corpus'
                    '<i>a</i><i>b</i><tail>corpus</tail></out></r>')
+    # a numeric-literal global compares as a number, a global path
+    # select evaluates against the document, and a local variable body
+    # renders with both in scope
+    s = f"""<xsl:stylesheet version="1.0" {_XSL_NS}>
+      <xsl:variable name="n" select="3"/>
+      <xsl:variable name="docid" select="/doc/@id"/>
+      <xsl:template match="/"><r><xsl:apply-templates/></r></xsl:template>
+      <xsl:template match="doc">
+        <xsl:variable name="body">b-<xsl:value-of select="$docid"/>-<xsl:value-of select="$n"/></xsl:variable>
+        <xsl:if test="$n &gt; 2"><gt2/></xsl:if>
+        <xsl:if test="$n &gt; 3"><gt3/></xsl:if>
+        <v><xsl:value-of select="$body"/></v>
+      </xsl:template>
+    </xsl:stylesheet>"""
+    assert _mini(s)('<doc id="D7"/>') == "<r><gt2/><v>b-D7-3</v></r>"
 
 
 def test_xslt_named_templates_call_with_param():

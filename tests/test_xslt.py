@@ -219,14 +219,12 @@ def test_mode_with_params_and_sort():
 
 
 def test_stdlib_engine_pins_fixture_and_lxml_agrees_when_present():
-    """The stdlib MiniXslt is the ENGINE OF RECORD (lxml/libxslt is
-    container-impossible here — no install path — so the lxml branch
-    of compile_stylesheet is best-effort, r10 closure of VERDICT r9
-    item 7): its output over the q_xsl_execute stylesheet chain is
-    pinned to a recorded fixture so the test always asserts something
-    real instead of skipping. The libxslt cross-check stays ARMED —
-    in any environment where lxml imports, both engines must produce
-    this same fixture byte-for-byte."""
+    """The stdlib MiniXslt is the package's only XSLT engine: its
+    output over the q_xsl_execute stylesheet chain is pinned to a
+    recorded fixture so the test always asserts something real instead
+    of skipping. libxslt is the reference comparison — in any
+    environment where lxml imports, it must produce this same fixture
+    byte-for-byte."""
     from cpx_etl_spark.functions.xslt import MiniXslt, xslt_pipeline
     from cpx_etl_spark.queries.etl import (
         _XSL_STYLESHEET_1,
@@ -319,6 +317,25 @@ def test_xpath_boolean_operators_and_functions():
     assert 'neg="true"' in out and 'grp="true"' in out
     assert 't="true"' in out and 'f="false"' in out
     assert "<hit/>" in out and "<hit2/>" in out
+    # not(...), a parenthesized group and a boolean function directly
+    # in test=, each taken and not taken
+    xml = '<d><e k="xyz"><a/><c/></e><e x="1" k="abc"><b/></e><e k="y"><c/></e></d>'
+    xsl = f"""<xsl:stylesheet version="1.0" {_XSLNS}>
+      <xsl:template match="d"><r><xsl:apply-templates select="e"/></r></xsl:template>
+      <xsl:template match="e">
+        <e>
+          <xsl:if test="not(@x)"><nox/></xsl:if>
+          <xsl:choose>
+            <xsl:when test="(a or b) and c"><grp/></xsl:when>
+            <xsl:otherwise><nogrp/></xsl:otherwise>
+          </xsl:choose>
+          <xsl:if test="contains(@k,'y')"><y/></xsl:if>
+        </e>
+      </xsl:template>
+    </xsl:stylesheet>"""
+    assert _run_xsl(xsl, xml) == (
+        "<r><e><nox/><grp/><y/></e><e><nogrp/></e><e><nox/><nogrp/><y/></e></r>"
+    )
 
 
 def test_format_number_patterns():

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from cpx_etl_spark.functions.text import shingles_expr
+from cpx_etl_spark.sources.registry import read_parquet
 
 
 def decontaminate(
@@ -467,7 +468,7 @@ def read_training_shards(spark, path: str, shard: int | None = None) -> DataFram
     scheduling. The dataloader-facing reader."""
     import os
 
-    df = spark.read.parquet(os.path.join(path, "data"))
+    df = read_parquet(spark, os.path.join(path, "data"))
     if shard is not None:
         # membership check against the manifest (tiny, one row per
         # shard): shard ids are NOT contiguous — a doc longer than
@@ -478,7 +479,7 @@ def read_training_shards(spark, path: str, shard: int | None = None) -> DataFram
         # Fail loud either way: a dataloader worker with a wrong shard
         # index must not silently train on zero rows.
         present = (
-            spark.read.parquet(os.path.join(path, "manifest"))
+            read_parquet(spark, os.path.join(path, "manifest"))
             .filter(F.col("shard") == shard)
             .limit(1)
             .count()
@@ -511,7 +512,7 @@ def verify_training_shards(spark, path: str) -> DataFrame:
             f"(missing {_SHARD_META})"
         )
     id_col, text_col, seed = meta["id_col"], meta["text_col"], meta["seed"]
-    data = spark.read.parquet(os.path.join(path, "data"))
+    data = read_parquet(spark, os.path.join(path, "data"))
     # the stored _key IS the training order — it is fully recomputable
     # from the meta seed, so order corruption must fail verification
     # too (code-review r15), not just content corruption; the check is
@@ -524,7 +525,7 @@ def verify_training_shards(spark, path: str) -> DataFrame:
     ).withColumnRenamed("n_docs", "g_docs").withColumnRenamed(
         "n_tokens", "g_tokens"
     ).withColumnRenamed("content_fp", "g_fp")
-    want = spark.read.parquet(os.path.join(path, "manifest"))
+    want = read_parquet(spark, os.path.join(path, "manifest"))
     return (
         want.join(got, on="shard", how="full_outer")
         .select(
@@ -591,7 +592,7 @@ def plan_training_mixture(
         # item 2); _SHARD_META stays the seed/capacity metadata source
         # for readers that need it, via _read_shard_meta
         try:
-            manifest = spark.read.parquet(os.path.join(path, "manifest"))
+            manifest = read_parquet(spark, os.path.join(path, "manifest"))
         except AnalysisException as e:
             raise ValueError(
                 f"plan_training_mixture: {path!r} is not a shard artifact "
@@ -719,7 +720,7 @@ def read_training_mixture(
             )
         id_col, text_col = meta["id_col"], meta["text_col"]
         shards = [s for s, _p in by_src[src_name]]
-        data = spark.read.parquet(os.path.join(path, "data")).filter(
+        data = read_parquet(spark, os.path.join(path, "data")).filter(
             F.col("shard").isin(shards)
         )
         # tiny (shard, position) frame from the collected picks as a

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cpx_etl_spark.sources.registry import read_parquet
+
 
 def materialize_index(df: DataFrame) -> DataFrame:
     """Materialization policy for CORPUS-TOKEN-SIZED shared frames (the
@@ -658,9 +660,9 @@ class SignatureIndex:
 
         self.path = path
         self.meta = meta
-        self.bands_df = spark.read.parquet(os.path.join(path, "bands"))
-        self.shingles_df = spark.read.parquet(os.path.join(path, "shingles"))
-        self.counts_df = spark.read.parquet(os.path.join(path, "counts"))
+        self.bands_df = read_parquet(spark, os.path.join(path, "bands"))
+        self.shingles_df = read_parquet(spark, os.path.join(path, "shingles"))
+        self.counts_df = read_parquet(spark, os.path.join(path, "counts"))
 
 
 def _index_frames(df: DataFrame, id_col: str, text_col: str,
@@ -924,8 +926,8 @@ class WinnowIndex:
 
         self.path = path
         self.meta = meta
-        self.fps_df = spark.read.parquet(os.path.join(path, "fps"))
-        self.counts_df = spark.read.parquet(os.path.join(path, "counts"))
+        self.fps_df = read_parquet(spark, os.path.join(path, "fps"))
+        self.counts_df = read_parquet(spark, os.path.join(path, "counts"))
 
 
 def _winnow_frames(df: DataFrame, id_col: str, text_col: str,

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from cpx_etl_spark.functions.vectors import as_double, cosine, dot, norm
 from cpx_etl_spark.operators.dedup import observe_count, validate_new_ids
+from cpx_etl_spark.sources.registry import read_parquet
 
 _QUANT = 1000000.0  # embedding quantization scale (floor(x * 1e6))
 
@@ -1101,8 +1102,8 @@ class IvfIndex:
 
         self.path = path
         self.meta = meta
-        self.centroids_df = spark.read.parquet(os.path.join(path, "centroids"))
-        self.assignments_df = spark.read.parquet(os.path.join(path, "assignments"))
+        self.centroids_df = read_parquet(spark, os.path.join(path, "centroids"))
+        self.assignments_df = read_parquet(spark, os.path.join(path, "assignments"))
 
 
 def write_ivf_index(
@@ -1216,9 +1217,9 @@ class KnnGraphIndex:
         self._spark = spark
         self.path = path
         self.meta = meta
-        self.centroids_df = spark.read.parquet(os.path.join(path, "centroids"))
-        self.assignments_df = spark.read.parquet(
-            os.path.join(path, "assignments")
+        self.centroids_df = read_parquet(spark, os.path.join(path, "centroids"))
+        self.assignments_df = read_parquet(
+            spark, os.path.join(path, "assignments")
         )
         self._edges_df = None
 
@@ -1227,8 +1228,8 @@ class KnnGraphIndex:
         import os
 
         if self._edges_df is None:
-            self._edges_df = self._spark.read.parquet(
-                os.path.join(self.path, "edges")
+            self._edges_df = read_parquet(
+                self._spark, os.path.join(self.path, "edges")
             )
         return self._edges_df
 
@@ -1404,8 +1405,8 @@ class EmbeddingIndex:
 
         self.path = path
         self.meta = meta
-        self.buckets_df = spark.read.parquet(os.path.join(path, "buckets"))
-        self.vectors_df = spark.read.parquet(os.path.join(path, "vectors"))
+        self.buckets_df = read_parquet(spark, os.path.join(path, "buckets"))
+        self.vectors_df = read_parquet(spark, os.path.join(path, "vectors"))
 
 
 def write_embedding_index(
@@ -2005,9 +2006,9 @@ class PqIndex:
         import os
 
         self.meta = meta
-        self.codebook_df = spark.read.parquet(os.path.join(path, "codebook"))
-        self.codes_df = spark.read.parquet(os.path.join(path, "codes"))
-        self.vectors_df = spark.read.parquet(os.path.join(path, "vectors"))
+        self.codebook_df = read_parquet(spark, os.path.join(path, "codebook"))
+        self.codes_df = read_parquet(spark, os.path.join(path, "codes"))
+        self.vectors_df = read_parquet(spark, os.path.join(path, "vectors"))
 
 
 def write_pq_index(
@@ -2364,10 +2365,10 @@ class IvfPqIndex:
 
         self.path = path
         self.meta = meta
-        self.centroids_df = spark.read.parquet(os.path.join(path, "centroids"))
-        self.codebook_df = spark.read.parquet(os.path.join(path, "codebook"))
-        self.cells_df = spark.read.parquet(os.path.join(path, "cells"))
-        self.vectors_df = spark.read.parquet(os.path.join(path, "vectors"))
+        self.centroids_df = read_parquet(spark, os.path.join(path, "centroids"))
+        self.codebook_df = read_parquet(spark, os.path.join(path, "codebook"))
+        self.cells_df = read_parquet(spark, os.path.join(path, "cells"))
+        self.vectors_df = read_parquet(spark, os.path.join(path, "vectors"))
 
 
 def write_ivfpq_index(

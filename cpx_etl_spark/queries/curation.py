@@ -26,6 +26,7 @@ from cpx_etl_spark.operators.curation import (
 )
 from cpx_etl_spark.queries import fround, register
 from cpx_etl_spark.sources import load_table
+from cpx_etl_spark.sources.registry import read_parquet
 
 # deterministic ~1/16 eval split: first hex digit of md5(doc_id)
 _TEST_PRED = "substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = '0'"
@@ -1253,7 +1254,7 @@ def q_training_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals = []
     for p in (pa, pb):
         totals.append(
-            spark.read.parquet(os.path.join(p, "manifest"))
+            read_parquet(spark, os.path.join(p, "manifest"))
             .agg(F.sum("n_tokens").cast("long").alias("t"))
             .collect()[0]["t"]  # 1-row planning lookup (tiny manifest)
         )

@@ -5,14 +5,34 @@ FileResolver (reference: src/main/FileResolver.js) and reads them with
 format-specific converters (src/main/index.js:143). Here the registry
 maps logical table names to parquet scans; Catalyst gets the raw scan
 so filter/column pushdown happen at the source.
+
+Every input a process reads more than once — the tables here, the
+standing indexes and the shard artifact — goes through ``read_parquet``.
+``spark.read.parquet`` runs a schema-inference job on every call, even
+for one file; ``read_parquet`` infers a path's schema once and hands the
+cached ``StructType`` to ``spark.read.schema(...)`` after that, so a
+later read builds a plan and runs no job. The cached schema is dropped
+and inferred again when either changes:
+
+- the files: for a file its size and mtime; for a directory the
+  (relative name, size, mtime) of every file under it that Spark reads,
+  walked recursively (partitioned artifacts) and skipping the ``_``/``.``
+  names Spark's file index hides;
+- a session conf that changes what Spark infers (``_INFER_CONFS``).
+
+A path ``os.stat`` cannot see — a missing path or a remote URI — is
+read with plain ``spark.read.parquet``, uncached, so it fails or
+succeeds exactly as before.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -32,7 +52,82 @@ TABLES = (
 BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part"})
 
 
+# Session confs that change the schema Spark infers from the same files:
+# the parquet type mappings, how partition-directory values are typed, and
+# whether the footers of all files are merged.
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# path -> (signature, conf values, inferred schema). Each entry is stored
+# whole and checked whole, so concurrent readers at worst infer twice.
+_SCHEMAS: dict[str, tuple[tuple, tuple, StructType]] = {}
+
+
+def _hidden(name: str) -> bool:
+    # the names Spark's file index skips (InMemoryFileIndex)
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _signature(path: str) -> tuple | None:
+    """What changes when the parquet at ``path`` is rewritten, or None
+    when ``os.stat`` cannot see it."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_size, st.st_mtime_ns)
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if not _hidden(d)]
+            rel = os.path.relpath(root, path)
+            for name in names:
+                if not _hidden(name):
+                    fst = os.stat(os.path.join(root, name))
+                    files.append((os.path.join(rel, name), fst.st_size, fst.st_mtime_ns))
+        return tuple(sorted(files))
+    except (OSError, ValueError):
+        return None
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred once per
+    (files, inference confs) and reused after that."""
+    schema = _cached_schema(spark, path)
+    return schema if schema is not None else spark.read.parquet(path).schema
+
+
+def _cached_schema(spark: SparkSession, path: str) -> StructType | None:
+    sig = _signature(path)
+    if sig is None:
+        return None
+    confs = tuple(spark.conf.get(k) for k in _INFER_CONFS)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == sig and hit[1] == confs:
+        return hit[2]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[path] = (sig, confs, schema)
+    return schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that runs a schema-inference job only
+    on the first read of a path's current files (module docstring)."""
+    schema = _cached_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan of table ``name`` under ``sf_dir``. Reads through
+    ``read_parquet``: after a table's first load its schema is reused, so
+    a later load builds a plan without running a job, until the file or
+    an inference conf changes; a remote or missing path is read
+    uncached."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     # events.ts is parquet TIMESTAMP(NANOS), which Spark's reader has no
@@ -44,7 +139,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

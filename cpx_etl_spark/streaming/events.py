@@ -23,19 +23,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from cpx_etl_spark.sources.registry import parquet_schema
+
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes
-
-# Streaming sources need an explicit schema (no inference on readStream);
-# probing it costs a driver-side footer read, so cache per parquet path —
-# one probe per process, not per stream construction (VERDICT r3).
-_SCHEMA_CACHE: dict[str, object] = {}
-
-
-def _events_schema(spark: SparkSession, path: str):
-    schema = _SCHEMA_CACHE.get(path)
-    if schema is None:
-        schema = _SCHEMA_CACHE.setdefault(path, spark.read.parquet(path).schema)
-    return schema
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -50,9 +40,11 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # the file-stream source wants a directory: stream the sf dir with a
-    # glob filter selecting just the events file
+    # glob filter selecting just the events file. readStream does not
+    # infer, so the schema comes from the batch reader's cache (inferred
+    # once per version of the file)
     sdf = (
-        spark.readStream.schema(_events_schema(spark, path))
+        spark.readStream.schema(parquet_schema(spark, path))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )

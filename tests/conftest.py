@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -21,3 +22,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@pytest.fixture
+def jobs_run(spark):
+    """``jobs_run(fn)`` calls ``fn()`` under a job group of its own and
+    returns ``(fn's result, number of Spark jobs it started)``, counted
+    by the status tracker."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-run-{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

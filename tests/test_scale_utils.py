@@ -4,10 +4,12 @@ core queries)."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from cpx_etl_spark.operators.skew import salted_agg, salted_join
+from cpx_etl_spark.sources.registry import read_parquet
 from cpx_etl_spark.sources.sinks import (
     read_csv,
     read_jsonl,
@@ -81,6 +83,48 @@ def test_partitioned_parquet_prunes(spark, tmp_path):
     assert back.count() == 2
     plan = back._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(part" in plan
+
+
+def test_read_parquet_second_read_runs_no_job(spark, tmp_path, jobs_run):
+    # a single file (written without Spark, as the test corpora are) and
+    # a partitionBy directory, whose signature walks the partition dirs
+    single = str(tmp_path / "t.parquet")
+    pd.DataFrame({"k": [3, 1, 2], "s": ["c", "a", "b"]}).to_parquet(single)
+    parted = str(tmp_path / "parted")
+    write_partitioned_parquet(
+        spark.createDataFrame([("a", 1), ("a", 2), ("b", 3)], "part string, v int"),
+        parted, ["part"],
+    )
+    for path in (single, parted):
+        _, first = jobs_run(lambda: read_parquet(spark, path))
+        df, second = jobs_run(lambda: read_parquet(spark, path))
+        assert (first, second) == (1, 0), path
+        plain = spark.read.parquet(path)
+        assert df.schema == plain.schema
+        assert sorted(df.collect()) == sorted(plain.collect())
+
+
+def test_read_parquet_sees_a_rewrite(spark, tmp_path):
+    from cpx_etl_spark.streaming.events import events_stream
+
+    # batch reads and the events stream share one schema cache; rewriting
+    # the file at the same path with an extra column must reach both
+    path = str(tmp_path / "events.parquet")
+    old = pd.DataFrame({"ts": [1_000_000], "user_id": [7]})
+    old.to_parquet(path)
+    assert read_parquet(spark, path).columns == ["ts", "user_id"]
+    assert events_stream(spark, str(tmp_path)).columns == ["ts", "user_id"]
+    old.assign(extra=["x"]).to_parquet(path)
+    assert read_parquet(spark, path).columns == ["ts", "user_id", "extra"]
+    assert events_stream(spark, str(tmp_path)).columns == ["ts", "user_id", "extra"]
+
+
+def test_read_parquet_missing_path_raises_like_spark(spark, tmp_path):
+    path = str(tmp_path / "absent.parquet")
+    with pytest.raises(Exception) as plain:
+        spark.read.parquet(path)
+    with pytest.raises(type(plain.value)):
+        read_parquet(spark, path)
 
 
 def test_csv_jsonl_roundtrip(spark, tmp_path):

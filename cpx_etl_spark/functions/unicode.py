@@ -1,43 +1,46 @@
-"""Unicode normalization column function.
+"""Unicode normalization column function, run in the JVM.
 
-Spark has no built-in Unicode normalizer, so this is a legitimate
-Arrow-batched pandas-UDF path (same rationale as the multimodal
-decoders): normalization tables are imperative lookups, not
-expressible in `pyspark.sql.functions`. Training pipelines normalize
-text BEFORE hashing/dedup so that composed and decomposed spellings of
-the same grapheme ('é' vs 'e'+U+0301) dedup together.
+Spark has no built-in Unicode normalizer, but every Spark 4.1 JVM
+carries ICU4J (a hard dependency of its collations), so
+``unicode_normalize`` calls ``com.ibm.icu.text.Normalizer`` per row
+through Spark's ``reflect``: the stage stays in the JVM and starts no
+Python worker. ``compose``/``decompose`` with the ``compat`` flag give
+the four forms (NFC, NFKC, NFD, NFKD). Training pipelines normalize text
+BEFORE hashing/dedup so that composed and decomposed spellings of the
+same grapheme ('é' vs 'e'+U+0301) dedup together.
 
 Cross-engine determinism: NFC/NFKC are deterministic per Unicode
-version; Python's unicodedata and DuckDB's nfc_normalize agree on any
-corpus whose characters normalize identically across their Unicode
-table versions (all stable scripts — normalization of assigned
-characters is stabilized by the Unicode standard's normalization
-stability policy).
+version. ICU 77 normalizes with Unicode 16 tables, Python 3.11's
+``unicodedata`` with 14.0 and DuckDB's ``nfc_normalize`` with its own;
+they agree on any character assigned in all of them, because
+normalization of assigned characters is stabilized by the Unicode
+standard's normalization stability policy. Only a character assigned
+after the oldest of those versions can normalize differently.
 """
 
 from __future__ import annotations
 
-import unicodedata
-
-import pandas as pd  # module level: pandas_udf resolves stringified hints here
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-_FORMS = ("NFC", "NFD", "NFKC", "NFKD")
+# form -> (ICU Normalizer method, compat)
+_FORMS = {
+    "NFC": ("compose", False),
+    "NFKC": ("compose", True),
+    "NFD": ("decompose", False),
+    "NFKD": ("decompose", True),
+}
 
 
 def unicode_normalize(col: Column, form: str = "NFC") -> Column:
-    """Normalize a string column to the given Unicode normal form."""
+    """Normalize a string column to the given Unicode normal form; NULL
+    stays NULL."""
     if form not in _FORMS:
-        raise ValueError(f"form must be one of {_FORMS}, got {form!r}")
-
-    @F.pandas_udf("string")
-    def norm(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda x: unicodedata.normalize(form, x) if x is not None else None
-        )
-
-    # asNondeterministic: deterministic in fact, but stops Catalyst
-    # from cloning the Python stage into pushed-down filter predicates
-    # (see plans/xsl_chain.py for the measured failure mode)
-    return norm.asNondeterministic()(col)
+        raise ValueError(f"form must be one of {tuple(_FORMS)}, got {form!r}")
+    method, compat = _FORMS[form]
+    return F.when(
+        col.isNotNull(),
+        F.reflect(
+            F.lit("com.ibm.icu.text.Normalizer"), F.lit(method), col, F.lit(compat)
+        ),
+    )

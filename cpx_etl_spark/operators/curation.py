@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from cpx_etl_spark.functions.text import shingles_expr
-from cpx_etl_spark.sources.registry import read_parquet
+from cpx_etl_spark.sources.registry import local_frame, read_parquet
 
 
 def decontaminate(
@@ -681,12 +681,10 @@ def read_training_mixture(
     # plan frame is non-deterministic (code-review r16).
     by_src: dict[str, list] = {}
     for r in picks:
-        # typed validation BEFORE the literal interpolation below
-        # (ADVICE r16): a hand-built plan with a NULL/non-integer
-        # shard or a non-finite position must fail with a named error,
-        # not an opaque SQL parse failure — and the float-repr ->
-        # double round-trip the VALUES relation relies on is only
-        # exact for finite floats.
+        # typed validation BEFORE the (shard, position) frame below is
+        # built: a hand-built plan with a NULL/non-integer shard or a
+        # non-finite position must fail with a named error, not an
+        # opaque conversion error or a silently dropped row.
         shard, position = r["shard"], r["position"]
         if not isinstance(shard, int) or isinstance(shard, bool):
             raise ValueError(
@@ -723,17 +721,8 @@ def read_training_mixture(
         data = read_parquet(spark, os.path.join(path, "data")).filter(
             F.col("shard").isin(shards)
         )
-        # tiny (shard, position) frame from the collected picks as a
-        # JVM VALUES relation (the house tiny-frame posture — a
-        # createDataFrame python roundtrip costs 32 pickled slices);
-        # float repr round-trips the exact double
-        vals = ", ".join(
-            f"(CAST({s} AS BIGINT), CAST({p!r} AS DOUBLE))"
-            for s, p in by_src[src_name]
-        )
-        pos = spark.sql(
-            f"SELECT * FROM VALUES {vals} AS t(shard, position)"
-        )
+        # tiny (shard, position) frame from the collected picks
+        pos = local_frame(spark, by_src[src_name], "shard bigint, position double")
         part = data.join(F.broadcast(pos), "shard").select(
             F.lit(src_name).alias("source"),
             "shard",

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from cpx_etl_spark.plans.pipeline import compile_pipeline
 from cpx_etl_spark.sources.file_resolver import FileResolver
+from cpx_etl_spark.sources.registry import local_frame
 
 
 def _walk_leaves(tree: dict, prefix: str = ""):
@@ -57,4 +58,4 @@ def describe_summary(
         (name, df.count(), len(df.columns))
         for name, df in sorted(describe(spark, sf_dir, root, globs).items())
     ]
-    return spark.createDataFrame(rows, "case string, n_rows long, n_cols long")
+    return local_frame(spark, rows, "case string, n_rows long, n_cols long")

@@ -332,7 +332,13 @@ def q_xlsx_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_xml_badgerfish_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed XML parse: xml-string column -> badgerfish '@' cols
-    via Arrow-batched mapInPandas."""
+    via Spark's ``from_xml`` in the JVM (sources/xml_badgerfish.py):
+    ``attributePrefix="@"`` names the root attributes, and
+    ``ignoreSurroundingSpaces="false"`` keeps their spaces as
+    ElementTree does. A document with an internal DTD entity, or with
+    an undefined entity after an external DTD reference, parses to
+    NULLs where ElementTree gives a value; the generated documents here
+    have no DTD."""
     cust = load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") < 100)
     with_xml = cust.select(
         F.concat(
@@ -865,12 +871,13 @@ def q_xsl_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1), while regexp stays in whole-stage codegen. The output
     # XML is machine-generated with a fixed shape, so the anchored
     # element regexes are exact. Filtered-out orders transform to an
-    # empty <outs/>: the extract gives '', which try_cast maps to NULL
-    # (plain cast throws under ANSI).
+    # empty <outs/>: the extract gives '', which nullif maps to NULL
+    # before the cast (plain cast throws under ANSI; try_cast of '' would
+    # throw and catch inside the JVM for two thirds of the rows).
     return transformed.select(
-        F.expr("try_cast(regexp_extract(out_xml, '<key>([^<]*)</key>', 1) AS bigint)").alias("order_id"),
+        F.expr("try_cast(nullif(regexp_extract(out_xml, '<key>([^<]*)</key>', 1), '') AS bigint)").alias("order_id"),
         F.regexp_extract("out_xml", "<pri>([^<]*)</pri>", 1).alias("pri"),
-        F.expr("try_cast(regexp_extract(out_xml, '<cents>([^<]*)</cents>', 1) AS bigint)").alias("cents"),
+        F.expr("try_cast(nullif(regexp_extract(out_xml, '<cents>([^<]*)</cents>', 1), '') AS bigint)").alias("cents"),
     ).filter(F.col("order_id").isNotNull())
 
 

@@ -23,7 +23,7 @@ from cpx_etl_spark.operators.relational import (
 )
 from cpx_etl_spark.operators.skew import salted_agg
 from cpx_etl_spark.queries import davg, dsum, fround, register, sql_davg, sql_dsum, sql_fround
-from cpx_etl_spark.sources import load_table
+from cpx_etl_spark.sources import load_table, local_frame
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -3446,7 +3446,7 @@ def q_approx_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
     cum = bins.withColumn("cn", F.sum("n").over(w))
     tot = bins.agg(F.sum("n").alias("total"))
-    qs = spark.createDataFrame([(0.5,), (0.9,), (0.99,)], "p double")
+    qs = local_frame(spark, [(0.5,), (0.9,), (0.99,)], "p double")
     est = (
         cum.crossJoin(F.broadcast(tot))  # 256-row frame x 1-row total
         .join(F.broadcast(qs), F.col("cn") >= F.col("p") * F.col("total"))
@@ -7452,27 +7452,15 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumed by TWO broadcast builds (cells and convs); without the
     # checkpoint each build re-runs the whole journey pipeline
     # (measured 2.9s x2 at sf0.1)
-    # literal state/removal frames as JVM-side VALUES local relations:
-    # createDataFrame() parallelizes through python workers (each tiny
-    # frame cost ~4s of sequential worker roundtrips under coalesce,
-    # hundreds of near-empty tasks without it — measured both), while
-    # a LocalRelation is a single in-JVM partition that broadcasts for
-    # free
-    srcs = spark.sql(
-        "SELECT * FROM VALUES "
-        + ", ".join(f"({i + 1}, '{s}')" for i, s in enumerate(_MKV_SRCS))
-        + " AS t(i, sname)"
+    # literal state/removal frames: local_frame gives a LocalRelation,
+    # a single in-JVM partition that broadcasts for free
+    srcs = local_frame(
+        spark, [(i + 1, s) for i, s in enumerate(_MKV_SRCS)], "i int, sname string"
     )
-    dsts = spark.sql(
-        "SELECT * FROM VALUES "
-        + ", ".join(f"({j + 1}, '{c}')" for j, c in enumerate(_MKV_CHANNELS))
-        + " AS t(j, dname)"
+    dsts = local_frame(
+        spark, [(j + 1, c) for j, c in enumerate(_MKV_CHANNELS)], "j int, dname string"
     )
-    rms = spark.sql(
-        "SELECT * FROM VALUES "
-        + ", ".join(f"('{r}')" for r in ["none"] + _MKV_CHANNELS)
-        + " AS t(rm)"
-    )
+    rms = local_frame(spark, [(r,) for r in ["none"] + _MKV_CHANNELS], "rm string")
     cells = (
         rms.crossJoin(srcs).crossJoin(dsts)
         .join(
@@ -7549,11 +7537,7 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = absorbed.filter(F.col("rm") == "none").select(
         F.col("conv_p").alias("base_p")
     )
-    chans = spark.sql(
-        "SELECT * FROM VALUES "
-        + ", ".join(f"('{c}')" for c in _MKV_CHANNELS)
-        + " AS t(channel)"
-    )
+    chans = local_frame(spark, [(c,) for c in _MKV_CHANNELS], "channel string")
     eff = (
         chans.join(absorbed, chans.channel == absorbed.rm)
         .crossJoin(F.broadcast(base))

@@ -27,7 +27,7 @@ from cpx_etl_spark.functions.text import (
 )
 from cpx_etl_spark.functions.vectors import sql_cosine
 from cpx_etl_spark.queries import fround, register
-from cpx_etl_spark.sources import load_table
+from cpx_etl_spark.sources import load_table, local_frame
 
 _TOKENS_SQL = "string_split(text, ' ')"
 
@@ -320,10 +320,10 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unicode NFC normalization (pre-dedup canonicalization): every doc
     gets a decomposed suffix ('e'+U+0301, 'u'+U+0308) injected, the
-    pandas-UDF normalizer composes it, and the oracle replays with
-    DuckDB's nfc_normalize — md5 of the normalized text proves
-    byte-identical output, lengths prove the composition happened
-    (2 code points shorter per doc)."""
+    JVM-side ICU4J normalizer (functions/unicode.py) composes it, and
+    the oracle replays with DuckDB's nfc_normalize — md5 of the
+    normalized text proves byte-identical output, lengths prove the
+    composition happened (2 code points shorter per doc)."""
     from cpx_etl_spark.functions.unicode import unicode_normalize
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1983,8 +1983,8 @@ def bm25_scores(docs) -> "DataFrame":
     """Spark twin of _bm25_sql_ctes: (doc_id, n_hit_terms, bm25) for
     the fixed _BM25_QUERY over any frame with doc_id + text. Per-term
     weights tie-round at 6dp BEFORE the per-doc decimal sum so the
-    score is order-independent; the constant query frame is a JVM
-    VALUES relation (no python-worker parallelize)."""
+    score is order-independent; the constant query frame is a
+    ``local_frame`` (a LocalRelation, no Python worker)."""
     spark = docs.sparkSession
     n1 = docs.agg(F.count(F.lit(1)).alias("n"))
     toks = docs.select(
@@ -1998,11 +1998,7 @@ def bm25_scores(docs) -> "DataFrame":
     avgdl = dl.agg(
         (F.sum("dlen").cast("double") / F.count(F.lit(1))).alias("ad")
     )
-    q = spark.sql(
-        "SELECT * FROM VALUES "
-        + ", ".join(f"('{t}')" for t in _BM25_QUERY)
-        + " AS t(tok)"
-    )
+    q = local_frame(spark, [(t,) for t in _BM25_QUERY], "tok string")
     tf = (
         toks.join(F.broadcast(q), "tok")  # constant 5-term frame
         .groupBy("doc_id", "tok")

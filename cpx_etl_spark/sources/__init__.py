@@ -1,3 +1,3 @@
-from cpx_etl_spark.sources.registry import TABLES, load_table, load_all
+from cpx_etl_spark.sources.registry import TABLES, load_all, load_table, local_frame
 
-__all__ = ["TABLES", "load_table", "load_all"]
+__all__ = ["TABLES", "load_table", "load_all", "local_frame"]

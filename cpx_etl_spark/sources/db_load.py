@@ -17,6 +17,9 @@ this module exists to prove the live-DB contract end to end.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
+
+from cpx_etl_spark.sources.registry import local_frame
 
 _SPARK_TO_SQL = {
     "bigint": "BIGINT",
@@ -79,8 +82,4 @@ def read_from_database(spark: SparkSession, db_path: str, query: str) -> DataFra
         tbl = con.execute(query).fetch_arrow_table()
     finally:
         con.close()
-    # carry the Arrow schema explicitly: an EMPTY result's pandas frame
-    # has only object dtypes, which Spark cannot infer a schema from
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    return spark.createDataFrame(tbl.to_pandas(), schema=from_arrow_schema(tbl.schema))
+    return local_frame(spark, tbl, from_arrow_schema(tbl.schema))

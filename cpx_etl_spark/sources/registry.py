@@ -23,15 +23,23 @@ and inferred again when either changes:
 A path ``os.stat`` cannot see — a missing path or a remote URI — is
 read with plain ``spark.read.parquet``, uncached, so it fails or
 succeeds exactly as before.
+
+Rows the driver already holds — a parsed sheet, a listing, a constant
+lookup frame — become a DataFrame through ``local_frame``: one Arrow
+table whose plan leaf is a ``LocalRelation``, so no action on it starts
+a Python worker.
 """
 
 from __future__ import annotations
 
 import os
 import stat
+from collections.abc import Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 TABLES = (
@@ -120,6 +128,38 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     schema = _cached_schema(spark, path)
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(path)
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[tuple] | pa.Table, schema: StructType | str
+) -> DataFrame:
+    """Driver rows as a DataFrame whose plan leaf is a ``LocalRelation``,
+    the leaf a ``VALUES`` clause gives.
+
+    ``rows`` is a sequence of tuples, or a ``pyarrow.Table`` the caller
+    already holds; ``schema`` is a ``StructType`` or a DDL string. Tuples
+    are laid out in the Arrow schema Spark maps ``schema`` to and handed
+    over as one Arrow table. ``spark.createDataFrame(<list>)`` would
+    instead parallelize pickled rows into a ``LogicalRDD`` whose every
+    action runs Python-worker tasks, and a pandas detour would turn a
+    ``long`` column holding a None into float64 and lose integers above
+    2^53. A naive ``datetime`` in a timestamp column is read as UTC.
+    """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if not isinstance(rows, pa.Table):
+        arrow = to_arrow_schema(schema)
+        bad = [r for r in rows if len(r) != len(arrow)]
+        if bad:
+            raise ValueError(
+                f"local_frame: row {bad[0]!r} does not have the "
+                f"{len(arrow)} fields of {schema.simpleString()}"
+            )
+        cols = list(zip(*rows)) if rows else [()] * len(arrow)
+        rows = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+        )
+    return spark.createDataFrame(rows, schema)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

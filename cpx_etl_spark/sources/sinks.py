@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from cpx_etl_spark.sources.registry import local_frame
+
 
 def write_partitioned_parquet(
     df: DataFrame, path: str, partition_by: list[str], mode: str = "overwrite"
@@ -1225,9 +1227,7 @@ def ingest_new_files(
     )
     if not listing:
         return []
-    listing_df = spark.createDataFrame(
-        [(f,) for f in listing], "file_name string"
-    )
+    listing_df = local_frame(spark, [(f,) for f in listing], "file_name string")
     if os.path.isdir(manifest_path):
         fresh_df = listing_df.join(
             spark.read.parquet(manifest_path), on="file_name", how="left_anti"
@@ -1242,7 +1242,7 @@ def ingest_new_files(
         reader = reader.schema(schema)
     df = reader.parquet(*[os.path.join(src_dir, f) for f in fresh])
     df.write.mode("append").parquet(out_path)
-    spark.createDataFrame(
-        [(f,) for f in fresh], "file_name string"
-    ).write.mode("append").parquet(manifest_path)
+    local_frame(spark, [(f,) for f in fresh], "file_name string").write.mode(
+        "append"
+    ).parquet(manifest_path)
     return fresh

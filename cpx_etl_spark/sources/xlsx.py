@@ -14,6 +14,9 @@ round-trips through this reader and through real spreadsheet apps.
 
 At scale, XLSX parsing is driver-side (or mapInPandas-per-file for many
 workbooks) feeding parquet — spreadsheets are small by construction.
+A parsed sheet becomes a DataFrame through ``local_frame``: the rows
+stay in the JVM as a LocalRelation, so no action on it starts a Python
+worker.
 """
 
 from __future__ import annotations
@@ -23,6 +26,16 @@ import zipfile
 from xml.etree import ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    BooleanType,
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from cpx_etl_spark.sources.registry import local_frame
 
 _NS = {"m": "http://schemas.openxmlformats.org/spreadsheetml/2006/main"}
 _RNS = "{http://schemas.openxmlformats.org/officeDocument/2006/relationships}"
@@ -256,10 +269,32 @@ def read_xlsx_tables(path: str) -> dict[str, tuple[list[str], list[tuple]]]:
     return out
 
 
+# The Spark type schema inference gives each Python type a cell can read as.
+_CELL_TYPES = {bool: BooleanType(), int: LongType(), float: DoubleType(), str: StringType()}
+
+
+def _sheet_schema(header: list[str], rows: list[tuple]) -> StructType:
+    """The schema Spark infers when handed ``rows`` with ``header`` as
+    column names: each column takes the one Python type of its values;
+    a column with no value, or with two types, raises as inference
+    does."""
+    fields = []
+    for ci, name in enumerate(header):
+        kinds = {type(r[ci]) for r in rows if r[ci] is not None}
+        if not kinds:
+            raise ValueError(f"xlsx: column {name!r} has no value to type it by")
+        if len(kinds) > 1:
+            raise TypeError(
+                f"xlsx: column {name!r} mixes {sorted(k.__name__ for k in kinds)}"
+            )
+        fields.append(StructField(name, _CELL_TYPES[kinds.pop()]))
+    return StructType(fields)
+
+
 def read_xlsx(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     """Read every non-empty sheet of an XLSX file into DataFrames."""
     return {
-        name: spark.createDataFrame(rows, header)
+        name: local_frame(spark, rows, _sheet_schema(header, rows))
         for name, (header, rows) in read_xlsx_tables(path).items()
     }
 
@@ -267,7 +302,7 @@ def read_xlsx(spark: SparkSession, path: str) -> dict[str, DataFrame]:
 def fake_workbook(spark: SparkSession) -> dict[str, DataFrame]:
     """Deterministic workbook DataFrames (same shape as read_xlsx)."""
     return {
-        sheet: spark.createDataFrame(rows, schema)
+        sheet: local_frame(spark, rows, schema)
         for sheet, (schema, rows) in FAKE_WORKBOOK.items()
     }
 

@@ -1044,3 +1044,72 @@ def test_kafka_sink_options_and_wire_roundtrip(spark):
         kafka_writer(wire, bootstrap_servers="b:9092", topic="out")
     assert kafka_writer(wire, streaming=False,
                         bootstrap_servers="b:9092", topic="out") is not None
+
+
+def test_parse_xml_column_edge_rows(spark, tmp_path):
+    """parse_xml_column's per-row contract (sources/xml_badgerfish.py):
+    a NULL or malformed document gives NULL attributes instead of
+    failing the query; entities decode; attribute spaces are kept; a
+    namespaced n:id is not @id; the two DTD shapes parse to NULL; an
+    external SYSTEM entity is never read."""
+    from cpx_etl_spark.sources.registry import local_frame
+    from cpx_etl_spark.sources.xml_badgerfish import parse_xml_column
+
+    canary = tmp_path / "canary.txt"
+    canary.write_text("CANARY-7f3a")
+    docs = [
+        (None, (None, None)),
+        ('<p id="1"', (None, None)),
+        ('<p id="a &amp; b" name="n"/>', ("a & b", "n")),
+        ('<p id="  x  " name=""/>', ("  x  ", "")),
+        ('<p xmlns:n="urn:n" n:id="5" name="z"/>', (None, "z")),
+        ('<p id="&undef;" name="k"/>', (None, None)),
+        # ElementTree expands the internal entity to ('ent', 'k')
+        ('<!DOCTYPE p [<!ENTITY e "ent">]><p id="&e;" name="k"/>', (None, None)),
+        # ElementTree reads the undefined entity as ('', 'k')
+        ('<!DOCTYPE p SYSTEM "p.dtd"><p id="&undef;" name="k"/>', (None, None)),
+        (f'<!DOCTYPE p [<!ENTITY x SYSTEM "{canary.as_uri()}">]>'
+         '<p id="&x;" name="k"/>', (None, None)),
+    ]
+    df = local_frame(spark, [(i, d) for i, (d, _) in enumerate(docs)],
+                     "i int, xml string")
+    out = parse_xml_column(df, "xml", ["id", "name"], "`@id` string, `@name` string")
+    assert out.columns == ["@id", "@name"]
+    got = [tuple(r) for r in out.collect()]
+    assert got == [want for _, want in docs]
+    assert not any("CANARY" in str(v) for r in got for v in r)
+
+
+def test_unicode_normalize_forms_match_unicodedata(spark):
+    """The four ICU4J forms equal Python's unicodedata on characters
+    assigned in both Unicode versions; NULL stays NULL."""
+    import unicodedata
+
+    from cpx_etl_spark.functions.unicode import unicode_normalize
+    from cpx_etl_spark.sources.registry import local_frame
+
+    # escape-spelled so an editor cannot normalize the source
+    probes = [
+        "cafe\u0301",  # decomposed e + acute
+        "\u00e9",  # precomposed e-acute
+        "\ufb01ne",  # fi ligature
+        "\u2460\u2461",  # circled digits
+        "\ud55c\uae00",  # precomposed Hangul syllables
+        "\u1112\u1161\u11ab",  # conjoining Hangul jamo
+        "\uff26\uff55\uff4c\uff4c",  # fullwidth letters
+        "a\u0323\u0302\u0301",  # stacked combining marks
+        "\u212b\u2126",  # Angstrom and Ohm signs (singletons)
+        "x\u00b2\u2075",  # superscripts
+    ]
+    df = local_frame(spark, [(i, s) for i, s in enumerate(probes + [None])],
+                     "i int, s string")
+    forms = ("NFC", "NFD", "NFKC", "NFKD")
+    rows = df.select(
+        "i", *[unicode_normalize(F.col("s"), f).alias(f) for f in forms]
+    ).orderBy("i").collect()
+    for s, row in zip(probes + [None], rows):
+        for f in forms:
+            want = None if s is None else unicodedata.normalize(f, s)
+            assert row[f] == want, (s, f)
+    with pytest.raises(ValueError):
+        unicode_normalize(F.col("s"), "NFX")

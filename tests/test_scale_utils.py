@@ -1302,3 +1302,60 @@ def test_expire_preserves_retained_pruned_reads(spark, tmp_path):
     got = sorted(r["k"] for r in pruned.collect())
     assert got == list(range(50, 61))
     assert 1 <= n_scanned < n_total
+
+
+def _leaf_names(df):
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return [leaves.apply(i).nodeName() for i in range(leaves.size())]
+
+
+def test_local_frame_is_local_relation_equal_to_create_dataframe(spark):
+    """local_frame gives the LocalRelation leaf a VALUES clause gives,
+    with the schema and rows spark.createDataFrame gives for the same
+    list: NULLs in every type, and longs above 2^53 kept exact."""
+    from cpx_etl_spark.sources.registry import local_frame
+
+    schema = "i long, b boolean, d double, s string"
+    rows = [
+        (1, True, 0.5, "a"),
+        (None, None, None, None),
+        (2**53 + 1, False, -1e300, ""),
+        (-(2**63), True, float("inf"), "é"),
+    ]
+    got = local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert _leaf_names(got) == ["LocalRelation"]
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    assert got.collect()[2]["i"] == 2**53 + 1
+
+    empty = local_frame(spark, [], schema)
+    assert _leaf_names(empty) == ["LocalRelation"]
+    assert empty.schema == want.schema
+    assert empty.collect() == []
+    with pytest.raises(ValueError):
+        local_frame(spark, [(1, True)], schema)
+
+
+def test_xlsx_sheet_keeps_inferred_types(spark, tmp_path):
+    """read_xlsx types each column as schema inference over the parsed
+    rows did (bool, bigint, double, string); a column with no value
+    still raises."""
+    from cpx_etl_spark.sources.xlsx import read_xlsx, read_xlsx_tables, write_xlsx
+
+    # a short row leaves its trailing cells out, so they read as NULL
+    path = str(tmp_path / "t.xlsx")
+    write_xlsx(path, {"t": (["b", "n", "x", "s"],
+                            [(True, 1, 0.5, "a"), (False, 7, 2.5), ()])})
+    df = read_xlsx(spark, path)["t"]
+    header, rows = read_xlsx_tables(path)["t"]
+    want = spark.createDataFrame(rows, header)
+    assert _leaf_names(df) == ["LocalRelation"]
+    assert df.dtypes == [("b", "boolean"), ("n", "bigint"), ("x", "double"),
+                         ("s", "string")]
+    assert df.schema == want.schema
+    assert df.collect() == want.collect()
+
+    write_xlsx(path, {"t": (["a", "empty"], [(1,), (2,)])})
+    with pytest.raises(ValueError):
+        read_xlsx(spark, path)

@@ -15,6 +15,13 @@ Patterns:
   CartesianProduct means two unbounded sides met without a key.
 - BatchEvalPython: a row-at-a-time Python UDF — the ~100x-slower
   non-Arrow path; the repo's contract is zero of these anywhere.
+- PythonRDDLeaf: a LogicalRDD leaf (``Scan ExistingRDD``) whose RDD
+  lineage contains a PythonRDD — driver rows parallelized as pickles,
+  as ``spark.createDataFrame(<list>)`` does, so every action on the frame
+  runs Python-worker tasks. Driver rows go through
+  ``sources.registry.local_frame`` (a LocalRelation) instead. The
+  lineage is read with ``rdd().toDebugString()``, which runs no job;
+  checkpointed LogicalRDDs without Python in their lineage pass.
 - Exchange SinglePartition: a global funnel, classified by the CHILD
   operator actually funneled. The keyless partial/merge scalar-agg
   shape is benign by construction (one row per upstream partition);
@@ -119,6 +126,18 @@ _ALLOW: dict[tuple[str, str], str] = {}
 _PATTERNS = ("CartesianProduct", "BatchEvalPython")
 
 
+def _python_rdd_leaves(df) -> list[str]:
+    """The LogicalRDD leaves of ``df``'s analyzed plan whose RDD lineage
+    contains a PythonRDD (module docstring)."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    hits = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRDD" and "PythonRDD" in leaf.rdd().toDebugString():
+            hits.append(leaf.simpleString(80))
+    return hits
+
+
 def _single_partition_funnels(plan: str) -> list[str]:
     """Classify every SinglePartition exchange by its immediate CHILD
     (the next line in toString(), the frame actually funneled):
@@ -167,7 +186,9 @@ def main() -> int:
     checked = 0
     for name, fn in sorted(queries.items()):
         try:
-            plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+            df = fn(spark, sf_dir)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            python_leaves = _python_rdd_leaves(df)
         except Exception as exc:  # plan build itself failed
             failures.append(f"{name}: plan build error: {exc}")
             continue
@@ -175,6 +196,9 @@ def main() -> int:
         for pat in _PATTERNS:
             if pat in plan and (name, pat) not in _ALLOW:
                 failures.append(f"{name}: {pat}")
+        for leaf in python_leaves:
+            if (name, "PythonRDDLeaf") not in _ALLOW:
+                failures.append(f"{name}: PythonRDDLeaf <- {leaf}")
         allowed = _ALLOW_FUNNELS.get(name, [])
         for child in _single_partition_funnels(plan):
             if not any(child.startswith(prefix) for prefix, _reason in allowed):

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cpx_etl_spark.operators.cut import cut
+
 
 def connected_components(
     nodes: DataFrame,
@@ -40,13 +42,13 @@ def connected_components(
     # Materialize the edge list ONCE: its lineage is the full upstream
     # candidate/verify pipeline, which would otherwise be recomputed in
     # every propagation round. (The standard iterative-algorithm
-    # pattern — GraphX does the same; on a cluster, localCheckpoint
-    # stores partitions on executor storage.)
+    # pattern — GraphX does the same; what a lost executor costs is
+    # `cut`'s policy.)
     sym = (
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .unionAll(edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(cut, eager=True)
     )
     labels = nodes.select(F.col(id_col).alias("a"), F.col(id_col).alias("label"))
     for _ in range(max_iter):
@@ -61,7 +63,7 @@ def connected_components(
                 "a",
                 F.least(F.col("label"), F.coalesce("nlabel", "label")).alias("label"),
             )
-        ).localCheckpoint(eager=True)  # checkpoint FIRST, then the
+        ).transform(cut, eager=True)  # checkpoint FIRST, then the
         # fixed-point diff below joins two materialized frames (one
         # cheap job per round instead of a full recompute + a job)
         changed = (
@@ -127,7 +129,7 @@ def connected_components_star(
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(cut, eager=True)
     )
     for _ in range(max_iter):
         # large-star over the symmetric view: neighbors of a = both
@@ -153,12 +155,12 @@ def connected_components_star(
             .filter(F.col("u") != F.col("v"))
         )
         center = nm.select(F.col("u"), F.col("m").alias("v"))
-        new_e = relink.unionAll(center).distinct().localCheckpoint(eager=True)
+        new_e = relink.unionAll(center).distinct().transform(cut, eager=True)
         stable = (
             new_e.exceptAll(e).limit(1).count() == 0
             and e.exceptAll(new_e).limit(1).count() == 0
         )
-        # The superseded round's localCheckpoint blocks are NOT
+        # The superseded round's cut blocks are NOT
         # releasable via Dataset.unpersist() (it only uncaches
         # cache-manager entries; the checkpoint persists the underlying
         # RDD directly — code-review r10). They are freed by the
@@ -211,12 +213,12 @@ def bfs_min_hop(edges: DataFrame, seeds: DataFrame, k: int) -> DataFrame:
     co-purchase graph)."""
     from pyspark.sql import functions as F
 
-    edges = edges.localCheckpoint(eager=True)
+    edges = cut(edges, eager=True)
     visited = (
         seeds.select("node")
         .distinct()
         .withColumn("hop", F.lit(0))
-        .localCheckpoint(eager=True)
+        .transform(cut, eager=True)
     )
     frontier = visited.select("node")
     for h in range(1, k + 1):
@@ -226,7 +228,7 @@ def bfs_min_hop(edges: DataFrame, seeds: DataFrame, k: int) -> DataFrame:
             .distinct()
             .join(visited.select("node"), on="node", how="left_anti")
             .withColumn("hop", F.lit(h))
-            .localCheckpoint(eager=True)
+            .transform(cut, eager=True)
         )
         visited = visited.unionByName(nxt)
         frontier = nxt.select("node")

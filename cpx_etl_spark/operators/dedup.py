@@ -26,43 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cpx_etl_spark.operators.cut import cut
 from cpx_etl_spark.sources.registry import read_parquet
-
-
-def materialize_index(df: DataFrame) -> DataFrame:
-    """Materialization policy for CORPUS-TOKEN-SIZED shared frames (the
-    distinct shingle inverted index feeding a candidate self-join on
-    both sides).
-
-    The 100 TB trade (VERDICT r17 item 7): `localCheckpoint` stores the
-    blocks on executor-local storage with NO replication and TRUNCATES
-    lineage — on a 1000-executor run, losing one executor mid-query
-    kills the job instead of recomputing a partition from parquet, and
-    it is unsafe under dynamic allocation. For NARROW frames (per-doc
-    counts, banded signatures, candidate pairs — O(docs) rows) that
-    risk is small and the win is real, so they use `localCheckpoint`
-    directly. For corpus-sized frames the default is still the local
-    cut (measured faster at the bench scale, and a single-box bench has
-    no executor-loss exposure), but cluster deployments choose the
-    policy explicitly via $SPARK_GRAFT_INDEX_MATERIALIZE:
-
-    - ``local``    (default) localCheckpoint(eager=False) — fastest,
-                   executor-local state, assumes static executors.
-    - ``none``     keep lineage; each consumer recomputes from parquet
-                   (fault-tolerant, ~1 extra evaluation per consumer).
-    - ``reliable`` checkpoint(eager=False) to the configured
-                   spark.checkpoint.dir — replicated/HDFS-backed cut,
-                   survives executor loss; the right setting for long
-                   multi-tenant 100 TB runs.
-    """
-    import os
-
-    mode = os.environ.get("SPARK_GRAFT_INDEX_MATERIALIZE", "local")
-    if mode == "none":
-        return df
-    if mode == "reliable":
-        return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=False)
 
 
 def observe_count(df: DataFrame, stats: dict | None, name: str) -> DataFrame:
@@ -161,8 +126,7 @@ def _verify_jaccard_two(pairs: DataFrame,
                         idx_a: DataFrame, cnt_a: DataFrame,
                         idx_b: DataFrame, cnt_b: DataFrame,
                         id_col: str, threshold: float,
-                        prune_index: bool = False,
-                        checkpoint_pairs: bool = True) -> DataFrame:
+                        prune_index: bool = False) -> DataFrame:
     """Exact Jaccard for candidate pairs, with independent shingle
     index/count frames per pair side (doc_a side vs doc_b side) — the
     general form needed by the cross-corpus paths, where the doc_b side
@@ -174,34 +138,19 @@ def _verify_jaccard_two(pairs: DataFrame,
     the band-collision pre-filter), this keeps the verify shuffle
     proportional to the candidate docs' shingles instead of the whole
     corpus. Results are identical either way (per-doc counts always come
-    from the full index), so oracles need no mirror.
+    from the full index), so oracles need no mirror. A pruned verify
+    reads ``pairs`` three times (both semi-join doc lists and the
+    shared-shingle join), so callers whose candidate subtree is costly
+    pass ``cut(pairs)``.
     """
     if prune_index:
         # no broadcast hint: candidate-doc lists are usually small but
         # scale with corpus dup density — AQE broadcasts when the
         # runtime size actually allows it (VERDICT r4 item 2).
-        # Checkpoint the candidate frame (r17): it feeds THREE
-        # consumers (both semi-join doc lists + the shared-shingle
-        # join), and without the cut each consumer re-evaluates the
-        # entire candidate-generation subtree — the formatted plan of
-        # dedup_minhash_lsh showed the signature aggregation running
-        # SIX times (20 scans of documents) for this reason. The frame
-        # is narrow (two ids per candidate pair). Callers whose
-        # candidate subtree is already cheap stored-parquet scans pass
-        # checkpoint_pairs=False to keep those scans VISIBLE in the
-        # executed plan (the stored-index plan pin) — re-running a
-        # band-parquet join thrice costs less than it proves.
-        if checkpoint_pairs:
-            pairs = pairs.localCheckpoint(eager=False)
         if idx_a is idx_b:
             # self-join verify: both sides prune from ONE index, so
-            # semi-join it to the union of candidate docs once and
-            # checkpoint THAT — the materialized frame is candidate-
-            # bounded (narrow), and the corpus-wide distinct shuffle
-            # behind the index runs once instead of once per side.
-            # (r18, replacing r17's full-index checkpoint: the driver
-            # measured materializing the corpus-token-sized index
-            # 15-27% slower at local[32] — the cut must stay narrow.)
+            # semi-join it to the union of candidate docs once and cut
+            # THAT — the cut frame is candidate-bounded (narrow).
             # Catalyst pushes the semi-join below the index's
             # dropDuplicates aggregate (the key is a grouping column),
             # so the distinct shuffle itself carries only candidate
@@ -213,9 +162,11 @@ def _verify_jaccard_two(pairs: DataFrame,
                 .union(pairs.select(F.col("doc_b").alias(id_col)))
                 .distinct()
             )
+            # kept: dedup_doc_fuzzy_verdict 4.04 s cut vs 4.71 s uncut,
+            # sf0.1 local[4]
             idx_a = idx_b = idx_a.join(
                 docs, on=id_col, how="left_semi"
-            ).localCheckpoint(eager=False)
+            ).transform(cut)
         else:
             docs_a = pairs.select(F.col("doc_a").alias(id_col)).distinct()
             docs_b = pairs.select(F.col("doc_b").alias(id_col)).distinct()
@@ -258,16 +209,11 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     """Near-dup pairs: any shared n-gram shingle proposes a candidate,
     exact Jaccard >= threshold confirms. ``stats`` (observe_count)
     exposes the candidate-pair count of the run."""
-    # The candidate self-join consumes the full distinct index on BOTH
-    # sides, so one materialization beats two evaluations (measured
-    # r18: 2.5 s vs 3.1 s at sf0.1/local[32]) — but the frame is
-    # corpus-token-sized, so the cut goes through the documented
-    # materialize_index policy (reliable/none for cluster runs).
-    # Per-doc counts read the materialized index (a count over blocks
-    # already on disk — measured cheaper than an independent
-    # count_distinct re-aggregation of the raw rows).
+    # Per-doc counts read the cut index (measured cheaper than an
+    # independent count_distinct re-aggregation of the raw rows).
     rows = shingle_rows(df, id_col, text_col, n)
-    index = materialize_index(rows.dropDuplicates())
+    # kept: dedup_ngram_jaccard 1.63 s cut vs 1.91 s uncut, sf0.1 local[4]
+    index = cut(rows.dropDuplicates())
     counts = index.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     if max_df is None:
         # fast path: the candidate self-join already touches every
@@ -395,29 +341,23 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     # Signatures come from the NON-distinct shingle rows: min() is
     # duplicate-insensitive, so skipping dropDuplicates saves a full
     # shuffle — the sig path is read -> narrow shingling -> one
-    # groupBy(id) shuffle with map-side partial mins. (r18: this is
-    # the r17-first-pass shape restored — the final-r17 variant that
-    # checkpointed the full distinct index in front of the signatures
-    # regressed the family 15-27% in the driver's local[32] run: the
-    # sig path gained a corpus-wide distinct shuffle AND waited on a
-    # corpus-token-sized materialization. Checkpoint cuts here stay
-    # NARROW: per-doc counts, banded signatures, candidate pairs, and
-    # the candidate-pruned verify index — all O(docs)/O(candidates).)
+    # groupBy(id) shuffle with map-side partial mins. (Cutting the full
+    # distinct index in front of the signatures regressed the family
+    # 15-27% at local[32]: the sig path gained a corpus-wide distinct
+    # shuffle and waited on a corpus-token-sized materialization.)
     rows = shingle_rows(df, id_col, text_col, n)
     index = rows.dropDuplicates()
     # counts in ONE aggregate over the raw rows (count_distinct plans
     # as the same partial-on-(id, sh) two-phase shape the old
-    # dropDuplicates+count pair cost, but in a single subtree), and
-    # CHECKPOINTED — it feeds both verify sides (r17)
+    # dropDuplicates+count pair cost, but in a single subtree)
+    # kept: dedup_doc_fuzzy_verdict 20.62 s cut vs 23.83 s with this and
+    # `cand` uncut, sf1 local[4]; tie at sf0.1
     counts = rows.groupBy(id_col).agg(
         F.count_distinct(F.col("sh")).alias("n_sh")
-    ).localCheckpoint(eager=False)
+    ).transform(cut)
     sig = minhash_signatures(rows, id_col, k, hash_fn=hash_fn)
-    # checkpoint the banded signatures: both sides of the candidate
-    # self-join consume them, and without the cut EACH side re-runs
-    # the whole scan -> shingle -> md5 -> 64-min aggregation (r17;
-    # narrow frame: bands rows/doc x 3 columns)
-    stacked = band_rows(sig, id_col, k, bands).localCheckpoint(eager=False)
+    # kept: dedup_doc_fuzzy_verdict 3.31 s cut vs 3.63 s uncut, sf0.1 local[4]
+    stacked = band_rows(sig, id_col, k, bands).transform(cut)
     s1 = stacked.select(F.col(id_col).alias("doc_a"), "band_idx", "band_key")
     s2 = stacked.select(F.col(id_col).alias("doc_b"), "band_idx", "band_key")
     # each doc contributes one row per band_idx, so count(*) per pair
@@ -437,11 +377,14 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     # joins are inner on the pair ids). Default follows the band
     # pre-filter (collisions >= 2 makes candidates sparse); callers
     # whose candidate sets are sparse for other reasons opt in.
-    return _verify_jaccard(
-        cand, index, counts, id_col, threshold,
-        prune_index=(min_band_collisions > 1 if prune_verify is None
-                     else prune_verify),
-    )
+    prune = min_band_collisions > 1 if prune_verify is None else prune_verify
+    if prune:
+        # the pruned verify reads the candidates three times
+        # kept: dedup_doc_fuzzy_verdict 20.62 s cut vs 23.83 s with this
+        # and `counts` uncut, sf1 local[4]; tie at sf0.1
+        cand = cut(cand)
+    return _verify_jaccard(cand, index, counts, id_col, threshold,
+                           prune_index=prune)
 
 
 SIMHASH_BITS = 60  # 15 hex chars of md5 -> fits int64 in every engine
@@ -605,13 +548,6 @@ def cross_corpus_minhash_pairs(
 
     rows_new, banded_new = banded(df_new, "doc_a")
     rows_ref, banded_ref = banded(df_ref, "doc_b")
-    if max_ref_band_df is not None:
-        # the hot-band cap consumes banded_ref TWICE (df aggregate +
-        # anti-join probe) — checkpoint so the ref-side signature
-        # aggregation runs once (r17; narrow: bands rows/doc). The
-        # indexed variant never takes this path — its band rows are
-        # already a cheap parquet scan.
-        banded_ref = banded_ref.localCheckpoint(eager=False)
     cand = _cross_candidates(banded_new, banded_ref, min_band_collisions,
                              max_ref_band_df, stats)
     idx_new = rows_new.dropDuplicates()
@@ -623,9 +559,13 @@ def cross_corpus_minhash_pairs(
         F.count_distinct(F.col("sh")).alias("n_sh"))
     cnt_ref = rows_ref.groupBy(id_col).agg(
         F.count_distinct(F.col("sh")).alias("n_sh"))
+    prune = min_band_collisions > 1
+    if prune:
+        # kept: dedup_cross_corpus 4.68 s cut vs 5.51 s uncut, sf0.1 local[4]
+        cand = cut(cand)
     return _verify_jaccard_two(
         cand, idx_new, cnt_new, idx_ref, cnt_ref, id_col, threshold,
-        prune_index=min_band_collisions > 1,
+        prune_index=prune,
     )
 
 
@@ -781,15 +721,13 @@ def cross_corpus_minhash_pairs_indexed(
     rows_new = shingle_rows(df_new, id_col, text_col, meta["n"])
     idx_new = rows_new.dropDuplicates()
     sig_new = minhash_signatures(rows_new, id_col, meta["k"])
-    # r17: the new side's banded signatures are checkpointed (the md5
-    # signature aggregation runs once even though the candidate
-    # subtree is evaluated per verify consumer); the candidate frame
-    # itself is NOT checkpointed here so the stored index's band scans
+    # the candidate frame is NOT cut, so the stored index's band scans
     # stay visible in the executed plan (tests/test_plans.py pins the
-    # ref side to cpx_sigindex_ parquet) — those re-runs are cheap
-    # column-pruned parquet scans by construction.
+    # ref side to cpx_sigindex_ parquet)
+    # kept: dedup_cross_corpus_indexed 2.87 s cut vs 3.47 s uncut,
+    # sf0.1 local[4]
     banded_new = band_rows(sig_new, id_col, meta["k"], meta["bands"]) \
-        .withColumnRenamed(id_col, "doc_a").localCheckpoint(eager=False)
+        .withColumnRenamed(id_col, "doc_a").transform(cut)
     banded_ref = index.bands_df.withColumnRenamed(id_col, "doc_b")
     cand = _cross_candidates(banded_new, banded_ref, min_band_collisions,
                              max_ref_band_df, stats)
@@ -798,7 +736,6 @@ def cross_corpus_minhash_pairs_indexed(
     return _verify_jaccard_two(
         cand, idx_new, cnt_new, index.shingles_df, index.counts_df,
         id_col, threshold, prune_index=min_band_collisions > 1,
-        checkpoint_pairs=False,
     )
 
 
@@ -815,10 +752,10 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str,
     cap), same one-groupBy exact verify; only the normalizer differs
     (|A| instead of the union)."""
     # same shape as ngram_jaccard_pairs: the candidate self-join reads
-    # the distinct index on both sides -> one policy-governed
-    # materialization (see materialize_index), counts read off it
+    # the distinct index on both sides, counts read off it
     rows = shingle_rows(df, id_col, text_col, n)
-    index = materialize_index(rows.dropDuplicates())
+    # kept: dedup_containment 7.42 s cut vs 9.17 s uncut, sf1 local[4]; tie at sf0.1
+    index = cut(rows.dropDuplicates())
     counts = index.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     cand_index = index if max_df is None else prune_hot_shingles(index, max_df)
     t1 = cand_index.select(F.col(id_col).alias("doc_a"), "sh")
@@ -932,13 +869,10 @@ class WinnowIndex:
 
 def _winnow_frames(df: DataFrame, id_col: str, text_col: str,
                    k: int, w: int):
-    # r17: the fingerprint frame feeds candidates, verification AND the
-    # per-doc count — materialize so the window-min selection runs once.
-    # The frame is ~2/(w+1) of corpus tokens (corpus-scale), so the cut
-    # goes through the documented materialize_index policy (r18;
-    # measured: one materialization beats three window-sort evaluations
-    # at both sf0.1 and sf1).
-    fps = materialize_index(
+    # the fingerprint frame feeds candidates, verification AND the
+    # per-doc count (and both index writes)
+    # kept: write_winnow_index 1.31 s cut vs 1.93 s uncut, sf0.1 local[4]
+    fps = cut(
         winnow_fingerprints(df, id_col, text_col, k=k, w=w)
     )
     counts = fps.groupBy(id_col).agg(F.count(F.lit(1)).alias("nf"))

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cpx_etl_spark.functions.vectors import as_double, cosine, dot, norm
+from cpx_etl_spark.operators.cut import cut
 from cpx_etl_spark.operators.dedup import observe_count, validate_new_ids
 from cpx_etl_spark.sources.registry import read_parquet
 
@@ -390,21 +391,17 @@ def lsh_candidate_pairs(
     if dim is None:
         dim = _infer_dim(df, vec_col)
     use_sketch = sketch_ham is not None and sketch_ham < SKETCH_BITS
+    # kept: dedup_embedding_strict 1.34 s cut vs 1.74 s uncut, sf0.1 local[4]
     idx = lsh_index(
         df,
         id_col,
         vec_col,
         hyperplane_weights(n_tables, n_bits, dim, tag),
         sketch=sketch_planes(dim) if use_sketch else None,
-    ).localCheckpoint(eager=False)
-    # checkpoint the raw index ONCE (the Arrow matmul otherwise re-runs
-    # per consumer: both self-join sides plus the hot-bucket df
-    # aggregate and its anti-join probe — 4 evaluations in
-    # dedup_embedding_strict's plan; narrow: L rows/vector x 3-4 int
-    # columns). The capped variant derives by a cheap anti-join over
-    # the materialized blocks — NOT a second checkpoint, which held a
-    # near-copy of the same rows in executor storage for the length of
-    # the query (ADVICE r17).
+    ).transform(cut)
+    # The capped variant derives by a cheap anti-join over the cut
+    # blocks — NOT a second cut, which held a near-copy of the same rows
+    # in executor storage for the length of the query.
     if max_bucket is not None:
         idx = prune_hot_buckets(idx, max_bucket)
     if use_sketch:
@@ -884,12 +881,12 @@ def knn_edges_from_assigned(
     )
     w = Window.partitionBy("a").orderBy(F.col("cos").desc(), F.col("b").asc())
     # the edge frame feeds three consumers (reverse probe, mutual
-    # count, final pivot) — checkpoint so the cell self-join + window
-    # runs ONCE, not once per branch; <= 3N narrow rows at any SF
+    # count, final pivot); <= 3N narrow rows at any SF
+    # kept: write_knn_graph_index 5.35 s cut vs 6.13 s uncut, sf0.1 local[4]
     top = (
         pairs.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 3)
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     rev = top.select(F.col("a").alias("rb"), F.col("b").alias("ra"))
     mut = (
@@ -1256,7 +1253,8 @@ def write_knn_graph_index(
     centroids, assigned, _fb = trained_cells_lsh(
         corpus, id_col, vec_col, k, n_bits=n_bits, dim=dim
     )
-    assigned = assigned.localCheckpoint(eager=False)
+    # kept: write_knn_graph_index 4.82 s cut vs 6.68 s uncut, sf0.1 local[4]
+    assigned = cut(assigned)
     edges = knn_edges_from_assigned(assigned, dim=dim).withColumn(
         "pcell", F.col("cell") % _KNN_EDGE_PARTS
     )
@@ -1334,10 +1332,12 @@ def append_to_knn_graph_index(
     # without this, a re-run would count the batch TWICE in the edge
     # recompute (members = stored + new) and corrupt the touched
     # partitions (code-review r15)
+    # kept, not timed: the collect, the edge write and the append read
+    # one snapshot of this anti-join, whose input the append changes
     new_assigned = new_assigned.join(
         idx.assignments_df.select("neighbor_id"),
         on="neighbor_id", how="left_anti",
-    ).localCheckpoint(eager=True)
+    ).transform(cut, eager=True)
     touched = sorted(
         {r["cell"] % parts for r in
          new_assigned.select("cell").distinct().collect()}
@@ -2511,19 +2511,13 @@ def ivfpq_topk_indexed(
     reaches the reader and row-group min/max pruning over the
     cell-clustered files actually fires (code-review r10 — without
     this the 'reads only the probed cells' claim was aspirational).
-    The SAME collected rows rebuild the (query_id, cell) probe frame
-    handed to ivfpq_serve, so the |queries| x |cells| probe computation
-    runs exactly ONCE per call (judge-advice r10 flagged the re-derive
-    as an extra crossJoin+window job on every serve)."""
+    The (query_id, cell) probe frame is computed twice, for the cell
+    list and inside ivfpq_serve: cutting it measured no faster
+    (PERF.md, "Cuts")."""
     m, dim = index.meta["m"], index.meta["dim"]
-    probe_frame = _probe_cells(
+    probed = _probe_cells(
         queries, index.centroids_df, id_col, vec_col, nprobe
     ).select("query_id", "cell")
-    # checkpoint instead of collect+createDataFrame: the frame stays
-    # JVM-side (re-parallelizing collected rows pays a python-worker
-    # roundtrip per partition), and the bounded collect for the cell
-    # pruning list reads the checkpoint without re-deriving the probe
-    probed = probe_frame.localCheckpoint(eager=True)
     probed_cells = sorted({r["cell"] for r in probed.collect()})
     cells = index.cells_df.filter(F.col("cell").isin(probed_cells))
     codes = cells.select("vid", F.posexplode("codes").alias("j", "code"))
@@ -2771,12 +2765,9 @@ def ivfpq_residual_topk_indexed(
     centroid dot + cell-independent residual LUT). Pytest pins indexed
     == one-shot on the same corpus."""
     m, dim = index.meta["m"], index.meta["dim"]
-    probe_frame = _probe_cells(
+    probed = _probe_cells(
         queries, index.centroids_df, id_col, vec_col, nprobe
     )
-    # JVM-side checkpoint, not collect+createDataFrame (see
-    # ivfpq_topk_indexed above)
-    probed = probe_frame.localCheckpoint(eager=True)
     probed_cells = sorted({r["cell"] for r in probed.collect()})
     cells = index.cells_df.filter(F.col("cell").isin(probed_cells))
     codes = cells.select("vid", F.posexplode("codes").alias("j", "code"))
@@ -2886,7 +2877,7 @@ def graph_beam_search(
             ).alias("cos"),
         )
 
-    state = score(entry).localCheckpoint(eager=True)
+    state = score(entry).transform(cut, eager=True)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("node").asc()
     )
@@ -2909,7 +2900,7 @@ def graph_beam_search(
         state = (
             state.unionByName(score(expand))
             .dropDuplicates(["query_id", "node"])
-            .localCheckpoint(eager=True)
+            .transform(cut, eager=True)
         )
     out = state.filter(F.col("node") != F.col("query_id")).select(
         "query_id", F.col("node").alias("neighbor_id"), "cos"

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from cpx_etl_spark.functions.text import sql_shingles
 from cpx_etl_spark.functions.vectors import sql_cosine
+from cpx_etl_spark.operators.cut import cut
 from cpx_etl_spark.operators.dedup import (
     exact_dedup_stats,
     minhash_lsh_pairs,
@@ -518,13 +519,10 @@ def dedup_paragraph_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(F.col("doc_id"), F.explode(chunks).alias("chunk"))
         .dropDuplicates()
     )
-    # r17: paras feeds the minhash pipeline (several scans) plus both
-    # multiplicity joins — checkpoint the distinct-variant frame once
+    # kept: dedup_paragraph_minhash 3.08 s cut vs 5.33 s uncut, sf0.1 local[4]
     paras = per_doc.groupBy("chunk").agg(
         F.count(F.lit(1)).alias("n_docs")
-    ).select(F.md5("chunk").alias("pid"), "chunk", "n_docs").localCheckpoint(
-        eager=False
-    )
+    ).select(F.md5("chunk").alias("pid"), "chunk", "n_docs").transform(cut)
     pairs = minhash_lsh_pairs(
         paras,
         "pid",
@@ -621,12 +619,11 @@ def dedup_doc_fuzzy_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sequence(F.lit(0), n_chunks - 1),
         lambda i: F.concat_ws(" ", F.slice(arr, i * 10 + 1, 10)),
     )
-    # r17: per_doc feeds inst (3 consumers) AND the paragraph-vocab
-    # aggregate; uncut this plan held 18 scans of documents
+    # kept: dedup_doc_fuzzy_verdict 3.99 s cut vs 4.63 s uncut, sf0.1 local[4]
     per_doc = (
         docs.select(F.col("doc_id"), F.explode(chunks).alias("chunk"))
         .dropDuplicates()
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     inst = per_doc.select("doc_id", F.md5("chunk").alias("pid"), "chunk")
     exact = inst.groupBy("pid").agg(
@@ -634,9 +631,7 @@ def dedup_doc_fuzzy_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     paras = per_doc.groupBy("chunk").agg(
         F.count(F.lit(1)).alias("n_docs")
-    ).select(F.md5("chunk").alias("pid"), "chunk", "n_docs").localCheckpoint(
-        eager=False
-    )
+    ).select(F.md5("chunk").alias("pid"), "chunk", "n_docs")
     near = (
         minhash_lsh_pairs(
             paras, "pid", "chunk", n=2, k=_PMH_K, bands=_PMH_BANDS,
@@ -1116,34 +1111,24 @@ def q_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent, so even the estimator's ERROR DISTRIBUTION is
     hash-verified cross-engine."""
     from cpx_etl_spark.operators.dedup import (
-        materialize_index,
         minhash_signatures,
         prune_hot_shingles,
         shingle_rows,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    # r18 restructure (VERDICT r17 items 1+8). The distinct index feeds
-    # FOUR heavy consumers (both capped candidate-join sides and both
-    # full-set verify sides), so it is materialized ONCE through the
-    # documented materialize_index policy — but the SIGNATURE path no
-    # longer chains behind it: min() is duplicate-insensitive, so sigs
-    # come off the RAW shingle rows with no distinct shuffle (r17 put
-    # the sig aggregation downstream of the checkpointed index and the
-    # driver measured the query 0.85x). Per-doc counts collapse to one
-    # count_distinct over the raw rows (narrow, 2 consumers,
-    # checkpointed). Candidate-doc pruning of the verify index (VERDICT
-    # item 8) was measured and REJECTED: this corpus's audit is
-    # exhaustive (no hot shingles), so candidate docs ~ all docs and
-    # the semi-join only added a pair-id union-distinct shuffle on top
-    # of the same materialization (8.3 s vs 6.8 s at sf0.1).
+    # sigs come off the RAW shingle rows (min() is duplicate-insensitive,
+    # so no distinct shuffle on the signature path), and per-doc counts
+    # are one aggregate over the distinct index. Candidate-doc pruning of
+    # the verify index was measured and rejected: this corpus's audit is
+    # exhaustive (no hot shingles), so it only added a shuffle (8.3 s vs
+    # 6.8 s at sf0.1). Cutting the counts or the signature array
+    # measured no faster (PERF.md, "Cuts").
     rows = shingle_rows(docs, "doc_id", "text", _NGRAM)
-    index = materialize_index(rows.dropDuplicates())
-    # counts read the materialized index (cheap block re-read);
-    # checkpointed because both verify-side count joins consume it
-    counts = index.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_sh")
-    ).localCheckpoint(eager=False)
+    # kept: q_minhash_accuracy 23.45 s cut vs 34.26 s uncut (counts and
+    # sig_arr uncut on both sides), sf1 local[4]; tie at sf0.1
+    index = cut(rows.dropDuplicates())
+    counts = index.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     sigs = minhash_signatures(rows, "doc_id", k=_MH_K)
     capped, hot = prune_hot_shingles(index, _AUDIT_MAX_DF, with_hot=True)
     ca_ = capped.select(F.col("doc_id").alias("doc_a"), "sh")
@@ -1180,7 +1165,7 @@ def q_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sig_arr = sigs.select(
         "doc_id", F.array(*[f"mh_{i}" for i in range(_MH_K)]).alias("sig")
-    ).localCheckpoint(eager=False)  # r17: joined to both pair sides
+    )
     m = (
         pairs.join(sig_arr.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a")), on="doc_a")
         .join(sig_arr.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b")), on="doc_b")
@@ -1531,15 +1516,12 @@ def dedup_semantic_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = emb.count()  # 1-row planning lookup: k must be known at plan time
     k = sem_trained_k(n)
     _cents, assigned = trained_cells(emb, "vec_id", "embedding", k)
-    # per-vector norm below the pair join (r17): each within-cell pair
-    # pays one fold (dot) instead of three — bit-identical. The
-    # assignment subtree (the N x k scan) feeds BOTH pair-join sides
-    # AND the final rollup — checkpoint so it runs once, not three
-    # times (narrow: one row per vector; the r16 dedup_semantic fix,
-    # applied to its trained sibling)
+    # per-vector norm below the pair join: each within-cell pair pays
+    # one fold (dot) instead of three — bit-identical
+    # kept: dedup_semantic_trained 1.99 s cut vs 2.40 s uncut, sf0.1 local[4]
     normed = assigned.withColumn(
         "_n", norm(F.col("v_c"))
-    ).localCheckpoint(eager=False)
+    ).transform(cut)
     a = normed.select(
         F.col("neighbor_id").alias("va"), F.col("v_c").alias("ea"),
         F.col("_n").alias("na"), "cell",
@@ -1691,11 +1673,7 @@ def dedup_semantic_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, "vec_id", "embedding", k, n_bits=_SEM_LSH_BITS, dim=_EMB_DIM
     )
     n_fb = fallback.agg(F.count(F.lit(1)).cast("long").alias("n_fallback"))
-    # checkpoint: the bucketed-assignment subtree feeds both pair-join
-    # sides and the final rollup (r17 — the dedup_semantic posture)
-    normed = assigned.withColumn(
-        "_n", norm(F.col("v_c"))
-    ).localCheckpoint(eager=False)
+    normed = assigned.withColumn("_n", norm(F.col("v_c")))
     a = normed.select(
         F.col("neighbor_id").alias("va"), F.col("v_c").alias("ea"),
         F.col("_n").alias("na"), "cell",
@@ -1843,10 +1821,8 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_fb = fallback.agg(F.count(F.lit(1)).cast("long").alias("n_fallback"))
     # assignment cosine (distance-to-centroid score) rides one k-row
-    # hash join; the scored subtree feeds BOTH sides of the pair join,
-    # so checkpoint it once (narrow: one row per vector)
-    # the checkpointed scored frame MATERIALIZES each vector's norm
-    # once (r17): the pair join pays one fold per pair, bit-identical
+    # hash join, and each vector's norm is computed in `scored`, so the
+    # pair join pays one fold per pair, bit-identical
     scored = (
         assigned.withColumn("_nv", norm(F.col("v_c")))
         .join(cents.withColumn("_ncent", norm(F.col("centroid"))), "cell")
@@ -1859,7 +1835,6 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
                     / (F.col("_nv") * F.col("_ncent")) - 1e-9, 6)
             .alias("a_cos"),
         )
-        .localCheckpoint(eager=False)
     )
     a = scored.select(
         F.col("vid").alias("va"), F.col("vv").alias("ea"),
@@ -2255,16 +2230,13 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the signal' Luhn cut)."""
     docs = load_table(spark, sf_dir, "documents")
     n1 = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    # r17 checkpoints: tf feeds the df aggregate AND the weight join,
-    # w feeds norms and both self-join sides, norms both pair sides —
-    # uncut, the token explode re-ran per consumer (24 document scans
-    # in the formatted plan)
+    # kept: q_tfidf_cosine_pairs 0.64 s cut vs 0.72 s uncut, sf0.1 local[4]
     tf = (
         docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
         .filter(F.col("tok") != "")
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     dft = (
         tf.groupBy("tok")
@@ -2273,6 +2245,7 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("df") >= _TFIDF_MIN_DF) & (F.col("df") <= _TFIDF_MAX_DF)
         )
     )
+    # kept: q_tfidf_cosine_pairs 0.67 s cut vs 0.72 s uncut, sf0.1 local[4]
     w = (
         tf.join(dft, "tok")  # vocab-sized frequency join, unhinted
         .crossJoin(F.broadcast(n1))  # 1-row corpus-size frame
@@ -2284,11 +2257,11 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * F.floor(F.col("n_docs") * F.lit(1000.0) / F.col("df"))
             ).alias("c"),
         )
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     norms = w.groupBy("doc_id").agg(
         F.sum(F.col("c").cast("decimal(19,0)") * F.col("c")).alias("nn")
-    ).localCheckpoint(eager=False)
+    )
     a = w.select(F.col("doc_id").alias("doc_a"), "tok", F.col("c").alias("ca"))
     b = w.select(F.col("doc_id").alias("doc_b"), "tok", F.col("c").alias("cb"))
     dots = (

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cpx_etl_spark.operators.cut import cut
 from cpx_etl_spark.operators.relational import (
     anti_join,
     denest,
@@ -2258,14 +2259,9 @@ def q_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         odd = F.concat(*[F.substring(col, 10 + i, 1) for i in (1, 3, 5, 7)])
         return {"blk_a": even, "blk_b": odd}
 
-    # r17: each side feeds both blocking passes — checkpoint so the
-    # corruption/key derivation runs once per side
-    d_keys = dirty.withColumns(_parity_keys("d_name")).localCheckpoint(
-        eager=False
-    )
-    c_keys = clean.withColumns(_parity_keys("c_name")).localCheckpoint(
-        eager=False
-    )
+    # kept: q_record_linkage 0.96 s cut vs 1.84 s uncut, sf0.1 local[4]
+    d_keys = dirty.withColumns(_parity_keys("d_name")).transform(cut)
+    c_keys = clean.withColumns(_parity_keys("c_name"))
     cols = ["d_key", "d_name", "c_custkey", "c_name"]
     pass_a = d_keys.join(
         c_keys,
@@ -2316,12 +2312,8 @@ def q_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar factors come from two broadcast-sized frames (per-part
     counts, 1-row order count)."""
     li = _t(spark, sf_dir, "lineitem")
-    # r17: the distinct basket frame feeds four consumers (both pair
-    # sides, per-part counts, the order total) — checkpoint so the
-    # lineitem scan + distinct shuffle run once
-    op = li.select("l_orderkey", "l_partkey").distinct().localCheckpoint(
-        eager=False
-    )
+    # kept: q_copurchase_pairs 1.95 s cut vs 2.39 s uncut, sf0.1 local[4]
+    op = li.select("l_orderkey", "l_partkey").distinct().transform(cut)
     pc = op.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n"))
     n_orders = op.agg(F.countDistinct("l_orderkey").alias("n_orders"))
     a = op.select("l_orderkey", F.col("l_partkey").alias("part_a"))
@@ -2955,15 +2947,14 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_suppkey",
         (F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")).alias("is_late"),
     )
-    # r17: ONE (order, supplier) rollup feeds both the order stats and
-    # the late set — the former countDistinct pair re-evaluated the
-    # lineitem x orders join twice (10 scans in the formatted plan);
-    # max(is_late) per (order, supp) makes both downstream frames plain
-    # aggregates/filters of the same checkpointed reduction
+    # ONE (order, supplier) rollup feeds both the order stats and the
+    # late set: max(is_late) per (order, supp) makes both downstream
+    # frames plain aggregates/filters of the same reduction
+    # kept: q21_waiting_suppliers 1.07 s cut vs 1.26 s uncut, sf0.1 local[4]
     os2 = (
         lo.groupBy("l_orderkey", "l_suppkey")
         .agg(F.max("is_late").alias("late"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     order_stats = os2.groupBy("l_orderkey").agg(
         F.count(F.lit(1)).alias("n_supp"),
@@ -7447,7 +7438,7 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     tots = cnts.groupBy("src").agg(F.sum("cnt").alias("tot"))
     probs = cnts.join(tots, "src").select(
         "src", "dst", (F.col("cnt").cast("double") / F.col("tot")).alias("p")
-    ).localCheckpoint(eager=False)
+    ).transform(cut)
     # ^ the transition-probability frame (at most a few dozen rows) is
     # consumed by TWO broadcast builds (cells and convs); without the
     # checkpoint each build re-runs the whole journey pipeline
@@ -7532,7 +7523,7 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             # break the expression chain per iteration: 8 composed
             # nested-HOF trees otherwise explode catalyst/eval cost;
             # the frame is (removals x 1) = 5 rows at any SF
-        ).localCheckpoint(eager=True)
+        ).transform(cut, eager=True)
     absorbed = pvec.select("rm", F.element_at("p", 1).alias("conv_p"))
     base = absorbed.filter(F.col("rm") == "none").select(
         F.col("conv_p").alias("base_p")

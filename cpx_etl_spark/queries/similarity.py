@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cpx_etl_spark.functions.vectors import as_double, cosine, dot, norm, sql_cosine, sql_norm
+from cpx_etl_spark.operators.cut import cut
 from cpx_etl_spark.operators.similarity import (
     brute_force_topk,
     hyperplane_weights,
@@ -1166,7 +1167,7 @@ def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         # re-derive the N-scale covariance join from lineage (the same
         # checkpoint-the-edges rule as connected components; 61s -> ~8s
         # at sf0.01)
-        .localCheckpoint(eager=True)
+        .transform(cut, eager=True)
     )
     v = cov.sparkSession.range(1, _DIM + 1).select(
         (F.col("id")).cast("int").alias("i"),
@@ -1197,7 +1198,7 @@ def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.round(F.col("w") / F.col("nm") - tie, 12) + 0).alias("v"),
             )
             .coalesce(1)
-            .localCheckpoint(eager=True)
+            .transform(cut, eager=True)
         )
     va = v.select(F.col("i").alias("ai"), F.col("v").alias("av"))
     vb = v.select(F.col("i").alias("bi"), F.col("v").alias("bv"))
@@ -1305,7 +1306,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("rel"), "id")
         .limit(_MMR_POOL)
-        .localCheckpoint(eager=True)
+        .transform(cut, eager=True)
     )
     ca = cand.select(F.col("id").alias("ia"))
     cb = cand.select(F.col("id").alias("ib"))
@@ -1317,13 +1318,13 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(eb, "ib")
         .select("ia", "ib",
                 fround(cosine(F.col("va"), F.col("vb")), 6).alias("s"))
-        .localCheckpoint(eager=True)
+        .transform(cut, eager=True)
     )
     sel = (
         cand.orderBy(F.desc("rel"), "id")
         .limit(1)
         .select("id", "rel", F.col("rel").alias("score"), F.lit(1).alias("rank"))
-        .localCheckpoint(eager=True)
+        .transform(cut, eager=True)
     )
     for t in range(2, _MMR_K + 1):
         chosen = sel.select(F.col("id").alias("ib"))
@@ -1344,7 +1345,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.desc("score"), "id")
             .limit(1)
         )
-        sel = sel.unionByName(pick).localCheckpoint(eager=True)
+        sel = sel.unionByName(pick).transform(cut, eager=True)
     return sel.select(
         "rank",
         F.col("id").alias("vec_id"),
@@ -1792,14 +1793,11 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, "vec_id", "embedding", k, n_bits=_BITS, dim=_DIM
     )
     n_fb = fallback.agg(F.count(F.lit(1)).cast("long").alias("n_fallback"))
-    # the assignment subtree (bucketed candidate join + min_by) feeds
-    # BOTH sides of the within-cell pair join — checkpoint so it runs
-    # once, not twice (narrow: one row per vector); the edge kernel is
-    # shared with the persisted kNN-graph index (write/append) so the
-    # gate pins the maintenance path's arithmetic too
+    # the edge kernel is shared with the persisted kNN-graph index
+    # (write/append) so the gate pins the maintenance path's arithmetic
+    # too
     from cpx_etl_spark.operators.similarity import knn_edges_from_assigned
 
-    assigned = assigned.localCheckpoint(eager=False)
     return (
         knn_edges_from_assigned(assigned, dim=_DIM)
         .withColumn("k_cells", F.lit(int(k)).cast("long"))
@@ -1903,13 +1901,11 @@ def q_ann_recall_vs_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 5)
     centroids, assigned = ivf_build(emb, "vec_id", "embedding", "label",
                                     dim=_DIM)
-    # checkpoint the shared halves: three serve branches would
-    # otherwise recompute the build per branch (the IVFPQ r13 posture)
-    centroids = centroids.localCheckpoint(eager=True)
-    assigned = assigned.localCheckpoint(eager=True)
+    # kept: q_ann_recall_vs_probes 3.26 s cut vs 3.52 s uncut, sf0.1 local[4]
+    centroids = cut(centroids, eager=True)
     exact = brute_force_topk(
         emb, queries, "vec_id", "embedding", k=10, dim=_DIM
-    ).select("query_id", "neighbor_id").localCheckpoint(eager=True)
+    ).select("query_id", "neighbor_id")
     nq = queries.count()
     out = None
     for np_ in (1, 2, 4):

@@ -26,6 +26,7 @@ from cpx_etl_spark.functions.text import (
     STOPWORDS,
 )
 from cpx_etl_spark.functions.vectors import sql_cosine
+from cpx_etl_spark.operators.cut import cut
 from cpx_etl_spark.queries import fround, register
 from cpx_etl_spark.sources import load_table, local_frame
 
@@ -697,16 +698,15 @@ def q_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    # r17 checkpoints: toks feeds the df aggregate and the keep join,
-    # df_counts three joins, capped both pair sides — uncut, the
-    # distinct-token explode re-ran per consumer (18 document scans)
+    # kept: q_token_pmi 1.02 s cut vs 1.16 s uncut, sf0.1 local[4]
     toks = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("tok")
-    ).distinct().localCheckpoint(eager=False)
+    ).distinct().transform(cut)
     n_docs = docs.agg(F.count(F.lit(1)).alias("n"))
+    # kept: q_token_pmi 1.11 s cut vs 1.47 s uncut, sf0.1 local[4]
     df_counts = toks.groupBy("tok").agg(
         F.count(F.lit(1)).alias("df")
-    ).localCheckpoint(eager=False)
+    ).transform(cut)
     # df_counts is VOCABULARY-sized — small here, but a web corpus
     # holds 10^8+ distinct tokens, so no broadcast pin (AQE decides)
     kept = (
@@ -720,7 +720,6 @@ def q_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         kept.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 40)
         .select("doc_id", "tok")
-        .localCheckpoint(eager=False)
     )
     a = capped.select("doc_id", F.col("tok").alias("token_a"))
     b = capped.select("doc_id", F.col("tok").alias("token_b"))
@@ -925,7 +924,6 @@ def _bpe_word_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bpe_train(
     words: DataFrame, steps: int, carry: list[str],
-    checkpoint: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Run `steps` BPE iterations over the vocab frame; returns
     (merge table [step, sym_a, sym_b, pair_count], final sequences
@@ -956,11 +954,9 @@ def _bpe_train(
         # step's pair count AND its own successor — uncut, the loop
         # re-evaluated the whole prefix per consumer (14 scans of
         # documents for 3 steps). Both frames are vocabulary-sized.
-        best = pairs.orderBy(
+        best = cut(pairs.orderBy(
             F.col("pair_count").desc(), "sym_a", "sym_b"
-        ).limit(1)
-        if checkpoint:
-            best = best.localCheckpoint(eager=False)
+        ).limit(1))
         step_row = best.select(
             F.lit(step).cast("int").alias("step"), "sym_a", "sym_b", "pair_count"
         )
@@ -975,9 +971,8 @@ def _bpe_train(
                 " ' ' || sym_a || ' ' || sym_b || ' ',"
                 " ' ' || sym_a || sym_b || ' ') AS seq",
             )
+            .transform(cut)
         )
-        if checkpoint:
-            seqs = seqs.localCheckpoint(eager=False)
     return merges, seqs
 
 
@@ -1131,11 +1126,11 @@ def q_token_rarity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact interpolated p10 as a sort-based 1-row aggregate over the
     # same `scored` frame the flag is applied to — no global
     # TakeOrdered, no extra plan-build count() action
-    cut = scored.agg(
+    cutoff = scored.agg(
         fround(F.percentile(F.col("mean_df"), F.lit(0.1)), 6).alias("lo")
     )
     return (
-        scored.crossJoin(F.broadcast(cut))  # 1-row bounds frame
+        scored.crossJoin(F.broadcast(cutoff))  # 1-row bounds frame
         .select(
             "doc_id",
             "n_tokens",
@@ -1990,11 +1985,10 @@ def bm25_scores(docs) -> "DataFrame":
     toks = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("tok")
     ).filter(F.col("tok") != "")
-    # r17: dl feeds the avg-length scalar AND the score join; tf the
-    # df aggregate AND the score join — checkpoint both small frames
+    # kept: q_bm25_topk 1.62 s cut vs 1.85 s uncut, sf1 local[4]; tie at sf0.1
     dl = toks.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("dlen")
-    ).localCheckpoint(eager=False)
+    ).transform(cut)
     avgdl = dl.agg(
         (F.sum("dlen").cast("double") / F.count(F.lit(1))).alias("ad")
     )
@@ -2003,7 +1997,8 @@ def bm25_scores(docs) -> "DataFrame":
         toks.join(F.broadcast(q), "tok")  # constant 5-term frame
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
+        # kept: q_bm25_topk 1.23 s cut vs 1.60 s uncut, sf1 local[4]; tie at sf0.1
+        .transform(cut)
     )
     dft = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     tfd = F.col("tf").cast("double")
@@ -2154,16 +2149,10 @@ def q_lm_fluency_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             *[F.col(f"g.{i}").alias(nm) for i, nm in enumerate(names)],
         )
 
-    # r17 checkpoints: dtri feeds the LM head AND the per-doc scorer,
-    # bg both bigram roles, uni all three unigram roles — without the
-    # cuts the corpus-sized exploders re-ran per consumer (28 scans of
-    # documents in the formatted plan). dtri is the one corpus-scale
-    # frame here (distinct per-doc trigrams), so its cut goes through
-    # the documented materialize_index policy (r18); bg/uni/scored are
-    # vocabulary- / doc-bounded and keep plain checkpoints.
-    from cpx_etl_spark.operators.dedup import materialize_index
-
-    dtri = materialize_index(
+    # dtri feeds the LM head AND the per-doc scorer, bg both bigram
+    # roles, uni all three unigram roles; cutting them measured no faster
+    # (PERF.md, "Cuts"), only the per-doc `scored` frame is cut
+    dtri = (
         grams(3, ["w1", "w2", "w3"])
         .groupBy("doc_id", "w1", "w2", "w3")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -2173,13 +2162,11 @@ def q_lm_fluency_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         grams(2, ["w1", "w2"])
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c2"))
-        .localCheckpoint(eager=False)
     )
     uni = (
         docs.select(F.explode(tk).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c1"))
-        .localCheckpoint(eager=False)
     )
     nt = uni.agg(F.sum("c1").alias("nn"))
     b12 = bg.select("w1", "w2", F.col("c2").alias("c12"))
@@ -2219,13 +2206,14 @@ def q_lm_fluency_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("fluency_ppm"),
         )
-        .localCheckpoint(eager=False)  # r17: cutoff + final select
+        # kept: q_lm_fluency_filter 2.02 s cut vs 2.22 s uncut, sf0.1 local[4]
+        .transform(cut)
     )
-    cut = scored.agg(
+    cutoff = scored.agg(
         fround(F.percentile(F.col("fluency_ppm"), F.lit(0.10)), 6).alias("lo")
     )
     return (
-        scored.crossJoin(F.broadcast(cut))  # 1-row cutoff frame
+        scored.crossJoin(F.broadcast(cutoff))  # 1-row cutoff frame
         .select(
             "doc_id",
             "n_trigrams",
@@ -3462,19 +3450,20 @@ def q_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     / 1k / 10k — the curve that sizes a tokenizer's vocab budget (and
     quantifies the Zipf tail q_zipf_fit models). Lives with the
     token-family queries and shares their tokenization spelling
-    (code-review r13). The vocab frame checkpoints once so the three
-    top-k pools and the totals read it without re-tokenizing the
-    corpus (one corpus scan, was four); each pool comes from
+    (code-review r13). The vocab frame is cut once so the three top-k
+    pools and the totals read it without re-tokenizing the corpus;
+    each pool comes from
     orderBy+limit (TakeOrderedAndProject with the (freq desc, token)
     tiebreak — never a vocab-sized single-partition sort), and the
     covered mass is one sum over the k-bounded pool."""
     docs = load_table(spark, sf_dir, "documents")
+    # kept: q_coverage_curve 0.58 s cut vs 0.64 s uncut, sf1 local[4]; tie at sf0.1
     vocab = (
         docs.select(F.explode(F.split("text", " ")).alias("tok"))
         .filter(F.col("tok") != "")
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     tot = vocab.agg(
         F.sum("freq").alias("n_tokens"), F.count(F.lit(1)).alias("vocab_size")
@@ -3558,11 +3547,10 @@ def q_collocation_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     bg = docs.select(F.explode(z).alias("b")).select(
         F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")
     )
-    # r17: the bigram-count frame feeds both margins, the total AND
-    # the final join — checkpoint so the corpus explode runs once
+    # kept: q_collocation_llr 0.51 s cut vs 0.61 s uncut, sf0.1 local[4]
     bc = bg.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).alias("cxy")
-    ).localCheckpoint(eager=False)
+    ).transform(cut)
     lx = bc.groupBy("w1").agg(F.sum("cxy").cast("long").alias("cx"))
     ly = bc.groupBy("w2").agg(F.sum("cxy").cast("long").alias("cy"))
     nn = bc.agg(F.sum("cxy").cast("long").alias("n"))

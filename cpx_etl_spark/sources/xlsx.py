@@ -75,7 +75,8 @@ def _ref_to_col(ref: str) -> int:
 
 def write_xlsx(path: str, sheets: dict[str, tuple[list[str], list[tuple]]]) -> None:
     """Minimal valid .xlsx writer: header + rows per sheet; strings go
-    inline (no sharedStrings part needed), numbers as plain <v>."""
+    inline (no sharedStrings part needed), numbers as plain <v>, and a
+    None cell is left out, so it reads back as NULL."""
 
     def esc(s: str) -> str:
         # also quote-escape: sheet names land inside double-quoted
@@ -90,6 +91,8 @@ def write_xlsx(path: str, sheets: dict[str, tuple[list[str], list[tuple]]]) -> N
         )
 
     def cell_xml(ref: str, value) -> str:
+        if value is None:
+            return ""
         if isinstance(value, bool):
             return f'<c r="{ref}" t="b"><v>{int(value)}</v></c>'
         if isinstance(value, (int, float)):

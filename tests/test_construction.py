@@ -2,8 +2,8 @@
 
 A registry callable only builds a plan: constructing a query whose
 inputs were read before runs no Spark job. The known exception
-elsewhere is q_winnow_incremental, whose ``materialize_index`` cut runs
-a job at construction (ROADMAP item 2).
+elsewhere is q_winnow_incremental, whose fingerprint ``cut``
+(operators/cut.py) runs a job at construction (ROADMAP item 2).
 
 A Python-worker stage only where the per-row work is Python: of the
 etl_surface queries only q_xsl_execute, whose stylesheet chain is a

@@ -561,23 +561,21 @@ def test_interval_overlap_join_is_hash_join(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_bpe_train3_is_codegen_with_broadcast_merges(spark, sf_dir):
+def test_bpe_train3_is_codegen_with_broadcast_merges(spark, sf_dir, monkeypatch):
     """The BPE training loop must stay JVM-side (no Python UDF nodes)
     and apply each iteration's merge through a 1-row broadcast join —
-    never a driver collect baked into literals. Since r17 the
-    registered query checkpoints each step's (best, seqs) frames (the
-    loop otherwise re-evaluated its whole prefix per consumer — 14
-    scans of documents), which hides the broadcast from the FINAL
-    plan; the broadcast-shape pin therefore runs on the identical
-    construction with checkpointing off, and the registered query is
-    separately pinned python-free."""
-    from cpx_etl_spark.queries.text import _bpe_train, _bpe_word_freqs
+    never a driver collect baked into literals. The registered query
+    cuts each step's (best, seqs) frames (the loop otherwise re-evaluated
+    its whole prefix per consumer — 14 scans of documents), which hides
+    the broadcast from the FINAL plan; the broadcast-shape pin therefore
+    runs on the identical construction with ``cut`` swapped for the
+    identity, and the registered query is separately pinned python-free."""
+    from cpx_etl_spark.queries import text
 
     plan = _plan(spark, sf_dir, "q_bpe_train3")
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    merges, _seqs = _bpe_train(
-        _bpe_word_freqs(spark, sf_dir), 3, ["freq"], checkpoint=False
-    )
+    monkeypatch.setattr(text, "cut", lambda df, eager=False: df)
+    merges, _seqs = text._bpe_train(text._bpe_word_freqs(spark, sf_dir), 3, ["freq"])
     raw = merges._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in raw and "ArrowEvalPython" not in raw
     assert "Broadcast" in raw  # the three 1-row merge frames

@@ -1359,3 +1359,18 @@ def test_xlsx_sheet_keeps_inferred_types(spark, tmp_path):
     write_xlsx(path, {"t": (["a", "empty"], [(1,), (2,)])})
     with pytest.raises(ValueError):
         read_xlsx(spark, path)
+
+
+def test_xlsx_none_cell_reads_back_as_null(spark, tmp_path):
+    """write_xlsx leaves a None cell out, so it reads back as NULL and
+    the bool and numeric columns keep their types."""
+    from cpx_etl_spark.sources.xlsx import read_xlsx, write_xlsx
+
+    path = str(tmp_path / "none.xlsx")
+    write_xlsx(path, {"t": (["b", "n", "s"],
+                            [(True, 1.5, "a"), (None, None, None), (False, 2.0, "c")])})
+    df = read_xlsx(spark, path)["t"]
+    assert df.dtypes == [("b", "boolean"), ("n", "double"), ("s", "string")]
+    assert [tuple(r) for r in df.collect()] == [
+        (True, 1.5, "a"), (None, None, None), (False, 2.0, "c"),
+    ]

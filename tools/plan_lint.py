@@ -1,5 +1,9 @@
 """Registry-wide physical-plan linter: sweep every registered query's
-plan for scale anti-patterns, WITHOUT executing anything.
+plan for scale anti-patterns. The lint reads plans and runs no action,
+but building a query is not free: its remaining lineage cuts (``cut``,
+operators/cut.py) run every upstream shuffle stage at construction, and
+its planning lookups (e.g. ``emb.count()``, the first read of a parquet
+input's schema) run jobs too.
 
 The per-query plan-guard tests in tests/test_plans.py pin specific
 claims (no corpus broadcast in trained-cell assignment, TakeOrdered on
@@ -31,8 +35,8 @@ Patterns:
   still reports (code-review r9: a bare per-query suppression would
   hide a reintroduced corpus-sized funnel behind an old reason).
 
-Usage: python tools/plan_lint.py [sf_dir]   (default sf0.001; plans
-only — a few seconds per query of Catalyst work, no jobs run)
+Usage: python tools/plan_lint.py [sf_dir]   (default sf0.001; a few
+seconds per query of Catalyst work plus the construction jobs above)
 Exit code 1 if any unallowed hit is found.
 """
 

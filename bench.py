@@ -36,7 +36,7 @@ HEADLINE = [
     "dedup_embedding_strict",
     "ann_bruteforce_topk",
     # added r6: ANN serving against the persisted IVF index (train
-    # once, serve many); bench pre-builds the index per sf_dir so the
+    # once, serve many); its setup builds the index per sf_dir so the
     # timing measures the per-query serve, not the one-time train
     "ann_ivf_topk_indexed",
     "text_quality_score",
@@ -65,7 +65,7 @@ HEADLINE = [
     "dedup_cross_corpus",
     # added r6: the persisted-index variant — the shape an incremental
     # pipeline actually runs (standing corpus signed once, stored);
-    # bench pre-builds the index per sf_dir so the timing measures the
+    # its setup builds the index per sf_dir so the timing measures the
     # per-crawl query, not the one-time index build
     "dedup_cross_corpus_indexed",
     # exact duplicated-substring coverage: one window-hash shuffle over
@@ -120,7 +120,7 @@ HEADLINE = [
     "q_score_calibration",
     "q_judge_agreement",
     # r10 additions: the composed IVFPQ serving index (probe cells,
-    # ADC-scan only their packed codes, exact rerank — bench pre-builds
+    # ADC-scan only their packed codes, exact rerank — its setup builds
     # the index so the timing is the per-query serve), the ANN-backed
     # label-noise audit that replaced the registry's slowest sf1 query,
     # and the unranked LSH radius query
@@ -128,7 +128,7 @@ HEADLINE = [
     "q_label_noise_audit",
     "ann_range_search",
     # r13 additions: the rotated-ADC serving shape against the
-    # persisted OPQ index (bench pre-builds it — queries pay one Arrow
+    # persisted OPQ index (its setup builds it — queries pay one Arrow
     # matmul rotation + the packed-code scan, matching the other
     # indexed entries; the unindexed ann_opq_topk, like ann_pq_topk,
     # carries the one-time train cost and is gate-verified instead),
@@ -151,13 +151,12 @@ HEADLINE = [
     # and the bigram-keyed G2 collocation shuffle
     "q_substring_trim",
     "q_collocation_llr",
-    # r15 addition: the FAISS train/add serving shape — first call per
-    # corpus builds+appends the two-batch index (cached via the marker
-    # in its corpus_index_dir), min-of-3 then times the indexed serve
+    # r15 addition: the FAISS train/add serving shape — its setup
+    # builds+appends the two-batch index, min-of-3 then times the
+    # indexed serve
     "ann_ivf_append_serve",
-    # r16 additions: the dataloader-delivery gate — first call per
-    # corpus writes the standing shard artifact (cached in its
-    # corpus_index_dir), min-of-3 then times the verifier's
+    # r16 additions: the dataloader-delivery gate — its setup writes
+    # the standing shard artifact, min-of-3 then times the verifier's
     # manifest-verdict scan (the consumer-side integrity pass) — and
     # the graph-ANN walk (centroid-routed beam search over the
     # persisted kNN-graph index; index cached, serve timed)
@@ -184,26 +183,18 @@ def main() -> None:
                       shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # One-time standing-corpus index build (amortized in production:
-    # the index is written once at ingestion, not per crawl) — keeps
-    # the dedup_cross_corpus_indexed timing honest about what repeats.
-    from cpx_etl_spark.queries.dedup import build_standing_index
-    from cpx_etl_spark.queries.similarity import (
-        build_ivf_standing_index,
-        build_ivfpq_standing_index,
-        build_pq_standing_index,
-    )
+    # Standing artifacts (indexes, shard sets, snapshots) are written
+    # once at ingestion in production, not per query: every selected
+    # query's registered setup builds its artifact untimed, so the timed
+    # passes measure the serve.
+    from cpx_etl_spark.queries import SETUPS
 
-    from cpx_etl_spark.queries.text import build_winnow_index
+    def run_setups(d: str) -> None:
+        for name in headline:
+            if name in SETUPS:
+                SETUPS[name](spark, d)
 
-    from cpx_etl_spark.queries.similarity import build_opq_standing_index
-
-    build_standing_index(spark, sf_dir)
-    build_ivf_standing_index(spark, sf_dir)
-    build_pq_standing_index(spark, sf_dir)
-    build_ivfpq_standing_index(spark, sf_dir)
-    build_opq_standing_index(spark, sf_dir)
-    build_winnow_index(spark, sf_dir)
+    run_setups(sf_dir)
 
     # Warm the JVM + per-plan codegen caches with one pass at the
     # smallest sf so the timed run measures steady-state execution.
@@ -279,10 +270,7 @@ def main() -> None:
     sf1_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "benchdata", "sf1")
     if os.path.isdir(sf1_dir) and os.path.abspath(sf_dir) != sf1_dir:
-        build_standing_index(spark, sf1_dir)
-        build_ivf_standing_index(spark, sf1_dir)
-        build_pq_standing_index(spark, sf1_dir)
-        build_ivfpq_standing_index(spark, sf1_dir)
+        run_setups(sf1_dir)
         # the sf1 section is single-pass by default (wall-clock); set
         # SPARK_GRAFT_SF1_REPEATS>1 on quiet reruns to record min-of-N
         # and tighten the rolling bests

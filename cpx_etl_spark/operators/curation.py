@@ -28,6 +28,7 @@ from pyspark.sql.window import Window
 
 from cpx_etl_spark.functions.text import shingles_expr
 from cpx_etl_spark.operators.cut import cut
+from cpx_etl_spark.scratch import publish_meta, read_meta
 from cpx_etl_spark.sources.registry import local_frame, read_parquet
 
 
@@ -202,79 +203,6 @@ def pack_sequences(
     )
 
 
-_SHARD_META = "_SHARD_META.json"
-
-
-def _read_shard_meta(spark, path: str) -> dict | None:
-    """Read _SHARD_META.json through the Hadoop FileSystem API — the
-    SAME storage abstraction the parquet reads resolve through — so
-    verifying or mixture-planning an artifact on object storage works
-    wherever the data itself is readable; a driver-local open() only
-    works on storage the driver mounts (ADVICE r15 / VERDICT r15
-    item 2). NOT spark.read.text: Spark's file index HIDES
-    underscore-prefixed files, silently returning zero rows for the
-    meta. Returns the parsed dict, or None when the meta file is
-    absent (the caller owns the fail-loud message)."""
-    import json
-    import os
-
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(os.path.join(path, _SHARD_META))
-    fs = p.getFileSystem(conf)
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        raw = bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-    return json.loads(raw.decode("utf-8"))
-
-
-def _write_shard_meta(spark, path: str, meta: dict) -> None:
-    """Write _SHARD_META.json through the Hadoop FileSystem API
-    (create tmp + rename, the atomic-publish pattern of the driver-
-    local os.replace it supersedes) so the writer works on any storage
-    the shard parquet lands on — symmetric with _read_shard_meta."""
-    import json
-    import os
-
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    target = jvm.org.apache.hadoop.fs.Path(os.path.join(path, _SHARD_META))
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        os.path.join(path, f"{_SHARD_META}.tmp")
-    )
-    fs = target.getFileSystem(conf)
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(meta).encode("utf-8")))
-    except BaseException:
-        # a failed write must not strand .tmp debris beside the
-        # artifact (ADVICE r16): close, best-effort delete, re-raise
-        out.close()
-        try:
-            fs.delete(tmp, False)
-        except Exception:
-            pass
-        raise
-    else:
-        out.close()
-    # FileContext rename with OVERWRITE — atomic on HDFS-like stores
-    # and the narrowest available window elsewhere (an explicit
-    # delete-then-rename here would ALWAYS open a crash window in
-    # which a previously VALID artifact has no meta — code-review r16)
-    fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-        target.toUri(), conf
-    )
-    overwrite = spark.sparkContext._gateway.new_array(
-        jvm.org.apache.hadoop.fs.Options.Rename, 1
-    )
-    overwrite[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
-    fc.rename(tmp, target, overwrite)
-
-
 def assign_training_shards(
     df: DataFrame,
     id_col: str,
@@ -381,7 +309,8 @@ def write_training_shards(
     with one row per shard (n_docs, n_tokens, an order-independent
     additive content fingerprint — exact DECIMAL sum of per-row 48-bit
     md5 prefixes, so two writes of the same corpus+seed are provably
-    identical), and _SHARD_META.json (seed, capacity, totals).
+    identical), and the meta of kind "shard" (seed, capacity,
+    totals).
     Deterministic end to end: re-running is a reproducibility CHECK,
     not a new shuffle.
 
@@ -453,7 +382,7 @@ def write_training_shards(
             "n_shards": len(rows),
             "n_docs": int(sum(r["n_docs"] for r in rows)),
             "n_tokens": int(sum(r["n_tokens"] for r in rows))}
-    _write_shard_meta(spark, path, meta)
+    publish_meta(spark, path, "shard", meta)
     return manifest
 
 
@@ -502,12 +431,7 @@ def verify_training_shards(spark, path: str) -> DataFrame:
     # meta through the same storage abstraction as the parquet reads —
     # verifying an artifact on object storage must work wherever the
     # data itself is readable (ADVICE r15)
-    meta = _read_shard_meta(spark, path)
-    if meta is None:
-        raise ValueError(
-            f"verify_training_shards: {path!r} is not a shard artifact "
-            f"(missing {_SHARD_META})"
-        )
+    meta = read_meta(spark, path, "shard")
     id_col, text_col, seed = meta["id_col"], meta["text_col"], meta["seed"]
     data = read_parquet(spark, os.path.join(path, "data"))
     # the stored _key IS the training order — it is fully recomputable
@@ -586,8 +510,8 @@ def plan_training_mixture(
         # the artifact uses, so planning works on object storage where
         # a driver-local os.path.exists on the meta JSON false-
         # positives "not a shard artifact" (ADVICE r15 / VERDICT r15
-        # item 2); _SHARD_META stays the seed/capacity metadata source
-        # for readers that need it, via _read_shard_meta
+        # item 2); the shard meta stays the seed/capacity metadata
+        # source for readers that need it, via scratch.read_meta
         try:
             manifest = read_parquet(spark, os.path.join(path, "manifest"))
         except AnalysisException as e:
@@ -707,12 +631,7 @@ def read_training_mixture(
     out = None
     for src_name in sorted(by_src):
         path = paths[src_name]
-        meta = _read_shard_meta(spark, path)
-        if meta is None:
-            raise ValueError(
-                f"read_training_mixture: {path!r} is not a shard "
-                f"artifact (missing {_SHARD_META})"
-            )
+        meta = read_meta(spark, path, "shard")
         id_col, text_col = meta["id_col"], meta["text_col"]
         shards = [s for s, _p in by_src[src_name]]
         data = read_parquet(spark, os.path.join(path, "data")).filter(

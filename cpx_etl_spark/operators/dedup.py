@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cpx_etl_spark.operators.cut import cut
+from cpx_etl_spark.scratch import publish_meta, read_meta
 from cpx_etl_spark.sources.registry import read_parquet
 
 
@@ -579,7 +580,7 @@ def cross_corpus_minhash_pairs(
 # the stored band rows — the ref side of the pipeline is three column-
 # pruned parquet scans instead of a full re-derivation. Layout:
 #
-#   <path>/_INDEX_META.json   {id_col, text_col, n, k, bands, id_type}
+#   <path>/_META.json         kind signature: {id_col, text_col, n, k, bands}
 #   <path>/bands/             (id, band_idx, band_key)   parquet
 #   <path>/shingles/          (id, sh) distinct          parquet
 #   <path>/counts/            (id, n_sh)                 parquet
@@ -588,9 +589,6 @@ def cross_corpus_minhash_pairs(
 # keep each band bucket in few files; shingles/ clustered by id so the
 # verify-time semi-join on candidate docs touches few files.
 # ---------------------------------------------------------------------------
-
-_INDEX_META = "_INDEX_META.json"
-
 
 class SignatureIndex:
     """Handle over a persisted MinHash signature index."""
@@ -647,7 +645,6 @@ def write_signature_index(df: DataFrame, path: str, id_col: str,
                           bands: int = 4) -> None:
     """Derive and persist the full signature index for ``df`` (the
     standing corpus). Overwrites any existing index at ``path``."""
-    import json
     import os
 
     from cpx_etl_spark.sources.sinks import write_clustered_parquet
@@ -657,12 +654,9 @@ def write_signature_index(df: DataFrame, path: str, id_col: str,
     write_clustered_parquet(banded, os.path.join(path, "bands"), ["band_key"])
     write_clustered_parquet(index, os.path.join(path, "shingles"), [id_col])
     counts.write.mode("overwrite").parquet(os.path.join(path, "counts"))
-    meta = {"id_col": id_col, "text_col": text_col, "n": n, "k": k,
-            "bands": bands}
-    tmp = os.path.join(path, f"{_INDEX_META}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, _INDEX_META))
+    publish_meta(df.sparkSession, path, "signature",
+                 {"id_col": id_col, "text_col": text_col, "n": n, "k": k,
+                  "bands": bands})
 
 
 def append_to_signature_index(df: DataFrame, path: str,
@@ -676,7 +670,7 @@ def append_to_signature_index(df: DataFrame, path: str,
     against the stored counts to enforce that before writing."""
     import os
 
-    meta = read_index_meta(path)
+    meta = read_meta(df.sparkSession, path, "signature")
     if validate_unique:
         stored = df.sparkSession.read.parquet(os.path.join(path, "counts"))
         validate_new_ids(df, stored.select(meta["id_col"]), meta["id_col"],
@@ -690,16 +684,8 @@ def append_to_signature_index(df: DataFrame, path: str,
     counts.write.mode("append").parquet(os.path.join(path, "counts"))
 
 
-def read_index_meta(path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(path, _INDEX_META)) as f:
-        return json.load(f)
-
-
 def read_signature_index(spark, path: str) -> SignatureIndex:
-    return SignatureIndex(spark, path, read_index_meta(path))
+    return SignatureIndex(spark, path, read_meta(spark, path, "signature"))
 
 
 def cross_corpus_minhash_pairs_indexed(
@@ -723,7 +709,7 @@ def cross_corpus_minhash_pairs_indexed(
     sig_new = minhash_signatures(rows_new, id_col, meta["k"])
     # the candidate frame is NOT cut, so the stored index's band scans
     # stay visible in the executed plan (tests/test_plans.py pins the
-    # ref side to cpx_sigindex_ parquet)
+    # ref side to the stored index's parquet)
     # kept: dedup_cross_corpus_indexed 2.87 s cut vs 3.47 s uncut,
     # sf0.1 local[4]
     banded_new = band_rows(sig_new, id_col, meta["k"], meta["bands"]) \
@@ -844,15 +830,13 @@ def winnow_fingerprints(df: DataFrame, id_col: str, text_col: str,
 # q_winnow_fingerprints' derivation never re-runs over the standing
 # side. Layout:
 #
-#   <path>/_WINNOW_META.json  {id_col, text_col, k, w}
+#   <path>/_META.json         kind winnow: {id_col, text_col, k, w}
 #   <path>/fps/               (id, h) distinct fingerprints  parquet
 #   <path>/counts/            (id, nf)                       parquet
 #
 # fps/ is written clustered by h so the candidate hash-join on a
 # fingerprint touches few files (file-level min/max pruning).
 # ---------------------------------------------------------------------------
-
-_WINNOW_META = "_WINNOW_META.json"
 
 
 class WinnowIndex:
@@ -883,7 +867,6 @@ def write_winnow_index(df: DataFrame, path: str, id_col: str,
                        text_col: str, k: int = 4, w: int = 4) -> None:
     """Derive and persist the winnowing index for ``df`` (the standing
     corpus). Overwrites any existing index at ``path``."""
-    import json
     import os
 
     from cpx_etl_spark.sources.sinks import write_clustered_parquet
@@ -892,11 +875,8 @@ def write_winnow_index(df: DataFrame, path: str, id_col: str,
     os.makedirs(path, exist_ok=True)
     write_clustered_parquet(fps, os.path.join(path, "fps"), ["h"])
     counts.write.mode("overwrite").parquet(os.path.join(path, "counts"))
-    meta = {"id_col": id_col, "text_col": text_col, "k": k, "w": w}
-    tmp = os.path.join(path, f"{_WINNOW_META}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, _WINNOW_META))
+    publish_meta(df.sparkSession, path, "winnow",
+                 {"id_col": id_col, "text_col": text_col, "k": k, "w": w})
 
 
 def append_to_winnow_index(df: DataFrame, path: str,
@@ -917,7 +897,7 @@ def append_to_winnow_index(df: DataFrame, path: str,
     write_winnow_index (idempotent overwrite)."""
     import os
 
-    meta = read_winnow_meta(path)
+    meta = read_meta(df.sparkSession, path, "winnow")
     if validate_unique:
         stored = df.sparkSession.read.parquet(os.path.join(path, "counts"))
         validate_new_ids(df, stored.select(meta["id_col"]), meta["id_col"],
@@ -929,16 +909,8 @@ def append_to_winnow_index(df: DataFrame, path: str,
     fps.write.mode("append").parquet(os.path.join(path, "fps"))
 
 
-def read_winnow_meta(path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(path, _WINNOW_META)) as f:
-        return json.load(f)
-
-
 def read_winnow_index(spark, path: str) -> WinnowIndex:
-    return WinnowIndex(spark, path, read_winnow_meta(path))
+    return WinnowIndex(spark, path, read_meta(spark, path, "winnow"))
 
 
 def cross_corpus_winnow_pairs_indexed(

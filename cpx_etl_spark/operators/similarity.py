@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from cpx_etl_spark.functions.vectors import as_double, cosine, dot, norm
 from cpx_etl_spark.operators.cut import cut
 from cpx_etl_spark.operators.dedup import observe_count, validate_new_ids
+from cpx_etl_spark.scratch import publish_meta, read_meta
 from cpx_etl_spark.sources.registry import read_parquet
 
 _QUANT = 1000000.0  # embedding quantization scale (floor(x * 1e6))
@@ -848,13 +849,9 @@ def knn_edges_from_assigned(
     """Top-3 within-cell cosine edges + mutual-edge count from an
     assignment frame (neighbor_id, v_c, cell) — the shared kernel of
     q_knn_graph and the persisted kNN-graph index, so the gate and
-    the index maintenance path cannot drift.
-
-    DIGEST NOTE: this helper lives OUTSIDE q_knn_graph's content
-    digest (query_digest hashes the query fn source + oracle only) —
-    any semantic edit here MUST be paired with
-    `tools/update_gate_digests.py --bump q_knn_graph` so the gate
-    re-verifies (the r14 helper-edit bump rule). Pair volume is sum of
+    the index maintenance path cannot drift (an edit here re-gates
+    both: query_digest follows the helpers a query reaches). Pair
+    volume is sum of
     n_c^2 over cells; ranking on the pre-rounded cosine with an id
     tiebreak keeps the edge set engine-deterministic. Output:
     (vec_id, cell, n1, c1, n2, c2, n3, c3, mutual_cnt)."""
@@ -1086,7 +1083,6 @@ def ivf_topk(
 # the MinHash signature index in operators/dedup.py)
 # ---------------------------------------------------------------------------
 
-_IVF_META = "_IVF_META.json"
 
 
 class IvfIndex:
@@ -1109,7 +1105,6 @@ def write_ivf_index(
     """Train and persist the IVF index: centroids/ (one small file) and
     assignments/ (neighbor_id, v_c, cell) clustered by cell so serving
     scans prune to the probed cells' row groups."""
-    import json
     import os
 
     from cpx_etl_spark.sources.sinks import write_clustered_parquet
@@ -1120,20 +1115,12 @@ def write_ivf_index(
         os.path.join(path, "centroids")
     )
     write_clustered_parquet(assigned, os.path.join(path, "assignments"), ["cell"])
-    meta = {"id_col": id_col, "vec_col": vec_col, "cell_col": cell_col}
-    tmp = os.path.join(path, f"{_IVF_META}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, _IVF_META))
+    publish_meta(corpus.sparkSession, path, "ivf",
+                 {"id_col": id_col, "vec_col": vec_col, "cell_col": cell_col})
 
 
 def read_ivf_index(spark, path: str) -> IvfIndex:
-    import json
-    import os
-
-    with open(os.path.join(path, _IVF_META)) as f:
-        meta = json.load(f)
-    return IvfIndex(spark, path, meta)
+    return IvfIndex(spark, path, read_meta(spark, path, "ivf"))
 
 
 def append_to_ivf_index(
@@ -1193,7 +1180,6 @@ def append_to_ivf_index(
 # only the touched edge partitions) instead of rebuilding the graph.
 # ---------------------------------------------------------------------------
 
-_KNN_META = "_KNN_META.json"
 # Edge storage partitions by pcell = cell % _KNN_EDGE_PARTS so an
 # append's dynamic partition overwrite rewrites a BOUNDED set of
 # directories even when k (cell count) grows with the corpus.
@@ -1240,7 +1226,6 @@ def write_knn_graph_index(
     cells, one Lloyd step, bucket-bounded assignment, top-3 within-cell
     edges + mutual counts. Edges partition by cell % _KNN_EDGE_PARTS so
     append_to_knn_graph_index can overwrite only touched partitions."""
-    import json
     import os
 
     from cpx_etl_spark.sources.sinks import write_clustered_parquet
@@ -1268,21 +1253,13 @@ def write_knn_graph_index(
     edges.write.partitionBy("pcell").mode("overwrite").parquet(
         os.path.join(path, "edges")
     )
-    meta = {"id_col": id_col, "vec_col": vec_col, "k": k,
-            "n_bits": n_bits, "dim": dim, "edge_parts": _KNN_EDGE_PARTS}
-    tmp = os.path.join(path, f"{_KNN_META}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, _KNN_META))
+    publish_meta(corpus.sparkSession, path, "knn_graph",
+                 {"id_col": id_col, "vec_col": vec_col, "k": k,
+                  "n_bits": n_bits, "dim": dim, "edge_parts": _KNN_EDGE_PARTS})
 
 
 def read_knn_graph_index(spark, path: str) -> KnnGraphIndex:
-    import json
-    import os
-
-    with open(os.path.join(path, _KNN_META)) as f:
-        meta = json.load(f)
-    return KnnGraphIndex(spark, path, meta)
+    return KnnGraphIndex(spark, path, read_meta(spark, path, "knn_graph"))
 
 
 def append_to_knn_graph_index(
@@ -1394,7 +1371,6 @@ def ivf_topk_indexed(
 # standing corpus.
 # ---------------------------------------------------------------------------
 
-_EMB_INDEX_META = "_EMB_INDEX_META.json"
 
 
 class EmbeddingIndex:
@@ -1422,7 +1398,6 @@ def write_embedding_index(
     (n_tables, n_bits) default to the lsh_params S-curve derivation for
     ``threshold`` — persisted in the meta so probes always use the
     exact same hyperplanes."""
-    import json
     import os
 
     from cpx_etl_spark.sources.sinks import write_clustered_parquet
@@ -1440,21 +1415,13 @@ def write_embedding_index(
     os.makedirs(path, exist_ok=True)
     write_clustered_parquet(idx, os.path.join(path, "buckets"), ["tbl", "bucket"])
     write_clustered_parquet(vecs, os.path.join(path, "vectors"), [id_col])
-    meta = {"id_col": id_col, "vec_col": vec_col, "threshold": threshold,
-            "dim": dim, "n_tables": n_tables, "n_bits": n_bits, "tag": tag}
-    tmp = os.path.join(path, f"{_EMB_INDEX_META}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, _EMB_INDEX_META))
+    publish_meta(df.sparkSession, path, "embedding_lsh",
+                 {"id_col": id_col, "vec_col": vec_col, "threshold": threshold,
+                  "dim": dim, "n_tables": n_tables, "n_bits": n_bits, "tag": tag})
 
 
 def read_embedding_index(spark, path: str) -> EmbeddingIndex:
-    import json
-    import os
-
-    with open(os.path.join(path, _EMB_INDEX_META)) as f:
-        meta = json.load(f)
-    return EmbeddingIndex(spark, path, meta)
+    return EmbeddingIndex(spark, path, read_meta(spark, path, "embedding_lsh"))
 
 
 def cross_corpus_embedding_pairs_indexed(
@@ -1994,7 +1961,6 @@ def _pq_serve(
 # the persisted-index family: MinHash signatures, IVF, embedding LSH)
 # ---------------------------------------------------------------------------
 
-_PQ_META = "_PQ_META.json"
 
 
 class PqIndex:
@@ -2019,7 +1985,6 @@ def write_pq_index(
     small file), codes/ (vid, codes[m] packed), vectors/ (neighbor_id,
     v) for rerank. Training and encoding run ONCE at build; serving
     never re-derives them."""
-    import json
     import os
 
     cb = pq_train(corpus, id_col, vec_col, m=m, k_codes=k_codes, dim=dim)
@@ -2032,21 +1997,13 @@ def write_pq_index(
     cb.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "codebook"))
     packed.write.mode("overwrite").parquet(os.path.join(path, "codes"))
     vectors.write.mode("overwrite").parquet(os.path.join(path, "vectors"))
-    meta = {"id_col": id_col, "vec_col": vec_col, "m": m,
-            "k_codes": k_codes, "dim": dim}
-    tmp = os.path.join(path, f"{_PQ_META}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, _PQ_META))
+    publish_meta(corpus.sparkSession, path, "pq",
+                 {"id_col": id_col, "vec_col": vec_col, "m": m,
+                  "k_codes": k_codes, "dim": dim})
 
 
 def read_pq_index(spark, path: str) -> PqIndex:
-    import json
-    import os
-
-    with open(os.path.join(path, _PQ_META)) as f:
-        meta = json.load(f)
-    return PqIndex(spark, path, meta)
+    return PqIndex(spark, path, read_meta(spark, path, "pq"))
 
 
 def _append_pq_batch(
@@ -2151,7 +2108,6 @@ def pq_topk_indexed(
     )
 
 
-_OPQ_META = "_OPQ_META.json"
 
 
 def write_opq_index(
@@ -2164,7 +2120,6 @@ def write_opq_index(
     parameter-free (opq_rotation), so the index stores only its tag —
     serving re-derives the identical ±1 matrix; nothing float-trained
     leaves the engine."""
-    import json
     import os
 
     rot = opq_rotation(dim, tag=tag)
@@ -2179,21 +2134,13 @@ def write_opq_index(
     cb.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "codebook"))
     packed.write.mode("overwrite").parquet(os.path.join(path, "codes"))
     vectors.write.mode("overwrite").parquet(os.path.join(path, "vectors"))
-    meta = {"id_col": id_col, "vec_col": vec_col, "m": m,
-            "k_codes": k_codes, "dim": dim, "tag": tag}
-    tmp = os.path.join(path, f"{_OPQ_META}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, _OPQ_META))
+    publish_meta(corpus.sparkSession, path, "opq",
+                 {"id_col": id_col, "vec_col": vec_col, "m": m,
+                  "k_codes": k_codes, "dim": dim, "tag": tag})
 
 
 def read_opq_index(spark, path: str) -> PqIndex:
-    import json
-    import os
-
-    with open(os.path.join(path, _OPQ_META)) as f:
-        meta = json.load(f)
-    return PqIndex(spark, path, meta)
+    return PqIndex(spark, path, read_meta(spark, path, "opq"))
 
 
 def opq_topk_indexed(
@@ -2351,7 +2298,6 @@ def ivfpq_topk(
 # family (MinHash signatures, IVF, embedding LSH, PQ)
 # ---------------------------------------------------------------------------
 
-_IVFPQ_META = "_IVFPQ_META.json"
 
 
 class IvfPqIndex:
@@ -2379,7 +2325,6 @@ def write_ivfpq_index(
     tiny, one file each), cells/ (vid, cell, codes[m]) clustered by
     cell so a probed-cell ADC scan prunes to its row groups, vectors/
     for the rerank. Training, assignment and encoding run ONCE."""
-    import json
     import os
 
     from cpx_etl_spark.sources.sinks import write_clustered_parquet
@@ -2401,21 +2346,13 @@ def write_ivfpq_index(
     cb.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "codebook"))
     write_clustered_parquet(cells, os.path.join(path, "cells"), ["cell"])
     vectors.write.mode("overwrite").parquet(os.path.join(path, "vectors"))
-    meta = {"id_col": id_col, "vec_col": vec_col, "cell_col": cell_col,
-            "m": m, "k_codes": k_codes, "dim": dim}
-    tmp = os.path.join(path, f"{_IVFPQ_META}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, _IVFPQ_META))
+    publish_meta(corpus.sparkSession, path, "ivfpq",
+                 {"id_col": id_col, "vec_col": vec_col, "cell_col": cell_col,
+                  "m": m, "k_codes": k_codes, "dim": dim})
 
 
 def read_ivfpq_index(spark, path: str) -> IvfPqIndex:
-    import json
-    import os
-
-    with open(os.path.join(path, _IVFPQ_META)) as f:
-        meta = json.load(f)
-    return IvfPqIndex(spark, path, meta)
+    return IvfPqIndex(spark, path, read_meta(spark, path, "ivfpq"))
 
 
 def _append_ivfpq_batch(
@@ -2677,7 +2614,6 @@ def ivfpq_residual_serve(
     return _ranked(pairs, k)
 
 
-_IVFPQR_META = "_IVFPQR_META.json"
 
 
 def write_ivfpq_residual_index(
@@ -2690,7 +2626,6 @@ def write_ivfpq_residual_index(
     cell so a probed-cell ADC scan prunes to its row groups, vectors/
     for the rerank. Training, residual construction, assignment and
     encoding run ONCE — serve many."""
-    import json
     import os
 
     from cpx_etl_spark.sources.sinks import write_clustered_parquet
@@ -2719,21 +2654,13 @@ def write_ivfpq_residual_index(
     cb.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "codebook"))
     write_clustered_parquet(cells, os.path.join(path, "cells"), ["cell"])
     vectors.write.mode("overwrite").parquet(os.path.join(path, "vectors"))
-    meta = {"id_col": id_col, "vec_col": vec_col, "cell_col": cell_col,
-            "m": m, "k_codes": k_codes, "dim": dim, "by_residual": True}
-    tmp = os.path.join(path, f"{_IVFPQR_META}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, _IVFPQR_META))
+    publish_meta(corpus.sparkSession, path, "ivfpq_residual",
+                 {"id_col": id_col, "vec_col": vec_col, "cell_col": cell_col,
+                  "m": m, "k_codes": k_codes, "dim": dim, "by_residual": True})
 
 
 def read_ivfpq_residual_index(spark, path: str) -> IvfPqIndex:
-    import json
-    import os
-
-    with open(os.path.join(path, _IVFPQR_META)) as f:
-        meta = json.load(f)
-    return IvfPqIndex(spark, path, meta)
+    return IvfPqIndex(spark, path, read_meta(spark, path, "ivfpq_residual"))
 
 
 def append_to_ivfpq_residual_index(

@@ -17,23 +17,26 @@ Cross-engine determinism rules used throughout:
 - Every top-k ORDER BY carries a unique tiebreaker column so the
   selected row SET is deterministic.
 
-Eager-action posture (ADVICE r14): most registered callables are pure
-plan constructors — calling one only BUILDS a DataFrame; nothing runs
-until the driver/bench consumes it. A small protocol family is
-deliberately NOT lazy: queries that exercise multi-step table
-protocols (q_snapshot_rollback, q_snapshot_expire,
-q_upsert_concurrent_merge, q_dead_letter_replay, and the persisted-
-index ingest builders) perform driver-side actions at CONSTRUCTION
-time — scratch writes, commit/CAS dances, an eager .count() — because
-the protocol itself IS the operator under test. Consumers timing or
-plan-linting the registry should know: for these, invocation cost
+Eager-action posture: a registered callable builds a plan; nothing
+runs until the driver/bench consumes it, apart from planning lookups
+and the lineage cuts of operators/cut.py. Standing artifacts (persisted
+indexes, training-shard sets, the bloom snapshot) are not built at
+construction: each query that reads one declares its builder as
+``setup`` at registration, benchmarks run every setup untimed first,
+and the body's call of the same builder is then a meta probe
+(scratch.standing_artifact). Only the protocol queries still act at
+construction — q_snapshot_rollback, q_snapshot_expire,
+q_upsert_concurrent_merge, q_dead_letter_replay and their kin run
+scratch writes, commit/CAS dances and eager counts because the
+protocol itself IS the operator under test. For those, invocation cost
 includes the side-effect pipeline, and a failure there surfaces as a
-registry-call error rather than a query-execution error. The returned
+registry-call error rather than a query-execution error; the returned
 DataFrame still hash-gates the protocol's end state.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -41,15 +44,24 @@ from pyspark.sql import functions as F
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
+SETUPS: dict[str, Callable[[SparkSession, str], object]] = {}
 
 
-def register(name: str, oracle: str | None = None):
-    """Decorator: add a query (and optional DuckDB oracle) to the registry."""
+def register(name: str, oracle: str | None = None,
+             setup: Callable[[SparkSession, str], object] | None = None):
+    """Decorator: add a query to the registry, with its DuckDB oracle
+    and, for a query that reads a standing artifact, the builder that
+    makes it (``setup(spark, sf_dir)``; scratch.standing_artifact).
+    Benchmarks call every selected query's setup untimed before they
+    time anything; the query body calls the same builder, an idempotent
+    ensure, so a caller that skips setup still gets a working query."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
+        if setup is not None:
+            SETUPS[name] = setup
         return fn
 
     return deco
@@ -146,8 +158,9 @@ def _last_driver_round(root=None) -> dict[str, int]:
 # Semantic-change tracking is CONTENT-based (judge-advice r10: the old
 # manual name->round map trusted a CORRECTNESS row whose round EQUALLED
 # the change round, silently standing on a hash produced mid-round
-# BEFORE the change). Each registered query's implementation source +
-# oracle SQL is digested into the committed gate_digests.json beside
+# BEFORE the change). Each registered query's implementation source,
+# the package code it reaches and its oracle SQL are digested
+# (query_digest) into the committed gate_digests.json beside
 # this module: {name: {"digest": md5, "round": N}} where N is the round
 # the CURRENT digest first shipped. Driver evidence is trusted only
 # when STRICTLY newer than N — a row from the change round itself
@@ -159,21 +172,175 @@ _GATE_DIGESTS_FILE = "gate_digests.json"
 
 
 def query_digest(fn: Callable, oracle: str | None) -> str:
-    """Content digest of a registered query: its implementation source
-    (inspect.getsource — docstring/comment edits over-regate, which is
-    the safe direction) plus its oracle SQL. Helper changes outside the
-    function body are NOT captured — bump the round manually via
-    tools/update_gate_digests.py --bump for those."""
+    """Content digest of a registered query: the source of its body
+    (its decorator left out; the oracle SQL stands for it), the source
+    of every cpx_etl_spark function, class and module-level constant
+    the query reaches, transitively, and its oracle SQL. A name is
+    reached when code it reaches reads it as a global, imports it with
+    a ``from cpx_etl_spark... import`` (module level or inside a
+    function) or reads it as an attribute of a cpx_etl_spark module. A
+    constant is digested by the source of the top-level statements that
+    bind it (and what they read), not by its runtime repr: that text is
+    the same in every process, while caches such as
+    sources.registry._SCHEMAS fill as queries run. Comment, docstring
+    and shadowing-local over-reach only re-gates more, the safe
+    direction."""
     import hashlib
+
+    h = hashlib.md5()
+    for key, text in sorted(_reached(fn).items()):
+        h.update(f"{key}\x00{text}\x00".encode())
+    h.update((oracle or "").encode())
+    return h.hexdigest()
+
+
+_PKG = "cpx_etl_spark"
+
+
+def _in_pkg(modname: str | None) -> bool:
+    return bool(modname) and (
+        modname == _PKG or modname.startswith(_PKG + ".")
+    ) and not modname.startswith(_PKG + ".vendor")
+
+
+@functools.cache
+def _bindings(modname: str) -> tuple[dict, list[str]]:
+    """How each top-level name of a module is bound, from its source:
+    name -> ("src", [(statement, text)]) or ("import", module, attr or
+    None); plus the module's source lines."""
+    import ast
+    import importlib
+    import importlib.util
     import inspect
 
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):  # pragma: no cover - C callables etc.
-        src = repr(fn)
-    return hashlib.md5(
-        src.encode() + b"\x00" + (oracle or "").encode()
-    ).hexdigest()
+    mod = importlib.import_module(modname)
+    src = inspect.getsource(mod)
+    lines = src.splitlines()
+    out: dict = {}
+    for stmt in ast.parse(src).body:
+        if isinstance(stmt, ast.Import):
+            for a in stmt.names:
+                top = a.name.split(".")[0]
+                out[a.asname or top] = (
+                    "import", a.name if a.asname else top, None)
+            continue
+        if isinstance(stmt, ast.ImportFrom):
+            base = importlib.util.resolve_name(
+                "." * stmt.level + (stmt.module or ""), mod.__package__
+            ) if stmt.level else stmt.module
+            for a in stmt.names:
+                out[a.asname or a.name] = ("import", base, a.name)
+            continue
+        first = min([stmt.lineno] + [
+            d.lineno for d in getattr(stmt, "decorator_list", [])
+        ])
+        text = "\n".join(lines[first - 1:stmt.end_lineno])
+        for n in _bound_names(stmt):
+            if out.get(n, ("",))[0] != "src":
+                out[n] = ("src", [])
+            out[n][1].append((stmt, text))
+    return out, lines
+
+
+def _bound_names(stmt) -> set[str]:
+    """Names a top-level statement defines, binds or assigns into."""
+    import ast
+
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return {stmt.name}
+    names = set()
+    for node in ast.walk(stmt):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Store):
+            names.add(node.id)
+        elif (isinstance(node, (ast.Subscript, ast.Attribute))
+              and isinstance(node.ctx, (ast.Store, ast.Del))
+              and isinstance(node.value, ast.Name)):
+            names.add(node.value.id)
+    return names
+
+
+def _import_ref(target: str | None, attr: str | None):
+    """("node", key), ("module", name) or None for ``from target import
+    attr`` (``import target`` when attr is None)."""
+    import importlib
+    import importlib.util
+
+    if not _in_pkg(target):
+        return None
+    if attr is None:
+        return ("module", target)
+    sub = f"{target}.{attr}"
+    if (hasattr(importlib.import_module(target), "__path__")
+            and importlib.util.find_spec(sub) is not None):
+        return ("module", sub)
+    return _resolve(target, attr)
+
+
+def _resolve(modname: str, name: str):
+    """What a top-level ``name`` of ``modname`` is for the digest."""
+    ent = _bindings(modname)[0].get(name)
+    if ent is None:
+        return None  # a builtin
+    if ent[0] == "src":
+        return ("node", f"{modname}:{name}")
+    return _import_ref(ent[1], ent[2])
+
+
+def _reads(modname: str, tree) -> set[str]:
+    """Keys of the package names one piece of ``modname``'s source
+    reads: globals, function-local ``from cpx_etl_spark... import``
+    names and attributes of package modules."""
+    import ast
+
+    local = {
+        a.asname or a.name: (node.module, a.name)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom) and node.level == 0
+        for a in node.names
+    }
+
+    def ref(n: str):
+        return _import_ref(*local[n]) if n in local else _resolve(modname, n)
+
+    keys: set[str] = set()
+    for node in ast.walk(tree):
+        r = None
+        if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
+            r = ref(node.id)
+        elif (isinstance(node, ast.Attribute)
+              and isinstance(node.value, ast.Name)):
+            base = ref(node.value.id)
+            if base and base[0] == "module":
+                r = _resolve(base[1], node.attr)
+        if r and r[0] == "node":
+            keys.add(r[1])
+    return keys
+
+
+def _reached(fn: Callable) -> dict[str, str]:
+    """key -> source of everything query ``fn`` reaches, its own body
+    without decorators included (see query_digest)."""
+    import ast
+
+    bindings, lines = _bindings(fn.__module__)
+    stmt = bindings[fn.__name__][1][-1][0]
+    text = "\n".join(lines[stmt.lineno - 1:stmt.end_lineno])
+    out = {f"{fn.__module__}:{fn.__name__}": text}
+    todo = list(_reads(fn.__module__, ast.parse(text)))
+    while todo:
+        key = todo.pop()
+        if key not in out:
+            mod, name = key.split(":", 1)
+            out[key] = "\n".join(t for _s, t in _bindings(mod)[0][name][1])
+            todo.extend(_node_reads(key))
+    return out
+
+
+@functools.cache
+def _node_reads(key: str) -> frozenset[str]:
+    mod, name = key.split(":", 1)
+    return frozenset().union(
+        *(_reads(mod, s) for s, _t in _bindings(mod)[0][name][1]))
 
 
 def _load_gate_digests() -> dict[str, dict]:

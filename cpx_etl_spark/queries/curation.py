@@ -1113,33 +1113,33 @@ def build_shard_standing_artifact(
 ) -> str:
     """Ensure the persisted training-shard artifact exists for sf_dir
     (write once, read/verify/plan many — the persisted-index pattern,
-    size+mtime cache invalidation via scratch.corpus_index_dir);
-    returns its path. ``parity`` carves the even/odd sub-corpora the
-    mixture gate uses as two independent sources."""
-    from cpx_etl_spark.operators.curation import (
-        _read_shard_meta,
-        write_training_shards,
-    )
-    from cpx_etl_spark.scratch import corpus_index_dir
+    scratch.standing_artifact); returns its path. ``parity`` carves the
+    even/odd sub-corpora the mixture gate uses as two independent
+    sources."""
+    from cpx_etl_spark.operators.curation import write_training_shards
+    from cpx_etl_spark.scratch import standing_artifact
 
-    path = corpus_index_dir(
-        sf_dir, "documents.parquet", "cpx_shards_",
-        [tag, f"tps{tps}", "v1"],
-    )
-    # completeness probe through the SAME storage abstraction the
-    # meta is written with (a driver-local os.path.exists would read
-    # a different namespace whenever fs.defaultFS is remote and
-    # rebuild the artifact every call — code-review r16)
-    if _read_shard_meta(spark, path) is None:
-        # the meta is the writer's LAST artifact — presence implies a
-        # complete write; a half-built dir is simply overwritten
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text"
-        )
+    def build(path: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
         if parity is not None:
             docs = docs.filter(F.col("doc_id") % 2 == parity)
         write_training_shards(docs, path, "doc_id", "text", tps)
-    return path
+
+    return standing_artifact(
+        spark, sf_dir, "documents.parquet", "shard",
+        [tag, f"tps{tps}", "v1"], build,
+    )
+
+
+def build_mixture_shard_artifacts(
+    spark: SparkSession, sf_dir: str,
+) -> tuple[str, str]:
+    """Ensure the even and odd doc_id shard artifacts q_training_mixture
+    plans over exist for sf_dir; returns their paths."""
+    return (
+        build_shard_standing_artifact(spark, sf_dir, tag="even", parity=0),
+        build_shard_standing_artifact(spark, sf_dir, tag="odd", parity=1),
+    )
 
 
 @register(
@@ -1157,6 +1157,7 @@ def build_shard_standing_artifact(
     GROUP BY shard
     ORDER BY shard
     """,
+    setup=build_shard_standing_artifact,
 )
 def q_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRAINING-SHARD artifact gate (VERDICT r15 item 3): write the
@@ -1172,11 +1173,11 @@ def q_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest, and verifier agree with an independent engine end to
     end. ok is TRUE in the oracle by construction: the verifier runs
     against a freshly-written artifact; corruption paths are
-    pytest-pinned (tests/test_curation.py). Eager-action posture:
-    the standing artifact builds at construction, cached per
-    (corpus, params) like every persisted index. This is the load
-    surface of the reference (etl.js:758-829) recast for the
-    dataloader consumer."""
+    pytest-pinned (tests/test_curation.py). The standing artifact is
+    the registered setup, cached per (corpus, params) like every
+    persisted index; the body's call builds it only when no setup
+    ran. This is the load surface of the reference (etl.js:758-829)
+    recast for the dataloader consumer."""
     from cpx_etl_spark.operators.curation import verify_training_shards
 
     path = build_shard_standing_artifact(spark, sf_dir, tag="all")
@@ -1228,6 +1229,7 @@ def q_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pick
     ORDER BY position, source, shard
     """,
+    setup=build_mixture_shard_artifacts,
 )
 def q_training_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MULTI-CORPUS MIXTURE-PLAN gate (VERDICT r15 item 3): two
@@ -1248,8 +1250,7 @@ def q_training_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from cpx_etl_spark.operators.curation import plan_training_mixture
 
-    pa = build_shard_standing_artifact(spark, sf_dir, tag="even", parity=0)
-    pb = build_shard_standing_artifact(spark, sf_dir, tag="odd", parity=1)
+    pa, pb = build_mixture_shard_artifacts(spark, sf_dir)
     totals = []
     for p in (pa, pb):
         totals.append(

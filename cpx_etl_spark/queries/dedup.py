@@ -811,41 +811,28 @@ def dedup_cross_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sig_index_dir(sf_dir: str) -> str:
-    """Cache location for the persisted signature index (size+mtime
-    invalidation: scratch.corpus_index_dir)."""
-    from cpx_etl_spark.scratch import corpus_index_dir
-
-    return corpus_index_dir(
-        sf_dir, "documents.parquet", "cpx_sigindex_",
-        [f"n{_NGRAM}", f"k{_MH_K}", f"b{_MH_BANDS}", "refpred-md5-7", "v1"],
-    )
-
-
 def build_standing_index(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the standing-corpus signature index exists for sf_dir;
     returns its path. Build runs once per (corpus, params) — exactly
     the amortization an incremental pipeline gets in production."""
-    import os
+    from cpx_etl_spark.operators.dedup import write_signature_index
+    from cpx_etl_spark.scratch import standing_artifact
 
-    from cpx_etl_spark.operators.dedup import (
-        _INDEX_META,
-        write_signature_index,
+    return standing_artifact(
+        spark, sf_dir, "documents.parquet", "signature",
+        [f"n{_NGRAM}", f"k{_MH_K}", f"b{_MH_BANDS}", "refpred-md5-7", "v1"],
+        lambda path: write_signature_index(
+            load_table(spark, sf_dir, "documents").filter(
+                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) <= "7"
+            ), path,
+            "doc_id", "text", n=_NGRAM, k=_MH_K, bands=_MH_BANDS,
+        ),
     )
-
-    path = _sig_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, _INDEX_META)):
-        docs = load_table(spark, sf_dir, "documents")
-        is_ref = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) <= "7"
-        write_signature_index(
-            docs.filter(is_ref), path, "doc_id", "text",
-            n=_NGRAM, k=_MH_K, bands=_MH_BANDS,
-        )
-    return path
 
 
 @register("dedup_cross_corpus_indexed",
-          oracle=_sql_cross_minhash(_MH_K, _MH_BANDS, _MH_MINC, _CROSS_BAND_CAP))
+          oracle=_sql_cross_minhash(_MH_K, _MH_BANDS, _MH_MINC, _CROSS_BAND_CAP),
+          setup=build_standing_index)
 def dedup_cross_corpus_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_cross_corpus against the PERSISTED standing-corpus index
     (VERDICT r5 item 1): the fresh crawl is the only side shingled and
@@ -913,38 +900,27 @@ def _sql_emb_cross_indexed(threshold: float) -> str:
     """
 
 
-def _emb_index_dir(sf_dir: str) -> str:
-    from cpx_etl_spark.scratch import corpus_index_dir
-
-    return corpus_index_dir(
-        sf_dir, "embeddings.parquet", "cpx_embindex_",
-        [f"t{_EMBS_THRESHOLD}", f"d{_EMB_DIM}", "refpred-md5-7", "v1"],
-    )
-
-
 def build_embedding_standing_index(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the persisted standing-corpus embedding index exists for
     sf_dir; returns its path."""
-    import os
+    from cpx_etl_spark.operators.similarity import write_embedding_index
+    from cpx_etl_spark.scratch import standing_artifact
 
-    from cpx_etl_spark.operators.similarity import (
-        _EMB_INDEX_META,
-        write_embedding_index,
+    return standing_artifact(
+        spark, sf_dir, "embeddings.parquet", "embedding_lsh",
+        [f"t{_EMBS_THRESHOLD}", f"d{_EMB_DIM}", "refpred-md5-7", "v1"],
+        lambda path: write_embedding_index(
+            load_table(spark, sf_dir, "embeddings").filter(
+                F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1) <= "7"
+            ), path,
+            "vec_id", "embedding", threshold=_EMBS_THRESHOLD, dim=_EMB_DIM,
+        ),
     )
-
-    path = _emb_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, _EMB_INDEX_META)):
-        emb = load_table(spark, sf_dir, "embeddings")
-        is_ref = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1) <= "7"
-        write_embedding_index(
-            emb.filter(is_ref), path, "vec_id", "embedding",
-            threshold=_EMBS_THRESHOLD, dim=_EMB_DIM,
-        )
-    return path
 
 
 @register("dedup_embedding_cross_indexed",
-          oracle=_sql_emb_cross_indexed(_EMBS_THRESHOLD))
+          oracle=_sql_emb_cross_indexed(_EMBS_THRESHOLD),
+          setup=build_embedding_standing_index)
 def dedup_embedding_cross_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental embedding dedup against the PERSISTED sign-LSH index
     (the embedding twin of dedup_cross_corpus_indexed): the fresh batch

@@ -2255,6 +2255,40 @@ def q_upsert_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _bloom_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, sf_dir, "orders")
+    return orders.select(
+        F.col("o_orderkey").alias("k"),
+        F.md5(F.col("o_orderkey").cast("string")).alias("ext_id"),
+        F.col("o_totalprice").cast("decimal(20,4)").alias("price"),
+    )
+
+
+def build_bloom_snapshot(spark: SparkSession, sf_dir: str) -> str:
+    """Ensure the PK-range-clustered orders snapshot with ext_id
+    min/max stats and bloom bitmaps exists for sf_dir; returns the
+    table path. A pure function of (corpus, params), so it is a
+    standing artifact written once per corpus; an interrupted build is
+    rebuilt from an empty directory."""
+    import os
+
+    from cpx_etl_spark.scratch import publish_meta, standing_artifact
+    from cpx_etl_spark.sources.sinks import upsert_parquet_table
+
+    def build(path: str) -> None:
+        upsert_parquet_table(
+            _bloom_orders(spark, sf_dir), os.path.join(path, "t"), ["k"],
+            cluster_partitions=8,
+            stats_cols=["ext_id"], bloom_cols=["ext_id"],
+        )
+        publish_meta(spark, path, "bloom_snapshot", {"table": "t"})
+
+    return os.path.join(standing_artifact(
+        spark, sf_dir, "orders.parquet", "bloom_snapshot",
+        ["pk-k", "p8", "ext-bloom", "v1"], build,
+    ), "t")
+
+
 @register(
     "q_upsert_pruned_read_bloom",
     oracle="""
@@ -2268,6 +2302,7 @@ def q_upsert_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders, c
     WHERE md5(CAST(o_orderkey AS VARCHAR)) = c.ek
     """,
+    setup=build_bloom_snapshot,
 )
 def q_upsert_pruned_read_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BLOOM data-skipping beyond the PK, hash-gated (judge r12 item
@@ -2285,41 +2320,16 @@ def q_upsert_pruned_read_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     false positives only keep extra files — exactness never depends on
     the bitmap. r16 (VERDICT r15 item 7): the snapshot is a pure
     deterministic function of (corpus, params), so it now builds ONCE
-    per corpus in a corpus_index_dir cache — the persisted-index
+    per corpus as a standing artifact — the persisted-index
     posture — instead of re-writing 8 clustered partitions on every
     invocation (the 6x warm-ratio protocol cost in the sf1 smoke);
     the write path itself stays covered by the upsert-protocol pytest
-    suite and the first build per corpus. The marker lands only after
-    the write committed; a crashed half-build re-runs the upsert
-    (PK-merge is idempotent — same rows, new head)."""
-    import os
+    suite and the first build per corpus (build_bloom_snapshot, the
+    registered setup)."""
+    from cpx_etl_spark.sources.sinks import read_upsert_table_pruned
 
-    from cpx_etl_spark.scratch import corpus_index_dir
-    from cpx_etl_spark.sources.sinks import (
-        read_upsert_table_pruned,
-        upsert_parquet_table,
-    )
-
-    orders = load_table(spark, sf_dir, "orders")
-    base = orders.select(
-        F.col("o_orderkey").alias("k"),
-        F.md5(F.col("o_orderkey").cast("string")).alias("ext_id"),
-        F.col("o_totalprice").cast("decimal(20,4)").alias("price"),
-    )
-    root = corpus_index_dir(
-        sf_dir, "orders.parquet", "cpx_bloomskip_",
-        ["pk-k", "p8", "ext-bloom", "v1"],
-    )
-    path = os.path.join(root, "t")
-    marker = os.path.join(root, "_BUILT")
-    if not os.path.exists(marker):
-        upsert_parquet_table(
-            base, path, ["k"], cluster_partitions=8,
-            stats_cols=["ext_id"], bloom_cols=["ext_id"],
-        )
-        with open(marker, "w") as f:
-            f.write("built")
-    ek = base.agg(F.min("k").alias("mk")).select(
+    path = build_bloom_snapshot(spark, sf_dir)
+    ek = _bloom_orders(spark, sf_dir).agg(F.min("k").alias("mk")).select(
         F.md5(F.col("mk").cast("string"))
     ).collect()[0][0]
     pruned_df, n_scanned, n_total = read_upsert_table_pruned(

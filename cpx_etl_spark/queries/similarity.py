@@ -227,33 +227,25 @@ def embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def _ivf_index_dir(sf_dir: str) -> str:
-    """Cache location for the persisted IVF index (size+mtime
-    invalidation: scratch.corpus_index_dir)."""
-    from cpx_etl_spark.scratch import corpus_index_dir
-
-    return corpus_index_dir(
-        sf_dir, "embeddings.parquet", "cpx_ivfindex_",
-        ["label-cells", f"dim{_DIM}", "v1"],
-    )
-
-
 def build_ivf_standing_index(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the persisted IVF index exists for sf_dir; returns its
     path. Trains once per (corpus, params) — the serve path never
     re-derives it."""
-    import os
+    from cpx_etl_spark.operators.similarity import write_ivf_index
+    from cpx_etl_spark.scratch import standing_artifact
 
-    from cpx_etl_spark.operators.similarity import _IVF_META, write_ivf_index
+    return standing_artifact(
+        spark, sf_dir, "embeddings.parquet", "ivf",
+        ["label-cells", f"dim{_DIM}", "v1"],
+        lambda path: write_ivf_index(
+            load_table(spark, sf_dir, "embeddings"), path,
+            "vec_id", "embedding", "label",
+        ),
+    )
 
-    path = _ivf_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, _IVF_META)):
-        emb = load_table(spark, sf_dir, "embeddings")
-        write_ivf_index(emb, path, "vec_id", "embedding", "label")
-    return path
 
-
-@register("ann_ivf_topk_indexed", oracle=_IVF_ORACLE)
+@register("ann_ivf_topk_indexed", oracle=_IVF_ORACLE,
+          setup=build_ivf_standing_index)
 def ann_ivf_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN serving against the PERSISTED IVF index (train once, serve
     many — the deployment shape): centroids and cell-clustered
@@ -273,19 +265,39 @@ def ann_ivf_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_append_index_dir(sf_dir: str) -> str:
-    """Cache location for the two-batch appended IVF index
-    (size+mtime invalidation like every standing index)."""
-    from cpx_etl_spark.scratch import corpus_index_dir
+def build_ivf_append_index(spark: SparkSession, sf_dir: str) -> str:
+    """Ensure the two-batch IVF index exists for sf_dir; returns the
+    index path. Batch 1 (even vec_ids) trains it, batch 2 (odd) is
+    appended against the stored centroids. The artifact's own meta
+    lands after the append, so a build that stopped between the two
+    steps is rebuilt whole."""
+    import os
 
-    return corpus_index_dir(
-        sf_dir, "embeddings.parquet", "cpx_ivfappend_",
-        ["label-cells", f"dim{_DIM}", "two-batch", "v1"],
+    from cpx_etl_spark.operators.similarity import (
+        append_to_ivf_index,
+        write_ivf_index,
     )
+    from cpx_etl_spark.scratch import publish_meta, standing_artifact
+
+    def build(path: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        index = os.path.join(path, "index")
+        write_ivf_index(
+            emb.filter(F.col("vec_id") % 2 == 0), index,
+            "vec_id", "embedding", "label",
+        )
+        append_to_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), index)
+        publish_meta(spark, path, "ivf_append", {"batches": 2})
+
+    return os.path.join(standing_artifact(
+        spark, sf_dir, "embeddings.parquet", "ivf_append",
+        ["label-cells", f"dim{_DIM}", "two-batch", "v1"], build,
+    ), "index")
 
 
-@register("ann_ivf_append_serve", oracle=_ivf_oracle(
-    " WHERE vec_id % 2 = 0"))
+@register("ann_ivf_append_serve",
+          oracle=_ivf_oracle(" WHERE vec_id % 2 = 0"),
+          setup=build_ivf_append_index)
 def ann_ivf_append_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INDEX APPEND + serve — the FAISS train()/add() split the
     serving stack runs daily (VERDICT r14 item 3): the IVF index is
@@ -298,40 +310,20 @@ def ann_ivf_append_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe + exact rerank. A two-batch pytest additionally pins
     append == from-scratch rebuild bit-exactly at fixed artifacts for
     all five persisted index families (IVF/PQ/OPQ/IVFPQ/residual).
-    Eager-action posture: build+append run at construction (registry
-    contract note, queries/__init__.py). operators/similarity.py
-    append_to_ivf_index."""
-    import os
-
+    Build+append is the registered setup (build_ivf_append_index);
+    operators/similarity.py append_to_ivf_index."""
     from cpx_etl_spark.operators.similarity import (
-        _IVF_META,
-        append_to_ivf_index,
         ivf_topk_indexed,
         read_ivf_index,
-        write_ivf_index,
     )
 
+    idx = read_ivf_index(spark, build_ivf_append_index(spark, sf_dir))
     emb = load_table(spark, sf_dir, "embeddings")
-    path = _ivf_append_index_dir(sf_dir)
-    marker = os.path.join(path, "_APPENDED")
-    if not os.path.exists(marker):
-        # both steps rerun on a half-built dir: write_ivf_index
-        # overwrites, append then adds batch 2 exactly once — the
-        # marker lands only after the append committed
-        write_ivf_index(
-            emb.filter(F.col("vec_id") % 2 == 0), path,
-            "vec_id", "embedding", "label",
-        )
-        append_to_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), path)
-        with open(marker, "w") as f:
-            f.write("appended")
-    else:
-        assert os.path.exists(os.path.join(path, _IVF_META))
-    idx = read_ivf_index(spark, path)
     return ivf_topk_indexed(
         emb.filter(F.col("vec_id") < 5), idx, "vec_id", "embedding",
         k=10, nprobe=2, dim=_DIM,
     )
+
 
 @register(
     "ann_knn_classify",
@@ -563,33 +555,24 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_index_dir(sf_dir: str) -> str:
-    """Cache location for the persisted PQ index (size+mtime
-    invalidation: scratch.corpus_index_dir)."""
-    from cpx_etl_spark.scratch import corpus_index_dir
-
-    return corpus_index_dir(
-        sf_dir, "embeddings.parquet", "cpx_pqindex_",
-        ["pq-m8-k16", f"dim{_DIM}", "v1"],
-    )
-
-
 def build_pq_standing_index(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the persisted PQ index exists for sf_dir; returns its
     path. Trains/encodes once per (corpus, params)."""
-    import os
+    from cpx_etl_spark.operators.similarity import write_pq_index
+    from cpx_etl_spark.scratch import standing_artifact
 
-    from cpx_etl_spark.operators.similarity import _PQ_META, write_pq_index
+    return standing_artifact(
+        spark, sf_dir, "embeddings.parquet", "pq",
+        ["pq-m8-k16", f"dim{_DIM}", "v1"],
+        lambda path: write_pq_index(
+            load_table(spark, sf_dir, "embeddings"), path,
+            "vec_id", "embedding", m=8, k_codes=16, dim=_DIM,
+        ),
+    )
 
-    path = _pq_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, _PQ_META)):
-        emb = load_table(spark, sf_dir, "embeddings")
-        write_pq_index(emb, path, "vec_id", "embedding",
-                       m=8, k_codes=16, dim=_DIM)
-    return path
 
-
-@register("ann_pq_topk_indexed", oracle=_PQ_ORACLE)
+@register("ann_pq_topk_indexed", oracle=_PQ_ORACLE,
+          setup=build_pq_standing_index)
 def ann_pq_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN serving against the PERSISTED PQ index (train/encode once,
     serve many): the ADC scan reads only the packed 8-int codes table,
@@ -717,33 +700,24 @@ def ann_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _opq_index_dir(sf_dir: str) -> str:
-    """Cache location for the persisted OPQ index (size+mtime
-    invalidation: scratch.corpus_index_dir)."""
-    from cpx_etl_spark.scratch import corpus_index_dir
-
-    return corpus_index_dir(
-        sf_dir, "embeddings.parquet", "cpx_opqindex_",
-        ["opq-m8-k16", f"dim{_DIM}", "v1"],
-    )
-
-
 def build_opq_standing_index(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the persisted OPQ index exists for sf_dir; returns its
     path. Rotates/trains/encodes once per (corpus, params)."""
-    import os
+    from cpx_etl_spark.operators.similarity import write_opq_index
+    from cpx_etl_spark.scratch import standing_artifact
 
-    from cpx_etl_spark.operators.similarity import _OPQ_META, write_opq_index
+    return standing_artifact(
+        spark, sf_dir, "embeddings.parquet", "opq",
+        ["opq-m8-k16", f"dim{_DIM}", "v1"],
+        lambda path: write_opq_index(
+            load_table(spark, sf_dir, "embeddings"), path,
+            "vec_id", "embedding", m=8, k_codes=16, dim=_DIM,
+        ),
+    )
 
-    path = _opq_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, _OPQ_META)):
-        emb = load_table(spark, sf_dir, "embeddings")
-        write_opq_index(emb, path, "vec_id", "embedding",
-                        m=8, k_codes=16, dim=_DIM)
-    return path
 
-
-@register("ann_opq_topk_indexed", oracle=_opq_oracle())
+@register("ann_opq_topk_indexed", oracle=_opq_oracle(),
+          setup=build_opq_standing_index)
 def ann_opq_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN serving against the PERSISTED OPQ index (rotate/train/
     encode once, serve many): fresh queries rotate through the seeded
@@ -956,33 +930,24 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivfpq_index_dir(sf_dir: str) -> str:
-    """Cache location for the persisted IVFPQ index (size+mtime
-    invalidation: scratch.corpus_index_dir)."""
-    from cpx_etl_spark.scratch import corpus_index_dir
-
-    return corpus_index_dir(
-        sf_dir, "embeddings.parquet", "cpx_ivfpqindex_",
-        ["ivfpq-label-m8-k16", f"dim{_DIM}", "v1"],
-    )
-
-
 def build_ivfpq_standing_index(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the persisted IVFPQ index exists for sf_dir; returns its
     path. Trains/assigns/encodes once per (corpus, params)."""
-    import os
+    from cpx_etl_spark.operators.similarity import write_ivfpq_index
+    from cpx_etl_spark.scratch import standing_artifact
 
-    from cpx_etl_spark.operators.similarity import _IVFPQ_META, write_ivfpq_index
+    return standing_artifact(
+        spark, sf_dir, "embeddings.parquet", "ivfpq",
+        ["ivfpq-label-m8-k16", f"dim{_DIM}", "v1"],
+        lambda path: write_ivfpq_index(
+            load_table(spark, sf_dir, "embeddings"), path,
+            "vec_id", "embedding", "label", m=8, k_codes=16, dim=_DIM,
+        ),
+    )
 
-    path = _ivfpq_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, _IVFPQ_META)):
-        emb = load_table(spark, sf_dir, "embeddings")
-        write_ivfpq_index(emb, path, "vec_id", "embedding", "label",
-                          m=8, k_codes=16, dim=_DIM)
-    return path
 
-
-@register("ann_ivfpq_topk_indexed", oracle=_IVFPQ_ORACLE)
+@register("ann_ivfpq_topk_indexed", oracle=_IVFPQ_ORACLE,
+          setup=build_ivfpq_standing_index)
 def ann_ivfpq_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN serving against the PERSISTED IVFPQ index (train once,
     serve many): centroids + codebook broadcast; the ADC scan reads
@@ -1928,37 +1893,23 @@ def q_ann_recall_vs_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("nprobe")
 
 
-def _knn_graph_index_dir(sf_dir: str) -> str:
-    """Cache location for the persisted kNN-graph index (size+mtime
-    invalidation: scratch.corpus_index_dir)."""
-    from cpx_etl_spark.scratch import corpus_index_dir
-
-    return corpus_index_dir(
-        sf_dir, "embeddings.parquet", "cpx_knngraph_",
-        ["trained-lsh", f"dim{_DIM}", "v1"],
-    )
-
-
 def build_knn_graph_standing_index(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the persisted kNN-graph index exists for sf_dir; returns
     its path. Gate-pinned b=4 LSH bits so the oracle's hyperplanes are
     static literals (the q_knn_graph convention)."""
-    import os
-
-    from cpx_etl_spark.operators.similarity import (
-        _KNN_META,
-        write_knn_graph_index,
-    )
+    from cpx_etl_spark.operators.similarity import write_knn_graph_index
     from cpx_etl_spark.queries.dedup import _SEM_LSH_BITS
+    from cpx_etl_spark.scratch import standing_artifact
 
-    path = _knn_graph_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, _KNN_META)):
-        emb = load_table(spark, sf_dir, "embeddings")
-        write_knn_graph_index(
-            emb, path, "vec_id", "embedding",
+    return standing_artifact(
+        spark, sf_dir, "embeddings.parquet", "knn_graph",
+        ["trained-lsh", f"dim{_DIM}", "v1"],
+        lambda path: write_knn_graph_index(
+            load_table(spark, sf_dir, "embeddings"), path,
+            "vec_id", "embedding",
             target_cell=_SEM_TARGET_CELL, n_bits=_SEM_LSH_BITS,
-        )
-    return path
+        ),
+    )
 
 
 _GS_BEAM, _GS_ROUNDS, _GS_NPROBE, _GS_PER_CELL = 16, 4, 8, 8
@@ -2081,7 +2032,8 @@ def _sql_graph_topk() -> str:
     """
 
 
-@register("ann_graph_topk", oracle=_sql_graph_topk())
+@register("ann_graph_topk", oracle=_sql_graph_topk(),
+          setup=build_knn_graph_standing_index)
 def ann_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GRAPH-ANN serving (HNSW-lite, VERDICT r15 item 6 — closes the
     last public-ANN family): greedy beam search over the PERSISTED

@@ -2976,33 +2976,23 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WIN_REF_PRED = "substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <= '7'"
 
 
-def _winnow_index_dir(sf_dir: str) -> str:
-    """Cache location for the persisted winnowing index (size+mtime
-    invalidation: scratch.corpus_index_dir)."""
-    from cpx_etl_spark.scratch import corpus_index_dir
-
-    return corpus_index_dir(
-        sf_dir, "documents.parquet", "cpx_winnowidx_",
-        [f"k{_WIN_K}", f"w{_WIN_W}", "refpred-md5-7", "v1"],
-    )
-
-
 def build_winnow_index(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the standing-corpus winnowing index exists for sf_dir;
     returns its path. Build runs once per (corpus, params) — the
     amortization an incremental pipeline gets in production."""
-    import os
+    from cpx_etl_spark.operators.dedup import write_winnow_index
+    from cpx_etl_spark.scratch import standing_artifact
 
-    from cpx_etl_spark.operators.dedup import _WINNOW_META, write_winnow_index
-
-    path = _winnow_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, _WINNOW_META)):
-        docs = load_table(spark, sf_dir, "documents")
-        is_ref = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) <= "7"
-        write_winnow_index(
-            docs.filter(is_ref), path, "doc_id", "text", k=_WIN_K, w=_WIN_W
-        )
-    return path
+    return standing_artifact(
+        spark, sf_dir, "documents.parquet", "winnow",
+        [f"k{_WIN_K}", f"w{_WIN_W}", "refpred-md5-7", "v1"],
+        lambda path: write_winnow_index(
+            load_table(spark, sf_dir, "documents").filter(
+                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) <= "7"
+            ), path,
+            "doc_id", "text", k=_WIN_K, w=_WIN_W,
+        ),
+    )
 
 
 @register(
@@ -3046,6 +3036,7 @@ def build_winnow_index(spark: SparkSession, sf_dir: str) -> str:
     JOIN cnt ca ON ca.doc_id = s.doc_a
     JOIN cnt cb ON cb.doc_id = s.doc_b
     """,
+    setup=build_winnow_index,
 )
 def q_winnow_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_winnow_fingerprints turned INCREMENTAL (judge r12 item 5):

@@ -424,15 +424,12 @@ def test_write_training_shards_deterministic_balanced_complete(spark, sf_dir, tm
     fingerprints) byte-identically, and a different seed produces a
     different order; (d) the shuffle actually decorrelates from id
     order."""
-    import json
     import os
 
     from pyspark.sql import functions as F
 
-    from cpx_etl_spark.operators.curation import (
-        _SHARD_META,
-        write_training_shards,
-    )
+    from cpx_etl_spark.operators.curation import write_training_shards
+    from cpx_etl_spark.scratch import read_meta
     from cpx_etl_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -441,7 +438,7 @@ def test_write_training_shards_deterministic_balanced_complete(spark, sf_dir, tm
     p1 = str(tmp_path / "s1")
     m1 = write_training_shards(docs, p1, "doc_id", "text", cap).collect()
 
-    meta = json.load(open(os.path.join(p1, _SHARD_META)))
+    meta = read_meta(spark, p1, "shard")
     assert meta["n_docs"] == n_docs and meta["n_shards"] == len(m1)
 
     # (a) completeness + roundtrip
@@ -762,7 +759,7 @@ def test_shard_meta_io_uses_storage_abstraction(spark, sf_dir, tmp_path):
     storage the data itself lives on. Local-FS proxy for that
     contract: (a) the planner no longer needs the meta at all (quota
     capacity comes from the manifest parquet), so deleting
-    _SHARD_META.json leaves planning working; (b) the verifier reads
+    the meta (scratch._META) leaves planning working; (b) the verifier reads
     the meta through Spark and still fails LOUD when it is absent;
     (c) refusal messages for a non-artifact path are unchanged."""
     import os
@@ -770,12 +767,11 @@ def test_shard_meta_io_uses_storage_abstraction(spark, sf_dir, tmp_path):
     import pytest as _pytest
 
     from cpx_etl_spark.operators.curation import (
-        _SHARD_META,
-        _read_shard_meta,
         plan_training_mixture,
         verify_training_shards,
         write_training_shards,
     )
+    from cpx_etl_spark.scratch import _META, read_meta
     from cpx_etl_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -785,8 +781,8 @@ def test_shard_meta_io_uses_storage_abstraction(spark, sf_dir, tmp_path):
     # the writer's meta (written via the Hadoop FS API) reads back
     # through the storage abstraction and carries the same fields the
     # driver-local writer produced in r15
-    meta = _read_shard_meta(spark, pa)
-    assert meta is not None and meta["seed"] == "shards-v1"
+    meta = read_meta(spark, pa, "shard")
+    assert meta["seed"] == "shards-v1"
     assert meta["id_col"] == "doc_id" and meta["n_shards"] >= 1
 
     # verifier green with the meta present
@@ -794,8 +790,9 @@ def test_shard_meta_io_uses_storage_abstraction(spark, sf_dir, tmp_path):
     assert ver and all(r["ok"] for r in ver)
 
     # (a) meta ABSENT, manifest readable: planning still works
-    os.remove(os.path.join(pa, _SHARD_META))
-    assert _read_shard_meta(spark, pa) is None
+    os.remove(os.path.join(pa, _META))
+    with _pytest.raises(ValueError, match="not a shard artifact"):
+        read_meta(spark, pa, "shard")
     plan = plan_training_mixture(spark, {"web": (pa, 1.0)}, 1000).collect()
     assert plan and plan[0]["quota_tokens"] == 1000
 

@@ -217,10 +217,12 @@ def test_cross_corpus_indexed_reads_stored_index(spark, sf_dir):
     of the persisted signature index (bands + shingles + counts), not a
     re-derivation — the plan shows >= 3 FileScans under the index dir,
     and results equal the recompute path."""
+    from cpx_etl_spark.queries.dedup import build_standing_index
+
     q, _ = load_registry()
     df = q["dedup_cross_corpus_indexed"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("cpx_sigindex_") >= 3, (
+    assert plan.count(build_standing_index(spark, sf_dir)) >= 3, (
         "ref side does not come from the stored index"
     )
     got = sorted(map(tuple, df.collect()))
@@ -232,10 +234,12 @@ def test_ivf_indexed_reads_stored_index(spark, sf_dir):
     """The persisted-IVF serving query must read centroids and
     assignments from the stored index (>= 2 FileScans under the index
     dir) and return exactly the one-shot ivf_topk result."""
+    from cpx_etl_spark.queries.similarity import build_ivf_standing_index
+
     q, _ = load_registry()
     df = q["ann_ivf_topk_indexed"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("cpx_ivfindex_") >= 2
+    assert plan.count(build_ivf_standing_index(spark, sf_dir)) >= 2
     got = sorted(map(tuple, df.collect()))
     want = sorted(map(tuple, q["ann_ivf_topk"](spark, sf_dir).collect()))
     assert got == want and len(got) > 0

@@ -99,3 +99,34 @@ def test_digest_drift_distrusts_all_evidence():
         (Path(qmod.__file__).parent / "gate_digests.json").read_text()
     )
     assert ledger[name]["digest"] == query_digest(q[name], ORACLES.get(name))
+
+
+def test_operator_edit_regates_its_caller(tmp_path):
+    """The digest follows the package code a query reaches: a statement
+    added to an operator body (graph_beam_search, reached only by
+    ann_graph_topk) makes --check report that caller and no other."""
+    import ast
+    import shutil
+
+    root = os.path.dirname(os.path.dirname(_SCRIPT))
+    ignore = shutil.ignore_patterns("__pycache__")
+    shutil.copytree(os.path.join(root, "cpx_etl_spark"),
+                    tmp_path / "cpx_etl_spark", ignore=ignore)
+    shutil.copytree(os.path.join(root, "tools"), tmp_path / "tools",
+                    ignore=ignore)
+    ops = tmp_path / "cpx_etl_spark" / "operators" / "similarity.py"
+    lines = ops.read_text().splitlines(keepends=True)
+    fn = next(n for n in ast.parse("".join(lines)).body
+              if isinstance(n, ast.FunctionDef) and n.name == "graph_beam_search")
+    lines.insert(fn.body[0].end_lineno, "    pass\n")  # after the docstring
+    ops.write_text("".join(lines))
+
+    out = subprocess.run(
+        [sys.executable, str(tmp_path / "tools" / "update_gate_digests.py"),
+         "--check"],
+        capture_output=True, text=True,
+    )
+    assert out.returncode == 1, out.stderr or out.stdout
+    reported = [ln.split()[1].rstrip(":") for ln in out.stdout.splitlines()
+                if ln.startswith("  ")]
+    assert reported == ["ann_graph_topk"], out.stdout

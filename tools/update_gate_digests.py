@@ -2,17 +2,16 @@
 """Maintain cpx_etl_spark/queries/gate_digests.json — the content-based
 semantic-change ledger behind the gate-sweep rotation.
 
-Each registered query maps to {"digest": md5(source+oracle), "round": N}
+Each registered query maps to {"digest": query_digest, "round": N}
 where N is the round its CURRENT digest first shipped; driver evidence
-counts only when STRICTLY newer than N (see queries/__init__.py). This
-tool keeps the ledger in sync with HEAD:
+counts only when STRICTLY newer than N (see queries/__init__.py). The
+digest covers the query's body, its oracle and every cpx_etl_spark
+function, class and constant it reaches, so a change inside an operator
+re-gates its callers. This tool keeps the ledger in sync with HEAD:
 
   python tools/update_gate_digests.py            # sync (new/changed -> next round)
   python tools/update_gate_digests.py --check    # exit 1 if out of sync
   python tools/update_gate_digests.py --init     # bootstrap: everything round 0
-  python tools/update_gate_digests.py --bump NAME[=ROUND] ...
-                                                 # force a re-gate (helper-only
-                                                 # changes the digest can't see)
 
 "Next round" = 1 + the newest CORRECTNESS_r*.json at the repo root (the
 upcoming driver sweep). No timestamps — deterministic from artifacts.
@@ -44,8 +43,6 @@ def main() -> int:
     ap.add_argument("--check", action="store_true")
     ap.add_argument("--init", action="store_true",
                     help="bootstrap every entry at round 0")
-    ap.add_argument("--bump", action="append", default=[],
-                    metavar="NAME[=ROUND]")
     args = ap.parse_args()
 
     from cpx_etl_spark.queries import (
@@ -85,14 +82,6 @@ def main() -> int:
     dropped = sorted(set(stored) - set(out))
     for name in dropped:
         changes.append(f"drop  {name}")
-
-    for spec in args.bump:
-        name, _, rnd = spec.partition("=")
-        if name not in out:
-            print(f"--bump {name}: not a registered query", file=sys.stderr)
-            return 2
-        out[name]["round"] = int(rnd) if rnd else nxt
-        changes.append(f"bump  {name} -> r{out[name]['round']}")
 
     if args.check:
         if changes:

@@ -1,6 +1,8 @@
 """Minimal XSLT 1.0 subset engine on the stdlib xml.etree — so a REAL
 ``.xsl`` stylesheet executes without libxslt. Each stylesheet compiles
-once to bound closures; ``apply`` runs them per document.
+once to bound closures: every instruction body, select, test, match
+pattern and attribute value template is parsed once per stylesheet,
+and ``apply`` runs closure bodies only, per document.
 
 Parity: the reference's ``xslTransform``/``xslPipeline``
 (src/main/index.js:87-126) resolves a control document's ``xi:include``
@@ -10,45 +12,75 @@ the per-step execution those functions delegate to libxslt for; the
 chain resolution lives in plans/xsl_chain.py and the Spark wiring
 (Arrow-batched column transform) alongside it.
 
-Supported subset (raises XsltUnsupported on anything else, so silent
-wrong answers are impossible):
+Supported subset (anything else raises XsltUnsupported: a declaration
+when the stylesheet compiles, an expression or instruction when it
+runs):
 
-- ``xsl:template`` with match patterns ``/``, ``name``, ``a/b``,
-  ``*``, ``text()``, with ``[...]`` predicates; last-declared wins on
-  equal specificity (document/built-in rules per XSLT 1.0 5.8)
-- NAMED templates + ``xsl:call-template`` with ``xsl:with-param``
-  (r6); ``xsl:param`` declares defaults in both named and match
-  templates (``xsl:apply-templates`` may also carry with-param)
-- ``xsl:variable`` / ``xsl:param``, global and local, ``select`` or
-  body content (result-tree fragments: string-value for comparisons
-  and value-of, markup for copy-of); referenced as ``$name`` in
-  selects, tests, and AVTs; lexically scoped, shadowing allowed
-- ``xsl:apply-templates`` (optional ``select``), ``xsl:for-each``,
-  both with ``xsl:sort`` keys (select / data-type text|number /
-  order ascending|descending, stable multi-key)
-- ``xsl:value-of``, ``xsl:if``, ``xsl:choose/when/otherwise``,
-  ``xsl:text``, ``xsl:copy-of``, ``xsl:element`` (AVT name) and
-  ``xsl:attribute`` on any constructed element, literal result
-  elements with ``{expr}`` attribute value templates
-- ``position()`` / ``last()`` inside iterations and predicates,
-  ``count(path)``, ``concat(...)``, ``string-length(...)``,
-  ``normalize-space(...)``, ``string(...)``, numeric index predicates
-  (``item[2]``, ``item[last()]``) with XPath 1.0
-  sequential-renumbering semantics
-- select/test paths: relative child steps, absolute ``/a/b`` selects,
-  ``@attr``, ``.``, ``text()``, ``*``, ``[...]`` predicates (predicates
-  may contain nested paths — bracket/quote-aware parsing); tests
-  support ``not(...)``, existence, and ``= != < <= > >=`` against
-  quoted-string or numeric literals or ``$var`` references
+- declarations: ``xsl:template`` (match and/or name, ``mode``),
+  ``xsl:variable`` / ``xsl:param`` (global and local: a ``select``, or
+  a body as a result-tree fragment), ``xsl:key``, ``xsl:import`` /
+  ``xsl:include`` (hrefs against ``base_dir``; import precedence per
+  §2.6.2), ``xsl:attribute-set``, ``xsl:decimal-format``,
+  ``xsl:strip-space`` / ``xsl:preserve-space``; ``xsl:output`` is
+  ignored (output is always unindented text) and top-level elements in
+  other namespaces are data for ``document('')``
+- match patterns: ``/``, names, ``*``, ``node()``, ``text()``, ``a/b``,
+  ``a//b``, anchored ``/a/b``, non-positional ``[...]`` predicates and
+  ``|`` alternation. Import precedence decides first, then (depth,
+  predicate count, name > ``*`` > ``node()``), then declaration order;
+  the two XSLT 1.0 §5.5 default-priority-0.5 ties that libxslt would
+  resolve by declaration order differently are refused
+- instructions: ``apply-templates`` (``select``, ``mode``,
+  ``with-param``, ``xsl:sort``), ``apply-imports``, ``call-template``
+  (``with-param``), ``for-each`` (``xsl:sort``: select, data-type
+  text|number, order; stable multi-key), ``value-of``, ``copy-of``,
+  ``copy``, ``if``, ``choose/when/otherwise``, ``text``, ``element``,
+  ``attribute``, ``number`` (``value``, or ``level``
+  single|any|multiple with ``count`` and a ``format`` of 1/01/a/A/i/I
+  tokens), literal result elements with ``{expr}`` attribute value
+  templates and ``xsl:use-attribute-sets``, and ``copy-of
+  select="@*"`` directly inside an element constructor
+- select paths: relative and absolute (``/a/b``) child steps, ``//``
+  descendant steps, ``.``, ``@a``, ``*``, ``text()``, ``node()``;
+  predicates ``[k]``, ``[last()]``, ``position()``/``last()`` tests
+  (these three on child steps only) and plain tests, applied in order
+  with XPath 1.0 renumbering; heads
+  ``key(...)`` and ``document(...)``; ``$var``; a quoted or numeric
+  literal
+- functions: ``position()``, ``last()``, ``count``, ``key``,
+  ``document`` (string-literal uri; ``''`` is the stylesheet; 2-arg
+  base), ``generate-id``, ``concat``, ``string``, ``string-length``,
+  ``normalize-space``, ``contains``, ``starts-with``, ``substring``,
+  ``substring-before``, ``substring-after``, ``translate``,
+  ``format-number``, ``not``, ``boolean``, ``true``, ``false``
+- tests: ``or``, ``and``, ``not(...)``, parentheses, existence, and
+  ``= != < <= > >=`` against a quoted or numeric literal or ``$var``;
+  path-to-path only with ``=`` / ``!=`` (XPath 1.0 §3.4 node-sets)
 """
 
 from __future__ import annotations
 
+import decimal
+import functools
+import math
+import operator
+import os
+import re
+import sys
 import xml.etree.ElementTree as ET
+from collections import namedtuple
 from xml.sax.saxutils import escape, quoteattr
 
 XSL_NS = "http://www.w3.org/1999/XSL/Transform"
 _OPS = ("!=", ">=", "<=", "=", "<", ">")
+_CMP = {"=": operator.eq, "!=": operator.ne, "<": operator.lt,
+        "<=": operator.le, ">": operator.gt, ">=": operator.ge}
+# a function call (or the text()/node() tests) at the head of an expression
+_CALL = re.compile(r"[A-Za-z_][\w.-]*\(")
+# an XPath 1.0 Number ('nan' or 'inf' is an element name)
+_NUMBER = re.compile(r"-?(\d+(\.\d*)?|\.\d+)")
+# the node tests a select step supports
+_NODE_TEST = re.compile(r"@?[A-Za-z_][\w.-]*|\*|\.|text\(\)|node\(\)")
 
 
 class XsltUnsupported(ValueError):
@@ -73,6 +105,21 @@ def _is_xsl(elem, name: str | None = None) -> bool:
     if not isinstance(tag, str) or not tag.startswith("{" + XSL_NS + "}"):
         return False
     return name is None or _local(tag) == name
+
+
+def _kind_of(elem) -> str | None:
+    """An element's XSL instruction name (None: literal result
+    element). ``copy-of select="@*"`` is its own kind: directly inside
+    an element constructor it copies the context node's attributes (the
+    identity-transform idiom), anywhere else it fails when run."""
+    if not isinstance(elem.tag, str):
+        return "#comment"
+    if not _is_xsl(elem):
+        return None
+    kind = _local(elem.tag)
+    if kind == "copy-of" and (elem.get("select") or "").strip() == "@*":
+        return "#attr-copy"
+    return kind
 
 
 class _RTF:
@@ -107,15 +154,46 @@ def _string(item) -> str:
     return "".join(item.itertext())
 
 
+def _children(elem: ET.Element) -> list:
+    """child::node() — elements and text, in document order."""
+    out: list = []
+    if elem.text:
+        out.append(elem.text)
+    for child in elem:
+        out.append(child)
+        if child.tail:
+            out.append(child.tail)
+    return out
+
+
+def _all_nodes(elem: ET.Element, out: list) -> list:
+    """Append every descendant node of ``elem`` in document order."""
+    for c in _children(elem):
+        out.append(c)
+        if isinstance(c, ET.Element):
+            _all_nodes(c, out)
+    return out
+
+
 def _fail(msg: str):
     """fn(ctx) raising XsltUnsupported(msg) when it RUNS: an unsupported
-    instruction fails when executed, not when the stylesheet compiles."""
+    instruction or expression fails when executed, not when the
+    stylesheet compiles."""
     def fn(ctx):
         raise XsltUnsupported(msg)
     return fn
 
 
-import functools
+def _never(node) -> bool:
+    return False
+
+
+def _refuse_nodes(msg: str, n) -> list:
+    """A location step outside the subset: fails once a node reaches it."""
+    if isinstance(n, (ET.Element, _Doc)):
+        raise XsltUnsupported(msg)
+    return []
+
 
 _RECLIMIT_OK = False
 
@@ -126,8 +204,6 @@ def _ensure_recursion_limit() -> None:
     already bounded by _MAX_TDEPTH). Never lowers an existing limit."""
     global _RECLIMIT_OK
     if not _RECLIMIT_OK:
-        import sys
-
         if sys.getrecursionlimit() < 5000:
             sys.setrecursionlimit(5000)
         _RECLIMIT_OK = True
@@ -168,11 +244,10 @@ def _scan_brackets(s: str):
 
 @functools.lru_cache(maxsize=4096)
 def _parse_step(step: str) -> tuple[str, tuple[str, ...]]:
+    """'name[p1][p2]' -> ('name', ('p1', 'p2')), bracket and quote
+    aware so predicates may nest (a[b[c]]) or hold paths (a[b/c])."""
     preds: list[str] = []
     while step.endswith("]"):
-        # balanced, quote-aware scan for the matching '[' of the final
-        # ']' — rindex broke on nested predicates and paths inside
-        # predicates like a[b[c]] or a[b/c] (ADVICE r5)
         opens: list[int] = []
         close_match: int | None = None
         for i, ch, depth, in_q in _scan_brackets(step):
@@ -191,49 +266,48 @@ def _parse_step(step: str) -> tuple[str, tuple[str, ...]]:
     return step, tuple(preds)
 
 
-@functools.lru_cache(maxsize=4096)
+def _top_level(s: str):
+    """Indices of the characters of ``s`` outside quotes and outside
+    (...) and [...] groups, the quote and bracket characters excluded."""
+    depth = 0
+    in_q = False
+    for i, ch in enumerate(s):
+        if ch == "'":
+            in_q = not in_q
+        elif not in_q:
+            if ch in "([":
+                depth += 1
+            elif ch in ")]":
+                depth -= 1
+            elif depth == 0:
+                yield i
+
+
+def _split_top(s: str, sep: str) -> list[str]:
+    """Split ``s`` on ``sep`` where it stands at the top level."""
+    parts: list[str] = []
+    start = 0
+    for i in _top_level(s):
+        if i >= start and s.startswith(sep, i):
+            parts.append(s[start:i])
+            start = i + len(sep)
+    parts.append(s[start:])
+    return parts
+
+
 def _split_union(expr: str) -> tuple[str, ...]:
-    """Split on top-level '|' (pattern alternation), quote/bracket
-    aware."""
-    parts: list[str] = []
-    start = 0
-    for i, ch, depth, in_q in _scan_brackets(expr):
-        if ch == "|" and depth == 0 and not in_q:
-            parts.append(expr[start:i])
-            start = i + 1
-    parts.append(expr[start:])
-    return tuple(p.strip() for p in parts if p.strip())
-
-
-@functools.lru_cache(maxsize=4096)
-def _split_path(path: str) -> tuple[str, ...]:
-    """Split a path on '/' at bracket depth 0 outside quotes, so
-    predicates containing path steps (a[b/c]) stay intact (ADVICE r5)."""
-    parts: list[str] = []
-    start = 0
-    for i, ch, depth, in_q in _scan_brackets(path):
-        if ch == "/" and depth == 0 and not in_q:
-            parts.append(path[start:i])
-            start = i + 1
-    parts.append(path[start:])
-    return tuple(p for p in parts if p)
+    """Pattern alternatives: split on top-level '|'."""
+    return tuple(p.strip() for p in _split_top(expr, "|") if p.strip())
 
 
 @functools.lru_cache(maxsize=4096)
 def _split_path_marked(path: str) -> tuple[tuple[str, bool], ...]:
-    """Split on '/' keeping '//' semantics: each returned (segment,
-    is_descendant) marks whether the step is reached via the
+    """Split on top-level '/', keeping '//' semantics: each returned
+    (segment, is_descendant) marks whether the step is reached via the
     descendant axis. A leading empty part (absolute path) is skipped —
     the caller roots absolute paths itself. Malformed runs ('///',
-    trailing '//') fail fast. Before this, 'a//b' silently collapsed
-    to 'a/b' — a contract violation (silent wrong answers)."""
-    parts: list[str] = []
-    start = 0
-    for i, ch, depth, in_q in _scan_brackets(path):
-        if ch == "/" and depth == 0 and not in_q:
-            parts.append(path[start:i])
-            start = i + 1
-    parts.append(path[start:])
+    trailing '//') fail fast."""
+    parts = _split_top(path, "/")
     if path == "/":  # document-root selection: zero steps, legal XSLT
         return ()
     out: list[tuple[str, bool]] = []
@@ -253,75 +327,14 @@ def _split_path_marked(path: str) -> tuple[tuple[str, bool], ...]:
     return tuple(out)
 
 
-@functools.lru_cache(maxsize=4096)
 def _split_args(inner: str) -> tuple[str, ...]:
-    """Split a function-argument list on top-level commas (outside
-    quotes, brackets, and nested parens)."""
-    parts: list[str] = []
-    depth = 0
-    in_q = False
-    start = 0
-    for i, ch in enumerate(inner):
-        if ch == "'":
-            in_q = not in_q
-        elif not in_q:
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                parts.append(inner[start:i])
-                start = i + 1
-    parts.append(inner[start:])
-    return tuple(p.strip() for p in parts if p.strip())
-
-
-@functools.lru_cache(maxsize=8192)
-def _select_plan(path: str) -> tuple:
-    """Classify a select expression once (selects are
-    stylesheet-static): the string scans — strip, endswith/index,
-    isalnum — run a single time per distinct expression. Returns (tag,
-    payload, stripped_path); tags: 0 '.', 1 position()/last(), 2
-    function call (payload = (fname, inner)), 3 bare @attr, 4 bare name,
-    5 $var (payload = the name), 6 general path."""
-    p = path.strip()
-    if p == ".":
-        return (0, None, p)
-    if p in ("position()", "last()"):
-        return (1, None, p)
-    if p.endswith(")") and "(" in p:
-        i = p.index("(")
-        return (2, (p[:i], p[i + 1 : -1]), p)
-    if p.startswith("@") and "[" not in p and "/" not in p:
-        return (3, p[1:], p)
-    if (
-        p.isalnum() or p.replace("-", "").replace("_", "").isalnum()
-    ) and not p.startswith("$"):
-        return (4, None, p)
-    if p.startswith("$"):
-        return (5, p[1:], p)
-    return (6, None, p)
-
-
-@functools.lru_cache(maxsize=4096)
-def _pred_kind(p: str):
-    """Classify a predicate once (predicates are stylesheet-static):
-    ('index', k) | ('last',) | ('positional', stripped) | ('plain',
-    stripped)."""
-    ps = p.strip()
-    if ps.isdigit():
-        return ("index", int(ps))
-    if ps == "last()":
-        return ("last",)
-    if "position()" in ps or "last()" in ps:
-        return ("positional", ps)
-    return ("plain", ps)
+    """Function arguments: split on top-level commas."""
+    return tuple(p.strip() for p in _split_top(inner, ",") if p.strip())
 
 
 @functools.lru_cache(maxsize=4096)
 def _avt_segments(value: str) -> tuple[tuple[str, str], ...]:
-    """Attribute-value-template -> ('lit'|'expr', payload) segments,
-    cached: AVT strings are stylesheet-static but rendered per row."""
+    """Attribute-value-template -> ('lit'|'expr', payload) segments."""
     segs: list[tuple[str, str]] = []
     lit: list[str] = []
     i = 0
@@ -349,108 +362,154 @@ def _avt_segments(value: str) -> tuple[tuple[str, str], ...]:
     return tuple(segs)
 
 
-@functools.lru_cache(maxsize=4096)
-def _path_steps(path: str) -> tuple[tuple[str, tuple[str, ...], bool], ...]:
-    """Pre-split a select path into (name, predicates, is_descendant)
-    steps — paths in a stylesheet are few and static, but _select runs
-    per node per row; caching removes the per-row string parsing from
-    the hot loop."""
-    return tuple(
-        (*_parse_step(seg), desc) for seg, desc in _split_path_marked(path)
-    )
+def _avt_literal(value: str) -> str | None:
+    """An attribute value template's text when it holds no expression."""
+    segs = _avt_segments(value)
+    return segs[0][1] if len(segs) == 1 and segs[0][0] == "lit" else None
 
 
-@functools.lru_cache(maxsize=4096)
 def _split_comparison(expr: str):
-    """Find the top-level comparison operator: outside quotes AND
-    outside [...] predicates (which contain their own comparisons)."""
-    in_quote = False
-    depth = 0
-    i = 0
-    while i < len(expr):
-        ch = expr[i]
-        if ch == "'":
-            in_quote = not in_quote
-        elif not in_quote:
-            if ch == "[":
-                depth += 1
-            elif ch == "]":
-                depth -= 1
-            elif depth == 0:
-                for op in _OPS:
-                    if expr.startswith(op, i):
-                        return expr[:i].strip(), op, expr[i + len(op) :].strip()
-        i += 1
+    """(lhs, op, rhs) at the first top-level comparison operator (those
+    inside predicates or function arguments are their own), else None."""
+    for i in _top_level(expr):
+        for op in _OPS:
+            if expr.startswith(op, i):
+                return expr[:i].strip(), op, expr[i + len(op) :].strip()
     return None
 
 
 def _literal(token: str):
     """Quoted-string or numeric literal, else None (it's a path)."""
-    if len(token) >= 2 and token[0] == "'" and token[-1] == "'":
+    if len(token) >= 2 and token[0] == token[-1] == "'" and "'" not in token[1:-1]:
         return token[1:-1]
-    try:
-        return float(token)
-    except ValueError:
-        return None
+    return float(token) if _NUMBER.fullmatch(token) else None
 
 
-@functools.lru_cache(maxsize=8192)
-def _test_plan(expr: str) -> tuple:
-    """Classify a test expression once (tests are stylesheet-static).
-    Returns (kind, payload): 0 empty, 1 or-list, 2 and-list,
-    3 parenthesized group, 4 not(...), 5 existence select,
-    6 comparison (payload = (lhs, op, rhs)). XPath precedence: or
-    lowest, then and, then grouping, then comparison."""
-    e = expr.strip()
-    if not e:
-        return (0, None)
-    ors = _split_bool(e, "or")
-    if len(ors) > 1:
-        return (1, ors)
-    ands = _split_bool(e, "and")
-    if len(ands) > 1:
-        return (2, ands)
-    if e.startswith("(") and _close_paren(e, 0) == len(e) - 1:
-        return (3, e[1:-1])
-    if e.startswith("not(") and e.endswith(")"):
-        return (4, e[4:-1])
-    cmp = _split_comparison(e)
-    if cmp is None:
-        return (5, e)
-    return (6, cmp)
+def _positional(pred: str) -> bool:
+    """Does a predicate read its candidate's position ([k], position(),
+    last())?"""
+    pred = pred.strip()
+    return pred.isdigit() or "position()" in pred or "last()" in pred
 
 
-@functools.lru_cache(maxsize=4096)
-def _split_bool(expr: str, word: str) -> tuple[str, ...]:
-    """Split on the XPath boolean operator ``word`` (' and ' / ' or ')
-    at paren/bracket depth 0 outside quotes. Cached like _path_steps:
-    the expression set is stylesheet-static but _test runs per node
-    per row."""
-    parts: list[str] = []
-    depth = 0
-    in_q = False
-    start = 0
-    i = 0
-    token = f" {word} "
-    n = len(token)
-    while i < len(expr):
-        ch = expr[i]
-        if ch == "'":
-            in_q = not in_q
-        elif not in_q:
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                depth -= 1
-            elif depth == 0 and expr.startswith(token, i):
-                parts.append(expr[start:i])
-                i += n
-                start = i
-                continue
-        i += 1
-    parts.append(expr[start:])
-    return tuple(p for p in parts)
+def _child_axis(name: str):
+    """Node test on the child axis (plus '.' and '@a') -> fn(node) ->
+    list. Text, attribute and RTF items have no children."""
+    if name == ".":
+        return lambda n: [n] if isinstance(n, (ET.Element, _Doc)) else []
+    if name.startswith("@"):
+        attr = name[1:]
 
+        def attribute(n):
+            if isinstance(n, ET.Element):
+                v = n.attrib.get(attr)
+                return [v] if v is not None else []
+            return []
+        return attribute
+    if name == "text()":
+        return lambda n: [n.text] if isinstance(n, ET.Element) and n.text else []
+    if name in ("*", "node()"):
+        def every(n, _text=name == "node()"):
+            if isinstance(n, ET.Element):
+                return _children(n) if _text else list(n)
+            return [n.root] if isinstance(n, _Doc) else []
+        return every
+
+    def named(n):
+        if isinstance(n, ET.Element):
+            return [c for c in n if _local(c.tag) == name]
+        if isinstance(n, _Doc):
+            return [n.root] if _local(n.root.tag) == name else []
+        return []
+    return named
+
+
+def _below(n, or_self: bool):
+    """Elements below ``n`` in document order (ET.iter() is preorder):
+    for the document, the root and everything under it."""
+    if isinstance(n, _Doc):
+        return n.root.iter()
+    if not isinstance(n, ET.Element):
+        return iter(())
+    it = n.iter()
+    if not or_self:
+        next(it)
+    return it
+
+
+def _descendant_axis(name: str):
+    """Node test after '//' (descendant-or-self::node()/child::name) ->
+    fn(node) -> list. Element tests take strict descendants of an
+    element context; '@a' and 'text()' also see the context element
+    itself, as the or-self expansion says."""
+    if name == "text()":
+        return lambda n: [e.text for e in _below(n, True) if e.text]
+    if name.startswith("@"):
+        attr = name[1:]
+        return lambda n: [e.attrib[attr] for e in _below(n, True) if attr in e.attrib]
+    if name == "*":
+        return lambda n: list(_below(n, False))
+    if name == "node()":
+        def every(n):
+            if isinstance(n, _Doc):
+                return _all_nodes(n.root, [n.root])
+            return _all_nodes(n, []) if isinstance(n, ET.Element) else []
+        return every
+    return lambda n: [e for e in _below(n, False) if _local(e.tag) == name]
+
+
+def _translate(s: str, src: str, dst: str) -> str:
+    # the first occurrence of a char in src decides its mapping
+    return s.translate({ord(ch): (dst[i] if i < len(dst) else None)
+                        for i, ch in reversed(list(enumerate(src)))})
+
+
+def _substring(s: str, start: str, length: str | None = None) -> str:
+    """XPath 1.0 substring(): 1-based, both numeric arguments pass
+    through round() (floor(x+0.5)), chars kept at positions p with
+    round(start) <= p < round(start)+round(length)."""
+    def num(v: str) -> float:
+        try:
+            return float(v)
+        except ValueError:
+            return math.nan
+
+    first = num(start)
+    if math.isnan(first):
+        return ""
+    if math.isinf(first):
+        # round(±Infinity) stays infinite: p >= -Infinity keeps every
+        # char in the 2-arg form; any 3-arg upper bound (-inf + x, or
+        # the NaN from -inf + inf) admits none, as does start = +inf
+        return s if (first < 0 and length is None) else ""
+    rstart = math.floor(first + 0.5)
+    if length is None:
+        return s[max(0, rstart - 1):]
+    ln = num(length)
+    if math.isnan(ln) or math.isinf(ln) and ln < 0:
+        return ""
+    rend = rstart + (len(s) + 1 if math.isinf(ln) else math.floor(ln + 0.5))
+    lo = max(1, rstart)
+    hi = max(lo, min(rend, len(s) + 1))
+    return s[lo - 1 : hi - 1]
+
+
+# string functions: name -> (allowed argument counts or None for any,
+# fn over the arguments' string values)
+_STRING_FNS = {
+    "concat": (None, lambda *a: "".join(a)),
+    "contains": ((2,), lambda a, b: b in a),
+    "starts-with": ((2,), lambda a, b: a.startswith(b)),
+    "substring-before": ((2,), lambda a, b: a.split(b, 1)[0] if b and b in a else ""),
+    "substring-after": ((2,), lambda a, b: a.split(b, 1)[1] if b and b in a else ""),
+    "translate": ((3,), _translate),
+    "substring": ((2, 3), _substring),
+}
+_ONE_STRING_FNS = {
+    "string": lambda v: v,
+    "string-length": lambda v: str(len(v)),
+    "normalize-space": lambda v: " ".join(v.split()),
+}
 
 # the default decimal-format (XSLT 1.0 §12.3) — a named/unnamed
 # xsl:decimal-format declaration overrides these per stylesheet
@@ -484,8 +543,6 @@ def _format_number(value: float, pattern: str, sym: dict | None = None) -> str:
     Rounding is half-even, as Java DecimalFormat specifies. No
     negative sub-pattern (the minus sign is prefixed), no
     currency/permille — out-of-subset patterns fail fast."""
-    import decimal
-
     sym = sym or _DEFAULT_DF
     dec, grp, pct_ch = sym["decimal"], sym["group"], sym["percent"]
     if any(c not in ("0#" + dec + grp + pct_ch) for c in pattern):
@@ -548,8 +605,6 @@ def _alpha(n: int) -> str:
 
 
 def _format_one_token(n: int, tok: str) -> str:
-    import re
-
     if re.fullmatch(r"0*1", tok):
         return str(n).zfill(len(tok)) if n >= 0 else str(n)
     if tok in ("a", "A"):
@@ -572,8 +627,6 @@ def _format_xsl_number(nums, fmt: str) -> str:
     (roman). Non-positive numbers fall back to plain decimal for the
     letter/roman alphabets (they have no zero). ``nums`` is one int
     (level single/any/value) or a list (level multiple)."""
-    import re
-
     if isinstance(nums, int):
         nums = [nums]
     lead = re.match(r"^[^0-9A-Za-z]*", fmt).group(0)
@@ -588,6 +641,51 @@ def _format_xsl_number(nums, fmt: str) -> str:
                        else (seps[-1] if seps else "."))
         out.append(_format_one_token(n, tokens[min(i, len(tokens) - 1)]))
     return "".join(out) + trail
+
+
+
+# one template rule: a match-pattern alternative of one template.
+# ``key`` orders candidates best first: (pattern out of subset, import
+# precedence, depth, predicate count, specificity, declaration index)
+_Rule = namedtuple("_Rule", "key prec telem match score alt last")
+
+_ANCHOR_TIE = (
+    "anchored and unanchored match patterns tie on XSLT 1.0 default "
+    "priority (0.5) for the same node; conflict resolution is "
+    "declaration-order in libxslt — out of subset"
+)
+_ORDER_TIE = (
+    "two match patterns share XSLT 1.0 default priority (0.5) for the "
+    "same node and the later declaration is not the specificity winner; "
+    "conflict resolution is declaration-order in libxslt — out of subset"
+)
+
+
+def _ranked(rules: list) -> tuple:
+    """Candidate rules (best first) -> (prec, template, matcher or None,
+    rivals) entries; the first entry whose matcher accepts a node wins.
+
+    XSLT 1.0 §5.5 gives every pattern beyond a single plain node test
+    (absolute, multi-step, '//' or predicated) default priority 0.5,
+    and libxslt resolves equal priorities by declaration order. Where
+    our static key chose differently, a winner's rivals (same import
+    precedence, priority 0.5, another template) raise if they also
+    match the node: first a pattern that only the winner's +1 anchor
+    depth beat, then any later declaration. A bare name (priority 0)
+    losing to an anchored pattern is the spec outcome and no rival."""
+    out = []
+    for i, w in enumerate(rules):
+        anchor, later = [], []
+        for r in rules[i + 1:]:
+            if r.prec != w.prec or not r.score[4] or r.telem is w.telem:
+                continue
+            if w.score[3] and not r.score[3] and r.score[:3] == (
+                    w.score[0] - 1, *w.score[1:3]):
+                anchor.append((r.match, _ANCHOR_TIE))
+            elif w.score[4] and r.key[-1] > w.key[-1]:
+                later.append((r.match, _ORDER_TIE))
+        out.append((w.prec, w.telem, w.match, tuple(anchor + later)))
+    return tuple(out)
 
 
 class MiniXslt:
@@ -636,6 +734,9 @@ class MiniXslt:
         self._prec_counter = 0
         self._load_sheet(root)
         self._finish_compile()
+        # template recursion is bounded at _MAX_TDEPTH, but a legitimate
+        # deep recursion needs ~8 CPython frames per template level
+        _ensure_recursion_limit()
 
     def _load_ref(self, elem: ET.Element, what: str,
                   prec: int | None) -> None:
@@ -645,8 +746,6 @@ class MiniXslt:
         sheet) is legal XSLT 1.0 and loads the shared sheet once per
         reference, each at its own precedence; only a sheet reachable
         from itself is an error."""
-        import os
-
         href = elem.get("href")
         if not href:
             raise XsltUnsupported(f"xsl:{what} requires an href")
@@ -795,10 +894,11 @@ class MiniXslt:
 
     def _finish_compile(self) -> None:
         """Whole-stylesheet compile pass, run once after every imported/
-        included sheet has loaded."""
+        included sheet has loaded: every element's body, then the
+        template, key and global-variable tables."""
         # ancestry is consulted by multi-step match patterns (a/b) and
-        # by xsl:number level='single'; skip the per-document parent-map
-        # pass when neither exists
+        # by xsl:number; skip the per-document parent-map pass when
+        # neither exists
         self._needs_parents = any(
             "/" in match and match != "/" for match, _, _, _ in self.templates
         ) or any(
@@ -812,166 +912,29 @@ class MiniXslt:
             if isinstance(e.tag, str)
         )
         self._parents: dict = {}
-        # Compile-time annotation of the STYLESHEET trees (static across
-        # rows, while apply() runs per row): per-element xsl kind,
-        # xsl:sort / xsl:with-param child lists, and whether a body
-        # declares bindings — so the per-row executor does dict lookups
-        # instead of re-classifying namespace strings for every node of
-        # every document (measured +53% on q_xsl_execute without this).
-        # match patterns stripped once; _split_path/_parse_step caches
-        # make the per-node match loop allocation-free. Templates are
-        # grouped by mode: apply-templates with mode="m" dispatches
-        # ONLY against mode-m templates (XSLT 1.0 §5.7), and the
-        # built-in rules carry the current mode through their descent.
-        # Each rule carries its import precedence, compared FIRST.
-        self._compiled_by_mode: dict[
-            str | None, list[tuple[str, int, ET.Element]]
-        ] = {}
-        for m, mode, t, prec in self.templates:
-            # 'a|b' alternation: each alternative is its own rule with
-            # its own specificity, per XSLT 1.0 §5.3
-            for alt in _split_union(m):
-                self._compiled_by_mode.setdefault(mode, []).append((alt, prec, t))
-        # default-priority-tie detection (judge-advice r10; widened to
-        # every 0.5-vs-0.5 class in r13) needs the per-node
-        # matched-candidate list ONLY in modes that could produce one:
-        # an anchored pattern exists, or at least two statically
-        # non-trivial patterns (multi-step / '//' / absolute /
-        # predicated — the XSLT 1.0 §5.5 default-priority-0.5 class)
-        # coexist — precomputed so the common plain-name stylesheet
-        # pays nothing on the hot path
-        self._mode_tracks_ties = {
-            mode: (
-                any(
-                    p.startswith("/") and not p.startswith("//") and p != "/"
-                    for p, _prec, _t in rules
-                )
-                or sum(1 for p, _prec, _t in rules if "/" in p or "[" in p)
-                >= 2
-            )
-            for mode, rules in self._compiled_by_mode.items()
-        }
         collide = self._strip_names & self._preserve_names
         if collide:
             # same-specificity conflict ('*' vs '*' or a direct name
             # tie); real XSLT resolves by import precedence/doc order —
             # out of subset, refuse rather than silently deviating
-            # (judge-advice r10: the old preserve-wins name-tie rule
-            # could diverge from a libxslt fast path)
             raise XsltUnsupported(
                 "xsl:strip-space and xsl:preserve-space both declare "
                 + ", ".join(sorted(collide))
             )
         # the MAIN sheet (loaded last) anchors document('')
         self._sty_root = self._sheet_roots[-1]
-        # STYLESHEET-tree parent map (static across rows): without it,
-        # anchored (/a/b) match patterns over document('') nodes would
-        # see parentless elements and treat EVERY element of the sheet
-        # as a root child — silent wrong answers in the
-        # embedded-lookup-table idiom (code-review r10)
+        # STYLESHEET-tree parent map (static across rows): anchored
+        # (/a/b) match patterns over document('') nodes must see the
+        # sheet's own structure, not parentless elements
         self._sheet_parents = (
             {c: p for r in self._sheet_roots for p in r.iter() for c in p}
             if self._needs_parents
             else {}
         )
-        self._kind: dict[int, str | None] = {}
-        self._sorts: dict[int, tuple] = {}
-        self._wparams: dict[int, tuple] = {}
-        self._hasbind: dict[int, bool] = {}
-        self._dynattrs: dict[int, tuple] = {}
-        for elem in (e for r in self._sheet_roots for e in r.iter()):
-            if not isinstance(elem.tag, str):
-                self._kind[id(elem)] = "#comment"
-                continue
-            kind = _local(elem.tag) if _is_xsl(elem) else None
-            if (
-                kind == "copy-of"
-                and (elem.get("select") or "").strip() == "@*"
-            ):
-                # <xsl:copy-of select="@*"/> directly inside an element
-                # constructor copies the context node's attributes onto
-                # the element being built — the identity-transform
-                # idiom. Annotated as its own kind so _compile_body
-                # skips it (it is consumed by _element_markup) and a
-                # stray use outside an element start fails fast.
-                kind = "#attr-copy"
-            self._kind[id(elem)] = kind
-            self._sorts[id(elem)] = tuple(c for c in elem if _is_xsl(c, "sort"))
-            self._wparams[id(elem)] = tuple(
-                c for c in elem if _is_xsl(c, "with-param")
-            )
-            self._hasbind[id(elem)] = any(
-                _is_xsl(c, "variable") or _is_xsl(c, "param") for c in elem
-            )
-            self._dynattrs[id(elem)] = tuple(
-                c for c in elem if _is_xsl(c, "attribute")
-            )
-        # per-element markup statics: the stylesheet tree is immutable
-        # across rows, so everything
-        # derivable from it alone (child kinds, whitespace-significant
-        # text/tails, literal attributes without AVT expressions,
-        # use-attribute-sets / attr-copy presence) compiles ONCE here
-        # instead of being re-derived on every rendered node — ~25% of
-        # apply() time at the q_xsl_execute row shape went to exactly
-        # these re-derivations (profiled r13)
-        self._emeta: dict[int, tuple] = {}
-        self._lattrs: dict[int, tuple] = {}
-        for elem in (e for r in self._sheet_roots for e in r.iter()):
-            if not isinstance(elem.tag, str):
-                continue
-            kind = self._kind.get(id(elem))
-            use_sets = (
-                elem.get("use-attribute-sets")
-                if kind in ("element", "copy")
-                else elem.get("{" + XSL_NS + "}use-attribute-sets")
-            )
-            has_copy = any(
-                self._kind.get(id(c)) == "#attr-copy" for c in elem
-            )
-            self._emeta[id(elem)] = (use_sets, has_copy)
-            if kind is None:
-                # literal result element: pre-render the attribute
-                # string when no value carries an AVT expression
-                # namespaced literal result attributes are OUT OF
-                # SUBSET: namespace serialization isn't implemented, so
-                # the engine used to emit the raw ElementTree
-                # '{uri}name' form on one path and _local(k) on the
-                # attribute-set merge path — two different malformed
-                # spellings of the same element (code-review r13).
-                # Refuse at compile time rather than silently diverge.
-                for k in elem.attrib:
-                    if k.startswith("{") and not k.startswith(
-                        "{" + XSL_NS + "}"
-                    ):
-                        raise XsltUnsupported(
-                            f"namespaced literal result attribute {k!r}"
-                            " — namespace serialization is out of subset"
-                        )
-                pairs = tuple(
-                    (k, v)
-                    for k, v in elem.attrib.items()
-                    if not k.startswith("{" + XSL_NS + "}")
-                )
-                tag = _local(elem.tag)
-                if all(
-                    len(_avt_segments(v)) == 1
-                    and _avt_segments(v)[0][0] == "lit"
-                    for _k, v in pairs
-                ):
-                    static = "".join(
-                        f" {k}={quoteattr(_avt_segments(v)[0][1])}"
-                        for k, v in pairs
-                    )
-                    self._lattrs[id(elem)] = (tag, static, None)
-                else:
-                    self._lattrs[id(elem)] = (tag, None, pairs)
-        # closure compilation: every instruction body, select, test and
-        # binding becomes a bound closure once per stylesheet, so the
-        # per-row executor runs closure bodies only (see the compiled-
-        # evaluators section below). Reads _emeta/_lattrs, built above.
+        # expression closures, memoized per expression string
         self._sel_fns: dict[str, object] = {}
         self._test_fns: dict[str, object] = {}
-        self._bind_fns: dict[int, object] = {}
+        # element id -> (compiled child closures, body declares bindings)
         self._cfns: dict[int, tuple] = {}
         # REVERSE preorder: children compile before their parents, so a
         # parent's closures can FUSE a scope-free child body (its
@@ -980,53 +943,137 @@ class MiniXslt:
             for elem in reversed(list(root.iter())):
                 if isinstance(elem.tag, str):
                     self._cfns[id(elem)] = self._compile_body(elem)
-        # fast template dispatch (r18): in a mode whose every match
-        # pattern is '/' or a plain element name, the winning template
-        # per node is a static function of the node's tag alone (equal
-        # default priorities resolve by import precedence then
-        # declaration order, both known here) — one dict lookup replaces
-        # the per-node _match_score loop. Modes with any structural
-        # pattern (multi-step, predicate, wildcard, text()/node()) or
-        # with tie tracking keep the scored path.
-        self._fast_dispatch: dict = {}
-        for mode, rules in self._compiled_by_mode.items():
-            if self._mode_tracks_ties.get(mode, False):
-                continue
-            by_name: dict[str, tuple] = {}
-            doc_rule = None
-            ok = True
-            for pattern, prec, telem in rules:
-                if pattern == "/":
-                    if doc_rule is None or prec >= doc_rule[0]:
-                        doc_rule = (prec, telem)
-                elif (
-                    "/" not in pattern
-                    and "[" not in pattern
-                    and "(" not in pattern
-                    and not pattern.startswith("@")
-                    and pattern != "*"
-                ):
-                    cur = by_name.get(pattern)
-                    if cur is None or prec >= cur[0]:
-                        by_name[pattern] = (prec, telem)
-                else:
-                    ok = False
-                    break
-            if ok:
-                self._fast_dispatch[mode] = (doc_rule, by_name)
+        self._modes = self._compile_dispatch()
+        self._keys = {
+            name: tuple(
+                (tuple(self._compile_pattern(a)[1] for a in _split_union(m)),
+                 self._compile_select(use))
+                for m, use in decls
+            )
+            for name, decls in self._key_decls.items()
+        }
+        self._global_fns = tuple(
+            (g.get("name", ""), self._compile_binding(g)) for g in self._globals
+        )
+
+    # -- template dispatch tables -----------------------------------------
+
+    def _compile_pattern(self, alt: str) -> tuple:
+        """One match-pattern alternative -> (node test of its last step,
+        fn(element) -> bool, static score). The score is (match depth
+        incl. a +1 root anchor, predicate count, specificity: name 2 >
+        '*' 1 > 'node()' 0, anchored flag, default-priority-0.5 flag);
+        every step's predicates count because every step matches once.
+        A pattern outside the subset compiles to a matcher that raises
+        when it runs, with score None."""
+        if alt == "/":
+            return "/", _never, (0, 0, 2, 0, 1)
+        # '/a/b' anchors at the document node; a LEADING '//' adds no
+        # constraint (descendant-or-self from the root = anywhere)
+        anchored = alt.startswith("/") and not alt.startswith("//")
+        try:
+            steps = _split_path_marked(alt)
+            match, n_preds = None, 0
+            for i, (seg, up_any) in enumerate(steps):
+                name, preds = _parse_step(seg)
+                if any(map(_positional, preds)):
+                    # a position among the node's siblings: not evaluated
+                    raise XsltUnsupported(f"positional predicate in pattern {alt!r}")
+                n_preds += len(preds)
+                match = self._pattern_step(
+                    name, tuple(self._compile_test(p) for p in preds),
+                    match, up_any, anchored and i == 0,
+                )
+        except XsltUnsupported as exc:
+            return "*", _fail(str(exc)), None
+        spec = {"node()": 0, "text()": 0, "*": 1}.get(name, 2)
+        # XSLT 1.0 §5.5: anything beyond a single plain node test has
+        # default priority 0.5
+        half = anchored or len(steps) > 1 or steps[0][1] or n_preds > 0
+        return name, match, (
+            len(steps) - 1 + anchored, n_preds, spec, int(anchored), int(half)
+        )
+
+    def _pattern_step(self, name: str, tests: tuple, prev, up_any: bool,
+                      anchored: bool):
+        """Matcher for a pattern's steps up to this one, with this step
+        at the node: node test, predicates, then the steps before it at
+        the parent ('/') or at any ancestor ('//', backtracking up the
+        chain). ``anchored``: the first step of '/x/...' must be the
+        document element."""
+        if name == "text()":
+            return _never  # an element never matches a text step
+        any_name = name in ("*", "node()")
+
+        def match(node):
+            if not any_name and _local(node.tag) != name:
+                return False
+            for t in tests:
+                if not t(node):
+                    return False
+            if prev is None:
+                return not anchored or self._parents.get(node) is None
+            p = self._parents.get(node)
+            while p is not None:
+                if prev(p):
+                    return True
+                if not up_any:
+                    return False
+                p = self._parents.get(p)
+            return False
+        return match
+
+    def _compile_dispatch(self) -> dict:
+        """Per mode (XSLT 1.0 §5.7): (element candidates by local name,
+        element candidates for any other name, text-node candidates,
+        document-node candidates), each ranked best first by _ranked.
+        'a|b' alternatives are separate rules (§5.3). A pattern whose
+        last step names an element is indexed under that name;
+        '*' and 'node()' rules join every element list, and a pattern
+        outside the subset ranks first everywhere so it raises on the
+        first element dispatched in its mode."""
+        by_mode: dict = {}
+        for m, mode, telem, prec in self.templates:
+            rules = by_mode.setdefault(mode, [])
+            for alt in _split_union(m):
+                last, match, score = self._compile_pattern(alt)
+                bad = score is None
+                score = score or (0, 0, 0, 0, 0)
+                # one unanchored step without predicates: the index has
+                # already applied its node test
+                trivial = not bad and score[:2] == (0, 0)
+                key = (bad, prec, *score[:3], len(rules))
+                rules.append(_Rule(key, prec, telem, None if trivial else match,
+                                   score, alt, last))
+        modes = {}
+        for mode, rules in by_mode.items():
+            rules.sort(key=lambda r: r.key, reverse=True)
+            elem = [r for r in rules if r.last not in ("/", "text()")]
+            wild = ("*", "node()")
+            modes[mode] = (
+                {r.last: _ranked([x for x in elem if x.last in (r.last, *wild)])
+                 for r in elem if r.last not in wild},
+                _ranked([r for r in elem if r.last in wild]),
+                _ranked([r for r in rules if r.alt in ("text()", "node()")]),
+                _ranked([r for r in rules if r.alt == "/"]),
+            )
+        return modes
+
+    # -- instruction compilation -------------------------------------------
 
     def _compile_body(self, container: ET.Element) -> tuple:
-        """A container's children -> its fn(ctx) -> str closures, in
-        order. Static text/tails are escaped here; children consumed by
-        their parent (sort / with-param / attribute / comments) compile
-        to nothing; a stray attr-copy keeps its RENDER-time failure."""
+        """A container's children -> (fn(ctx) -> str closures in order,
+        whether the body declares variables or params). Static
+        text/tails are escaped here; children consumed by their parent
+        (sort / with-param / attribute / comments) compile to nothing;
+        a stray attr-copy keeps its RENDER-time failure."""
         fns: list = []
         t = container.text
         if t and t.strip():
             fns.append(lambda ctx, _s=escape(t): _s)
-        ckind = self._kind.get(id(container))
+        ckind = _kind_of(container)
         for child in container:
-            kind = self._kind.get(id(child))
+            kind = _kind_of(child)
             if kind == "text":
                 txt = escape(child.text or "")
                 if txt:
@@ -1041,48 +1088,38 @@ class MiniXslt:
             tl = child.tail
             if tl and tl.strip():
                 fns.append(lambda ctx, _s=escape(tl): _s)
-        return tuple(fns)
+        binds = any(_is_xsl(c, "variable") or _is_xsl(c, "param") for c in container)
+        return tuple(fns), binds
+
+    def _body(self, e: ET.Element):
+        """Runner for a nested instruction body: a body that declares no
+        bindings (the common case) inlines its compiled closures — no
+        _run_children re-entry, no scope push. Requires children-first
+        compilation order."""
+        fns, binds = self._cfns[id(e)]
+        if binds:
+            return lambda ctx: self._run_children(e, ctx)
+        if not fns:
+            return lambda ctx: ""
+        if len(fns) == 1:
+            return fns[0]
+        return lambda ctx: "".join([f(ctx) for f in fns])
 
     def _compile_instr(self, elem: ET.Element, kind: str | None):
         """One instruction or literal result element -> fn(ctx) -> str,
         its static payload pre-bound and its selects/tests pre-compiled.
         Binding instructions (variable/param) fill the current scope
         and return ''."""
-
-        def body(e):
-            """Runner for a nested instruction body: a body that
-            declares no bindings (the common case) inlines its compiled
-            closures — no _run_children re-entry, no scope push.
-            Requires children-first compilation order."""
-            fns = self._cfns[id(e)]
-            if self._hasbind[id(e)]:
-                return lambda ctx, _e=e: self._run_children(_e, ctx)
-            if not fns:
-                return lambda ctx: ""
-            if len(fns) == 1:
-                return fns[0]
-            return lambda ctx, _f=fns: "".join(f(ctx) for f in _f)
-
         if kind is None:  # literal result element
-            tag, static, pairs = self._lattrs[id(elem)]
-            if (
-                static is not None
-                and self._emeta[id(elem)] == (None, False)
-                and not self._dynattrs[id(elem)]
-            ):
-                def f_lit(ctx, _t=tag, _a=static, _b=body(elem)):
+            attrs = self._compile_attrs(elem, None)
+            tag = _local(elem.tag)
+            if isinstance(attrs, str):
+                def f_lit(ctx, _t=tag, _a=attrs, _b=self._body(elem)):
                     inner = _b(ctx)
                     return (f"<{_t}{_a}>{inner}</{_t}>" if inner
                             else f"<{_t}{_a}/>")
                 return f_lit
-
-            def f_elem(ctx, _t=tag, _a=static, _p=pairs, _e=elem):
-                if _a is None:
-                    _a = "".join(
-                        f" {k}={quoteattr(self._avt(v, ctx))}" for k, v in _p
-                    )
-                return self._element_markup(_t, _e, ctx, _a)
-            return f_elem
+            return self._constructor(elem, tag, attrs)
         if kind in ("value-of", "for-each", "copy-of"):
             selfn = self._compile_select(elem.get("select", "."))
         if kind == "value-of":
@@ -1092,17 +1129,17 @@ class MiniXslt:
             return f_valueof
         if kind == "if":
             def f_if(ctx, _t=self._compile_test(elem.get("test", "")),
-                     _b=body(elem)):
+                     _b=self._body(elem)):
                 return _b(ctx) if _t(ctx) else ""
             return f_if
         if kind == "choose":
             whens = tuple(
-                (self._compile_test(b.get("test", "")), body(b))
+                (self._compile_test(b.get("test", "")), self._body(b))
                 for b in elem
                 if _is_xsl(b, "when")
             )
             otherw = next(
-                (body(b) for b in elem if _is_xsl(b, "otherwise")), None
+                (self._body(b) for b in elem if _is_xsl(b, "otherwise")), None
             )
 
             def f_choose(ctx, _w=whens, _o=otherw):
@@ -1114,33 +1151,31 @@ class MiniXslt:
         if kind == "apply-templates":
             sel = elem.get("select")
             selfn = self._compile_select(sel) if sel is not None else None
+            wps = self._compile_params(elem)
 
-            def f_applyt(ctx, _s=selfn, _m=elem.get("mode"), _e=elem,
-                         _hs=bool(self._sorts[id(elem)]),
-                         _hw=bool(self._wparams[id(elem)])):
+            def f_applyt(ctx, _s=selfn, _m=elem.get("mode"),
+                         _sort=self._compile_sort(elem)):
                 if _s is not None:
                     nodes = _s(ctx)
                 elif isinstance(ctx, ET.Element):
-                    nodes = self._node_children(ctx)
+                    nodes = _children(ctx)
                 elif isinstance(ctx, _Doc):
                     nodes = [ctx.root]
                 else:
                     nodes = []
-                if _hs:
-                    nodes = self._sorted_nodes(nodes, _e, ctx)
-                tparams = (
-                    (self._gather_params(_e, ctx) or None) if _hw else None
-                )
+                if _sort is not None:
+                    nodes = _sort(nodes)
+                tparams = {n: f(ctx) for n, f in wps} if wps else None
                 return self._iterate(
                     nodes, lambda n: self._apply_one(n, tparams, _m)
                 )
             return f_applyt
         if kind == "for-each":
-            def f_foreach(ctx, _s=selfn, _e=elem, _b=body(elem),
-                          _hs=bool(self._sorts[id(elem)])):
+            def f_foreach(ctx, _s=selfn, _b=self._body(elem),
+                          _sort=self._compile_sort(elem)):
                 nodes = _s(ctx)
-                if _hs:
-                    nodes = self._sorted_nodes(nodes, _e, ctx)
+                if _sort is not None:
+                    nodes = _sort(nodes)
                 return self._iterate(nodes, _b)
             return f_foreach
         if kind == "call-template":
@@ -1148,12 +1183,8 @@ class MiniXslt:
             telem = self.named.get(tname)
             if telem is None:
                 return _fail(f"call to undeclared template {tname!r}")
-            wps = tuple(
-                (wp.get("name", ""), self._compile_binding(wp))
-                for wp in self._wparams[id(elem)]
-            )
 
-            def f_callt(ctx, _t=telem, _w=wps):
+            def f_callt(ctx, _t=telem, _w=self._compile_params(elem)):
                 params = {n: f(ctx) for n, f in _w} or None
                 self._enter_template()
                 try:
@@ -1184,24 +1215,610 @@ class MiniXslt:
                 return self._apply_one(ctx, mode=cur_mode, max_prec=cur_prec)
             return f_applyimports
         if kind == "number":
-            return lambda ctx, _e=elem: self._xsl_number(_e, ctx)
+            return self._compile_number(elem)
         if kind == "element":
-            def f_element(ctx, _e=elem, _n=elem.get("name", "")):
-                return self._element_markup(self._avt(_n, ctx), _e, ctx, "")
-            return f_element
+            return self._constructor(elem, self._compile_avt(elem.get("name", "")),
+                                     self._compile_attrs(elem, kind))
         if kind == "copy":
             # shallow copy of the context node (XSLT 1.0 §7.5): elements
             # copy the tag but NOT attributes (xsl:attribute children of
             # the body add them); text copies through; the document node
             # just runs the body
-            def f_copy(ctx, _e=elem):
+            def f_copy(ctx, _b=self._body(elem), _el=self._constructor(
+                    elem, lambda c: _local(c.tag), self._compile_attrs(elem, kind))):
                 if isinstance(ctx, str):
                     return escape(ctx)
                 if isinstance(ctx, (_Doc, _RTF)):
-                    return self._run_children(_e, ctx)
-                return self._element_markup(_local(ctx.tag), _e, ctx, "")
+                    return _b(ctx)
+                return _el(ctx)
             return f_copy
         return _fail(f"xsl:{kind}")
+
+    def _constructor(self, elem: ET.Element, tag, attrs):
+        """Element constructor -> fn(ctx) -> markup. ``tag``: the name
+        or fn(ctx) -> name; ``attrs``: a static attribute string or
+        fn(ctx) -> string, evaluated before the body."""
+        body = self._body(elem)
+
+        def f_element(ctx):
+            t = tag if isinstance(tag, str) else tag(ctx)
+            a = attrs if isinstance(attrs, str) else attrs(ctx)
+            inner = body(ctx)
+            return f"<{t}{a}>{inner}</{t}>" if inner else f"<{t}{a}/>"
+        return f_element
+
+    def _compile_attrs(self, elem: ET.Element, kind: str | None):
+        """The attributes an element constructor writes -> a static
+        string when none depends on the context, else fn(ctx) -> string.
+        Later additions replace earlier ones (XSLT 1.0 §7.1.3/§7.1.4):
+        use-attribute-sets (the attribute on xsl:element/xsl:copy,
+        xsl:use-attribute-sets on a literal result element), then
+        literal attributes, then a direct copy-of select="@*" child's
+        copies of the context node's attributes, then xsl:attribute
+        children (AVT name, body string-value)."""
+        xsl_attr = "{" + XSL_NS + "}"
+        use_sets = elem.get("use-attribute-sets" if kind else
+                            xsl_attr + "use-attribute-sets")
+        has_copy = any(_kind_of(c) == "#attr-copy" for c in elem)
+        dyn = tuple((self._compile_avt(a.get("name", "")), a)
+                    for a in elem if _is_xsl(a, "attribute"))
+        pairs = ()
+        if kind is None:
+            for k in elem.attrib:
+                # namespace serialization is not implemented: refuse
+                # rather than emit a malformed '{uri}name' attribute
+                if k.startswith("{") and not k.startswith(xsl_attr):
+                    raise XsltUnsupported(
+                        f"namespaced literal result attribute {k!r}"
+                        " — namespace serialization is out of subset"
+                    )
+            pairs = tuple((k, v) for k, v in elem.attrib.items()
+                          if not k.startswith(xsl_attr))
+        static = [(k, _avt_literal(v)) for k, v in pairs]
+        if not (use_sets or has_copy or dyn) and all(v is not None for _, v in static):
+            return "".join(f" {k}={quoteattr(v)}" for k, v in static)
+        avts = tuple((k, self._compile_avt(v)) for k, v in pairs)
+
+        def attrs(ctx):
+            merged = self._attrset_attrs(use_sets, ctx) if use_sets else {}
+            for k, f in avts:
+                merged[k] = f(ctx)
+            if has_copy and isinstance(ctx, ET.Element):
+                for k, v in ctx.attrib.items():
+                    merged[_local(k)] = v
+            for name, a in dyn:
+                merged[name(ctx)] = _RTF(self._run_children(a, ctx)).text()
+            return "".join(f" {k}={quoteattr(v)}" for k, v in merged.items())
+        return attrs
+
+    def _compile_params(self, elem: ET.Element) -> tuple:
+        """xsl:with-param children -> ((name, fn(ctx) -> value), ...)."""
+        return tuple((wp.get("name", ""), self._compile_binding(wp))
+                     for wp in elem if _is_xsl(wp, "with-param"))
+
+    def _compile_sort(self, elem: ET.Element):
+        """An instruction's xsl:sort keys -> fn(nodes) -> sorted list
+        (stable multi-key: last key first; unparseable number keys sort
+        first ascending), or None when it has none."""
+        keys = []
+        for s in reversed([c for c in elem if _is_xsl(c, "sort")]):
+            def key(n, _s=self._compile_select(s.get("select", ".")),
+                    _num=s.get("data-type", "text") == "number"):
+                items = _s(n)
+                v = _string(items[0]) if items else ""
+                if _num:
+                    try:
+                        return float(v)
+                    except ValueError:
+                        return float("-inf")
+                return v
+            keys.append((key, s.get("order", "ascending") == "descending"))
+        if not keys:
+            return None
+
+        def sort(nodes):
+            for key, rev in keys:
+                nodes = sorted(nodes, key=key, reverse=rev)
+            return nodes
+        return sort
+
+    def _compile_binding(self, elem: ET.Element):
+        """xsl:variable/param/with-param -> fn(ctx) -> value: the
+        select's string value (literals keep their lexical form), or
+        the body as a result-tree fragment."""
+        sel = elem.get("select")
+        if sel is not None:
+            return self._compile_string(sel)
+        return lambda ctx: _RTF(self._run_children(elem, ctx))
+
+    def _compile_number(self, elem: ET.Element):
+        """xsl:number subset (XSLT 1.0 §7.7): explicit ``value``, or
+        level='single' (nearest ancestor-or-self matching ``count``,
+        numbered among its preceding siblings), level='any' (matching
+        nodes at-or-before the context in document order) and
+        level='multiple' (hierarchical ancestor-or-self numbering with
+        per-position format tokens). ``count`` defaults to the context
+        node's name; ``from`` fails when run."""
+        fmt = self._compile_avt(elem.get("format", "1"))
+        if elem.get("value") is not None:
+            def f_value(ctx, _v=self._compile_string(elem.get("value"))):
+                f = fmt(ctx)
+                try:
+                    v = float(_v(ctx))
+                except ValueError:
+                    return "NaN"
+                if math.isnan(v) or math.isinf(v):
+                    return "NaN" if math.isnan(v) else (
+                        "-Infinity" if v < 0 else "Infinity"
+                    )
+                return _format_xsl_number(int(math.floor(v + 0.5)), f)
+            return f_value
+        if elem.get("from") is not None:
+            return _fail("xsl:number from= is out of subset")
+        level = elem.get("level", "single")
+        if level not in ("single", "any", "multiple"):
+            return _fail(f"xsl:number level={level!r}")
+        count = elem.get("count")
+        alts = (tuple(self._compile_pattern(a)[1] for a in _split_union(count))
+                if count else None)
+
+        def f_number(ctx):
+            f = fmt(ctx)
+            if not isinstance(ctx, ET.Element):
+                raise XsltUnsupported("xsl:number on a non-element context")
+            name = _local(ctx.tag)
+
+            def matches(n) -> bool:
+                if not isinstance(n, ET.Element):
+                    return False
+                return any(m(n) for m in alts) if alts else _local(n.tag) == name
+
+            def sibling_pos(target) -> int:
+                parent = self._parents.get(target)
+                n = 1
+                if parent is not None:
+                    for sib in parent:
+                        if sib is target:
+                            break
+                        if matches(sib):
+                            n += 1
+                return n
+
+            if level == "multiple":
+                chain = []
+                t = ctx
+                while t is not None:
+                    if matches(t):
+                        chain.append(t)
+                    t = self._parents.get(t)
+                if not chain:
+                    return ""
+                return _format_xsl_number([sibling_pos(t) for t in reversed(chain)], f)
+            if level == "any":
+                n = 0
+                for e in self._containing_root(ctx).iter():
+                    if matches(e):
+                        n += 1
+                    if e is ctx:
+                        break
+                return _format_xsl_number(n, f) if n else ""
+            target = ctx
+            while target is not None and not matches(target):
+                target = self._parents.get(target)
+            if target is None:
+                return ""
+            return _format_xsl_number(sibling_pos(target), f)
+        return f_number
+
+    # -- XPath compilation --------------------------------------------------
+    #
+    # Selects, tests and attribute value templates are stylesheet-static
+    # while apply() runs per row: each expression parses once into
+    # closures (memoized per expression string), so the per-row cost is
+    # the closure bodies alone. An expression outside the subset compiles
+    # to a closure that raises when it runs.
+
+    def _compiled(self, memo: dict, expr: str, compile_fn):
+        fn = memo.get(expr)
+        if fn is None:
+            try:
+                fn = compile_fn(expr)
+            except XsltUnsupported as exc:
+                fn = _fail(str(exc))
+            memo[expr] = fn
+        return fn
+
+    def _compile_select(self, expr: str):
+        """select expression -> fn(ctx) -> list of items (elements,
+        _Doc, strings, booleans, _RTF)."""
+        return self._compiled(self._sel_fns, expr, self._select_expr)
+
+    def _compile_test(self, expr: str):
+        """test expression -> fn(ctx) -> bool."""
+        return self._compiled(self._test_fns, expr, self._test_expr)
+
+    def _select_expr(self, expr: str):
+        p = expr.strip()
+        if p == ".":
+            return lambda ctx: [ctx]
+        if _literal(p) is not None:
+            return lambda ctx, _v=self._compile_string(p): [_v(ctx)]
+        if p.startswith("$"):
+            if "/" in p or "[" in p:
+                raise XsltUnsupported(f"path into variable {p!r}")
+            return lambda ctx, _n=p[1:]: [self._lookup_var(_n)]
+        head, rest = None, p
+        m = _CALL.match(p)
+        if m and m.group() not in ("text(", "node("):
+            # a function call, or a key()/document() node-set head
+            # followed by location steps
+            end = _close_paren(p, m.end() - 1)
+            fname, rest = p[: m.end() - 1], p[end + 1 :]
+            head = self._compile_call(fname, p[m.end() : end])
+            if not rest:
+                return head
+            if fname not in ("key", "document") or not rest.startswith("/"):
+                raise XsltUnsupported(f"syntax after {fname}() in {p!r}")
+        elif p.startswith("/"):
+            def head(ctx):
+                return [_Doc(self._root)]
+        steps = [self._compile_step(seg, desc)
+                 for seg, desc in _split_path_marked(rest)]
+        if head is None:
+            if not steps:
+                return lambda ctx: [ctx]
+            head = steps.pop(0)
+        if not steps:
+            return head
+
+        def fn(ctx, _h=head, _s=tuple(steps)):
+            cur = _h(ctx)
+            for step in _s:
+                nxt: list = []
+                for node in cur:
+                    nxt += step(node)
+                cur = nxt
+            return cur
+        return fn
+
+    def _compile_step(self, seg: str, desc: bool):
+        """One location step -> fn(node) -> list: the node test on the
+        child axis (descendant after '//'), then each predicate in
+        order, positions renumbering after each (XPath 1.0)."""
+        name, preds = _parse_step(seg)
+        if not _NODE_TEST.fullmatch(name):
+            raise XsltUnsupported(f"location step {seg!r}")
+        axis = _descendant_axis(name) if desc else _child_axis(name)
+        filters = []
+        for p in preds:
+            ps = p.strip()
+            positional = _positional(ps)
+            if desc and positional:
+                # XPath numbers descendant-step candidates per PARENT,
+                # not globally — refusing beats a silently wrong index
+                return functools.partial(
+                    _refuse_nodes, f"positional predicate on descendant step [{p}]")
+            if ps.isdigit():
+                filters.append(lambda c, _k=int(ps): [c[_k - 1]] if 0 < _k <= len(c) else [])
+            elif ps == "last()":
+                filters.append(lambda c: c[-1:])
+            elif positional:
+                filters.append(functools.partial(
+                    self._filter_positional, self._compile_test(ps)))
+            else:
+                filters.append(lambda c, _t=self._compile_test(ps): [x for x in c if _t(x)])
+        if not filters:
+            return axis
+
+        def step(node, _f=tuple(filters)):
+            out = axis(node)
+            for f in _f:
+                out = f(out)
+            return out
+        return step
+
+    def _filter_positional(self, test, cand: list) -> list:
+        """Keep the candidates passing a test that reads position() /
+        last(), each seeing its place in the current candidate list."""
+        size = len(cand)
+        kept = []
+        for i, c in enumerate(cand, 1):
+            self._ctx_pos.append((i, size))
+            try:
+                if test(c):
+                    kept.append(c)
+            finally:
+                self._ctx_pos.pop()
+        return kept
+
+    def _compile_call(self, fname: str, inner: str):
+        """XPath function call -> fn(ctx) -> list, its arguments
+        compiled once."""
+        args = _split_args(inner)
+        if fname in ("position", "last") and not args:
+            i = fname == "last"
+
+            def fn(ctx):
+                if not self._ctx_pos:
+                    raise XsltUnsupported(f"{fname}() outside an iteration context")
+                return [str(self._ctx_pos[-1][i])]
+            return fn
+        if fname in ("true", "false") and not args:
+            return lambda ctx, _v=fname == "true": [_v]
+        if fname == "not":
+            return lambda ctx, _t=self._compile_test(inner): [not _t(ctx)]
+        if fname == "boolean":
+            return lambda ctx, _t=self._compile_test(inner): [_t(ctx)]
+        if fname == "count":
+            return lambda ctx, _s=self._compile_select(inner): [str(len(_s(ctx)))]
+        if fname == "key":
+            return self._compile_key(args)
+        if fname == "document":
+            return self._compile_document(args)
+        if fname == "format-number":
+            return self._compile_format_number(args)
+        if fname == "generate-id":
+            if not args:
+                return lambda ctx: [self._generate_id(ctx)]
+
+            def gen_id(ctx, _s=self._compile_select(inner)):
+                items = _s(ctx)
+                return [self._generate_id(items[0])] if items else [""]
+            return gen_id
+        if fname in _ONE_STRING_FNS:
+            arg = self._compile_string(inner) if args else _string
+            return lambda ctx, _f=_ONE_STRING_FNS[fname]: [_f(arg(ctx))]
+        if fname not in _STRING_FNS:
+            raise XsltUnsupported(f"XPath function {fname}()")
+        arity, op = _STRING_FNS[fname]
+        if arity is not None and len(args) not in arity:
+            raise XsltUnsupported(
+                f"{fname}() takes {' or '.join(map(str, arity))} arguments, "
+                f"got {len(args)}"
+            )
+        fns = tuple(self._compile_string(a) for a in args)
+        return lambda ctx: [op(*[f(ctx) for f in fns])]
+
+    def _compile_string(self, tok: str):
+        """An expression in string context (function argument, AVT
+        expression, variable select) -> fn(ctx) -> str: a quoted or
+        numeric literal (numbers keep their lexical form), else the
+        string-value of the first selected item."""
+        tok = tok.strip()
+        lit = _literal(tok)
+        if lit is not None:
+            v = lit if isinstance(lit, str) else tok
+            return lambda ctx: v
+
+        def fn(ctx, _s=self._compile_select(tok)):
+            items = _s(ctx)
+            return _string(items[0]) if items else ""
+        return fn
+
+    def _compile_avt(self, value: str):
+        """Attribute value template -> fn(ctx) -> str."""
+        fns = tuple(
+            self._compile_string(p) if kind == "expr" else (lambda ctx, _s=p: _s)
+            for kind, p in _avt_segments(value)
+        )
+        if len(fns) == 1:
+            return fns[0]
+        return lambda ctx: "".join([f(ctx) for f in fns])
+
+    def _compile_key(self, args: tuple):
+        """key(name, value) -> fn(ctx) -> the nodes the named xsl:key
+        files under the value's string(s), in document order. The
+        per-call work is the index lookup; the document-order sort only
+        runs when a lookup returns multiple nodes."""
+        if len(args) != 2:
+            raise XsltUnsupported(f"key() takes 2 arguments, got {len(args)}")
+        kname = _literal(args[0])
+        if not isinstance(kname, str):
+            raise XsltUnsupported("key() name must be a string literal")
+        lit = _literal(args[1])
+        if lit is not None:
+            if not isinstance(lit, str):  # XPath number->string form
+                lit = str(int(lit)) if lit.is_integer() else str(lit)
+
+            def values(ctx, _v=(lit,)):
+                return _v
+        else:
+            def values(ctx, _s=self._compile_select(args[1])):
+                return [_string(it) for it in _s(ctx)]
+
+        def fn(ctx):
+            doc_root = self._containing_root(ctx)
+            ikey = (id(doc_root), kname)
+            index = self._key_index.get(ikey)
+            if index is None:
+                index = self._key_index[ikey] = self._build_key(kname, doc_root)
+            hits: list = []
+            seen: set[int] = set()
+            for v in values(ctx):
+                for node in index.get(v, ()):
+                    if id(node) not in seen:
+                        seen.add(id(node))
+                        hits.append(node)
+            if len(hits) > 1:
+                # union in document order, as XPath node-sets require
+                order = self._doc_orders[id(doc_root)]
+                hits.sort(key=lambda n: order[id(n)])
+            return hits
+        return fn
+
+    def _compile_document(self, args: tuple):
+        """document(uri[, node-set]): the external XML document at
+        ``uri``; document('') is the stylesheet itself (XSLT 1.0 §12.1
+        — the embedded-lookup-table idiom). A relative uri resolves
+        against base_dir, or — 2-arg form — against the base of the
+        document containing the node-set's first node (so a document
+        loaded from a subdirectory can chain relative references).
+        Only string-literal URIs are in the subset."""
+        if len(args) not in (1, 2):
+            raise XsltUnsupported("document() takes (uri[, node-set])")
+        uri = _literal(args[0])
+        if not isinstance(uri, str):
+            raise XsltUnsupported("document() URI must be a string literal")
+        if uri == "":
+            return lambda ctx: [_Doc(self._sty_root)]
+        if len(args) == 1:
+            return lambda ctx: [self._load_document(uri, self.base_dir)]
+
+        def fn(ctx, _s=self._compile_select(args[1])):
+            items = _s(ctx)
+            if not items:
+                raise XsltUnsupported(
+                    "document() second argument selected no nodes"
+                )
+            root = self._containing_root(items[0])
+            # the source and stylesheet documents resolve against
+            # base_dir; only document()-loaded trees own a _doc_base
+            # entry (their roots live in _ext_docs for the compiled
+            # sheet's lifetime, so the id keys stay valid)
+            if root is self._root or root is self._sty_root:
+                base = self.base_dir
+            else:
+                base = self._doc_base.get(id(root))
+            return [self._load_document(uri, base)]
+        return fn
+
+    def _compile_format_number(self, args: tuple):
+        """format-number(value, pattern[, format-name]); the unnamed
+        xsl:decimal-format overrides the default symbols."""
+        if len(args) not in (2, 3):
+            raise XsltUnsupported(
+                "format-number() takes (value, pattern[, format-name])"
+            )
+        sym = self._decimal_formats.get("", _DEFAULT_DF)
+        if len(args) == 3:
+            dfname = _literal(args[2])
+            if not isinstance(dfname, str):
+                raise XsltUnsupported(
+                    "format-number() format-name must be a string literal"
+                )
+            sym = self._decimal_formats.get(dfname)
+            if sym is None:
+                raise XsltUnsupported(
+                    f"format-number() names undeclared "
+                    f"xsl:decimal-format {dfname!r}"
+                )
+
+        def fn(ctx, _v=self._compile_string(args[0]),
+               _p=self._compile_string(args[1])):
+            try:
+                v = float(_v(ctx))
+            except ValueError:
+                return [sym["nan"]]
+            # NaN -> the NaN symbol, infinities -> the infinity symbol
+            # (minus-prefixed when negative), before Decimal sees them
+            if math.isnan(v):
+                return [sym["nan"]]
+            if math.isinf(v):
+                inf = sym["infinity"]
+                return [sym["minus"] + inf if v < 0 else inf]
+            return [_format_number(v, _p(ctx), sym)]
+        return fn
+
+    def _test_expr(self, expr: str):
+        """XPath precedence: or lowest, then and, then grouping, then
+        comparison; anything else (not(...) included) is a select whose
+        result is true when it holds a true boolean or any item."""
+        e = expr.strip()
+        if not e:
+            return lambda ctx: False
+        for word, combine in ((" or ", any), (" and ", all)):
+            parts = _split_top(e, word)
+            if len(parts) > 1:
+                subs = tuple(self._compile_test(p) for p in parts)
+                return lambda ctx: combine(f(ctx) for f in subs)
+        if e.startswith("(") and _close_paren(e, 0) == len(e) - 1:
+            return self._compile_test(e[1:-1])
+        lit = _literal(e)
+        if lit is not None:  # a non-empty string, a non-zero number
+            return lambda ctx, _v=bool(lit) and lit == lit: _v
+        cmp = _split_comparison(e)
+        if cmp is not None:
+            return self._compile_comparison(e, cmp)
+
+        def exists(ctx, _s=self._compile_select(e)):
+            items = _s(ctx)
+            if len(items) == 1 and isinstance(items[0], bool):
+                return items[0]
+            return bool(items)
+        return exists
+
+    def _compile_comparison(self, expr: str, payload):
+        """Comparison test. The static decisions (is the rhs a literal?
+        a $var? a path?) are made once here; a literal-first spelling
+        swaps operands, and node-set vs node-set compares the two
+        string-value sets (XPath 1.0 §3.4)."""
+        lhs, op, rhs = payload
+
+        def run_compare(values, rhs_lit, cmp):
+            if isinstance(rhs_lit, float):
+                nums = []
+                for v in values:
+                    try:
+                        nums.append(float(v))
+                    except ValueError:
+                        pass
+                values = nums
+            elif cmp not in (operator.eq, operator.ne):
+                raise XsltUnsupported(
+                    f"ordered comparison with string literal {expr!r}"
+                )
+            return any(cmp(v, rhs_lit) for v in values)
+
+        def side(tok):
+            """('lit', value) | ('var', name) | ('path', expr)."""
+            if tok.startswith("$"):
+                return ("var", tok[1:])
+            lit = _literal(tok)
+            if lit is not None:
+                return ("lit", lit)
+            return ("path", tok)
+
+        rkind, rval = side(rhs)
+        if rkind == "path":
+            # literal-first spelling ('3 < n'): swap operands AND
+            # mirror the ordered operator — '3 < n' means 'n > 3'
+            lhs, rhs = rhs, lhs
+            op = {"<": ">", "<=": ">=", ">": "<", ">=": "<="}.get(op, op)
+            rkind, rval = side(rhs)
+            if rkind == "path":
+                # node-set vs node-set (XPath 1.0 §3.4): '=' is true
+                # iff ANY (a, b) pair matches; '!=' iff any pair
+                # differs. Ordered node-set comparisons stay out of
+                # the subset.
+                if op not in ("=", "!="):
+                    raise XsltUnsupported(
+                        f"ordered path-to-path comparison {expr!r}"
+                    )
+
+                def fn(ctx, _l=self._compile_select(lhs),
+                       _r=self._compile_select(rhs), _op=op):
+                    lvals = {_string(v) for v in _l(ctx)}
+                    rvals = {_string(v) for v in _r(ctx)}
+                    if _op == "=":
+                        return bool(lvals & rvals)
+                    return bool(lvals and rvals and len(lvals | rvals) > 1)
+                return fn
+        lsel = self._compile_select(lhs)
+        cmp = _CMP[op]
+        if rkind == "lit":
+            def fn(ctx, _l=lsel, _rl=rval):
+                return run_compare([_string(v) for v in _l(ctx)], _rl, cmp)
+            return fn
+
+        # $var operand: compares as a numeric literal when its string
+        # value parses as a number, else as a string — resolved per
+        # evaluation (the binding is scope-dependent)
+        def fn(ctx, _l=lsel, _n=rval):
+            v = _string(self._lookup_var(_n))
+            num = _literal(v.strip())
+            rhs_lit = v if num is None else num
+            return run_compare([_string(x) for x in _l(ctx)], rhs_lit, cmp)
+        return fn
 
     # -- whitespace stripping (xsl:strip-space / xsl:preserve-space) -------
 
@@ -1269,28 +1886,21 @@ class MiniXslt:
         doc = _Doc(src_root)
         self._scopes = [{}]
         self._ctx_pos: list[tuple[int, int]] = []
-        for g in self._globals:
-            self._scopes[0][g.get("name", "")] = self._compile_binding(g)(doc)
-        # template-dispatch depth is bounded at _MAX_TDEPTH below, but
-        # a legitimate deep recursion still needs ~8 CPython frames per
-        # template level — lift the interpreter limit once per process
-        # (r18: the per-row raise/restore pair was two C calls per
-        # apply; the raised limit is harmless to keep)
-        _ensure_recursion_limit()
-        return self._apply_to([doc])
+        for name, fn in self._global_fns:
+            self._scopes[0][name] = fn(doc)
+        return self._apply_one(doc)
 
     # -- template dispatch ------------------------------------------------
 
     # Guard counts TEMPLATE-BODY invocations only (matched templates and
     # call-template), not built-in-rule descent — built-in recursion
     # strictly consumes document children and terminates on its own, so
-    # deep documents no longer trip the guard (ADVICE r5); a divergent
-    # stylesheet must pass through a template body each cycle and still
-    # fails fast.
+    # deep documents do not trip the guard; a divergent stylesheet must
+    # pass through a template body each cycle and still fails fast.
     _MAX_TDEPTH = 256
 
     def _apply_to(self, nodes, mode: str | None = None) -> str:
-        return "".join(self._apply_one(n, mode=mode) for n in nodes)
+        return "".join([self._apply_one(n, mode=mode) for n in nodes])
 
     def _enter_template(self):
         self._tdepth += 1
@@ -1301,210 +1911,41 @@ class MiniXslt:
 
     def _apply_one(self, node, params: dict | None = None,
                    mode: str | None = None, max_prec: int | None = None) -> str:
-        """Match-and-run the best template for ``node``. ``max_prec``
-        (exclusive) restricts candidates to templates of LOWER import
-        precedence — the xsl:apply-imports dispatch (XSLT 1.0 §5.6).
-        Import precedence eliminates candidates before specificity
-        (§2.6.2): the comparison key leads with prec."""
-        fast = self._fast_dispatch.get(mode) if max_prec is None else None
-        if fast is not None:
-            doc_rule, by_name = fast
+        """Run the best template for ``node`` in ``mode``: the first
+        candidate of its dispatch list that matches (a plain-name mode
+        costs one dict lookup), else the built-in rule, which carries
+        the mode down (XSLT 1.0 §5.8). ``max_prec`` (exclusive)
+        restricts candidates to LOWER import precedence — the
+        xsl:apply-imports dispatch (§5.6)."""
+        table = self._modes.get(mode)
+        if table is not None:
             if isinstance(node, ET.Element):
-                hit = by_name.get(_local(node.tag))
+                cands = table[0].get(_local(node.tag), table[1])
             elif isinstance(node, str):
-                return escape(node)  # no text()/node() rules in a fast mode
-            else:  # _Doc
-                hit = doc_rule
-            if hit is not None:
-                self._enter_template()
-                self._tframes.append((hit[0], mode, node))
-                try:
-                    return self._run_children(hit[1], node, params=params)
-                finally:
-                    self._tframes.pop()
-                    self._tdepth -= 1
-            # built-in rules, carrying the mode
-            if isinstance(node, _Doc):
-                return self._apply_to([node.root], mode=mode)
-            return self._apply_to(self._node_children(node), mode=mode)
-        best = None
-        track = self._mode_tracks_ties.get(mode, False)
-        rules = self._compiled_by_mode.get(mode, ())
-        matched: list[tuple[int, tuple, int]] = []
-        for idx, (pattern, prec, telem) in enumerate(rules):
-            if max_prec is not None and prec >= max_prec:
-                continue
-            score = self._match_score(pattern, node)
-            if score is not None:
-                if track:
-                    matched.append((prec, score, idx))
-                if best is None or (prec,) + score[:3] + (idx,) >= best[0]:
-                    best = ((prec,) + score[:3] + (idx,), prec, telem, score)
-        if best is not None and best[3][3] and len(matched) > 1:
-            # The winner is an ANCHORED pattern whose +1 match-depth is
-            # a house scoring bonus. XSLT 1.0 §5.5 gives EVERY
-            # non-trivial pattern (absolute, multi-step, '//', or
-            # predicated) the same default priority 0.5, resolved by
-            # declaration order (libxslt picks the later) — so if an
-            # UNANCHORED candidate of priority 0.5 at the same import
-            # precedence ties the winner once the anchor bonus is
-            # removed, the bonus alone decided: out of subset, refuse
-            # rather than silently diverging from a libxslt fast path
-            # (judge-advice r10). A bare QName candidate (priority 0,
-            # e.g. 'r' vs '/r') is NOT a tie — the anchored win is the
-            # spec outcome and passes through (code-review r11).
-            d, n, s = best[3][:3]
-            wprec = best[1]
-            for mprec, msc, _midx in matched:
-                if (
-                    mprec == wprec
-                    and not msc[3]
-                    and msc[4]
-                    and msc[:3] == (d - 1, n, s)
-                    # union alternatives of the SAME template can't
-                    # diverge: either way the identical template runs
-                    # (code-review r13)
-                    and rules[_midx][2] is not best[2]
-                ):
-                    raise XsltUnsupported(
-                        "anchored and unanchored match patterns tie on "
-                        "XSLT 1.0 default priority (0.5) for the same "
-                        "node; conflict resolution is declaration-order "
-                        "in libxslt — out of subset"
-                    )
-        if best is not None and best[3][4] and len(matched) > 1:
-            # Widened 0.5-tie guard (ADVICE r12): the winner carries
-            # XSLT 1.0 §5.5 default priority 0.5. If ANOTHER 0.5
-            # candidate at the same import precedence matched this node
-            # and was declared LATER, libxslt's recoverable-error rule
-            # picks that later declaration while the house specificity
-            # key picked the earlier one (an equal-key tie already goes
-            # to the larger idx, so a surviving later candidate always
-            # scored lower) — out of subset, refuse rather than
-            # silently diverging. Covers unanchored-vs-unanchored and
-            # anchored-vs-anchored classes the r10 anchored-only guard
-            # below does not.
-            widx, wprec = best[0][-1], best[1]
-            for mprec, msc, midx in matched:
-                # a later-declared alternative of the SAME template is
-                # not a divergence — declaration-order resolution runs
-                # the identical template (code-review r13)
-                if (mprec == wprec and msc[4] and midx > widx
-                        and rules[midx][2] is not best[2]):
-                    raise XsltUnsupported(
-                        "two match patterns share XSLT 1.0 default "
-                        "priority (0.5) for the same node and the "
-                        "later declaration is not the specificity "
-                        "winner; conflict resolution is declaration-"
-                        "order in libxslt — out of subset"
-                    )
-        if best is not None:
-            self._enter_template()
-            self._tframes.append((best[1], mode, node))
-            try:
-                return self._run_children(best[2], node, params=params)
-            finally:
-                self._tframes.pop()
-                self._tdepth -= 1
-        # built-in rules: recurse into children (carrying the current
-        # mode, per XSLT 1.0 §5.8); copy text through
+                cands = table[2]
+            else:
+                cands = table[3] if isinstance(node, _Doc) else ()
+            for prec, telem, match, rivals in cands:
+                if max_prec is not None and prec >= max_prec:
+                    continue
+                if match is None or match(node):
+                    for rival, msg in rivals:
+                        if rival is None or rival(node):
+                            raise XsltUnsupported(msg)
+                    self._enter_template()
+                    self._tframes.append((prec, mode, node))
+                    try:
+                        return self._run_children(telem, node, params=params)
+                    finally:
+                        self._tframes.pop()
+                        self._tdepth -= 1
         if isinstance(node, str):
             return escape(node)
         if isinstance(node, _Doc):
-            return self._apply_to([node.root], mode=mode)
-        return self._apply_to(self._node_children(node), mode=mode)
+            return self._apply_to([node.root], mode)
+        return self._apply_to(_children(node), mode)
 
-    def _match_score(self, pattern: str, node):
-        # patterns are compile-time constants; the parse caches resolve
-        # to tuple lookups on the hot per-node path. Returns
-        # (match depth incl. the +1 anchor bonus, predicate count,
-        # specificity, anchored flag, spec-priority-0.5 flag) — the two
-        # flags are NOT part of the ordering key; _apply_one uses them
-        # to detect selections decided solely by the anchor bonus
-        # against a pattern of EQUAL XSLT 1.0 default priority (0.5)
-        # and refuse. A bare QName pattern has default priority 0 (not
-        # 0.5), so anchored-beats-bare-name is the SPEC outcome, not a
-        # deviation (code-review r11 corrected the r10 advice here).
-        if pattern == "/":
-            return (0, 0, 2, 0, 1) if isinstance(node, _Doc) else None
-        if isinstance(node, (str, _Doc)):
-            if isinstance(node, str) and pattern in ("text()", "node()"):
-                return (0, 0, 0, 0, 0)
-            return None
-        # '/a/b' anchors at the document node; a LEADING '//' adds no
-        # constraint (descendant-or-self from the root = anywhere), so
-        # '//a' matches like plain 'a'
-        anchored = pattern.startswith("/") and not pattern.startswith("//")
-        steps = _split_path_marked(pattern)  # ((step, via-descendant), ...)
-        if not steps:
-            return None
-
-        def walk(i: int, target) -> int | None:
-            """Match steps[..i] with steps[i] at ``target``; returns the
-            total predicate count of the matched chain or None. A step
-            reached via '//' may bind its left neighbor to ANY proper
-            ancestor — the while loop backtracks up the chain."""
-            step, via_desc = steps[i]
-            name, preds = _parse_step(step)
-            if name == "text()":
-                return None  # element node can't match a text step
-            if name not in ("*", "node()") and _local(target.tag) != name:
-                return None
-            if preds and not all(self._test(target, p) for p in preds):
-                return None
-            n = len(preds)
-            if i == 0:
-                if anchored and self._parents.get(target) is not None:
-                    return None  # '/x/...': x must sit under the root
-                return n
-            p = self._parents.get(target)
-            while p is not None:
-                sub = walk(i - 1, p)
-                if sub is not None:
-                    return n + sub
-                if not via_desc:
-                    return None  # '/' separator: exactly the parent
-                p = self._parents.get(p)
-            return None
-
-        n_preds = walk(len(steps) - 1, node)
-        if n_preds is None:
-            return None
-        name0, _ = _parse_step(steps[-1][0])
-        # three specificity levels mirroring XSLT 1.0 default priorities:
-        # name test (0) > '*' (-0.25) > 'node()' (-0.5) — judge-advice r7:
-        # scoring node() == '*' let declaration order decide where
-        # libxslt always prefers '*'
-        spec = 0 if name0 == "node()" else (1 if name0 == "*" else 2)
-        # XSLT 1.0 §5.5: anything beyond a single plain node test —
-        # absolute, multi-step, '//'-reached, or predicated — has
-        # default priority 0.5; only those can TIE an anchored pattern
-        spec_half = (
-            anchored
-            or len(steps) > 1
-            or steps[0][1]
-            or n_preds > 0
-        )
-        # the root anchor counts as a step of structural depth
-        return (
-            len(steps) - 1 + (1 if anchored else 0),
-            n_preds,
-            spec,
-            1 if anchored else 0,
-            1 if spec_half else 0,
-        )
-
-    def _node_children(self, elem: ET.Element) -> list:
-        out: list = []
-        if elem.text:
-            out.append(elem.text)
-        for child in elem:
-            out.append(child)
-            if child.tail:
-                out.append(child.tail)
-        return out
-
-    # -- instruction execution --------------------------------------------
+    # -- execution helpers -------------------------------------------------
 
     def _lookup_var(self, name: str):
         for scope in reversed(self._scopes):
@@ -1514,54 +1955,24 @@ class MiniXslt:
 
     def _run_children(self, container: ET.Element, ctx,
                       params: dict | None = None) -> str:
+        fns, binds = self._cfns[id(container)]
         # scope push only when this body can bind anything — the common
         # body (pure output instructions) skips the stack churn
-        scoped = params is not None or self._hasbind[id(container)]
+        scoped = params is not None or binds
         if scoped:
             self._scopes.append(dict(params) if params else {})
         try:
-            fns = self._cfns[id(container)]
             if len(fns) == 1:
                 return fns[0](ctx)
-            return "".join(f(ctx) for f in fns)
+            return "".join([f(ctx) for f in fns])
         finally:
             if scoped:
                 self._scopes.pop()
 
-    def _gather_params(self, elem: ET.Element, ctx) -> dict:
-        # with-param elements are sheet-static -> compiled bindings
-        return {
-            wp.get("name", ""): self._compile_binding(wp)(ctx)
-            for wp in self._wparams.get(id(elem), ())
-        }
-
-    def _sorted_nodes(self, nodes: list, elem: ET.Element, ctx) -> list:
-        """Apply the instruction's xsl:sort keys (stable multi-key:
-        last key first). Unparseable number keys sort first ascending."""
-        sorts = self._sorts.get(id(elem), ())
-        for s in reversed(sorts):
-            sel = s.get("select", ".")
-            numeric = s.get("data-type", "text") == "number"
-            reverse = s.get("order", "ascending") == "descending"
-            sfn = self._compile_select(sel)  # sort selects are static
-
-            def key(n, _s=sfn, _num=numeric):
-                items = _s(n)
-                v = _string(items[0]) if items else ""
-                if _num:
-                    try:
-                        return float(v)
-                    except ValueError:
-                        return float("-inf")
-                return v
-
-            nodes = sorted(nodes, key=key, reverse=reverse)
-        return nodes
-
     def _serialize(self, item) -> str:
         """copy-of rendering: elements as markup, text/attrs escaped."""
-        if isinstance(item, str):
-            return escape(item)
+        if isinstance(item, (str, bool)):
+            return escape(_string(item))
         if isinstance(item, _RTF):
             return item.markup
         if isinstance(item, _Doc):
@@ -1580,7 +1991,7 @@ class MiniXslt:
         """Run ``render`` per node with (position, last) context pushed,
         so position()/last() see the iteration per XSLT 1.0."""
         if not self._needs_pos:
-            return "".join(render(n) for n in nodes)
+            return "".join([render(n) for n in nodes])
         size = len(nodes)
         parts: list[str] = []
         for i, n in enumerate(nodes, 1):
@@ -1617,75 +2028,19 @@ class MiniXslt:
                         self._attrset_attrs(nested, ctx, seen | {name})
                     )
                 for a in d:
-                    out[self._avt(a.get("name", ""), ctx)] = _RTF(
+                    out[self._compile_avt(a.get("name", ""))(ctx)] = _RTF(
                         self._run_children(a, ctx)
                     ).text()
         return out
 
-    def _element_markup(self, tag: str, elem: ET.Element, ctx,
-                        static_attrs: str) -> str:
-        """Render an element (literal or xsl:element): direct
-        xsl:attribute children contribute dynamic attributes (AVT name,
-        body string-value), a direct copy-of select="@*" child copies
-        the context node's attributes (identity-transform idiom), and
-        use-attribute-sets (attribute on xsl:element/xsl:copy,
-        xsl:use-attribute-sets on a literal result element) splices
-        named attribute sets in at the LOWEST precedence; the body
-        renders with those skipped. Later additions replace earlier
-        ones per XSLT 1.0 §7.1.3/§7.1.4: attribute sets, then literal
-        attrs, then copied, then xsl:attribute."""
-        kind = self._kind.get(id(elem))
-        use_sets, has_copy = self._emeta[id(elem)]
-        if has_copy or use_sets:
-            merged: dict[str, str] = {}
-            if use_sets:
-                merged.update(self._attrset_attrs(use_sets, ctx))
-            if kind is None:  # literal result element
-                for k, v in elem.attrib.items():
-                    if k.startswith("{" + XSL_NS + "}"):
-                        continue
-                    merged[_local(k)] = self._avt(v, ctx)
-            if has_copy and isinstance(ctx, ET.Element):
-                for k, v in ctx.attrib.items():
-                    merged[_local(k)] = v
-            for a in self._dynattrs.get(id(elem), ()):
-                merged[self._avt(a.get("name", ""), ctx)] = _RTF(
-                    self._run_children(a, ctx)
-                ).text()
-            attrs = "".join(f" {k}={quoteattr(v)}" for k, v in merged.items())
-        else:
-            dyn = "".join(
-                f" {self._avt(a.get('name', ''), ctx)}="
-                + quoteattr(_RTF(self._run_children(a, ctx)).text())
-                for a in self._dynattrs.get(id(elem), ())
-            )
-            attrs = static_attrs + dyn
-        inner = self._run_children(elem, ctx)
-        return f"<{tag}{attrs}>{inner}</{tag}>" if inner else f"<{tag}{attrs}/>"
-
-    def _avt(self, value: str, ctx) -> str:
-        segs = _avt_segments(value)
-        if len(segs) == 1 and segs[0][0] == "lit":
-            return segs[0][1]
-        out: list[str] = []
-        for kind, payload in segs:
-            if kind == "lit":
-                out.append(payload)
-            else:
-                items = self._select(ctx, payload)
-                if items:
-                    out.append(_string(items[0]))
-        return "".join(out)
-
-    # -- keys --------------------------------------------------------------
+    # -- documents and keys --------------------------------------------------
 
     def _containing_root(self, ctx) -> "ET.Element":
         """The root of the document containing ``ctx`` — XSLT 1.0 §12.2
         scopes key() to the context node's document, so a key() call
         while iterating a document()-loaded tree must index THAT tree,
-        not the source (judge-advice r7). Membership sets are built
-        lazily per known root; non-node contexts fall back to the
-        source document."""
+        not the source. Membership sets are built lazily per known
+        root; non-node contexts fall back to the source document."""
         if isinstance(ctx, _Doc):
             return ctx.root
         if not isinstance(ctx, ET.Element):
@@ -1705,75 +2060,30 @@ class MiniXslt:
 
     def _build_key(self, name: str, root: "ET.Element") -> dict[str, list]:
         """Lazily index ONE document for one xsl:key: walk every
-        element once, test it against each declaration's match pattern,
-        and file it under the string-value(s) of the use expression
-        (one entry per node when use selects a node-set, per XSLT 1.0
-        §12.2). Built once per (document, key) — O(doc); every key()
-        call afterwards is a dict lookup, which is the whole point of
-        keys vs re-scanning predicates."""
-        decls = self._key_decls.get(name)
+        element once, test it against each declaration's compiled match
+        pattern ('a|b' alternatives included), and file it under the
+        string-value(s) of the use expression (one entry per node when
+        use selects a node-set; EVERY matching declaration files the
+        node, per XSLT 1.0 §12.2). Built once per (document, key) —
+        O(doc); every key() call afterwards is a dict lookup."""
+        decls = self._keys.get(name)
         if decls is None:
             raise XsltUnsupported(f"key() with undeclared key {name!r}")
         index: dict[str, list] = {}
-        if id(root) not in self._doc_orders:
-            self._doc_orders[id(root)] = {
-                id(e): i for i, e in enumerate(root.iter())
-            }
+        self._doc_order(root)
         for elem in root.iter():
-            for kmatch, kuse in decls:
-                # 'a|b' alternation in key match patterns, same as
-                # template rules (code-review r7: the un-split pattern
-                # silently matched nothing)
-                if all(
-                    self._match_score(alt, elem) is None
-                    for alt in _split_union(kmatch)
-                ):
+            for matchers, use in decls:
+                if not any(m(elem) for m in matchers):
                     continue
-                # EVERY matching declaration files the node (XSLT 1.0
-                # §12.2 unions declarations; no first-match-wins here)
-                for item in self._select(elem, kuse):
+                for item in use(elem):
                     vals = index.setdefault(_string(item), [])
                     if not vals or vals[-1] is not elem:
                         vals.append(elem)
         return index
 
-    def _document(self, inner: str, ctx=None) -> "_Doc":
-        """document(uri[, node-set]): the external XML document at
-        ``uri``; document('') is the stylesheet itself (XSLT 1.0 §12.1
-        — the embedded-lookup-table idiom). A relative uri resolves
-        against base_dir, or — 2-arg form — against the base of the
-        document containing the node-set's first node (so a document
-        loaded from a subdirectory can chain relative references).
-        Only string-literal URIs are in the subset; parsed once per
+    def _load_document(self, uri: str, base: str | None) -> _Doc:
+        """The document at ``uri`` relative to ``base``: parsed once per
         resolved path, cached, whitespace-stripped like the source."""
-        import os
-
-        args = _split_args(inner)
-        if len(args) not in (1, 2):
-            raise XsltUnsupported("document() takes (uri[, node-set])")
-        uri = _literal(args[0].strip())
-        if not isinstance(uri, str):
-            raise XsltUnsupported("document() URI must be a string literal")
-        if uri == "":
-            return _Doc(self._sty_root)
-        base = self.base_dir
-        if len(args) == 2:
-            items = self._select(ctx, args[1].strip())
-            if not items:
-                raise XsltUnsupported(
-                    "document() second argument selected no nodes"
-                )
-            root = self._containing_root(items[0])
-            # the source and stylesheet documents resolve against
-            # base_dir structurally — only document()-loaded trees own
-            # a _doc_base entry (their roots live in _ext_docs for the
-            # compiled sheet's lifetime, so the id keys stay valid;
-            # keying per-apply src roots would leak and risk recycled
-            # ids — code-review r10)
-            if root is self._root or root is self._sty_root:
-                base = self.base_dir
-            else:
-                base = self._doc_base.get(id(root))
         if base is None:
             raise XsltUnsupported(
                 f"document({uri!r}): no base_dir to resolve against"
@@ -1792,731 +2102,18 @@ class MiniXslt:
             self._parents.update(ext)
         return doc
 
-    # -- compiled evaluators -------------------------------------------------
-    #
-    # Selects, tests and bindings are stylesheet-static while apply()
-    # runs per row: each compiles to a bound Python closure ONCE per
-    # stylesheet (memoized), so the per-row cost is the closure body
-    # alone. Select shapes outside the specialized ones
-    # fall back to the step-by-step _select_generic.
-
-    def _compile_select(self, path: str):
-        """path -> fn(ctx) -> list, memoized per stylesheet."""
-        fn = self._sel_fns.get(path)
-        if fn is not None:
-            return fn
-        tag, payload, p = _select_plan(path)
-        if tag == 0:  # '.'
-            def fn(ctx):
-                return [ctx]
-        elif tag == 3:  # bare @attr
-            def fn(ctx, _a=payload):
-                if isinstance(ctx, ET.Element):
-                    v = ctx.attrib.get(_a)
-                    return [v] if v is not None else []
-                return []
-        elif tag == 4:  # bare element name
-            def fn(ctx, _n=p):
-                if isinstance(ctx, ET.Element):
-                    return [c for c in ctx if _local(c.tag) == _n]
-                if isinstance(ctx, _Doc):
-                    return [ctx.root] if _local(ctx.root.tag) == _n else []
-                return []
-        elif tag == 5 and "/" not in payload and "[" not in payload:
-            def fn(ctx, _n=payload):
-                return [self._lookup_var(_n)]
-        else:
-            fn = None
-            if tag in (2, 6) and p.startswith("key("):
-                fn = self._compile_key_select(p)
-            if fn is None and tag == 6 and not p.startswith(
-                ("/", "key(", "document(")
-            ):
-                # single child-name step with static predicates (the
-                # common predicated select, e.g. v[@key=$k]): compile
-                # the predicate tests and run the step inline. Any
-                # positional predicate or structural step falls back.
-                try:
-                    steps = _path_steps(p)
-                except XsltUnsupported:
-                    steps = None
-                if steps is not None and len(steps) == 1:
-                    name, preds, desc = steps[0]
-                    if (
-                        not desc
-                        and "(" not in name
-                        and name not in (".", "*")
-                        and not name.startswith("@")
-                    ):
-                        pks = [_pred_kind(x) for x in preds]
-                        if all(k[0] in ("plain", "index", "last")
-                               for k in pks):
-                            plan = tuple(
-                                ("plain", self._compile_test(k[1]))
-                                if k[0] == "plain"
-                                else (k[0], k[1] if k[0] == "index" else None)
-                                for k in pks
-                            )
-
-                            def fn(ctx, _n=name, _plan=plan):
-                                if isinstance(ctx, ET.Element):
-                                    cand = [
-                                        c for c in ctx
-                                        if _local(c.tag) == _n
-                                    ]
-                                elif isinstance(ctx, _Doc):
-                                    r = ctx.root
-                                    cand = (
-                                        [r] if _local(r.tag) == _n else []
-                                    )
-                                else:
-                                    return []
-                                for kind, payload2 in _plan:
-                                    if kind == "plain":
-                                        cand = [
-                                            c for c in cand if payload2(c)
-                                        ]
-                                    elif kind == "index":
-                                        k = payload2
-                                        cand = (
-                                            [cand[k - 1]]
-                                            if 0 < k <= len(cand)
-                                            else []
-                                        )
-                                    else:  # last()
-                                        cand = cand[-1:]
-                                return cand
-            if fn is None:
-                def fn(ctx, _p=path):
-                    return self._select_generic(ctx, _p)
-        self._sel_fns[path] = fn
-        return fn
-
-    def _compile_key_select(self, p: str):
-        """Specialize ``key('name', value)`` and
-        ``key('name', value)/child`` selects. Returns None (caller falls
-        back to the generic path) for any other shape."""
-        open_at = p.index("(")
-        try:
-            end = _close_paren(p, open_at)
-        except XsltUnsupported:
-            return None
-        rest = p[end + 1 :]
-        if not rest:
-            return self._compile_key(p[open_at + 1 : end])
-        step = rest[1:]
-        if (
-            not rest.startswith("/")
-            or not step
-            or "/" in step
-            or "[" in step
-            or "(" in step
-            or step in (".", "*")
-            or step.startswith("@")
-        ):
-            return None
-
-        def fn(ctx, _h=self._compile_key(p[open_at + 1 : end]), _step=step):
-            out: list = []
-            for h in _h(ctx):
-                out.extend(c for c in h if _local(c.tag) == _step)
-            return out
-        return fn
-
-    def _compile_key(self, inner: str):
-        """key(name, value) -> fn(ctx) -> the nodes the named xsl:key
-        files under the value's string(s), in document order. The name
-        literal and the value select are static; the per-call work is
-        the index lookup, and the document-order sort only runs when a
-        lookup returns multiple nodes."""
-        args = _split_args(inner)
-        if len(args) != 2:
-            return _fail(f"key() takes 2 arguments, got {len(args)}")
-        kname = _literal(args[0].strip())
-        if not isinstance(kname, str):
-            return _fail("key() name must be a string literal")
-        arg = args[1].strip()
-        lit = _literal(arg)
-        if lit is not None:
-            if not isinstance(lit, str):  # XPath number->string form
-                lit = str(int(lit)) if lit.is_integer() else str(lit)
-
-            def values_fn(ctx, _v=[lit]):
-                return _v
-        else:
-            def values_fn(ctx, _s=self._compile_select(arg)):
-                return [_string(it) for it in _s(ctx)]
-
-        def fn(ctx, _k=kname, _vals=values_fn):
-            doc_root = self._containing_root(ctx)
-            ikey = (id(doc_root), _k)
-            index = self._key_index.get(ikey)
-            if index is None:
-                index = self._key_index[ikey] = self._build_key(
-                    _k, doc_root
-                )
-            hits: list = []
-            seen: set[int] = set()
-            for v in _vals(ctx):
-                for node in index.get(v, ()):
-                    if id(node) not in seen:
-                        seen.add(id(node))
-                        hits.append(node)
-            if len(hits) > 1:
-                # union in document order, as XPath node-sets require
-                order = self._doc_orders[id(doc_root)]
-                hits.sort(key=lambda n: order[id(n)])
-            return hits
-        return fn
-
-    def _compile_binding(self, elem: ET.Element):
-        """xsl:variable/param/with-param -> fn(ctx) -> value, memoized
-        per element: a quoted-string literal, a numeric literal (kept in
-        its lexical form), a select path's string-value, or the body as
-        a result-tree fragment."""
-        fn = self._bind_fns.get(id(elem))
-        if fn is not None:
-            return fn
-        sel = elem.get("select")
-        if sel is not None:
-            sel = sel.strip()
-            if len(sel) >= 2 and sel[0] == "'" and sel[-1] == "'":
-                v = sel[1:-1]
-                fn = lambda ctx, _v=v: _v  # noqa: E731
-            elif _literal(sel) is not None:
-                fn = lambda ctx, _v=sel: _v  # noqa: E731 (lexical form)
-            else:
-                sfn = self._compile_select(sel)
-
-                def fn(ctx, _s=sfn):
-                    items = _s(ctx)
-                    return _string(items[0]) if items else ""
-        else:
-            def fn(ctx, _e=elem):
-                return _RTF(self._run_children(_e, ctx))
-        self._bind_fns[id(elem)] = fn
-        return fn
-
-    def _compile_test(self, expr: str):
-        """test expression -> fn(ctx) -> bool, memoized. An
-        XsltUnsupported raised while compiling is deferred to evaluation
-        time: an unsupported expression fails only when it actually
-        runs, so an untaken branch never rejects a stylesheet."""
-        fn = self._test_fns.get(expr)
-        if fn is not None:
-            return fn
-        try:
-            fn = self._compile_test_inner(expr)
-        except XsltUnsupported as exc:
-            fn = _fail(str(exc))
-        self._test_fns[expr] = fn
-        return fn
-
-    def _compile_test_inner(self, expr: str):
-        kind, payload = _test_plan(expr)
-        if kind == 0:
-            def fn(ctx):
-                return False
-        elif kind == 1:
-            subs = tuple(self._compile_test(p) for p in payload)
-
-            def fn(ctx, _s=subs):
-                return any(f(ctx) for f in _s)
-        elif kind == 2:
-            subs = tuple(self._compile_test(p) for p in payload)
-
-            def fn(ctx, _s=subs):
-                return all(f(ctx) for f in _s)
-        elif kind == 3:
-            fn = self._compile_test(payload)
-        elif kind == 4:
-            sub = self._compile_test(payload)
-
-            def fn(ctx, _s=sub):
-                return not _s(ctx)
-        elif kind == 5:
-            sel = self._compile_select(payload)
-
-            def fn(ctx, _s=sel):
-                items = _s(ctx)
-                if len(items) == 1 and isinstance(items[0], bool):
-                    return items[0]
-                return bool(items)
-        else:
-            fn = self._compile_comparison(expr, payload)
-        return fn
-
-    def _compile_comparison(self, expr: str, payload):
-        """kind-6 (comparison) test. The static decisions (is the rhs
-        a literal? a $var? a path?) are made once here; a literal-first
-        spelling swaps operands, and node-set vs node-set compares the
-        two string-value sets (XPath 1.0 §3.4)."""
-        lhs, op, rhs = payload
-
-        def run_compare(values, rhs_lit, _op):
-            if isinstance(rhs_lit, float):
-                nums = []
-                for v in values:
-                    try:
-                        nums.append(float(v))
-                    except ValueError:
-                        pass
-                values = nums
-            if _op == "=":
-                return any(v == rhs_lit for v in values)
-            if _op == "!=":
-                return any(v != rhs_lit for v in values)
-            if not isinstance(rhs_lit, float):
-                raise XsltUnsupported(
-                    f"ordered comparison with string literal {expr!r}"
-                )
-            return any(
-                (_op == "<" and v < rhs_lit)
-                or (_op == "<=" and v <= rhs_lit)
-                or (_op == ">" and v > rhs_lit)
-                or (_op == ">=" and v >= rhs_lit)
-                for v in values
-            )
-
-        def side(tok):
-            """('lit', value) | ('var', name) | ('path', expr)."""
-            if tok.startswith("$"):
-                return ("var", tok[1:])
-            lit = _literal(tok)
-            if lit is not None:
-                return ("lit", lit)
-            return ("path", tok)
-
-        rkind, rval = side(rhs)
-        if rkind == "path":
-            # literal-first spelling ('3 < n'): swap operands AND
-            # mirror the ordered operator — '3 < n' means 'n > 3'
-            lhs, rhs = rhs, lhs
-            op = {"<": ">", "<=": ">=", ">": "<", ">=": "<="}.get(op, op)
-            rkind, rval = side(rhs)
-            if rkind == "path":
-                # node-set vs node-set (XPath 1.0 §3.4): '=' is true
-                # iff ANY (a, b) pair matches; '!=' iff any pair
-                # differs. Ordered node-set comparisons stay out of
-                # the subset.
-                if op not in ("=", "!="):
-                    raise XsltUnsupported(
-                        f"ordered path-to-path comparison {expr!r}"
-                    )
-                lsel = self._compile_select(lhs)
-                rsel = self._compile_select(rhs)
-
-                def fn(ctx, _l=lsel, _r=rsel, _op=op):
-                    lvals = {_string(v) for v in _l(ctx)}
-                    rvals = {_string(v) for v in _r(ctx)}
-                    if _op == "=":
-                        return bool(lvals & rvals)
-                    return bool(lvals and rvals and len(lvals | rvals) > 1)
-                return fn
-        lsel = self._compile_select(lhs)
-        if rkind == "lit":
-            def fn(ctx, _l=lsel, _rl=rval, _op=op):
-                return run_compare([_string(v) for v in _l(ctx)], _rl, _op)
-            return fn
-
-        # $var operand: compares as a numeric literal when its string
-        # value parses as a number, else as a string — resolved per
-        # evaluation (the binding is scope-dependent)
-        def fn(ctx, _l=lsel, _n=rval, _op=op):
-            v = _string(self._lookup_var(_n))
-            num = _literal(v)
-            rhs_lit = v if num is None else num
-            return run_compare([_string(x) for x in _l(ctx)], rhs_lit, _op)
-        return fn
-
-    def _select(self, ctx, path: str) -> list:
-        return self._compile_select(path)(ctx)
-
-    def _select_generic(self, ctx, path: str) -> list:
-        """The select shapes _compile_select does not specialize:
-        position()/last(), function calls, and multi-step or predicated
-        paths, evaluated step by step."""
-        tag, payload, path = _select_plan(path)
-        if tag == 1:  # position() / last()
-            if not self._ctx_pos:
-                raise XsltUnsupported(f"{path} outside an iteration context")
-            pos, size = self._ctx_pos[-1]
-            return [str(pos if path == "position()" else size)]
-        if tag == 5:  # $var/... or $var[...]
-            raise XsltUnsupported(f"path into variable {path!r}")
-        if tag == 2:
-            fname, inner = payload
-            if fname == "count":
-                return [str(len(self._select(ctx, inner)))]
-            if fname == "key":
-                return self._compile_key(inner)(ctx)
-            if fname == "generate-id":
-                if inner.strip():
-                    items = self._select(ctx, inner)
-                    if not items:
-                        return [""]
-                    return [self._generate_id(items[0])]
-                return [self._generate_id(ctx)]
-            if fname == "document":
-                return [self._document(inner, ctx)]
-            if fname == "concat":
-                return ["".join(self._arg_string(ctx, a)
-                                for a in _split_args(inner))]
-            if fname == "string-length":
-                v = self._arg_string(ctx, inner) if inner.strip() else _string(ctx)
-                return [str(len(v))]
-            if fname == "normalize-space":
-                v = self._arg_string(ctx, inner) if inner.strip() else _string(ctx)
-                return [" ".join(v.split())]
-            if fname == "string":
-                return [self._arg_string(ctx, inner) if inner.strip()
-                        else _string(ctx)]
-            if fname == "contains":
-                a, b = self._args_strings(ctx, inner, "contains", 2)
-                return [b in a]
-            if fname == "starts-with":
-                a, b = self._args_strings(ctx, inner, "starts-with", 2)
-                return [a.startswith(b)]
-            if fname == "substring-before":
-                a, b = self._args_strings(ctx, inner, "substring-before", 2)
-                return [a.split(b, 1)[0] if b and b in a else ""]
-            if fname == "substring-after":
-                a, b = self._args_strings(ctx, inner, "substring-after", 2)
-                return [a.split(b, 1)[1] if b and b in a else ""]
-            if fname == "translate":
-                a, b, c = self._args_strings(ctx, inner, "translate", 3)
-                table = {}
-                for i, ch in enumerate(b):
-                    if ch not in table:
-                        table[ch] = c[i] if i < len(c) else None
-                return ["".join(
-                    table.get(ch, ch) for ch in a if table.get(ch, ch) is not None
-                )]
-            if fname == "substring":
-                return self._substring(ctx, inner)
-            if fname == "format-number":
-                args = _split_args(inner)
-                if len(args) not in (2, 3):
-                    raise XsltUnsupported(
-                        "format-number() takes (value, pattern[, format-name])"
-                    )
-                if len(args) == 3:
-                    dfname = _literal(args[2].strip())
-                    if not isinstance(dfname, str):
-                        raise XsltUnsupported(
-                            "format-number() format-name must be a string literal"
-                        )
-                    sym = self._decimal_formats.get(dfname)
-                    if sym is None:
-                        raise XsltUnsupported(
-                            f"format-number() names undeclared "
-                            f"xsl:decimal-format {dfname!r}"
-                        )
-                else:
-                    # the UNNAMED xsl:decimal-format overrides defaults
-                    sym = self._decimal_formats.get("", _DEFAULT_DF)
-                try:
-                    v = float(self._arg_string(ctx, args[0]))
-                except ValueError:
-                    return [sym["nan"]]
-                # non-finite values parse fine but would blow up the
-                # Decimal quantize inside _format_number; XSLT 1.0 says
-                # format-number(NaN) -> the NaN symbol, infinities ->
-                # the infinity symbol (minus-prefixed when negative)
-                import math
-
-                if math.isnan(v):
-                    return [sym["nan"]]
-                if math.isinf(v):
-                    inf = sym["infinity"]
-                    return [sym["minus"] + inf if v < 0 else inf]
-                return [_format_number(v, self._arg_string(ctx, args[1]), sym)]
-            if fname == "true" and not inner.strip():
-                return [True]
-            if fname == "false" and not inner.strip():
-                return [False]
-            if fname == "not":
-                return [not self._test(ctx, inner)]
-            if fname == "boolean":
-                return [self._test(ctx, inner)]
-            # text() falls through to step parsing; anything else is an
-            # unsupported XPath function and fails fast there too
-        if path.startswith(("key(", "document(")):
-            # key(...)/<steps> or document(...)/<steps>: the node-set
-            # result is the path head (the whole-expression forms are
-            # handled by the function dispatch above). _split_path
-            # can't see into the args (its scanner only tracks
-            # brackets), so find the matching close paren quote-aware.
-            open_at = path.index("(")
-            end = _close_paren(path, open_at)
-            inner = path[open_at + 1 : end]
-            if path.startswith("key("):
-                cur: list = self._compile_key(inner)(ctx)
-            else:
-                cur = [self._document(inner, ctx)]
-            path = path[end + 1 :]
-            if path and not path.startswith("/"):
-                raise XsltUnsupported(f"syntax after node-set function in {path!r}")
-        elif path.startswith("/"):
-            cur = [_Doc(self._root)]
-        else:
-            cur = [ctx]
-        for name, preds, desc in _path_steps(path):
-            nxt: list = []
-            for node in cur:
-                if isinstance(node, (str, _RTF)):
-                    continue
-                children = [node.root] if isinstance(node, _Doc) else list(node)
-                if desc:
-                    # descendant-or-self::node()/child:: — strict
-                    # descendants of an element context; for the
-                    # document, the root and everything below it.
-                    # ET.iter() is preorder == XPath document order.
-                    if isinstance(node, _Doc):
-                        sub = list(node.root.iter())
-                        or_self = sub
-                    else:
-                        sub = [e for e in node.iter() if e is not node]
-                        # 'a//@id' / 'a//text()' expand to
-                        # descendant-OR-SELF::node()/attribute::id (or
-                        # child::text()), so the context element's own
-                        # attribute/text is included (ADVICE r6); only
-                        # element-name steps (child:: axis) keep the
-                        # strict-descendant set.
-                        or_self = list(node.iter())
-                    if name == "*":
-                        cand = sub
-                    elif name == "text()":
-                        cand = [e.text for e in or_self if e.text]
-                    elif name == "node()":
-                        # a//node(): every descendant node (elements
-                        # AND text, tails included) in true document
-                        # order via the interleaved child walk
-                        # (code-review r7: fell through to a literal
-                        # tag compare and silently selected nothing)
-                        cand = []
-
-                        def _walk(e, _out=cand):
-                            for c in self._node_children(e):
-                                _out.append(c)
-                                if isinstance(c, ET.Element):
-                                    _walk(c)
-
-                        if isinstance(node, _Doc):
-                            cand.append(node.root)
-                            _walk(node.root)
-                        else:
-                            _walk(node)
-                    elif name.startswith("@"):
-                        cand = [
-                            e.attrib[name[1:]] for e in or_self if name[1:] in e.attrib
-                        ]
-                    else:
-                        cand = [e for e in sub if _local(e.tag) == name]
-                    for p in preds:
-                        pk = _pred_kind(p)
-                        if pk[0] in ("index", "last", "positional"):
-                            # XPath numbers descendant-step candidates
-                            # per PARENT, not globally — refusing beats
-                            # a silently wrong global index
-                            raise XsltUnsupported(
-                                f"positional predicate on descendant step [{p}]"
-                            )
-                        cand = [c for c in cand if self._test(c, pk[1])]
-                    nxt.extend(cand)
-                    continue
-                if name == ".":
-                    cand: list = [node]
-                elif name.startswith("@"):
-                    cand = (
-                        [node.attrib[name[1:]]]
-                        if isinstance(node, ET.Element) and name[1:] in node.attrib
-                        else []
-                    )
-                elif name == "text()":
-                    cand = (
-                        [node.text]
-                        if isinstance(node, ET.Element) and node.text
-                        else []
-                    )
-                elif name == "node()":
-                    # child::node(): elements AND text children, in
-                    # document order
-                    cand = (
-                        self._node_children(node)
-                        if isinstance(node, ET.Element)
-                        else children
-                    )
-                elif name == "*":
-                    cand = children
-                else:
-                    cand = [c for c in children if _local(c.tag) == name]
-                # predicates filter SEQUENTIALLY, positions renumbering
-                # after each (XPath 1.0 semantics): [k] indexes, and
-                # position()/last() see the current candidate list
-                for p in preds:
-                    pk = _pred_kind(p)
-                    if pk[0] == "index":
-                        k = pk[1]
-                        cand = [cand[k - 1]] if 0 < k <= len(cand) else []
-                    elif pk[0] == "last":
-                        cand = cand[-1:]
-                    elif pk[0] == "positional":
-                        size = len(cand)
-                        kept = []
-                        for i, c in enumerate(cand, 1):
-                            self._ctx_pos.append((i, size))
-                            try:
-                                if self._test(c, pk[1]):
-                                    kept.append(c)
-                            finally:
-                                self._ctx_pos.pop()
-                        cand = kept
-                    else:
-                        cand = [c for c in cand if self._test(c, pk[1])]
-                nxt.extend(cand)
-            cur = nxt
-        return cur
-
-    def _arg_string(self, ctx, tok: str) -> str:
-        """One function argument -> string value: quoted literal,
-        numeric literal (lexical form), or a path's string-value."""
-        tok = tok.strip()
-        if len(tok) >= 2 and tok[0] == "'" and tok[-1] == "'":
-            return tok[1:-1]
-        if _literal(tok) is not None:
-            return tok
-        items = self._select(ctx, tok)
-        return _string(items[0]) if items else ""
-
-    def _args_strings(self, ctx, inner: str, fname: str, n: int) -> list[str]:
-        args = _split_args(inner)
-        if len(args) != n:
-            raise XsltUnsupported(
-                f"{fname}() takes {n} arguments, got {len(args)}"
-            )
-        return [self._arg_string(ctx, a) for a in args]
-
-    def _substring(self, ctx, inner: str) -> list:
-        """XPath 1.0 substring(): 1-based, both numeric arguments pass
-        through round() (floor(x+0.5)), chars kept at positions p with
-        round(start) <= p < round(start)+round(length)."""
-        import math
-
-        args = _split_args(inner)
-        if len(args) not in (2, 3):
-            raise XsltUnsupported("substring() takes 2 or 3 arguments")
-        s = self._arg_string(ctx, args[0])
-
-        def num(tok: str) -> float:
-            try:
-                return float(self._arg_string(ctx, tok))
-            except ValueError:
-                return float("nan")
-
-        start = num(args[1])
-        if math.isnan(start):
-            return [""]
-        if math.isinf(start):
-            # round(±Infinity) stays infinite: p >= -Infinity keeps every
-            # char in the 2-arg form; any 3-arg upper bound (-inf + x, or
-            # the NaN from -inf + inf) admits none, as does start = +inf
-            return [s if (start < 0 and len(args) == 2) else ""]
-        rstart = math.floor(start + 0.5)
-        if len(args) == 2:
-            return [s[max(0, rstart - 1):]]
-        ln = num(args[2])
-        if math.isnan(ln) or math.isinf(ln) and ln < 0:
-            return [""]
-        rend = rstart + (len(s) + 1 if math.isinf(ln) else math.floor(ln + 0.5))
-        lo = max(1, rstart)
-        hi = max(lo, min(rend, len(s) + 1))
-        return [s[lo - 1 : hi - 1]]
-
-    def _xsl_number(self, elem: ET.Element, ctx) -> str:
-        """xsl:number subset (XSLT 1.0 §7.7): explicit ``value``, or
-        level='single' (nearest ancestor-or-self matching ``count``,
-        numbered among its preceding siblings) level='any' (matching
-        nodes at-or-before the context in document order) and
-        level='multiple' (hierarchical ancestor-or-self numbering with
-        per-position format tokens). ``from`` fails fast; ``format``
-        supports the '1'/'01'/'a'/'A'/'i'/'I' token alphabet with
-        separators."""
-        import math
-
-        fmt = self._avt(elem.get("format", "1"), ctx)
-        value = elem.get("value")
-        if value is not None:
-            try:
-                v = float(self._arg_string(ctx, value))
-            except ValueError:
-                return "NaN"
-            if math.isnan(v) or math.isinf(v):
-                return "NaN" if math.isnan(v) else (
-                    "-Infinity" if v < 0 else "Infinity"
-                )
-            return _format_xsl_number(int(math.floor(v + 0.5)), fmt)
-        if elem.get("from") is not None:
-            raise XsltUnsupported("xsl:number from= is out of subset")
-        level = elem.get("level", "single")
-        if level not in ("single", "any", "multiple"):
-            raise XsltUnsupported(f"xsl:number level={level!r}")
-        if not isinstance(ctx, ET.Element):
-            raise XsltUnsupported("xsl:number on a non-element context")
-        count = elem.get("count")
-        count_alts = _split_union(count) if count else [_local(ctx.tag)]
-
-        def matches(n) -> bool:
-            return isinstance(n, ET.Element) and any(
-                self._match_score(a, n) is not None for a in count_alts
-            )
-
-        def sibling_pos(target) -> int:
-            parent = self._parents.get(target)
-            n = 1
-            if parent is not None:
-                for sib in parent:
-                    if sib is target:
-                        break
-                    if matches(sib):
-                        n += 1
-            return n
-
-        if level == "multiple":
-            # hierarchical numbering (1.2.3): every matching
-            # ancestor-or-self, outermost first, each numbered among
-            # its preceding siblings (XSLT 1.0 §7.7)
-            chain = []
-            t = ctx
-            while t is not None:
-                if matches(t):
-                    chain.append(t)
-                t = self._parents.get(t)
-            if not chain:
-                return ""
-            chain.reverse()
-            return _format_xsl_number([sibling_pos(t) for t in chain], fmt)
-        if level == "any":
-            root = self._containing_root(ctx)
-            n = 0
-            for e in root.iter():
-                if matches(e):
-                    n += 1
-                if e is ctx:
-                    break
-            return _format_xsl_number(n, fmt) if n else ""
-        # level='single'
-        target = ctx
-        while target is not None and not matches(target):
-            target = self._parents.get(target)
-        if target is None:
-            return ""
-        return _format_xsl_number(sibling_pos(target), fmt)
+    def _doc_order(self, root: ET.Element) -> dict[int, int]:
+        """Element id -> document-order index, built once per document."""
+        order = self._doc_orders.get(id(root))
+        if order is None:
+            order = self._doc_orders[id(root)] = {
+                id(e): i for i, e in enumerate(root.iter())
+            }
+        return order
 
     def _generate_id(self, node) -> str:
         """generate-id(): unique, stable-within-a-transform id per node
-        — document sequence number + document-order index (both lazily
-        built, shared with the key() machinery)."""
+        — document sequence number + document-order index."""
         if isinstance(node, _Doc):
             return f"d{self._doc_seq(node.root)}"
         if not isinstance(node, ET.Element):
@@ -2525,11 +2122,7 @@ class MiniXslt:
                 "(text/attribute values have no node identity here)"
             )
         root = self._containing_root(node)
-        if id(root) not in self._doc_orders:
-            self._doc_orders[id(root)] = {
-                id(e): i for i, e in enumerate(root.iter())
-            }
-        return f"d{self._doc_seq(root)}e{self._doc_orders[id(root)][id(node)]}"
+        return f"d{self._doc_seq(root)}e{self._doc_order(root)[id(node)]}"
 
     def _doc_seq(self, root: ET.Element) -> int:
         seq = self._doc_seqs.get(id(root))
@@ -2537,9 +2130,6 @@ class MiniXslt:
             seq = len(self._doc_seqs)
             self._doc_seqs[id(root)] = seq
         return seq
-
-    def _test(self, ctx, expr: str) -> bool:
-        return self._compile_test(expr)(ctx)
 
 
 def compile_stylesheet(src: str, base_dir: str | None = None):

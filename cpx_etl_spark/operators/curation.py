@@ -23,6 +23,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
@@ -466,7 +468,7 @@ def verify_training_shards(spark, path: str) -> DataFrame:
 def plan_training_mixture(
     spark,
     sources: dict[str, tuple[str, float]],
-    target_tokens: int,
+    target_tokens: int | Callable[[dict[str, int]], int],
 ) -> DataFrame:
     """Deterministic multi-corpus MIXTURE plan — the step that turns
     per-source sampling weights (the data-mixture knob of every public
@@ -485,6 +487,11 @@ def plan_training_mixture(
     of that source — while the midpoint lands it mid-stream, and
     same-count sources no longer all tie at 1.0 on their final picks.
 
+    ``target_tokens`` is an int, or fn({source: token capacity}) ->
+    int for a target derived from the capacities: they come from one
+    planning collect over every source's manifest, which the plan's
+    capacity checks read too.
+
     Pure manifest arithmetic — the inputs are the tiny one-row-per-
     shard manifests, never the corpora — so the plan is a driver-cheap
     metadata job at any corpus scale. Fail-loud: unknown artifact
@@ -492,33 +499,45 @@ def plan_training_mixture(
     cover (total tokens < quota) all raise. Returns
     (source, shard, n_tokens, cum_tokens, quota_tokens, position)
     ordered by position — deterministic for fixed inputs."""
+    import functools
     import os
 
     from pyspark.errors import AnalysisException
 
-    if target_tokens <= 0:
-        raise ValueError("plan_training_mixture: target_tokens must be > 0")
     wsum = sum(w for _p, w in sources.values())
     if not sources or wsum <= 0 or any(w <= 0 for _p, w in sources.values()):
         raise ValueError(
             "plan_training_mixture: every source needs a positive weight"
         )
-    plans = []
-    for name, (path, w) in sorted(sources.items()):
+    manifests = {}
+    for name, (path, _w) in sorted(sources.items()):
         # artifact probe + token capacity both come from the manifest
         # PARQUET — the same storage abstraction every other read of
         # the artifact uses, so planning works on object storage where
         # a driver-local os.path.exists on the meta JSON false-
         # positives "not a shard artifact" (ADVICE r15 / VERDICT r15
-        # item 2); the shard meta stays the seed/capacity metadata
-        # source for readers that need it, via scratch.read_meta
+        # item 2)
         try:
-            manifest = read_parquet(spark, os.path.join(path, "manifest"))
+            manifests[name] = read_parquet(spark, os.path.join(path, "manifest"))
         except AnalysisException as e:
             raise ValueError(
                 f"plan_training_mixture: {path!r} is not a shard artifact "
                 f"(no readable manifest/): {e}"
             ) from e
+    # capacity = SUM over each one-row-per-shard manifest, every source
+    # in ONE bounded planning collect (manifests are tiny at any scale)
+    totals = dict(
+        functools.reduce(DataFrame.unionByName, [
+            m.select(F.lit(name).alias("source"), "n_tokens")
+            for name, m in manifests.items()
+        ]).groupBy("source").agg(F.sum("n_tokens").cast("long")).collect()
+    )
+    if callable(target_tokens):
+        target_tokens = target_tokens(totals)
+    if target_tokens <= 0:
+        raise ValueError("plan_training_mixture: target_tokens must be > 0")
+    plans = []
+    for name, (path, w) in sorted(sources.items()):
         quota = int(round(target_tokens * w / wsum))
         if quota <= 0:
             raise ValueError(
@@ -527,12 +546,7 @@ def plan_training_mixture(
                 f"{target_tokens}) — it would silently vanish from the "
                 f"mix; raise target_tokens or drop the source"
             )
-        # capacity = SUM over the one-row-per-shard manifest — a
-        # bounded planning head (manifests are tiny at any corpus
-        # scale), replacing the meta-JSON n_tokens read
-        total = manifest.agg(
-            F.sum("n_tokens").cast("long").alias("t")
-        ).collect()[0]["t"]
+        total = totals.get(name)
         if total is None or total < quota:
             raise ValueError(
                 f"plan_training_mixture: source {name!r} holds "
@@ -544,7 +558,8 @@ def plan_training_mixture(
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
         picked = (
-            manifest.withColumn("cum_tokens", F.sum("n_tokens").over(w_cum))
+            manifests[name]
+            .withColumn("cum_tokens", F.sum("n_tokens").over(w_cum))
             # keep every shard whose PREDECESSORS don't already cover
             # the quota (the covering prefix, last shard overshoots)
             .filter(F.col("cum_tokens") - F.col("n_tokens") < quota)

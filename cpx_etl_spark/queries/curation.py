@@ -27,7 +27,6 @@ from cpx_etl_spark.operators.curation import (
 )
 from cpx_etl_spark.queries import fround, register
 from cpx_etl_spark.sources import load_table
-from cpx_etl_spark.sources.registry import read_parquet
 
 # deterministic ~1/16 eval split: first hex digit of md5(doc_id)
 _TEST_PRED = "substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = '0'"
@@ -1245,20 +1244,13 @@ def q_training_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic, the prefix filter (window QUALIFY), and the position
     interleave — the 'window prefix arithmetic' framing of the
     VERDICT. Pure manifest arithmetic at any corpus scale: the plan
-    inputs are one-row-per-shard frames, never the corpora."""
-    import os
-
+    inputs are one-row-per-shard frames, never the corpora. The
+    target comes from the manifest token sums plan_training_mixture
+    collects for its capacity checks (one collect for both sources)."""
     from cpx_etl_spark.operators.curation import plan_training_mixture
 
     pa, pb = build_mixture_shard_artifacts(spark, sf_dir)
-    totals = []
-    for p in (pa, pb):
-        totals.append(
-            read_parquet(spark, os.path.join(p, "manifest"))
-            .agg(F.sum("n_tokens").cast("long").alias("t"))
-            .collect()[0]["t"]  # 1-row planning lookup (tiny manifest)
-        )
-    target = int(min(totals) // 4 * 4)
     return plan_training_mixture(
-        spark, {"web": (pa, 3.0), "code": (pb, 1.0)}, target
+        spark, {"web": (pa, 3.0), "code": (pb, 1.0)},
+        lambda totals: int(min(totals.values()) // 4 * 4),
     )

@@ -841,10 +841,10 @@ def q_xsl_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     / xsl:if / attribute-value-templates / named templates with params
     / xsl:key + key() lookups / moded templates), executed per row by the stdlib
     MiniXslt subset engine (functions/xslt.py) in one Arrow-batched
-    pandas UDF; the transformed XML's
-    fields come back out via Spark's built-in xpath_string — JVM-side
-    again. Step 1 filters to open orders and reshapes fields; step 2
-    flattens to the final record. FLOOR(x*100) keeps the numeric text
+    pandas UDF; the transformed XML's fields come back out via
+    regexp_extract — JVM-side again, in whole-stage codegen. Step 1
+    filters to open orders and reshapes fields; steps 2 and 3 flatten
+    to the final record. FLOOR(x*100) keeps the numeric text
     engine-exact (double multiply + floor are IEEE-identical; CAST in
     DuckDB would round half-even where Spark truncates)."""
     from cpx_etl_spark.plans.xsl_chain import (

@@ -217,7 +217,7 @@ def _mk_tree(draw, depth):
 @settings(max_examples=150, deadline=None)
 @given(st.data())
 def test_identity_transform_roundtrips_arbitrary_trees(data):
-    """Fuzz the interpreter end-to-end: the identity transform
+    """Fuzz the XSLT engine end-to-end: the identity transform
     (xsl:copy + copy-of @* + node() recursion) over ARBITRARY small
     trees — attribute values and text with XML-special and non-ASCII
     characters — must re-parse to an equivalent tree (tags, attrs,

@@ -114,12 +114,15 @@ def test_rewritten_source_gets_a_new_location(tmp_path, monkeypatch):
     assert location() == after
 
 
-# index_serve's three queries, plus the one whose build is two steps
+# index_serve's three queries, the one whose build is two steps, and the
+# mixture plan over two shard artifacts
 SERVED = ("ann_opq_topk_indexed", "q_winnow_incremental", "q_training_shards",
-          "ann_ivf_append_serve")
+          "ann_ivf_append_serve", "q_training_mixture")
 # construction jobs after setup: q_winnow_incremental's fingerprint cut
-# (operators/dedup.py _winnow_frames, ROADMAP item 2)
-CONSTRUCTION_JOBS = {"q_winnow_incremental": 1}
+# (operators/dedup.py _winnow_frames, ROADMAP item 2), and
+# q_training_mixture's one collect of both manifests' token sums (a
+# shuffle-map job and a result job)
+CONSTRUCTION_JOBS = {"q_winnow_incremental": 1, "q_training_mixture": 2}
 
 
 @pytest.fixture(scope="module")

@@ -1,9 +1,7 @@
-
-
-"""Descendant-axis (//) coverage for the XSLT-subset interpreter —
-added late-r6; before this 'a//b' SILENTLY collapsed to 'a/b' (the
-_split_path empty-part filter), violating the module's fail-fast
-contract."""
+"""Coverage for the XSLT-subset engine (functions/xslt.py): the
+descendant axis (//) first — 'a//b' once silently collapsed to 'a/b',
+violating the module's fail-fast contract — then keys, modes, imports,
+XPath functions and the out-of-subset failures."""
 
 from __future__ import annotations
 
@@ -65,7 +63,8 @@ def test_descendant_axis_attribute_text_include_self():
 
 
 def test_descendant_axis_fail_fast_cases():
-    """Positional predicates on descendant steps and malformed '//'
+    """Positional predicates on descendant steps or in match patterns,
+    location steps outside the node tests ('..') and malformed '//'
     runs raise XsltUnsupported — the no-silent-wrong-answers contract.
     (Descendant-axis MATCH patterns are supported since r10 — see
     test_descendant_and_absolute_match_patterns.)"""
@@ -81,6 +80,10 @@ def test_descendant_axis_fail_fast_cases():
 
     with pytest.raises(XsltUnsupported, match="positional"):
         _run_xsl(style('<v><xsl:value-of select="//b[1]"/></v>'), _DESC_XML)
+    with pytest.raises(XsltUnsupported, match="positional"):
+        _run_xsl(style("<v/>", match="b[1]"), _DESC_XML)
+    with pytest.raises(XsltUnsupported, match="location step"):
+        _run_xsl(style('<v><xsl:value-of select="a/.."/></v>'), _DESC_XML)
     with pytest.raises(XsltUnsupported, match="malformed|trailing"):
         _run_xsl(style('<v><xsl:value-of select="a///b"/></v>'), _DESC_XML)
     with pytest.raises(XsltUnsupported, match="malformed|trailing"):
@@ -271,7 +274,8 @@ def test_xpath_string_functions():
              tr="{{translate(name, 'abcdefghijklmnopqrstuvwxyz ', 'ABCDEFGHIJKLMNOPQRSTUVWXYZ')}}"
              has="{{contains(@url, 'example')}}"
              sw="{{starts-with(@url, 'https')}}"
-             miss="{{substring-before(@url, '#')}}"/>
+             miss="{{substring-before(@url, '#')}}"
+             lit="{{'a'}}" num="{{7}}"/>
       </xsl:template>
     </xsl:stylesheet>"""
     out = _run_xsl(xsl, xml)
@@ -281,6 +285,7 @@ def test_xpath_string_functions():
     assert 'tr="SPARKSQL"' in out        # space deleted (b longer than c)
     assert 'has="true"' in out and 'sw="true"' in out
     assert 'miss=""' in out
+    assert 'lit="a"' in out and 'num="7"' in out  # literals render as values
 
 
 def test_xpath_substring_rounding_edges():
@@ -300,7 +305,7 @@ def test_xpath_substring_rounding_edges():
 
 
 def test_xpath_boolean_operators_and_functions():
-    xml = '<d kind="x"><n>5</n><tag/></d>'
+    xml = '<d kind="x"><n>5</n><tag/><inf>9</inf></d>'
     xsl = f"""<xsl:stylesheet version="1.0" {_XSLNS}>
       <xsl:template match="d">
         <o both="{{boolean(n &gt; 3 and @kind = 'x')}}"
@@ -310,6 +315,9 @@ def test_xpath_boolean_operators_and_functions():
            t="{{true()}}" f="{{false()}}"/>
         <xsl:if test="n = 5 and @kind = 'x'"><hit/></xsl:if>
         <xsl:if test="n = 4 or @kind = 'zzz' or tag"><hit2/></xsl:if>
+        <lit><xsl:value-of select="'s'"/>|<xsl:copy-of select="7"/>|<xsl:copy-of select="true()"/>|<xsl:value-of select="concat(inf, '')"/></lit>
+        <xsl:if test="0"><zero/></xsl:if><xsl:if test="''"><empty/></xsl:if>
+        <xsl:if test="'s'"><str/></xsl:if>
       </xsl:template>
     </xsl:stylesheet>"""
     out = _run_xsl(xsl, xml)
@@ -317,6 +325,10 @@ def test_xpath_boolean_operators_and_functions():
     assert 'neg="true"' in out and 'grp="true"' in out
     assert 't="true"' in out and 'f="false"' in out
     assert "<hit/>" in out and "<hit2/>" in out
+    # literals as selects are values; as tests, their XPath boolean;
+    # 'inf' is an element name, not a number
+    assert "<lit>s|7|true|9</lit>" in out
+    assert "<str/>" in out and "<zero/>" not in out and "<empty/>" not in out
     # not(...), a parenthesized group and a boolean function directly
     # in test=, each taken and not taken
     xml = '<d><e k="xyz"><a/><c/></e><e x="1" k="abc"><b/></e><e k="y"><c/></e></d>'
@@ -713,6 +725,8 @@ def test_import_precedence_and_apply_imports(tmp_path):
     (tmp_path / "base.xsl").write_text(f"""<xsl:stylesheet version="1.0" {_XSLNS}>
       <xsl:template match="item[@k='x']"><base-special/></xsl:template>
       <xsl:template match="item"><base><xsl:value-of select="."/></base></xsl:template>
+      <xsl:template match="*" mode="m"><s><xsl:apply-templates mode="m"/></s></xsl:template>
+      <xsl:template match="box/item" mode="m"><path-base/></xsl:template>
     </xsl:stylesheet>""")
     (tmp_path / "inc.xsl").write_text(f"""<xsl:stylesheet version="1.0" {_XSLNS}>
       <xsl:template match="extra"><inc-hit/></xsl:template>
@@ -722,20 +736,32 @@ def test_import_precedence_and_apply_imports(tmp_path):
     xsl = f"""<xsl:stylesheet version="1.0" {_XSLNS}>
       <xsl:import href="base.xsl"/>
       <xsl:include href="inc.xsl"/>
-      <xsl:template match="root"><o><xsl:apply-templates/></o></xsl:template>
+      <xsl:template match="root">
+        <o><xsl:apply-templates/></o><m><xsl:apply-templates mode="m"/></m>
+      </xsl:template>
       <xsl:template match="item">
         <main><xsl:apply-imports/></main>
       </xsl:template>
+      <xsl:template match="item[@k='x']" mode="m"><pred><xsl:apply-imports/></pred></xsl:template>
+      <xsl:template match="other" mode="m"><name/></xsl:template>
+      <xsl:template match="text()" mode="m"/>
     </xsl:stylesheet>"""
     t = MiniXslt(xsl, base_dir=str(tmp_path))
     # plain item: importer's match='item' beats BOTH base templates —
     # even the more specific item[@k='x'] (precedence before priority);
     # apply-imports inside re-dispatches to base, where the predicate
     # template wins for k='x'
-    out = t.apply("<root><item>v</item><item k='x'>w</item><extra/></root>")
+    out = t.apply("<root><item>v</item><item k='x'>w</item><extra/>"
+                  "<box><item>b</item></box><other/></root>")
     assert "<main><base>v</base></main>" in out
     assert "<main><base-special/></main>" in out
     assert "<inc-hit/>" in out                # included sheet's template ran
+    # mode m mixes a plain name, '*', a predicate and 'a/b' across the
+    # import: the importer's rules win where they match; elsewhere the
+    # base's 'box/item' beats its '*'; apply-imports from the predicated
+    # rule reaches the base's '*'
+    assert ("<m><s/><pred><s/></pred><s/><s><path-base/></s><name/></m>"
+            in out)
 
 
 def test_import_fail_fasts(tmp_path):
@@ -903,7 +929,7 @@ def test_descendant_and_absolute_match_patterns():
 
 def test_absolute_and_descendant_key_match_patterns():
     """xsl:key match patterns get the same anchored/descendant support
-    (the key builder dispatches through _match_score)."""
+    (keys use the compiled match patterns of template dispatch)."""
     xml = ("<db><top code=\"t1\">T1</top>"
            "<deep><sub><top code=\"t2\">T2</top></sub></deep></db>")
     xsl = """<xsl:stylesheet version="1.0"
@@ -1173,3 +1199,36 @@ def test_union_alternatives_of_same_template_not_a_tie():
       <xsl:template match="a/b/y | */y"><hit/></xsl:template>
     </xsl:stylesheet>"""
     assert _run_xsl(xsl, "<a><b><y>v</y></b></a>") == "<hit/>"
+
+
+_OUT_OF_SUBSET = {
+    "select": "<xsl:value-of select=\"system-property('xsl:version')\"/>",
+    "test": '<xsl:if test="a &lt; b/c"><x/></xsl:if>',
+    "instruction": "<xsl:message>m</xsl:message>",
+}
+
+
+def test_out_of_subset_fails_only_when_run():
+    """An out-of-subset select, test or instruction compiles: in an
+    untaken xsl:if or xsl:when, or in a never-called named template,
+    the stylesheet applies; run in a taken branch or a called template,
+    the same expression raises XsltUnsupported."""
+    import pytest
+
+    from cpx_etl_spark.functions.xslt import XsltUnsupported
+
+    for what, bad in _OUT_OF_SUBSET.items():
+        # the three tests guard an xsl:if, an xsl:when and a call
+        xsl = f"""<xsl:stylesheet version="1.0" {_XSLNS}>
+          <xsl:template name="never">{bad}</xsl:template>
+          <xsl:template match="d">
+            <o><xsl:if test="{{}}">{bad}</xsl:if><xsl:choose>
+              <xsl:when test="{{}}">{bad}</xsl:when>
+              <xsl:otherwise>ok</xsl:otherwise>
+            </xsl:choose><xsl:if test="{{}}"><xsl:call-template name="never"/></xsl:if></o>
+          </xsl:template>
+        </xsl:stylesheet>"""
+        assert _run_xsl(xsl.format("none", "none", "none"), "<d/>") == "<o>ok</o>", what
+        for taken in ((".", "none", "none"), ("none", ".", "none"), ("none", "none", ".")):
+            with pytest.raises(XsltUnsupported):
+                _run_xsl(xsl.format(*taken), "<d/>")

@@ -7,10 +7,11 @@ instance); this tool makes the plan-build share of the sub-second tail
 measurable instead of guessed.
 
 Usage: python tools/plan_build_audit.py [query ...]   (default: all
-headline bench queries). Each query is constructed once untimed (first
-reads infer input schemas; lazily built indexes get built), then
-measured on a second construction. Prints one line per query, slowest
-plan-build first:
+headline bench queries). Each query's registered setup (SETUPS: the
+standing artifact it reads) runs untimed first, as in bench.py and
+tools/sf1_smoke.py; the query is then constructed once untimed (first
+reads infer input schemas) and measured on a second construction.
+Prints one line per query, slowest plan-build first:
 
   name  construct_s  plan_s  total_s  jobs
 
@@ -36,7 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from bench import HEADLINE
-    from cpx_etl_spark.queries import load_registry
+    from cpx_etl_spark.queries import SETUPS, load_registry
     from cpx_etl_spark.session import get_spark
 
     queries, _ = load_registry()
@@ -47,6 +48,8 @@ def main() -> None:
     sc = spark.sparkContext
     rows = []
     for name in names:
+        if name in SETUPS:
+            SETUPS[name](spark, sf_dir)
         queries[name](spark, sf_dir)
         group = f"plan-build-audit:{name}"
         sc.setJobGroup(group, group)

@@ -2,7 +2,8 @@
 
 Runs every registered query on Spark and its DuckDB oracle on the same
 parquet tables, compares row counts + column names + order-insensitive
-values. Usage:
+values. A query's registered setup (its standing artifact) runs untimed
+before the query is built, as in bench.py and tools/sf1_smoke.py. Usage:
 
     python tools/verify_oracles.py [sf_dir] [query ...]
 """
@@ -82,7 +83,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    from cpx_etl_spark.queries import load_registry
+    from cpx_etl_spark.queries import SETUPS, load_registry
     from cpx_etl_spark.session import get_spark
 
     queries, oracles = load_registry()
@@ -97,6 +98,13 @@ def main() -> int:
     failures = 0
     for name, fn in sorted(queries.items()):
         if only and name not in only:
+            continue
+        try:
+            if name in SETUPS:
+                SETUPS[name](spark, sf_dir)
+        except Exception as e:
+            report(f"FAIL {name}: setup raised {type(e).__name__}: {e}")
+            failures += 1
             continue
         t0 = time.time()
         try:

@@ -27,8 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cpx_etl_spark.operators.cut import cut
-from cpx_etl_spark.scratch import publish_meta, read_meta
-from cpx_etl_spark.sources.registry import read_parquet
+from cpx_etl_spark.scratch import IndexHandle, publish_meta, read_meta
 
 
 def observe_count(df: DataFrame, stats: dict | None, name: str) -> DataFrame:
@@ -590,19 +589,6 @@ def cross_corpus_minhash_pairs(
 # verify-time semi-join on candidate docs touches few files.
 # ---------------------------------------------------------------------------
 
-class SignatureIndex:
-    """Handle over a persisted MinHash signature index."""
-
-    def __init__(self, spark, path: str, meta: dict):
-        import os
-
-        self.path = path
-        self.meta = meta
-        self.bands_df = read_parquet(spark, os.path.join(path, "bands"))
-        self.shingles_df = read_parquet(spark, os.path.join(path, "shingles"))
-        self.counts_df = read_parquet(spark, os.path.join(path, "counts"))
-
-
 def _index_frames(df: DataFrame, id_col: str, text_col: str,
                   n: int, k: int, bands: int, hash_fn: str = "md5"):
     # each frame is written exactly once, so no checkpoint: signatures
@@ -684,12 +670,12 @@ def append_to_signature_index(df: DataFrame, path: str,
     counts.write.mode("append").parquet(os.path.join(path, "counts"))
 
 
-def read_signature_index(spark, path: str) -> SignatureIndex:
-    return SignatureIndex(spark, path, read_meta(spark, path, "signature"))
+def read_signature_index(spark, path: str) -> IndexHandle:
+    return IndexHandle(spark, path, "signature")
 
 
 def cross_corpus_minhash_pairs_indexed(
-    df_new: DataFrame, index: SignatureIndex, threshold: float = 0.5,
+    df_new: DataFrame, index: IndexHandle, threshold: float = 0.5,
     min_band_collisions: int = 1, max_ref_band_df: int | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -714,13 +700,13 @@ def cross_corpus_minhash_pairs_indexed(
     # sf0.1 local[4]
     banded_new = band_rows(sig_new, id_col, meta["k"], meta["bands"]) \
         .withColumnRenamed(id_col, "doc_a").transform(cut)
-    banded_ref = index.bands_df.withColumnRenamed(id_col, "doc_b")
+    banded_ref = index.table("bands").withColumnRenamed(id_col, "doc_b")
     cand = _cross_candidates(banded_new, banded_ref, min_band_collisions,
                              max_ref_band_df, stats)
     cnt_new = rows_new.groupBy(id_col).agg(
         F.count_distinct(F.col("sh")).alias("n_sh"))
     return _verify_jaccard_two(
-        cand, idx_new, cnt_new, index.shingles_df, index.counts_df,
+        cand, idx_new, cnt_new, index.table("shingles"), index.table("counts"),
         id_col, threshold, prune_index=min_band_collisions > 1,
     )
 
@@ -839,18 +825,6 @@ def winnow_fingerprints(df: DataFrame, id_col: str, text_col: str,
 # ---------------------------------------------------------------------------
 
 
-class WinnowIndex:
-    """Handle over a persisted winnowing fingerprint index."""
-
-    def __init__(self, spark, path: str, meta: dict):
-        import os
-
-        self.path = path
-        self.meta = meta
-        self.fps_df = read_parquet(spark, os.path.join(path, "fps"))
-        self.counts_df = read_parquet(spark, os.path.join(path, "counts"))
-
-
 def _winnow_frames(df: DataFrame, id_col: str, text_col: str,
                    k: int, w: int):
     # the fingerprint frame feeds candidates, verification AND the
@@ -909,12 +883,12 @@ def append_to_winnow_index(df: DataFrame, path: str,
     fps.write.mode("append").parquet(os.path.join(path, "fps"))
 
 
-def read_winnow_index(spark, path: str) -> WinnowIndex:
-    return WinnowIndex(spark, path, read_meta(spark, path, "winnow"))
+def read_winnow_index(spark, path: str) -> IndexHandle:
+    return IndexHandle(spark, path, "winnow")
 
 
 def cross_corpus_winnow_pairs_indexed(
-    df_new: DataFrame, index: WinnowIndex, min_shared: int = 2,
+    df_new: DataFrame, index: IndexHandle, min_shared: int = 2,
     max_ref_df: int | None = 64,
 ) -> DataFrame:
     """New-batch-vs-standing containment over the PERSISTED winnowing
@@ -933,7 +907,7 @@ def cross_corpus_winnow_pairs_indexed(
         df_new, id_col, meta["text_col"], meta["k"], meta["w"]
     )
     ref_ok = (
-        index.fps_df.groupBy("h").count()
+        index.table("fps").groupBy("h").count()
         .filter(
             F.col("count")
             <= (1 << 62 if max_ref_df is None else max_ref_df)
@@ -942,13 +916,13 @@ def cross_corpus_winnow_pairs_indexed(
     )
     cand = (
         fps_new.select(F.col(id_col).alias("doc_a"), "h")
-        .join(index.fps_df.join(ref_ok, on="h", how="left_semi")
+        .join(index.table("fps").join(ref_ok, on="h", how="left_semi")
               .select(F.col(id_col).alias("doc_b"), "h"), on="h")
         .select("doc_a", "doc_b")
         .distinct()
     )
     f1 = fps_new.select(F.col(id_col).alias("doc_a"), "h")
-    f2 = index.fps_df.select(F.col(id_col).alias("doc_b"), "h")
+    f2 = index.table("fps").select(F.col(id_col).alias("doc_b"), "h")
     shared = (
         cand.join(f1, on="doc_a")
         .join(f2, on=["doc_b", "h"])
@@ -957,7 +931,7 @@ def cross_corpus_winnow_pairs_indexed(
         .filter(F.col("n_shared") >= min_shared)
     )
     ca = cnt_new.select(F.col(id_col).alias("doc_a"), F.col("nf").alias("_fa"))
-    cb = index.counts_df.select(
+    cb = index.table("counts").select(
         F.col(id_col).alias("doc_b"), F.col("nf").alias("_fb")
     )
     from cpx_etl_spark.queries import fround

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -41,8 +42,7 @@ from pyspark.sql import functions as F
 from cpx_etl_spark.functions.vectors import as_double, cosine, dot, norm
 from cpx_etl_spark.operators.cut import cut
 from cpx_etl_spark.operators.dedup import observe_count, validate_new_ids
-from cpx_etl_spark.scratch import publish_meta, read_meta
-from cpx_etl_spark.sources.registry import read_parquet
+from cpx_etl_spark.scratch import IndexHandle, publish_meta
 
 _QUANT = 1000000.0  # embedding quantization scale (floor(x * 1e6))
 
@@ -108,6 +108,37 @@ def _ranked(pairs: DataFrame, k: int) -> DataFrame:
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cos", "rank")
     )
+
+
+def _exact_rerank(
+    approx: DataFrame, queries: DataFrame, vectors: DataFrame,
+    id_col: str, vec_col: str, k: int, rerank: int,
+) -> DataFrame:
+    """The tail of every approximate scan: keep the top ``rerank * k``
+    candidates per query of ``approx`` (query_id, neighbor_id, approx),
+    join their ``vectors`` (neighbor_id, v_c) and rank them by the exact
+    6dp cosine against the original ``queries``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("approx").desc(), F.col("neighbor_id")
+    )
+    cand = (
+        approx.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= rerank * k)
+        .select("query_id", "neighbor_id")
+    )
+    q = queries.select(
+        F.col(id_col).alias("query_id"), as_double(vec_col).alias("v_q")
+    )
+    pairs = (
+        cand.join(vectors, on="neighbor_id")
+        .join(F.broadcast(q), on="query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(cosine(F.col("v_q"), F.col("v_c")) - 1e-9, 6).alias("cos"),
+        )
+    )
+    return _ranked(pairs, k)
 
 
 def brute_force_topk(
@@ -1084,21 +1115,6 @@ def ivf_topk(
 # ---------------------------------------------------------------------------
 
 
-
-class IvfIndex:
-    """Handle over a persisted IVF index: tiny centroids table + cell-
-    clustered assignments (each cell's vectors sit in few parquet row
-    groups, so an nprobe-cell query reads a sliver of the corpus)."""
-
-    def __init__(self, spark, path: str, meta: dict):
-        import os
-
-        self.path = path
-        self.meta = meta
-        self.centroids_df = read_parquet(spark, os.path.join(path, "centroids"))
-        self.assignments_df = read_parquet(spark, os.path.join(path, "assignments"))
-
-
 def write_ivf_index(
     corpus: DataFrame, path: str, id_col: str, vec_col: str, cell_col: str,
 ) -> None:
@@ -1119,8 +1135,11 @@ def write_ivf_index(
                  {"id_col": id_col, "vec_col": vec_col, "cell_col": cell_col})
 
 
-def read_ivf_index(spark, path: str) -> IvfIndex:
-    return IvfIndex(spark, path, read_meta(spark, path, "ivf"))
+def read_ivf_index(spark, path: str) -> IndexHandle:
+    """Tables: centroids (tiny) and the cell-clustered assignments (each
+    cell's vectors sit in few parquet row groups, so an nprobe-cell
+    query reads a sliver of the corpus)."""
+    return IndexHandle(spark, path, "ivf")
 
 
 def append_to_ivf_index(
@@ -1150,22 +1169,22 @@ def append_to_ivf_index(
     if validate_unique:
         validate_new_ids(
             df_new,
-            idx.assignments_df.select(F.col("neighbor_id").alias(id_col)),
+            idx.table("assignments").select(F.col("neighbor_id").alias(id_col)),
             id_col, "append_to_ivf_index", path,
         )
     # bounded broadcast only while the cell count is (classic-IVF)
     # small — an index trained with corpus-sized k must not pin a
     # corpus-scale centroid frame on append either (the ivf_build
     # guard; the centroid count is a tiny column-pruned scan)
-    k_cells = idx.centroids_df.count()
+    k_cells = idx.table("centroids").count()
     assigned = assign_to_centroids(
-        df_new, idx.centroids_df, id_col, vec_col,
+        df_new, idx.table("centroids"), id_col, vec_col,
         broadcast_centroids=(k_cells <= _IVF_BROADCAST_K_MAX),
     )
     # idempotent resume: drop rows already landed, so a crashed append
     # re-runs to completion instead of duplicating serve candidates
     assigned = assigned.join(
-        idx.assignments_df.select("neighbor_id"),
+        idx.table("assignments").select("neighbor_id"),
         on="neighbor_id", how="left_anti",
     )
     write_clustered_parquet(
@@ -1184,37 +1203,6 @@ def append_to_ivf_index(
 # append's dynamic partition overwrite rewrites a BOUNDED set of
 # directories even when k (cell count) grows with the corpus.
 _KNN_EDGE_PARTS = 64
-
-
-class KnnGraphIndex:
-    """Handle over a persisted kNN-graph index: tiny centroids,
-    cell-clustered assignments, and the per-vector top-3 edge table
-    partitioned by pcell for incremental maintenance. The edges table
-    opens LAZILY: the append path never reads it, and an open costs a
-    64-partition directory walk + footer read it shouldn't pay
-    (code-review r15)."""
-
-    def __init__(self, spark, path: str, meta: dict):
-        import os
-
-        self._spark = spark
-        self.path = path
-        self.meta = meta
-        self.centroids_df = read_parquet(spark, os.path.join(path, "centroids"))
-        self.assignments_df = read_parquet(
-            spark, os.path.join(path, "assignments")
-        )
-        self._edges_df = None
-
-    @property
-    def edges_df(self) -> DataFrame:
-        import os
-
-        if self._edges_df is None:
-            self._edges_df = read_parquet(
-                self._spark, os.path.join(self.path, "edges")
-            )
-        return self._edges_df
 
 
 def write_knn_graph_index(
@@ -1258,8 +1246,11 @@ def write_knn_graph_index(
                   "n_bits": n_bits, "dim": dim, "edge_parts": _KNN_EDGE_PARTS})
 
 
-def read_knn_graph_index(spark, path: str) -> KnnGraphIndex:
-    return KnnGraphIndex(spark, path, read_meta(spark, path, "knn_graph"))
+def read_knn_graph_index(spark, path: str) -> IndexHandle:
+    """Tables: centroids (tiny), cell-clustered assignments, and the
+    per-vector top-3 edges partitioned by pcell (the append path never
+    opens those)."""
+    return IndexHandle(spark, path, "knn_graph")
 
 
 def append_to_knn_graph_index(
@@ -1292,7 +1283,7 @@ def append_to_knn_graph_index(
     if validate_unique:
         validate_new_ids(
             df_new,
-            idx.assignments_df.select(F.col("neighbor_id").alias(id_col)),
+            idx.table("assignments").select(F.col("neighbor_id").alias(id_col)),
             id_col, "append_to_knn_graph_index", path,
         )
     weights = hyperplane_weights(1, n_bits, meta["dim"], tag="tc")
@@ -1301,7 +1292,7 @@ def append_to_knn_graph_index(
         F.col(id_col), as_double(vec_col).alias("v"), F.col("_seed_cell")
     )
     new_assigned, _fb = lsh_assign_to_cells(
-        vecs, idx.centroids_df, weights[0], id_col, dim=meta["dim"]
+        vecs, idx.table("centroids"), weights[0], id_col, dim=meta["dim"]
     )
     # idempotent resume: drop rows already in the stored assignments —
     # a full re-run becomes a no-op (no edge rewrite, no append) and a
@@ -1312,7 +1303,7 @@ def append_to_knn_graph_index(
     # kept, not timed: the collect, the edge write and the append read
     # one snapshot of this anti-join, whose input the append changes
     new_assigned = new_assigned.join(
-        idx.assignments_df.select("neighbor_id"),
+        idx.table("assignments").select("neighbor_id"),
         on="neighbor_id", how="left_anti",
     ).transform(cut, eager=True)
     touched = sorted(
@@ -1323,7 +1314,7 @@ def append_to_knn_graph_index(
         return touched  # nothing new to land
     # members of every cell living in a touched partition: stored rows
     # (cell-clustered parquet — the filter prunes row groups) + new
-    members = idx.assignments_df.filter(
+    members = idx.table("assignments").filter(
         (F.col("cell") % parts).isin(touched)
     ).unionByName(new_assigned)
     edges_new = knn_edges_from_assigned(members, dim=meta["dim"]).withColumn(
@@ -1352,15 +1343,15 @@ def append_to_knn_graph_index(
 
 
 def ivf_topk_indexed(
-    queries: DataFrame, index: IvfIndex, id_col: str, vec_col: str,
+    queries: DataFrame, index: IndexHandle, id_col: str, vec_col: str,
     k: int = 10, nprobe: int = 2, dim: int | None = None,
 ) -> DataFrame:
     """ANN serving against a persisted IVF index: the corpus is never
     re-scanned or re-assigned — probing reads the stored centroids
     (broadcast) and only the probed cells' assignment rows."""
     return ivf_serve(
-        queries, index.centroids_df, index.assignments_df, id_col, vec_col,
-        k=k, nprobe=nprobe, dim=dim,
+        queries, index.table("centroids"), index.table("assignments"),
+        id_col, vec_col, k=k, nprobe=nprobe, dim=dim,
     )
 
 
@@ -1370,19 +1361,6 @@ def ivf_topk_indexed(
 # vectors stored once, fresh batches probe without re-indexing the
 # standing corpus.
 # ---------------------------------------------------------------------------
-
-
-
-class EmbeddingIndex:
-    """Handle over a persisted sign-LSH embedding index."""
-
-    def __init__(self, spark, path: str, meta: dict):
-        import os
-
-        self.path = path
-        self.meta = meta
-        self.buckets_df = read_parquet(spark, os.path.join(path, "buckets"))
-        self.vectors_df = read_parquet(spark, os.path.join(path, "vectors"))
 
 
 def write_embedding_index(
@@ -1420,12 +1398,13 @@ def write_embedding_index(
                   "dim": dim, "n_tables": n_tables, "n_bits": n_bits, "tag": tag})
 
 
-def read_embedding_index(spark, path: str) -> EmbeddingIndex:
-    return EmbeddingIndex(spark, path, read_meta(spark, path, "embedding_lsh"))
+def read_embedding_index(spark, path: str) -> IndexHandle:
+    """Tables: buckets (with the sketch column) and vectors."""
+    return IndexHandle(spark, path, "embedding_lsh")
 
 
 def cross_corpus_embedding_pairs_indexed(
-    df_new: DataFrame, index: EmbeddingIndex,
+    df_new: DataFrame, index: IndexHandle,
     max_bucket: int | None = None,
     sketch_false_drop: float = 1e-3,
     stats: dict | None = None,
@@ -1444,7 +1423,7 @@ def cross_corpus_embedding_pairs_indexed(
         hyperplane_weights(meta["n_tables"], meta["n_bits"], dim, meta["tag"]),
         sketch=sketch_planes(dim),
     )
-    buckets_ref = index.buckets_df
+    buckets_ref = index.table("buckets")
     if max_bucket is not None:
         buckets_ref = prune_hot_buckets(buckets_ref, max_bucket)
     a = idx_new.select(
@@ -1464,7 +1443,7 @@ def cross_corpus_embedding_pairs_indexed(
     va = df_new.select(
         F.col(id_col).alias("vec_a"), as_double(vec_col).alias("_va")
     ).withColumn("_na", norm(F.col("_va")))
-    vb = index.vectors_df.select(
+    vb = index.table("vectors").select(
         F.col(id_col).alias("vec_b"), F.col("_vec").alias("_vb")
     ).withColumn("_nb", norm(F.col("_vb")))
     return (
@@ -1538,8 +1517,9 @@ def sq8_topk(
 ) -> DataFrame:
     """ANN over the COMPRESSED index: the scan ranks by the dot product
     of the full-precision query against the code-reconstructed corpus
-    vector (sequential left-fold — DuckDB-replayable), keeps rerank*k
-    candidates per query, then reranks exactly on the true vectors.
+    vector (sequential left-fold — DuckDB-replayable), then
+    _exact_rerank keeps rerank*k candidates per query and reranks them
+    on the true vectors.
     Same plan family as brute force but the scan side reads 4x fewer
     bytes — the memory/IO trade every billion-vector deployment makes."""
     bounds = sq8_bounds(corpus, vec_col)
@@ -1564,27 +1544,10 @@ def sq8_topk(
         "neighbor_id",
         F.round(dot(F.col("v_q"), F.col("xr")) - 1e-9, 6).alias("approx"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), F.col("neighbor_id")
-    )
-    cand = (
-        ap.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= rerank * k)
-        .select("query_id", "neighbor_id")
-    )
     c_vec = corpus.select(
         F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("v_c")
     )
-    pairs = (
-        cand.join(c_vec, on="neighbor_id")
-        .join(F.broadcast(q), on="query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("v_q"), F.col("v_c")) - 1e-9, 6).alias("cos"),
-        )
-    )
-    return _ranked(pairs, k)
+    return _exact_rerank(ap, queries, c_vec, id_col, vec_col, k, rerank)
 
 
 # ---------------------------------------------------------------------------
@@ -1828,8 +1791,8 @@ def pq_encode(corpus: DataFrame, id_col: str, vec_col: str,
 
 def pack_codes(codes: DataFrame) -> DataFrame:
     """(vid, j, code) -> (vid, codes[m]): the m-small-ints packed ADC
-    scan payload every PQ-family index stores. Shared by the index
-    writers and the append path so the stored layout can't drift."""
+    scan payload every PQ-family index stores. Shared by write_pq_index
+    and append_to_pq_index so the stored layout can't drift."""
     return codes.groupBy("vid").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("j", "code"))),
@@ -1867,852 +1830,294 @@ def pq_distortion(corpus: DataFrame, id_col: str, vec_col: str,
     )
 
 
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m: int = 8,
-    k_codes: int = 16,
-    dim: int = 64,
-    k: int = 10,
-    rerank: int = 3,
-) -> DataFrame:
-    """PQ ANN with asymmetric distance computation (ADC): each query
-    precomputes an m x k_codes lookup table of partial dot products
-    against the codebook (tiny, broadcast), the approximate score of a
-    corpus vector is the SUM of m LUT entries selected by its codes —
-    the scan touches only the m-byte codes, never the float vectors —
-    and the top rerank*k candidates per query rerank exactly. Partial
-    dots round to 6dp then sum as DECIMAL, so the approximate score is
-    order-independent and the oracle replays even the approximation
-    error. This is the memory layout every billion-vector serving
-    system uses (FAISS IVFPQ's PQ half)."""
-    cb = pq_train(corpus, id_col, vec_col, m=m, k_codes=k_codes, dim=dim)
-    codes = pq_encode(corpus, id_col, vec_col, cb, m=m, dim=dim)
-    vectors = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("v_c")
-    )
-    return _pq_serve(
-        queries, cb, codes, vectors, id_col, vec_col, m=m, dim=dim,
-        k=k, rerank=rerank,
+# ---------------------------------------------------------------------------
+# The PQ-family index: PQ, OPQ, IVFPQ and residual IVFPQ
+#
+# One index whose meta says what it stores beside the codebook, the
+# codes and the rerank vectors: ``tag`` (the seed tag of an OPQ
+# rotation applied before quantization, or None), ``cell_col`` (the
+# column IVF coarse cells train on, or None) and ``by_residual``
+# (codes quantize v - centroid(cell(v)), FAISS's default). pq_build
+# derives it in memory, write_pq_index persists that build,
+# read_pq_index reads it back, append_to_pq_index adds a batch against
+# the stored artifacts, and pq_serve runs the ADC scan over either.
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class PqFrames:
+    """One PQ-family index as the frames pq_serve scans: ``meta`` (its
+    shape and parameters, as write_pq_index publishes it), ``codebook``
+    (j, code, cent), ``codes`` (vid, j, code), ``vectors`` (neighbor_id,
+    v_c) for the exact rerank and, for a cell index, ``centroids``
+    (cell, centroid) and ``cells`` (vid, cell). ``stored``: read back
+    from parquet, where ``cells`` also holds the packed codes[m]."""
+
+    meta: dict
+    codebook: DataFrame
+    codes: DataFrame
+    vectors: DataFrame
+    centroids: DataFrame | None = None
+    cells: DataFrame | None = None
+    stored: bool = False
+
+
+def _residuals(assigned: DataFrame, centroids: DataFrame, id_col: str,
+               vec_col: str, broadcast: bool) -> DataFrame:
+    """(id_col, vec_col = v - centroid(cell(v))) for ``assigned``
+    (neighbor_id, v_c, cell): the frame a by_residual codebook trains on
+    and encodes."""
+    cents = F.broadcast(centroids) if broadcast else centroids
+    return assigned.join(cents, "cell").select(
+        F.col("neighbor_id").alias(id_col),
+        F.zip_with("v_c", "centroid", lambda a, b: a - b).alias(vec_col),
     )
 
 
-def _pq_serve(
-    queries: DataFrame,
-    cb: DataFrame,
-    codes: DataFrame,
-    vectors: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m: int,
-    dim: int,
-    k: int,
-    rerank: int,
-    rerank_queries: DataFrame | None = None,
-) -> DataFrame:
-    """ADC serving half over (possibly persisted) PQ artifacts: ``cb``
-    (j, code, cent), ``codes`` (vid, j, code), ``vectors``
-    (neighbor_id, v_c) for the exact rerank. ``rerank_queries``
-    optionally supplies a different query frame for the exact-rerank
-    cosine (the OPQ path scores the ADC scan in ROTATED space but
-    reranks in the original space); defaults to ``queries``."""
-    q = (rerank_queries if rerank_queries is not None else queries).select(
-        F.col(id_col).alias("query_id"), as_double(vec_col).alias("v_q")
-    )
-    qsv = _pq_subvectors(queries, id_col, vec_col, m, dim).select(
-        F.col("vid").alias("query_id"), "j", F.col("sv").alias("qv")
-    )
-    lut = qsv.join(F.broadcast(cb), "j").select(
-        "query_id",
-        "j",
-        "code",
-        F.round(dot(F.col("qv"), F.col("cent"), dim // m) - 1e-9, 6).alias("pdot"),
-    )
-    ap = (
-        codes.join(F.broadcast(lut), ["j", "code"])
-        .filter(F.col("vid") != F.col("query_id"))
-        .groupBy("query_id", "vid")
-        .agg(F.sum(F.col("pdot").cast("decimal(20,6)")).alias("approx"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), F.col("vid")
-    )
-    cand = (
-        ap.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= rerank * k)
-        .select("query_id", F.col("vid").alias("neighbor_id"))
-    )
-    pairs = (
-        cand.join(vectors, on="neighbor_id")
-        .join(F.broadcast(q), on="query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("v_q"), F.col("v_c")) - 1e-9, 6).alias("cos"),
+def _unpack_codes(packed: DataFrame) -> DataFrame:
+    """(vid, codes[m]) -> (vid, j, code): a stored table as ADC input."""
+    return packed.select("vid", F.posexplode("codes").alias("j", "code"))
+
+
+def pq_build(
+    corpus: DataFrame, id_col: str, vec_col: str,
+    m: int = 8, k_codes: int = 16, dim: int = 64,
+    tag: str | None = None, cell_col: str | None = None,
+    by_residual: bool = False,
+) -> PqFrames:
+    """Train and encode one PQ-family index in memory: rotate_vectors
+    with the seeded matrix of ``tag`` (OPQ), or ivf_build over
+    ``cell_col`` and, with ``by_residual``, the residuals against the
+    cell centroids; then pq_train and pq_encode on the result. The
+    rerank vectors stay the ORIGINAL ones, so reported cosines compare
+    across the family. The four shapes are plain PQ, OPQ (``tag``),
+    IVFPQ (``cell_col``) and residual IVFPQ (``cell_col`` and
+    ``by_residual``); any other combination raises."""
+    if (tag is not None and cell_col is not None) or (
+            by_residual and cell_col is None):
+        raise ValueError(
+            "pq_build: the shapes are PQ, OPQ (tag), IVFPQ (cell_col) and "
+            "residual IVFPQ (cell_col, by_residual)"
         )
+    meta = {"id_col": id_col, "vec_col": vec_col, "m": m, "k_codes": k_codes,
+            "dim": dim, "tag": tag, "cell_col": cell_col,
+            "by_residual": by_residual}
+    src, centroids, cells = corpus, None, None
+    if tag is not None:
+        src = rotate_vectors(corpus, id_col, vec_col, opq_rotation(dim, tag), dim)
+    if cell_col is not None:
+        centroids, assigned = ivf_build(corpus, id_col, vec_col, cell_col, dim=dim)
+        cells = assigned.select(F.col("neighbor_id").alias("vid"), "cell")
+        if by_residual:
+            src = _residuals(assigned, centroids, id_col, vec_col, True)
+    codebook = pq_train(src, id_col, vec_col, m=m, k_codes=k_codes, dim=dim)
+    return PqFrames(
+        meta, codebook, pq_encode(src, id_col, vec_col, codebook, m=m, dim=dim),
+        corpus.select(
+            F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("v_c")
+        ),
+        centroids, cells,
     )
-    return _ranked(pairs, k)
-
-
-# ---------------------------------------------------------------------------
-# Persisted PQ index — train/encode once, serve many (the PQ member of
-# the persisted-index family: MinHash signatures, IVF, embedding LSH)
-# ---------------------------------------------------------------------------
-
-
-
-class PqIndex:
-    """Handle over a persisted PQ index: tiny codebook + packed codes
-    (m small ints per vector — the ADC scan payload) + the full
-    vectors for exact rerank."""
-
-    def __init__(self, spark, path: str, meta: dict):
-        import os
-
-        self.meta = meta
-        self.codebook_df = read_parquet(spark, os.path.join(path, "codebook"))
-        self.codes_df = read_parquet(spark, os.path.join(path, "codes"))
-        self.vectors_df = read_parquet(spark, os.path.join(path, "vectors"))
 
 
 def write_pq_index(
     corpus: DataFrame, path: str, id_col: str, vec_col: str,
     m: int = 8, k_codes: int = 16, dim: int = 64,
+    tag: str | None = None, cell_col: str | None = None,
+    by_residual: bool = False,
 ) -> None:
-    """Train and persist the PQ index: codebook/ (m*k_codes rows, one
-    small file), codes/ (vid, codes[m] packed), vectors/ (neighbor_id,
-    v) for rerank. Training and encoding run ONCE at build; serving
-    never re-derives them."""
+    """Persist pq_build's index: codebook/ (m*k_codes rows, one file),
+    vectors/ (neighbor_id, v_c) for the rerank, and the packed codes —
+    codes/ (vid, codes[m]), or for a cell index cells/ (vid, cell,
+    codes[m]) clustered by cell beside centroids/ (one file), so a
+    probed-cell scan reads few row groups. The build's meta, which
+    carries the shape, is published last. Training, rotation,
+    assignment and encoding run once; serving never re-derives them."""
     import os
 
-    cb = pq_train(corpus, id_col, vec_col, m=m, k_codes=k_codes, dim=dim)
-    codes = pq_encode(corpus, id_col, vec_col, cb, m=m, dim=dim)
-    packed = pack_codes(codes)
-    vectors = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("v")
-    )
+    from cpx_etl_spark.sources.sinks import write_clustered_parquet
+
+    built = pq_build(corpus, id_col, vec_col, m=m, k_codes=k_codes, dim=dim,
+                     tag=tag, cell_col=cell_col, by_residual=by_residual)
+    packed = pack_codes(built.codes)
     os.makedirs(path, exist_ok=True)
-    cb.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "codebook"))
-    packed.write.mode("overwrite").parquet(os.path.join(path, "codes"))
-    vectors.write.mode("overwrite").parquet(os.path.join(path, "vectors"))
-    publish_meta(corpus.sparkSession, path, "pq",
-                 {"id_col": id_col, "vec_col": vec_col, "m": m,
-                  "k_codes": k_codes, "dim": dim})
+    built.codebook.coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(path, "codebook"))
+    built.vectors.write.mode("overwrite").parquet(os.path.join(path, "vectors"))
+    if cell_col is None:
+        packed.write.mode("overwrite").parquet(os.path.join(path, "codes"))
+    else:
+        built.centroids.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(path, "centroids"))
+        write_clustered_parquet(built.cells.join(packed, on="vid"),
+                                os.path.join(path, "cells"), ["cell"])
+    publish_meta(corpus.sparkSession, path, "pq", built.meta)
 
 
-def read_pq_index(spark, path: str) -> PqIndex:
-    return PqIndex(spark, path, read_meta(spark, path, "pq"))
-
-
-def _append_pq_batch(
-    df_new: DataFrame, path: str, idx: "PqIndex",
-    encode_input: DataFrame,
-) -> None:
-    """Shared tail of the PQ-family append: encode ``encode_input``
-    against the STORED codebook and append packed codes beside the
-    standing ones, original float vectors beside the rerank table.
-    Vectors land FIRST: a crash between the two writes leaves extra
-    rerank rows that are unreachable (never ADC candidates) — harmless
-    — while the reverse order would serve candidates whose rerank
-    join-back silently drops them (the winnow-index crash-ordering
-    contract, operators/dedup.py). Each write anti-joins the stored
-    ids first (a bounded column-pruned scan), so a crashed append
-    RE-RUNS to completion idempotently instead of duplicating rerank
-    rows (code-review r15). Insert-if-absent: see append_to_ivf_index
-    for the changed-payload contract."""
-    import os
-
-    meta = idx.meta
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    m, dim = meta["m"], meta["dim"]
-    vectors = df_new.select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("v")
-    ).join(
-        idx.vectors_df.select("neighbor_id"), on="neighbor_id",
-        how="left_anti",
-    )
-    vectors.write.mode("append").parquet(os.path.join(path, "vectors"))
-    codes = pq_encode(
-        encode_input, id_col, vec_col, idx.codebook_df, m=m, dim=dim
-    )
-    packed = pack_codes(codes).join(
-        idx.codes_df.select("vid"), on="vid", how="left_anti"
-    )
-    packed.write.mode("append").parquet(os.path.join(path, "codes"))
+def read_pq_index(spark, path: str) -> PqFrames:
+    """The persisted PQ-family index at ``path``, shaped by its meta."""
+    idx = IndexHandle(spark, path, "pq")
+    if idx.meta["cell_col"] is None:
+        return PqFrames(idx.meta, idx.table("codebook"),
+                        _unpack_codes(idx.table("codes")), idx.table("vectors"),
+                        stored=True)
+    cells = idx.table("cells")
+    return PqFrames(idx.meta, idx.table("codebook"), _unpack_codes(cells),
+                    idx.table("vectors"), idx.table("centroids"), cells,
+                    stored=True)
 
 
 def append_to_pq_index(
     df_new: DataFrame, path: str, validate_unique: bool = False,
 ) -> None:
-    """FAISS ``add()`` for the persisted PQ index: the new batch
-    encodes against the STORED codebook (pq_encode — identical min_by
-    construction as the build, so append == rebuild at a fixed
-    codebook is bit-exact); codebooks never retrain on append."""
-    idx = read_pq_index(df_new.sparkSession, path)
-    if validate_unique:
-        # validated against CODES — the last-written table — so a
-        # crashed half-append (vectors landed, codes not) passes and
-        # resumes, while a genuinely re-ingested batch refuses
-        validate_new_ids(
-            df_new,
-            idx.codes_df.select(F.col("vid").alias(idx.meta["id_col"])),
-            idx.meta["id_col"], "append_to_pq_index", path,
-        )
-    _append_pq_batch(df_new, path, idx, df_new)
+    """FAISS ``add()`` for a persisted PQ-family index, shaped by its
+    meta: the batch rotates with the stored tag, assigns to the STORED
+    centroids, and its vectors (or residuals) encode against the STORED
+    codebook — the build's own constructions at fixed artifacts, so
+    append == rebuild bit-exactly; nothing retrains.
 
-
-def append_to_opq_index(
-    df_new: DataFrame, path: str, validate_unique: bool = False,
-) -> None:
-    """FAISS ``add()`` for the persisted OPQ index: the new batch is
-    rotated with the index's stored tag (opq_rotation is seeded and
-    parameter-free, so the matrix is identical to the build's) and
-    encodes against the STORED rotated-space codebook; the ORIGINAL
-    vectors append to the rerank table."""
-    idx = read_opq_index(df_new.sparkSession, path)
-    meta = idx.meta
-    if validate_unique:
-        # codes are the last-written table — see append_to_pq_index
-        validate_new_ids(
-            df_new,
-            idx.codes_df.select(F.col("vid").alias(meta["id_col"])),
-            meta["id_col"], "append_to_opq_index", path,
-        )
-    rot = opq_rotation(meta["dim"], tag=meta["tag"])
-    rnew = rotate_vectors(
-        df_new, meta["id_col"], meta["vec_col"], rot, meta["dim"]
-    )
-    _append_pq_batch(df_new, path, idx, rnew)
-
-
-def pq_topk_indexed(
-    queries: DataFrame, index: PqIndex, id_col: str, vec_col: str,
-    k: int = 10, rerank: int = 3,
-) -> DataFrame:
-    """ANN serving against the persisted PQ index: the ADC scan reads
-    only the packed codes table (m small ints per vector); the
-    codebook broadcasts; the full vectors are touched only for the
-    rerank*k candidates per query."""
-    m, dim = index.meta["m"], index.meta["dim"]
-    codes = index.codes_df.select(
-        "vid", F.posexplode("codes").alias("j", "code")
-    )
-    vectors = index.vectors_df.select(
-        "neighbor_id", F.col("v").alias("v_c")
-    )
-    return _pq_serve(
-        queries, index.codebook_df, codes, vectors, id_col, vec_col,
-        m=m, dim=dim, k=k, rerank=rerank,
-    )
-
-
-
-
-def write_opq_index(
-    corpus: DataFrame, path: str, id_col: str, vec_col: str,
-    m: int = 8, k_codes: int = 16, dim: int = 64, tag: str = "opq",
-) -> None:
-    """Train and persist the OPQ index: the PQ index layout with
-    codebook/ and codes/ living in ROTATED space and vectors/ kept
-    ORIGINAL for the exact rerank. The rotation itself is seeded and
-    parameter-free (opq_rotation), so the index stores only its tag —
-    serving re-derives the identical ±1 matrix; nothing float-trained
-    leaves the engine."""
-    import os
-
-    rot = opq_rotation(dim, tag=tag)
-    rcorpus = rotate_vectors(corpus, id_col, vec_col, rot, dim)
-    cb = pq_train(rcorpus, id_col, vec_col, m=m, k_codes=k_codes, dim=dim)
-    codes = pq_encode(rcorpus, id_col, vec_col, cb, m=m, dim=dim)
-    packed = pack_codes(codes)
-    vectors = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("v")
-    )
-    os.makedirs(path, exist_ok=True)
-    cb.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "codebook"))
-    packed.write.mode("overwrite").parquet(os.path.join(path, "codes"))
-    vectors.write.mode("overwrite").parquet(os.path.join(path, "vectors"))
-    publish_meta(corpus.sparkSession, path, "opq",
-                 {"id_col": id_col, "vec_col": vec_col, "m": m,
-                  "k_codes": k_codes, "dim": dim, "tag": tag})
-
-
-def read_opq_index(spark, path: str) -> PqIndex:
-    return PqIndex(spark, path, read_meta(spark, path, "opq"))
-
-
-def opq_topk_indexed(
-    queries: DataFrame, index: PqIndex, id_col: str, vec_col: str,
-    k: int = 10, rerank: int = 3,
-) -> DataFrame:
-    """ANN serving against the persisted OPQ index: queries rotate
-    through the seeded matrix (re-derived from the stored tag), the
-    ADC scan reads only the packed rotated-space codes, and the
-    rerank*k candidates rerank on the ORIGINAL vectors — reported
-    cosines stay directly comparable to the plain-PQ ladder."""
-    m, dim = index.meta["m"], index.meta["dim"]
-    rot = opq_rotation(dim, tag=index.meta.get("tag", "opq"))
-    rq = rotate_vectors(queries, id_col, vec_col, rot, dim)
-    codes = index.codes_df.select(
-        "vid", F.posexplode("codes").alias("j", "code")
-    )
-    vectors = index.vectors_df.select(
-        "neighbor_id", F.col("v").alias("v_c")
-    )
-    return _pq_serve(
-        rq, index.codebook_df, codes, vectors, id_col, vec_col,
-        m=m, dim=dim, k=k, rerank=rerank, rerank_queries=queries,
-    )
-
-
-# ---------------------------------------------------------------------------
-# IVF x PQ composition (FAISS IVFPQ, by_residual=False) — probe cells,
-# ADC-scan ONLY the probed cells' PQ codes, exact rerank. The standard
-# billion-scale serving index: the scan payload per query is
-# nprobe * (N/k_cells) rows of m small ints, never the float vectors.
-# ---------------------------------------------------------------------------
-
-def ivfpq_serve(
-    queries: DataFrame,
-    centroids: DataFrame,
-    assigned_cells: DataFrame,
-    cb: DataFrame,
-    codes: DataFrame,
-    vectors: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m: int,
-    dim: int,
-    k: int = 10,
-    nprobe: int = 2,
-    rerank: int = 3,
-    probed: DataFrame | None = None,
-) -> DataFrame:
-    """Serving half over (possibly persisted) IVFPQ artifacts:
-    ``centroids`` (cell, centroid), ``assigned_cells`` (vid, cell),
-    ``cb`` (j, code, cent), ``codes`` (vid, j, code), ``vectors``
-    (neighbor_id, v_c) for the exact rerank. ``probed`` (query_id,
-    cell) may be supplied by a caller that already computed the probe
-    assignment (ivfpq_topk_indexed collects it to build the literal
-    pruning filter) — otherwise it is derived here.
-
-    Shape: queries probe the nprobe nearest cells (broadcast
-    centroids); the candidate set is a hash join of the probed cells
-    against the cell-keyed assignments; the ADC score is the sum of m
-    LUT partial dots (6dp-rounded, DECIMAL-summed — order-independent,
-    so the oracle replays the approximation error bit-for-bit)
-    selected by the candidates' codes; the top rerank*k per query
-    rerank exactly against the float vectors. Codes are encoded on the
-    RAW vectors (FAISS by_residual=False) so one codebook serves every
-    cell and the oracle stays a single replayable derivation."""
-    if probed is None:
-        probed = _probe_cells(queries, centroids, id_col, vec_col, nprobe,
-                              dim=dim)
-    cellmates = (
-        assigned_cells.join(probed.select("query_id", "cell"), on="cell")
-        .filter(F.col("vid") != F.col("query_id"))
-        .select("query_id", "vid")
-    )
-    qsv = _pq_subvectors(queries, id_col, vec_col, m, dim).select(
-        F.col("vid").alias("query_id"), "j", F.col("sv").alias("qv")
-    )
-    lut = qsv.join(F.broadcast(cb), "j").select(
-        "query_id",
-        "j",
-        "code",
-        F.round(dot(F.col("qv"), F.col("cent"), dim // m) - 1e-9, 6).alias("pdot"),
-    )
-    ap = (
-        cellmates.join(codes, on="vid")
-        .join(F.broadcast(lut), ["query_id", "j", "code"])
-        .groupBy("query_id", "vid")
-        .agg(F.sum(F.col("pdot").cast("decimal(20,6)")).alias("approx"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), F.col("vid")
-    )
-    cand = (
-        ap.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= rerank * k)
-        .select("query_id", F.col("vid").alias("neighbor_id"))
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(vec_col).alias("v_q")
-    )
-    pairs = (
-        cand.join(vectors, on="neighbor_id")
-        .join(F.broadcast(q), on="query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("v_q"), F.col("v_c")) - 1e-9, 6).alias("cos"),
-        )
-    )
-    return _ranked(pairs, k)
-
-
-def ivfpq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    cell_col: str,
-    k: int = 10,
-    nprobe: int = 2,
-    m: int = 8,
-    k_codes: int = 16,
-    dim: int = 64,
-    rerank: int = 3,
-) -> DataFrame:
-    """IVFPQ ANN, one-shot: ivf_build (cells + centroids) composed with
-    pq_train/pq_encode (codebook + codes), served by ivfpq_serve. A
-    deployment trains once and serves many — persist the build half
-    with write_ivfpq_index and serve via ivfpq_topk_indexed."""
-    centroids, assigned = ivf_build(corpus, id_col, vec_col, cell_col, dim=dim)
-    cb = pq_train(corpus, id_col, vec_col, m=m, k_codes=k_codes, dim=dim)
-    codes = pq_encode(corpus, id_col, vec_col, cb, m=m, dim=dim)
-    vectors = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("v_c")
-    )
-    return ivfpq_serve(
-        queries,
-        centroids,
-        assigned.select(F.col("neighbor_id").alias("vid"), "cell"),
-        cb,
-        codes,
-        vectors,
-        id_col,
-        vec_col,
-        m=m,
-        dim=dim,
-        k=k,
-        nprobe=nprobe,
-        rerank=rerank,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Persisted IVFPQ index — the composed member of the persisted-index
-# family (MinHash signatures, IVF, embedding LSH, PQ)
-# ---------------------------------------------------------------------------
-
-
-
-class IvfPqIndex:
-    """Handle over a persisted IVFPQ index: tiny centroids + codebook,
-    cell-clustered (vid, cell, codes[m]) scan table — an nprobe-cell
-    ADC scan reads a sliver of the corpus, and that sliver is m small
-    ints per row — plus the full vectors for exact rerank."""
-
-    def __init__(self, spark, path: str, meta: dict):
-        import os
-
-        self.path = path
-        self.meta = meta
-        self.centroids_df = read_parquet(spark, os.path.join(path, "centroids"))
-        self.codebook_df = read_parquet(spark, os.path.join(path, "codebook"))
-        self.cells_df = read_parquet(spark, os.path.join(path, "cells"))
-        self.vectors_df = read_parquet(spark, os.path.join(path, "vectors"))
-
-
-def write_ivfpq_index(
-    corpus: DataFrame, path: str, id_col: str, vec_col: str, cell_col: str,
-    m: int = 8, k_codes: int = 16, dim: int = 64,
-) -> None:
-    """Train and persist the IVFPQ index: centroids/ + codebook/ (both
-    tiny, one file each), cells/ (vid, cell, codes[m]) clustered by
-    cell so a probed-cell ADC scan prunes to its row groups, vectors/
-    for the rerank. Training, assignment and encoding run ONCE."""
+    Vectors land FIRST: a crash between the two writes leaves rerank
+    rows no scan reaches (harmless), while the reverse order would serve
+    candidates whose rerank join-back silently drops them (the
+    winnow-index crash-ordering contract, operators/dedup.py). Each
+    write anti-joins the stored ids, so a crashed append re-runs to
+    completion; ``validate_unique`` checks the codes table, written
+    last, so that re-run passes while a batch that landed whole is
+    refused. Insert-if-absent: see append_to_ivf_index for the
+    changed-payload contract."""
     import os
 
     from cpx_etl_spark.sources.sinks import write_clustered_parquet
 
-    centroids, assigned = ivf_build(corpus, id_col, vec_col, cell_col)
-    cb = pq_train(corpus, id_col, vec_col, m=m, k_codes=k_codes, dim=dim)
-    codes = pq_encode(corpus, id_col, vec_col, cb, m=m, dim=dim)
-    packed = pack_codes(codes)
-    cells = assigned.select(
-        F.col("neighbor_id").alias("vid"), "cell"
-    ).join(packed, on="vid")
-    vectors = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("v")
-    )
-    os.makedirs(path, exist_ok=True)
-    centroids.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "centroids")
-    )
-    cb.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "codebook"))
-    write_clustered_parquet(cells, os.path.join(path, "cells"), ["cell"])
-    vectors.write.mode("overwrite").parquet(os.path.join(path, "vectors"))
-    publish_meta(corpus.sparkSession, path, "ivfpq",
-                 {"id_col": id_col, "vec_col": vec_col, "cell_col": cell_col,
-                  "m": m, "k_codes": k_codes, "dim": dim})
-
-
-def read_ivfpq_index(spark, path: str) -> IvfPqIndex:
-    return IvfPqIndex(spark, path, read_meta(spark, path, "ivfpq"))
-
-
-def _append_ivfpq_batch(
-    df_new: DataFrame, path: str, idx: IvfPqIndex, by_residual: bool,
-) -> None:
-    """Shared tail of the IVFPQ append: assign the new batch to the
-    STORED centroids, encode (raw or residual) against the STORED
-    codebook, append cell-clustered (vid, cell, codes) rows and the
-    rerank vectors. Vectors land before cells (crash-ordering: extra
-    rerank rows are unreachable; orphan ADC rows would drop at the
-    rerank join)."""
-    import os
-
-    from cpx_etl_spark.sources.sinks import write_clustered_parquet
-
+    idx = IndexHandle(df_new.sparkSession, path, "pq")
     meta = idx.meta
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    m, dim = meta["m"], meta["dim"]
-    # classic-IVF k is bounded, but don't pin a corpus-scale centroid
-    # frame if the index was trained with data-sized k (ivf_build's
-    # broadcast guard; the count is a tiny column-pruned scan)
-    k_cells = idx.centroids_df.count()
-    broadcastable = k_cells <= _IVF_BROADCAST_K_MAX
-    assigned = assign_to_centroids(
-        df_new, idx.centroids_df, id_col, vec_col,
-        broadcast_centroids=broadcastable, dim=dim,
-    )
-    if by_residual:
-        cent_side = (
-            F.broadcast(idx.centroids_df) if broadcastable
-            else idx.centroids_df
+    id_col, vec_col, m, dim = (meta["id_col"], meta["vec_col"], meta["m"],
+                               meta["dim"])
+    codes_table = "codes" if meta["cell_col"] is None else "cells"
+    if validate_unique:
+        validate_new_ids(
+            df_new, idx.table(codes_table).select(F.col("vid").alias(id_col)),
+            id_col, "append_to_pq_index", path,
         )
-        enc_in = assigned.join(cent_side, "cell").select(
-            F.col("neighbor_id").alias("rid"),
-            F.zip_with("v_c", "centroid", lambda a, b: a - b).alias("rvec"),
-        )
-        codes = pq_encode(enc_in, "rid", "rvec", idx.codebook_df, m=m, dim=dim)
-    else:
-        codes = pq_encode(df_new, id_col, vec_col, idx.codebook_df, m=m, dim=dim)
-    cells = assigned.select(
-        F.col("neighbor_id").alias("vid"), "cell"
-    ).join(pack_codes(codes), on="vid")
-    # anti-join each table's stored ids: a crashed append re-runs to
-    # completion idempotently (vectors first — unreachable extras beat
-    # silently-dropped ADC candidates; see _append_pq_batch)
+    src = df_new
+    if meta["tag"] is not None:
+        src = rotate_vectors(df_new, id_col, vec_col,
+                             opq_rotation(dim, meta["tag"]), dim)
+    if meta["cell_col"] is not None:
+        # classic-IVF k is bounded, but an index trained with data-sized
+        # k must not pin a corpus-scale centroid frame (ivf_build's
+        # broadcast guard; the count is a tiny column-pruned scan)
+        centroids = idx.table("centroids")
+        small = centroids.count() <= _IVF_BROADCAST_K_MAX
+        assigned = assign_to_centroids(df_new, centroids, id_col, vec_col,
+                                       broadcast_centroids=small, dim=dim)
+        if meta["by_residual"]:
+            src = _residuals(assigned, centroids, id_col, vec_col, small)
+    packed = pack_codes(
+        pq_encode(src, id_col, vec_col, idx.table("codebook"), m=m, dim=dim))
+    if meta["cell_col"] is not None:
+        packed = assigned.select(
+            F.col("neighbor_id").alias("vid"), "cell").join(packed, on="vid")
+    packed = packed.join(idx.table(codes_table).select("vid"), on="vid",
+                         how="left_anti")
     vectors = df_new.select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("v")
-    ).join(
-        idx.vectors_df.select("neighbor_id"), on="neighbor_id",
-        how="left_anti",
-    )
-    cells = cells.join(
-        idx.cells_df.select("vid"), on="vid", how="left_anti"
-    )
-    vectors.write.mode("append").parquet(os.path.join(path, "vectors"))
-    write_clustered_parquet(
-        cells, os.path.join(path, "cells"), ["cell"], mode="append",
-    )
-
-
-def append_to_ivfpq_index(
-    df_new: DataFrame, path: str, validate_unique: bool = False,
-) -> None:
-    """FAISS ``add()`` for the persisted IVFPQ index: stored-centroid
-    assignment + stored-codebook encode (no retraining), appended
-    cell-clustered so probed-cell pruning keeps working on the grown
-    index."""
-    idx = read_ivfpq_index(df_new.sparkSession, path)
-    if validate_unique:
-        # cells are the last-written table — see append_to_pq_index
-        validate_new_ids(
-            df_new,
-            idx.cells_df.select(F.col("vid").alias(idx.meta["id_col"])),
-            idx.meta["id_col"], "append_to_ivfpq_index", path,
-        )
-    _append_ivfpq_batch(df_new, path, idx, by_residual=False)
-
-
-def ivfpq_topk_indexed(
-    queries: DataFrame, index: IvfPqIndex, id_col: str, vec_col: str,
-    k: int = 10, nprobe: int = 2, rerank: int = 3,
-) -> DataFrame:
-    """ANN serving against the persisted IVFPQ index: centroids and
-    codebook broadcast, the ADC scan reads only the probed cells' rows
-    of the cell-clustered codes table, the float vectors are touched
-    only for the rerank*k candidates per query.
-
-    The probed cell ids are collected first (bounded by
-    |queries| * nprobe — the query side is small by the serving
-    contract, exactly like the registry's other 1-row planning
-    lookups) and applied as a LITERAL isin filter on the cells table:
-    a join could not prune the parquet scan, but the literal predicate
-    reaches the reader and row-group min/max pruning over the
-    cell-clustered files actually fires (code-review r10 — without
-    this the 'reads only the probed cells' claim was aspirational).
-    The (query_id, cell) probe frame is computed twice, for the cell
-    list and inside ivfpq_serve: cutting it measured no faster
-    (PERF.md, "Cuts")."""
-    m, dim = index.meta["m"], index.meta["dim"]
-    probed = _probe_cells(
-        queries, index.centroids_df, id_col, vec_col, nprobe
-    ).select("query_id", "cell")
-    probed_cells = sorted({r["cell"] for r in probed.collect()})
-    cells = index.cells_df.filter(F.col("cell").isin(probed_cells))
-    codes = cells.select("vid", F.posexplode("codes").alias("j", "code"))
-    return ivfpq_serve(
-        queries,
-        index.centroids_df,
-        cells.select("vid", "cell"),
-        index.codebook_df,
-        codes,
-        index.vectors_df.select("neighbor_id", F.col("v").alias("v_c")),
-        id_col,
-        vec_col,
-        m=m,
-        dim=dim,
-        k=k,
-        nprobe=nprobe,
-        rerank=rerank,
-        probed=probed,
-    )
-
-
-def ivfpq_residual_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    cell_col: str,
-    k: int = 10,
-    nprobe: int = 2,
-    m: int = 8,
-    k_codes: int = 16,
-    dim: int = 64,
-    rerank: int = 3,
-) -> DataFrame:
-    """IVFPQ with by_residual=True — the FAISS DEFAULT composition the
-    by_residual=False sibling (ivfpq_topk) approximates: PQ codebooks
-    train on and codes encode the RESIDUALS r = v - centroid(cell(v)),
-    which have much smaller spread than raw vectors, so the same m x
-    k_codes budget quantizes finer. Inner-product ADC decomposes as
-    dot(q, v_hat) = dot(q, centroid) + dot(q, r_hat): the per-(query,
-    probed-cell) centroid term comes from the probe itself, and the LUT
-    of dot(q_j, cent_jc) against the residual codebook stays
-    CELL-INDEPENDENT (m * k_codes rows per query, broadcast) — so the
-    scan cost is identical to the non-residual variant: nprobe cells'
-    worth of m small ints per query, floats touched only at rerank.
-    Every stage reuses the gated constructions (ivf_build, pq_train,
-    pq_encode on the residual frame), rounds at 6dp and sums as
-    DECIMAL, so the oracle replays the approximation bit-for-bit."""
-    centroids, assigned = ivf_build(corpus, id_col, vec_col, cell_col, dim=dim)
-    res = (
-        assigned.join(F.broadcast(centroids), "cell")
-        .select(
-            F.col("neighbor_id").alias("rid"),
-            F.zip_with("v_c", "centroid", lambda a, b: a - b).alias("rvec"),
-        )
-    )
-    cb = pq_train(res, "rid", "rvec", m=m, k_codes=k_codes, dim=dim)
-    codes = pq_encode(res, "rid", "rvec", cb, m=m, dim=dim)
-    vectors = corpus.select(
         F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("v_c")
-    )
-    return ivfpq_residual_serve(
-        queries,
-        centroids,
-        assigned.select(F.col("neighbor_id").alias("vid"), "cell"),
-        cb,
-        codes,
-        vectors,
-        id_col,
-        vec_col,
-        m=m,
-        dim=dim,
-        k=k,
-        nprobe=nprobe,
-        rerank=rerank,
-    )
+    ).join(idx.table("vectors").select("neighbor_id"), on="neighbor_id",
+           how="left_anti")
+    vectors.write.mode("append").parquet(os.path.join(path, "vectors"))
+    if meta["cell_col"] is None:
+        packed.write.mode("append").parquet(os.path.join(path, "codes"))
+    else:
+        write_clustered_parquet(packed, os.path.join(path, "cells"), ["cell"],
+                                mode="append")
 
 
-def ivfpq_residual_serve(
-    queries: DataFrame,
-    centroids: DataFrame,
-    assigned_cells: DataFrame,
-    cb: DataFrame,
-    codes: DataFrame,
-    vectors: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m: int,
-    dim: int,
-    k: int = 10,
-    nprobe: int = 2,
-    rerank: int = 3,
-    probed: DataFrame | None = None,
+def pq_serve(
+    queries: DataFrame, index: PqFrames,
+    k: int = 10, rerank: int = 3, nprobe: int = 2,
 ) -> DataFrame:
-    """Serving half over (possibly persisted) residual-IVFPQ artifacts:
-    ``centroids`` (cell, centroid), ``assigned_cells`` (vid, cell),
-    ``cb`` (j, code, cent — trained on residuals), ``codes`` (vid, j,
-    code), ``vectors`` (neighbor_id, v_c) for the exact rerank.
-    ``probed`` (query_id, v_q, cell) may be supplied by a caller that
-    already computed the probe assignment (the indexed variant collects
-    it for the literal pruning filter)."""
-    if probed is None:
-        probed = _probe_cells(queries, centroids, id_col, vec_col, nprobe,
-                              dim=dim)
-    qc = (
-        probed.join(F.broadcast(centroids), "cell")
-        .select(
-            "query_id",
-            "cell",
-            F.round(dot(F.col("v_q"), F.col("centroid")) - 1e-9, 6)
-            .cast("decimal(20,6)")
-            .alias("qc"),
-        )
-    )
-    qsv = _pq_subvectors(queries, id_col, vec_col, m, dim).select(
+    """ADC serve over a PQ-family index (pq_build or read_pq_index),
+    shaped by its meta. Each query's m x k_codes lookup table of partial
+    dots against the codebook (tiny, broadcast) scores a candidate as
+    the sum of the m entries its codes select; partial dots round to
+    6dp and sum as DECIMAL, so the score is order-independent and the
+    oracle replays even the approximation error. The scan touches only
+    m small ints per candidate; _exact_rerank scores the top rerank*k.
+
+    - ``tag`` (OPQ): queries rotate through the seeded matrix for the
+      scan; the rerank scores the original vectors.
+    - No cells: codes ⋈ broadcast LUT on (j, code), then
+      vid != query_id.
+    - Cells: queries probe the ``nprobe`` nearest centroids and the scan
+      is the probed cells' members ⋈ codes ⋈ LUT. A stored index first
+      collects the probed cell ids (|queries| * nprobe rows, small by
+      the serving contract) into a LITERAL isin filter on its
+      cell-clustered table: the predicate reaches the parquet reader
+      and row-group pruning fires, which a join cannot do. Cutting the
+      probe frame, computed for that list and again for the scan,
+      measured no faster (PERF.md, "Cuts").
+    - ``by_residual``: codes quantize v - centroid, so dot(q, v_hat) =
+      dot(q, centroid) + dot(q, r_hat): the probe brings the
+      per-(query, cell) centroid term and the LUT stays
+      cell-independent."""
+    meta = index.meta
+    id_col, vec_col, m, dim = (meta["id_col"], meta["vec_col"], meta["m"],
+                               meta["dim"])
+    scan_queries = queries
+    if meta["tag"] is not None:
+        scan_queries = rotate_vectors(queries, id_col, vec_col,
+                                      opq_rotation(dim, meta["tag"]), dim)
+    qsv = _pq_subvectors(scan_queries, id_col, vec_col, m, dim).select(
         F.col("vid").alias("query_id"), "j", F.col("sv").alias("qv")
     )
-    lut = qsv.join(F.broadcast(cb), "j").select(
+    lut = qsv.join(F.broadcast(index.codebook), "j").select(
         "query_id",
         "j",
         "code",
         F.round(dot(F.col("qv"), F.col("cent"), dim // m) - 1e-9, 6).alias("pdot"),
     )
-    cellmates = (
-        assigned_cells.join(probed.select("query_id", "cell"), on="cell")
-        .filter(F.col("vid") != F.col("query_id"))
-    )
-    ap = (
-        cellmates.join(codes, on="vid")
-        .join(F.broadcast(lut), ["query_id", "j", "code"])
-        .groupBy("query_id", "vid", "cell")
-        .agg(F.sum(F.col("pdot").cast("decimal(20,6)")).alias("rsum"))
-    )
-    scored = ap.join(qc, ["query_id", "cell"]).select(
-        "query_id", "vid", (F.col("qc") + F.col("rsum")).alias("approx")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), F.col("vid")
-    )
-    cand = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= rerank * k)
-        .select("query_id", F.col("vid").alias("neighbor_id"))
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(vec_col).alias("v_q")
-    )
-    pairs = (
-        cand.join(vectors, on="neighbor_id")
-        .join(F.broadcast(q), on="query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("v_q"), F.col("v_c")) - 1e-9, 6).alias("cos"),
+    pdot_sum = F.sum(F.col("pdot").cast("decimal(20,6)")).alias("approx")
+    if meta["cell_col"] is None:
+        approx = (
+            index.codes.join(F.broadcast(lut), ["j", "code"])
+            .filter(F.col("vid") != F.col("query_id"))
+            .groupBy("query_id", "vid")
+            .agg(pdot_sum)
         )
-    )
-    return _ranked(pairs, k)
-
-
-
-
-def write_ivfpq_residual_index(
-    corpus: DataFrame, path: str, id_col: str, vec_col: str, cell_col: str,
-    m: int = 8, k_codes: int = 16, dim: int = 64,
-) -> None:
-    """Train and persist the residual-IVFPQ index (the FAISS-default
-    sibling of write_ivfpq_index): centroids/ + residual-trained
-    codebook/ (both tiny), cells/ (vid, cell, codes[m]) clustered by
-    cell so a probed-cell ADC scan prunes to its row groups, vectors/
-    for the rerank. Training, residual construction, assignment and
-    encoding run ONCE — serve many."""
-    import os
-
-    from cpx_etl_spark.sources.sinks import write_clustered_parquet
-
-    centroids, assigned = ivf_build(corpus, id_col, vec_col, cell_col, dim=dim)
-    res = (
-        assigned.join(F.broadcast(centroids), "cell")
-        .select(
-            F.col("neighbor_id").alias("rid"),
-            F.zip_with("v_c", "centroid", lambda a, b: a - b).alias("rvec"),
+    else:
+        probed = _probe_cells(queries, index.centroids, id_col, vec_col, nprobe)
+        cells, codes = index.cells, index.codes
+        if index.stored:
+            kept = sorted(
+                {r["cell"] for r in probed.select("query_id", "cell").collect()}
+            )
+            cells = cells.filter(F.col("cell").isin(kept))
+            codes = _unpack_codes(cells)
+        keys = ["query_id", "vid"] + (["cell"] if meta["by_residual"] else [])
+        approx = (
+            cells.select("vid", "cell")
+            .join(probed.select("query_id", "cell"), on="cell")
+            .filter(F.col("vid") != F.col("query_id"))
+            .select(*keys)
+            .join(codes, on="vid")
+            .join(F.broadcast(lut), ["query_id", "j", "code"])
+            .groupBy(*keys)
+            .agg(pdot_sum)
         )
-    )
-    cb = pq_train(res, "rid", "rvec", m=m, k_codes=k_codes, dim=dim)
-    codes = pq_encode(res, "rid", "rvec", cb, m=m, dim=dim)
-    packed = pack_codes(codes)
-    cells = assigned.select(
-        F.col("neighbor_id").alias("vid"), "cell"
-    ).join(packed, on="vid")
-    vectors = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("v")
-    )
-    os.makedirs(path, exist_ok=True)
-    centroids.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "centroids")
-    )
-    cb.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "codebook"))
-    write_clustered_parquet(cells, os.path.join(path, "cells"), ["cell"])
-    vectors.write.mode("overwrite").parquet(os.path.join(path, "vectors"))
-    publish_meta(corpus.sparkSession, path, "ivfpq_residual",
-                 {"id_col": id_col, "vec_col": vec_col, "cell_col": cell_col,
-                  "m": m, "k_codes": k_codes, "dim": dim, "by_residual": True})
-
-
-def read_ivfpq_residual_index(spark, path: str) -> IvfPqIndex:
-    return IvfPqIndex(spark, path, read_meta(spark, path, "ivfpq_residual"))
-
-
-def append_to_ivfpq_residual_index(
-    df_new: DataFrame, path: str, validate_unique: bool = False,
-) -> None:
-    """FAISS ``add()`` for the persisted residual-IVFPQ index: the new
-    batch assigns to the STORED centroids, its residuals v - centroid
-    encode against the STORED residual-trained codebook, and the
-    cell-clustered rows append — the complete FAISS-default ingest
-    path (train once / add daily)."""
-    idx = read_ivfpq_residual_index(df_new.sparkSession, path)
-    if validate_unique:
-        # cells are the last-written table — see append_to_pq_index
-        validate_new_ids(
-            df_new,
-            idx.cells_df.select(F.col("vid").alias(idx.meta["id_col"])),
-            idx.meta["id_col"], "append_to_ivfpq_residual_index", path,
-        )
-    _append_ivfpq_batch(df_new, path, idx, by_residual=True)
-
-
-def ivfpq_residual_topk_indexed(
-    queries: DataFrame, index: IvfPqIndex, id_col: str, vec_col: str,
-    k: int = 10, nprobe: int = 2, rerank: int = 3,
-) -> DataFrame:
-    """ANN serving against the persisted residual-IVFPQ index: same
-    literal probed-cell pruning + single-probe-computation contract as
-    ivfpq_topk_indexed, with the residual ADC decomposition (per-cell
-    centroid dot + cell-independent residual LUT). Pytest pins indexed
-    == one-shot on the same corpus."""
-    m, dim = index.meta["m"], index.meta["dim"]
-    probed = _probe_cells(
-        queries, index.centroids_df, id_col, vec_col, nprobe
-    )
-    probed_cells = sorted({r["cell"] for r in probed.collect()})
-    cells = index.cells_df.filter(F.col("cell").isin(probed_cells))
-    codes = cells.select("vid", F.posexplode("codes").alias("j", "code"))
-    return ivfpq_residual_serve(
-        queries,
-        index.centroids_df,
-        cells.select("vid", "cell"),
-        index.codebook_df,
-        codes,
-        index.vectors_df.select("neighbor_id", F.col("v").alias("v_c")),
-        id_col,
-        vec_col,
-        m=m,
-        dim=dim,
-        k=k,
-        nprobe=nprobe,
-        rerank=rerank,
-        probed=probed,
+        if meta["by_residual"]:
+            qc = probed.join(F.broadcast(index.centroids), "cell").select(
+                "query_id",
+                "cell",
+                F.round(dot(F.col("v_q"), F.col("centroid")) - 1e-9, 6)
+                .cast("decimal(20,6)")
+                .alias("qc"),
+            )
+            approx = approx.join(qc, ["query_id", "cell"]).select(
+                "query_id", "vid", (F.col("qc") + F.col("approx")).alias("approx")
+            )
+    return _exact_rerank(
+        approx.withColumnRenamed("vid", "neighbor_id"), queries, index.vectors,
+        id_col, vec_col, k, rerank,
     )
 
 

@@ -41,6 +41,15 @@ _SQL_RANKED = f"""
     SELECT query_id, neighbor_id, cos, rank FROM ranked WHERE rank <= 10
 """
 
+# the exact-rerank tail of every approximate-scan oracle: the top 30 of
+# ap (query_id, neighbor_id, approx), reranked by exact cosine
+_SQL_RERANK = f"""
+    cand AS (
+      SELECT query_id, neighbor_id FROM ap
+      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
+                                 ORDER BY approx DESC, neighbor_id) <= 30),
+    {_SQL_RANKED}"""
+
 
 @register(
     "ann_bruteforce_topk",
@@ -410,10 +419,7 @@ _SQ8_RECON = f"""
                         i -> CAST(q.embedding[i] AS DOUBLE) * c.xr[i])) - 1e-9, 6) + 0 AS approx
            FROM embeddings q JOIN rec c ON c.vec_id <> q.vec_id
            WHERE q.vec_id < 5),
-    cand AS (SELECT query_id, neighbor_id FROM ap
-             QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
-                                        ORDER BY approx DESC, neighbor_id) <= 30),
-    {_SQL_RANKED}
+    {_SQL_RERANK}
     """,
 )
 def ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -484,121 +490,53 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_ORACLE = f"""
-    WITH comp AS (
-      SELECT vec_id, g.j AS j, gs.i AS i,
-             CAST(embedding[g.j * 8 + gs.i] AS DOUBLE) AS x
-      FROM embeddings, generate_series(0, 7) g(j), generate_series(1, 8) gs(i)
-    ),
-    cb AS (
-      SELECT j, vec_id % 16 AS code, i,
-             CAST(SUM(CAST(x AS DECIMAL(30,12))) AS DOUBLE) / COUNT(*) AS mval
-      FROM comp GROUP BY j, vec_id % 16, i
-    ),
-    cbv AS (SELECT j, code, list(mval ORDER BY i) AS cent FROM cb GROUP BY j, code),
-    sv AS (
-      SELECT vec_id, g.j AS j,
-             list_transform(generate_series(1, 8),
-                            i -> CAST(embedding[g.j * 8 + i] AS DOUBLE)) AS sv
-      FROM embeddings, generate_series(0, 7) g(j)
-    ),
-    enc AS (
-      SELECT vec_id, j, code FROM (
-        SELECT s.vec_id, s.j, c.code,
-               ROW_NUMBER() OVER (
-                 PARTITION BY s.vec_id, s.j
-                 ORDER BY ROUND(list_sum(list_transform(generate_series(1, 8),
-                          i -> (s.sv[i] - c.cent[i]) * (s.sv[i] - c.cent[i]))) - 1e-9, 6) + 0,
-                          c.code) AS rn
-        FROM sv s JOIN cbv c ON c.j = s.j)
-      WHERE rn = 1
-    ),
-    lut AS (
-      SELECT q.vec_id AS query_id, c.j, c.code,
-             ROUND(list_sum(list_transform(generate_series(1, 8),
-                   i -> CAST(q.embedding[c.j * 8 + i] AS DOUBLE) * c.cent[i])) - 1e-9, 6) + 0 AS pdot
-      FROM embeddings q, cbv c
-      WHERE q.vec_id < 5
-    ),
-    ap AS (
-      SELECT l.query_id, e.vec_id AS neighbor_id,
-             SUM(CAST(pdot AS DECIMAL(20,6))) AS approx
-      FROM enc e JOIN lut l ON l.j = e.j AND l.code = e.code
-      WHERE e.vec_id <> l.query_id
-      GROUP BY l.query_id, e.vec_id
-    ),
-    cand AS (
-      SELECT query_id, neighbor_id FROM ap
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY approx DESC, neighbor_id) <= 30
-    ),
-    {_SQL_RANKED}
-"""
+# --- The PQ family: PQ, OPQ, IVFPQ and residual IVFPQ ----------------------
+#
+# Every member is one pq_build shape (operators/similarity.py) at the
+# same 8 subspaces x 16 codes, served by pq_serve to vec_id < 5: top-10
+# of 30 reranked, 2 probed cells for a cell index. The oracles share one
+# CTE chain: _sql_pq_ctes (codebook + encode), _sql_pq_lut (the ADC
+# lookup table) and _SQL_RERANK.
 
 
-@register("ann_pq_topk", oracle=_PQ_ORACLE)
-def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN (the PQ half of FAISS IVFPQ): 8
-    subspaces x 16 codes trained by a seeded exact-decimal Lloyd step,
-    vectors encoded to 8 small ints (byte-packable: 8 bytes vs 256 —
-    32x scan-payload reduction), queries score via an ADC lookup table
-    (partial dots rounded to 6dp, summed as DECIMAL so even the
-    approximation error is order-independent and hash-verified), top-30
-    candidates rerank exactly. operators/similarity.py pq_train/
-    pq_encode/pq_topk."""
-    from cpx_etl_spark.operators.similarity import pq_topk
+def _pq_topk(spark: SparkSession, sf_dir: str, **shape) -> DataFrame:
+    """A one-shot PQ-family query: pq_build of ``shape`` over the
+    embeddings, served straight from memory."""
+    from cpx_etl_spark.operators.similarity import pq_build, pq_serve
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return pq_topk(
-        emb, emb.filter(F.col("vec_id") < 5), "vec_id", "embedding",
-        m=8, k_codes=16, dim=64, k=10, rerank=3,
-    )
+    index = pq_build(emb, "vec_id", "embedding", m=8, k_codes=16, dim=_DIM,
+                     **shape)
+    return pq_serve(emb.filter(F.col("vec_id") < 5), index,
+                    k=10, rerank=3, nprobe=2)
 
 
-def build_pq_standing_index(spark: SparkSession, sf_dir: str) -> str:
-    """Ensure the persisted PQ index exists for sf_dir; returns its
-    path. Trains/encodes once per (corpus, params)."""
+def _pq_topk_indexed(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
+    """_pq_topk served from the persisted index at ``path``."""
+    from cpx_etl_spark.operators.similarity import pq_serve, read_pq_index
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return pq_serve(emb.filter(F.col("vec_id") < 5), read_pq_index(spark, path),
+                    k=10, rerank=3, nprobe=2)
+
+
+def _pq_index_writer(spark: SparkSession, sf_dir: str, **shape):
+    """The build step standing_artifact runs for a PQ-family index."""
     from cpx_etl_spark.operators.similarity import write_pq_index
-    from cpx_etl_spark.scratch import standing_artifact
 
-    return standing_artifact(
-        spark, sf_dir, "embeddings.parquet", "pq",
-        ["pq-m8-k16", f"dim{_DIM}", "v1"],
-        lambda path: write_pq_index(
-            load_table(spark, sf_dir, "embeddings"), path,
-            "vec_id", "embedding", m=8, k_codes=16, dim=_DIM,
-        ),
+    return lambda path: write_pq_index(
+        load_table(spark, sf_dir, "embeddings"), path, "vec_id", "embedding",
+        m=8, k_codes=16, dim=_DIM, **shape,
     )
 
-
-@register("ann_pq_topk_indexed", oracle=_PQ_ORACLE,
-          setup=build_pq_standing_index)
-def ann_pq_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN serving against the PERSISTED PQ index (train/encode once,
-    serve many): the ADC scan reads only the packed 8-int codes table,
-    the codebook broadcasts, and the full vectors are touched only for
-    the 30 rerank candidates per query. Same oracle as ann_pq_topk —
-    the stored index is the identical derivation, so the round trip
-    through parquet is itself hash-verified."""
-    from cpx_etl_spark.operators.similarity import pq_topk_indexed, read_pq_index
-
-    idx = read_pq_index(spark, build_pq_standing_index(spark, sf_dir))
-    emb = load_table(spark, sf_dir, "embeddings")
-    return pq_topk_indexed(
-        emb.filter(F.col("vec_id") < 5), idx, "vec_id", "embedding",
-        k=10, rerank=3,
-    )
-
-
-# --- OPQ: structured seeded rotation before PQ (judge r12 item 7) -----------
 
 def _sql_pq_ctes(src: str, p: str) -> str:
     """PQ train+encode CTE chain (8 subspaces x 16 codes) over the
-    ``src`` table/CTE, every CTE name suffixed ``_{p}`` — the same
-    construction as _PQ_ORACLE, parameterized so the OPQ queries can
-    chain it after a rotation CTE. encd keeps the winning code's d2
-    (the 6dp-rounded assignment metric), which is also the per-
-    subspace quantization error the distortion audit averages."""
+    ``src`` table/CTE (columns vec_id, embedding), every CTE name
+    suffixed ``_{p}``: codebook cbv_{p} and codes encd_{p}. encd keeps
+    the winning code's d2 (the 6dp-rounded assignment metric), which is
+    also the per-subspace quantization error the distortion audit
+    averages."""
     return f"""
     comp_{p} AS (
       SELECT vec_id, g.j AS j, gs.i AS i,
@@ -631,38 +569,83 @@ def _sql_pq_ctes(src: str, p: str) -> str:
       WHERE rn = 1)"""
 
 
-def _opq_oracle() -> str:
-    from cpx_etl_spark.operators.similarity import opq_rotation, sql_rotated_cte
-
-    rot = opq_rotation(_DIM)
+def _sql_pq_lut(src: str, p: str) -> str:
+    """lut: the 6dp partial dots of the queries (vec_id < 5) of ``src``
+    against codebook cbv_{p}, one row per (query, j, code)."""
     return f"""
-    WITH {sql_rotated_cte(rot, _DIM, out="rotated")},
-    {_sql_pq_ctes("rotated", "r")},
     lut AS (
       SELECT q.vec_id AS query_id, c.j, c.code,
              ROUND(list_sum(list_transform(generate_series(1, 8),
                    i -> CAST(q.embedding[c.j * 8 + i] AS DOUBLE) * c.cent[i]))
                    - 1e-9, 6) + 0 AS pdot
-      FROM rotated q, cbv_r c
-      WHERE q.vec_id < 5
-    ),
+      FROM {src} q, cbv_{p} c
+      WHERE q.vec_id < 5)"""
+
+
+def _pq_oracle(rotated: bool = False) -> str:
+    """Oracle of ann_pq_topk, or with ``rotated`` of ann_opq_topk:
+    codebook, codes and LUT in raw or OPQ-rotated space, an ADC scan
+    over every code, the rerank on the original vectors."""
+    from cpx_etl_spark.operators.similarity import opq_rotation, sql_rotated_cte
+
+    src = "rotated" if rotated else "embeddings"
+    rot = (sql_rotated_cte(opq_rotation(_DIM), _DIM, out="rotated") + ","
+           if rotated else "")
+    return f"""
+    WITH {rot}
+    {_sql_pq_ctes(src, "p")},
+    {_sql_pq_lut(src, "p")},
     ap AS (
       SELECT l.query_id, e.vec_id AS neighbor_id,
              SUM(CAST(pdot AS DECIMAL(20,6))) AS approx
-      FROM encd_r e JOIN lut l ON l.j = e.j AND l.code = e.code
+      FROM encd_p e JOIN lut l ON l.j = e.j AND l.code = e.code
       WHERE e.vec_id <> l.query_id
-      GROUP BY l.query_id, e.vec_id
-    ),
-    cand AS (
-      SELECT query_id, neighbor_id FROM ap
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY approx DESC, neighbor_id) <= 30
-    ),
-    {_SQL_RANKED}
+      GROUP BY l.query_id, e.vec_id),
+    {_SQL_RERANK}
 """
 
 
-@register("ann_opq_topk", oracle=_opq_oracle())
+_PQ_ORACLE = _pq_oracle()
+_OPQ_ORACLE = _pq_oracle(rotated=True)
+
+
+@register("ann_pq_topk", oracle=_PQ_ORACLE)
+def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product-quantization ANN (the PQ half of FAISS IVFPQ): 8
+    subspaces x 16 codes trained by a seeded exact-decimal Lloyd step,
+    vectors encoded to 8 small ints (byte-packable: 8 bytes vs 256 —
+    32x scan-payload reduction), queries score via an ADC lookup table
+    (partial dots rounded to 6dp, summed as DECIMAL so even the
+    approximation error is order-independent and hash-verified), top-30
+    candidates rerank exactly. operators/similarity.py pq_build/
+    pq_serve."""
+    return _pq_topk(spark, sf_dir)
+
+
+def build_pq_standing_index(spark: SparkSession, sf_dir: str) -> str:
+    """Ensure the persisted PQ index exists for sf_dir; returns its
+    path. Trains/encodes once per (corpus, params)."""
+    from cpx_etl_spark.scratch import standing_artifact
+
+    return standing_artifact(
+        spark, sf_dir, "embeddings.parquet", "pq",
+        ["pq-m8-k16", f"dim{_DIM}", "v2"], _pq_index_writer(spark, sf_dir),
+    )
+
+
+@register("ann_pq_topk_indexed", oracle=_PQ_ORACLE,
+          setup=build_pq_standing_index)
+def ann_pq_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN serving against the PERSISTED PQ index (train/encode once,
+    serve many): the ADC scan reads only the packed 8-int codes table,
+    the codebook broadcasts, and the full vectors are touched only for
+    the 30 rerank candidates per query. Same oracle as ann_pq_topk —
+    the stored index is the identical derivation, so the round trip
+    through parquet is itself hash-verified."""
+    return _pq_topk_indexed(spark, sf_dir, build_pq_standing_index(spark, sf_dir))
+
+
+@register("ann_opq_topk", oracle=_OPQ_ORACLE)
 def ann_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPQ-rotated product quantization at the SAME 8x16 budget as
     ann_pq_topk (judge r12 item 7): a seeded structured orthogonal
@@ -675,48 +658,24 @@ def ann_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_opq_distortion carries the measured win in-row). The ADC scan
     runs fully in rotated space; the top-30 candidates rerank on the
     ORIGINAL vectors, so reported cosines are directly comparable to
-    ann_pq_topk's. operators/similarity.py opq_rotation /
-    rotate_vectors."""
-    from cpx_etl_spark.operators.similarity import (
-        _pq_serve,
-        opq_rotation,
-        pq_encode,
-        pq_train,
-        rotate_vectors,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    rot = opq_rotation(_DIM)
-    remb = rotate_vectors(emb, "vec_id", "embedding", rot, _DIM)
-    cb = pq_train(remb, "vec_id", "embedding", m=8, k_codes=16, dim=_DIM)
-    codes = pq_encode(remb, "vec_id", "embedding", cb, m=8, dim=_DIM)
-    vectors = emb.select(
-        F.col("vec_id").alias("neighbor_id"), as_double("embedding").alias("v_c")
-    )
-    return _pq_serve(
-        remb.filter(F.col("vec_id") < 5), cb, codes, vectors,
-        "vec_id", "embedding", m=8, dim=_DIM, k=10, rerank=3,
-        rerank_queries=emb.filter(F.col("vec_id") < 5),
-    )
+    ann_pq_topk's. operators/similarity.py pq_build (tag) /
+    opq_rotation / rotate_vectors."""
+    return _pq_topk(spark, sf_dir, tag="opq")
 
 
 def build_opq_standing_index(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the persisted OPQ index exists for sf_dir; returns its
     path. Rotates/trains/encodes once per (corpus, params)."""
-    from cpx_etl_spark.operators.similarity import write_opq_index
     from cpx_etl_spark.scratch import standing_artifact
 
     return standing_artifact(
-        spark, sf_dir, "embeddings.parquet", "opq",
-        ["opq-m8-k16", f"dim{_DIM}", "v1"],
-        lambda path: write_opq_index(
-            load_table(spark, sf_dir, "embeddings"), path,
-            "vec_id", "embedding", m=8, k_codes=16, dim=_DIM,
-        ),
+        spark, sf_dir, "embeddings.parquet", "pq",
+        ["opq-m8-k16", f"dim{_DIM}", "v2"],
+        _pq_index_writer(spark, sf_dir, tag="opq"),
     )
 
 
-@register("ann_opq_topk_indexed", oracle=_opq_oracle(),
+@register("ann_opq_topk_indexed", oracle=_OPQ_ORACLE,
           setup=build_opq_standing_index)
 def ann_opq_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN serving against the PERSISTED OPQ index (rotate/train/
@@ -725,17 +684,7 @@ def ann_opq_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     rotated-space codes, and rerank on the stored ORIGINAL vectors.
     Same oracle as ann_opq_topk — the stored index is the identical
     derivation, so the parquet round trip is itself hash-verified."""
-    from cpx_etl_spark.operators.similarity import (
-        opq_topk_indexed,
-        read_opq_index,
-    )
-
-    idx = read_opq_index(spark, build_opq_standing_index(spark, sf_dir))
-    emb = load_table(spark, sf_dir, "embeddings")
-    return opq_topk_indexed(
-        emb.filter(F.col("vec_id") < 5), idx, "vec_id", "embedding",
-        k=10, rerank=3,
-    )
+    return _pq_topk_indexed(spark, sf_dir, build_opq_standing_index(spark, sf_dir))
 
 
 # Deterministic unbalanced-energy regime for the distortion audit: the
@@ -825,13 +774,12 @@ def q_opq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# IVF x PQ (FAISS IVFPQ, by_residual=False): label cells + nprobe=2
-# from the IVF half, 8x16 codebook + ADC from the PQ half, 30-candidate
-# exact rerank. The oracle chains both derivations verbatim: centroid /
-# assignment / probe CTEs from _IVF_ORACLE, codebook / encode / LUT
-# CTEs from _PQ_ORACLE, joined on the probed cells.
-_IVFPQ_ORACLE = f"""
-    WITH icomp AS (
+# The IVF half of the two cell oracles: label centroids, each vector's
+# nearest cell (assigned), each query's 2 nearest cells (probed) and
+# those cells' other members (cellmates) — the derivation of
+# _IVF_ORACLE, named for chaining with the PQ CTEs.
+_SQL_IVF_PROBE = f"""
+    icomp AS (
         SELECT label, gs.i AS i, CAST(embedding[gs.i] AS DOUBLE) AS x
         FROM embeddings, generate_series(1, {_DIM}) gs(i)),
     icent AS (
@@ -852,60 +800,25 @@ _IVFPQ_ORACLE = f"""
         SELECT vec_id AS query_id, cell FROM ascore WHERE vec_id < 5
         QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id
                                    ORDER BY c_cos DESC, cell) <= 2),
-    pcomp AS (
-      SELECT vec_id, g.j AS j, gs.i AS i,
-             CAST(embedding[g.j * 8 + gs.i] AS DOUBLE) AS x
-      FROM embeddings, generate_series(0, 7) g(j), generate_series(1, 8) gs(i)
-    ),
-    cb AS (
-      SELECT j, vec_id % 16 AS code, i,
-             CAST(SUM(CAST(x AS DECIMAL(30,12))) AS DOUBLE) / COUNT(*) AS mval
-      FROM pcomp GROUP BY j, vec_id % 16, i
-    ),
-    cbv AS (SELECT j, code, list(mval ORDER BY i) AS cent FROM cb GROUP BY j, code),
-    sv AS (
-      SELECT vec_id, g.j AS j,
-             list_transform(generate_series(1, 8),
-                            i -> CAST(embedding[g.j * 8 + i] AS DOUBLE)) AS sv
-      FROM embeddings, generate_series(0, 7) g(j)
-    ),
-    enc AS (
-      SELECT vec_id, j, code FROM (
-        SELECT s.vec_id, s.j, c.code,
-               ROW_NUMBER() OVER (
-                 PARTITION BY s.vec_id, s.j
-                 ORDER BY ROUND(list_sum(list_transform(generate_series(1, 8),
-                          i -> (s.sv[i] - c.cent[i]) * (s.sv[i] - c.cent[i]))) - 1e-9, 6) + 0,
-                          c.code) AS rn
-        FROM sv s JOIN cbv c ON c.j = s.j)
-      WHERE rn = 1
-    ),
-    lut AS (
-      SELECT q.vec_id AS query_id, c.j, c.code,
-             ROUND(list_sum(list_transform(generate_series(1, 8),
-                   i -> CAST(q.embedding[c.j * 8 + i] AS DOUBLE) * c.cent[i])) - 1e-9, 6) + 0 AS pdot
-      FROM embeddings q, cbv c
-      WHERE q.vec_id < 5
-    ),
     cellmates AS (
-      SELECT p.query_id, a.vec_id AS vid
+      SELECT p.query_id, p.cell, a.vec_id AS vid
       FROM probed p JOIN assigned a USING (cell)
-      WHERE a.vec_id <> p.query_id
-    ),
+      WHERE a.vec_id <> p.query_id)"""
+
+# IVF x PQ (FAISS IVFPQ, by_residual=False): the ADC scan covers only
+# the probed cells' members, codes of the raw vectors.
+_IVFPQ_ORACLE = f"""
+    WITH {_SQL_IVF_PROBE},
+    {_sql_pq_ctes("embeddings", "p")},
+    {_sql_pq_lut("embeddings", "p")},
     ap AS (
       SELECT cm.query_id, cm.vid AS neighbor_id,
              SUM(CAST(l.pdot AS DECIMAL(20,6))) AS approx
       FROM cellmates cm
-      JOIN enc e ON e.vec_id = cm.vid
+      JOIN encd_p e ON e.vec_id = cm.vid
       JOIN lut l ON l.query_id = cm.query_id AND l.j = e.j AND l.code = e.code
-      GROUP BY cm.query_id, cm.vid
-    ),
-    cand AS (
-      SELECT query_id, neighbor_id FROM ap
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY approx DESC, neighbor_id) <= 30
-    ),
-    {_SQL_RANKED}
+      GROUP BY cm.query_id, cm.vid),
+    {_SQL_RERANK}
 """
 
 
@@ -920,29 +833,19 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids + min_by assignment; ann_pq_topk's seeded codebook + 6dp
     DECIMAL-summed ADC), so the composed oracle replays the entire
     derivation, including the approximation error, bit-for-bit.
-    operators/similarity.py ivfpq_topk."""
-    from cpx_etl_spark.operators.similarity import ivfpq_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return ivfpq_topk(
-        emb, emb.filter(F.col("vec_id") < 5), "vec_id", "embedding", "label",
-        k=10, nprobe=2, m=8, k_codes=16, dim=_DIM, rerank=3,
-    )
+    operators/similarity.py pq_build (cell_col) / pq_serve."""
+    return _pq_topk(spark, sf_dir, cell_col="label")
 
 
 def build_ivfpq_standing_index(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the persisted IVFPQ index exists for sf_dir; returns its
     path. Trains/assigns/encodes once per (corpus, params)."""
-    from cpx_etl_spark.operators.similarity import write_ivfpq_index
     from cpx_etl_spark.scratch import standing_artifact
 
     return standing_artifact(
-        spark, sf_dir, "embeddings.parquet", "ivfpq",
-        ["ivfpq-label-m8-k16", f"dim{_DIM}", "v1"],
-        lambda path: write_ivfpq_index(
-            load_table(spark, sf_dir, "embeddings"), path,
-            "vec_id", "embedding", "label", m=8, k_codes=16, dim=_DIM,
-        ),
+        spark, sf_dir, "embeddings.parquet", "pq",
+        ["ivfpq-label-m8-k16", f"dim{_DIM}", "v2"],
+        _pq_index_writer(spark, sf_dir, cell_col="label"),
     )
 
 
@@ -956,17 +859,8 @@ def ann_ivfpq_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates per query. Same oracle as ann_ivfpq_topk — the stored
     index is the identical derivation, so the parquet round trip is
     itself hash-verified."""
-    from cpx_etl_spark.operators.similarity import (
-        ivfpq_topk_indexed,
-        read_ivfpq_index,
-    )
-
-    idx = read_ivfpq_index(spark, build_ivfpq_standing_index(spark, sf_dir))
-    emb = load_table(spark, sf_dir, "embeddings")
-    return ivfpq_topk_indexed(
-        emb.filter(F.col("vec_id") < 5), idx, "vec_id", "embedding",
-        k=10, nprobe=2, rerank=3,
-    )
+    return _pq_topk_indexed(spark, sf_dir,
+                            build_ivfpq_standing_index(spark, sf_dir))
 
 
 @register(
@@ -1531,67 +1425,16 @@ def q_ann_dim_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ADC decomposes as dot(q, c) + dot(q, r_hat), so the LUT stays
 # cell-independent and the scan cost matches the non-residual sibling.
 _IVFPQR_ORACLE = f"""
-    WITH icomp AS (
-        SELECT label, gs.i AS i, CAST(embedding[gs.i] AS DOUBLE) AS x
-        FROM embeddings, generate_series(1, {_DIM}) gs(i)),
-    icent AS (
-        SELECT label AS cell, i,
-               CAST(SUM(CAST(x AS DECIMAL(30,12))) AS DOUBLE) / COUNT(*) AS m
-        FROM icomp GROUP BY label, i),
-    centv AS (
-        SELECT cell, list(m ORDER BY i) AS centroid FROM icent GROUP BY cell),
-    ascore AS (
-        SELECT e.vec_id, c.cell,
-               ROUND({sql_cosine('e.embedding', 'c.centroid', _DIM)} - 1e-9, 6) + 0 AS c_cos
-        FROM embeddings e CROSS JOIN centv c),
-    assigned AS (
-        SELECT vec_id, cell FROM ascore
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id
-                                   ORDER BY c_cos DESC, cell) = 1),
-    probed AS (
-        SELECT vec_id AS query_id, cell FROM ascore WHERE vec_id < 5
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id
-                                   ORDER BY c_cos DESC, cell) <= 2),
+    WITH {_SQL_IVF_PROBE},
     resv AS (
         SELECT e.vec_id,
                list_transform(generate_series(1, {_DIM}),
-                   i -> CAST(e.embedding[i] AS DOUBLE) - cv.centroid[i]) AS rvec
+                   i -> CAST(e.embedding[i] AS DOUBLE) - cv.centroid[i]) AS embedding
         FROM embeddings e
         JOIN assigned a ON a.vec_id = e.vec_id
         JOIN centv cv ON cv.cell = a.cell),
-    pcomp AS (
-      SELECT vec_id, g.j AS j, gs.i AS i, rvec[g.j * 8 + gs.i] AS x
-      FROM resv, generate_series(0, 7) g(j), generate_series(1, 8) gs(i)
-    ),
-    cb AS (
-      SELECT j, vec_id % 16 AS code, i,
-             CAST(SUM(CAST(x AS DECIMAL(30,12))) AS DOUBLE) / COUNT(*) AS mval
-      FROM pcomp GROUP BY j, vec_id % 16, i
-    ),
-    cbv AS (SELECT j, code, list(mval ORDER BY i) AS cent FROM cb GROUP BY j, code),
-    sv AS (
-      SELECT vec_id, g.j AS j,
-             list_transform(generate_series(1, 8), i -> rvec[g.j * 8 + i]) AS sv
-      FROM resv, generate_series(0, 7) g(j)
-    ),
-    enc AS (
-      SELECT vec_id, j, code FROM (
-        SELECT s.vec_id, s.j, c.code,
-               ROW_NUMBER() OVER (
-                 PARTITION BY s.vec_id, s.j
-                 ORDER BY ROUND(list_sum(list_transform(generate_series(1, 8),
-                          i -> (s.sv[i] - c.cent[i]) * (s.sv[i] - c.cent[i]))) - 1e-9, 6) + 0,
-                          c.code) AS rn
-        FROM sv s JOIN cbv c ON c.j = s.j)
-      WHERE rn = 1
-    ),
-    lut AS (
-      SELECT q.vec_id AS query_id, c.j, c.code,
-             ROUND(list_sum(list_transform(generate_series(1, 8),
-                   i -> CAST(q.embedding[c.j * 8 + i] AS DOUBLE) * c.cent[i])) - 1e-9, 6) + 0 AS pdot
-      FROM embeddings q, cbv c
-      WHERE q.vec_id < 5
-    ),
+    {_sql_pq_ctes("resv", "p")},
+    {_sql_pq_lut("embeddings", "p")},
     qc AS (
       SELECT p.query_id, p.cell,
              CAST(ROUND(list_sum(list_transform(generate_series(1, {_DIM}),
@@ -1601,27 +1444,18 @@ _IVFPQR_ORACLE = f"""
       JOIN embeddings q ON q.vec_id = p.query_id
       JOIN centv cv ON cv.cell = p.cell
     ),
-    cellmates AS (
-      SELECT p.query_id, p.cell, a.vec_id AS vid
-      FROM probed p JOIN assigned a USING (cell)
-      WHERE a.vec_id <> p.query_id
-    ),
-    ap AS (
+    rsum AS (
       SELECT cm.query_id, cm.vid, cm.cell,
              SUM(CAST(l.pdot AS DECIMAL(20,6))) AS rsum
       FROM cellmates cm
-      JOIN enc e ON e.vec_id = cm.vid
+      JOIN encd_p e ON e.vec_id = cm.vid
       JOIN lut l ON l.query_id = cm.query_id AND l.j = e.j AND l.code = e.code
       GROUP BY cm.query_id, cm.vid, cm.cell
     ),
-    cand AS (
-      SELECT query_id, vid AS neighbor_id FROM (
-        SELECT a.query_id, a.vid, a.rsum + q.qc AS approx
-        FROM ap a JOIN qc q ON q.query_id = a.query_id AND q.cell = a.cell)
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY approx DESC, vid) <= 30
-    ),
-    {_SQL_RANKED}
+    ap AS (
+      SELECT r.query_id, r.vid AS neighbor_id, r.rsum + q.qc AS approx
+      FROM rsum r JOIN qc q ON q.query_id = r.query_id AND q.cell = r.cell),
+    {_SQL_RERANK}
 """
 
 
@@ -1639,14 +1473,9 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids/assignment/probe, residual construction, residual-trained
     codebook, encode, LUT + per-cell centroid-dot ADC, top-30 rerank)
     bit-for-bit including the approximation error.
-    operators/similarity.py ivfpq_residual_topk."""
-    from cpx_etl_spark.operators.similarity import ivfpq_residual_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return ivfpq_residual_topk(
-        emb, emb.filter(F.col("vec_id") < 5), "vec_id", "embedding", "label",
-        k=10, nprobe=2, m=8, k_codes=16, dim=_DIM, rerank=3,
-    )
+    operators/similarity.py pq_build (cell_col, by_residual) /
+    pq_serve."""
+    return _pq_topk(spark, sf_dir, cell_col="label", by_residual=True)
 
 
 @register(
@@ -2067,7 +1896,7 @@ def ann_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, build_knn_graph_standing_index(spark, sf_dir)
     )
     edges = (
-        idx.edges_df.select(
+        idx.table("edges").select(
             F.col("vec_id").alias("a"),
             F.explode(F.array("n1", "n2", "n3")).alias("b"),
         )
@@ -2076,7 +1905,7 @@ def ann_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return graph_beam_search(
         emb.filter(F.col("vec_id") < 5),
-        idx.assignments_df, idx.centroids_df, edges,
+        idx.table("assignments"), idx.table("centroids"), edges,
         "vec_id", "embedding",
         k=10, beam=_GS_BEAM, rounds=_GS_ROUNDS,
         nprobe=_GS_NPROBE, per_cell=_GS_PER_CELL, dim=_DIM,

@@ -9,8 +9,9 @@ atexit, so repeated invocations stay isolated *and* bounded.
 
 Standing artifacts — persisted indexes, shard sets and snapshots that
 deliberately outlive the process — live under user_cache_root() and go
-through standing_artifact: one location rule, one completeness rule and
-one meta publish/read pair for every kind.
+through standing_artifact: one location rule, one completeness rule,
+one meta publish/read pair and one read handle (IndexHandle) for every
+kind.
 """
 
 from __future__ import annotations
@@ -120,6 +121,28 @@ def standing_artifact(spark, sf_dir: str, source: str, kind: str,
         _rebuild(path, build)
         read_meta(spark, path, kind)  # the builder published it
     return path
+
+
+class IndexHandle:
+    """A persisted index: the meta its writer published (read_meta, so
+    an artifact of another kind raises ValueError) and its parquet
+    tables by name, each opened on first use. An open lists the table's
+    files and may infer its schema, which a path that never reads the
+    table should not pay."""
+
+    def __init__(self, spark, path: str, kind: str):
+        self.path = path
+        self.meta = read_meta(spark, path, kind)
+        self._spark = spark
+        self._tables: dict = {}
+
+    def table(self, name: str):
+        if name not in self._tables:
+            from cpx_etl_spark.sources.registry import read_parquet
+
+            self._tables[name] = read_parquet(
+                self._spark, os.path.join(self.path, name))
+        return self._tables[name]
 
 
 def _rebuild(path: str, build) -> None:

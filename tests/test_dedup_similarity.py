@@ -998,72 +998,6 @@ def test_sem_trained_k_is_capped():
     assert str(_SEM_TRAINED_K_CAP) in oracles["dedup_semantic_trained"]
 
 
-def test_ivfpq_recall_vs_bruteforce_and_index_roundtrip(spark, sf_dir, tmp_path):
-    """IVFPQ (probe 2 cells, ADC over their codes, 30-cand exact
-    rerank) recall@10 against the exact baseline, and the persisted
-    index serving the identical result as the one-shot plan."""
-    from cpx_etl_spark.operators.similarity import (
-        ivfpq_topk,
-        ivfpq_topk_indexed,
-        read_ivfpq_index,
-        write_ivfpq_index,
-    )
-    from cpx_etl_spark.sources import load_table
-
-    from cpx_etl_spark.operators.similarity import ivf_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 20)
-
-    def _recall(rows, truth):
-        got = {}
-        for r in rows:
-            got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        return sum(
-            len(truth[q] & got.get(q, set())) / len(truth[q]) for q in truth
-        ) / len(truth)
-
-    exact = brute_force_topk(emb, queries, "vec_id", "embedding", k=10).collect()
-    truth = {}
-    for r in exact:
-        truth.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    # the IVF half bounds what ANY within-cell scan can recall: on this
-    # near-random corpus (cells barely separate) that ceiling is itself
-    # low (~0.36 at nprobe=2), so assert the PQ half RELATIVE to it —
-    # with a generous rerank the ADC stage must reach the IVF ceiling
-    ivf_ceiling = _recall(
-        ivf_topk(emb, queries, "vec_id", "embedding", "label",
-                 k=10, nprobe=2).collect(),
-        truth,
-    )
-    pq_recall = _recall(
-        ivfpq_topk(emb, queries, "vec_id", "embedding", "label",
-                   k=10, nprobe=2, m=8, k_codes=16, dim=64, rerank=10).collect(),
-        truth,
-    )
-    # observed at sf0.001: ivf 0.355, ivfpq(rerank=10) 0.355 — equal
-    assert pq_recall >= 0.9 * ivf_ceiling, (
-        f"ADC stage lost recall below the IVF ceiling: "
-        f"{pq_recall:.2f} vs {ivf_ceiling:.2f}"
-    )
-
-    one_shot = ivfpq_topk(
-        emb, queries, "vec_id", "embedding", "label",
-        k=10, nprobe=2, m=8, k_codes=16, dim=64, rerank=3,
-    )
-
-    path = str(tmp_path / "ivfpq")
-    write_ivfpq_index(emb, path, "vec_id", "embedding", "label",
-                      m=8, k_codes=16, dim=64)
-    idx = read_ivfpq_index(spark, path)
-    served = ivfpq_topk_indexed(
-        queries, idx, "vec_id", "embedding", k=10, nprobe=2, rerank=3
-    )
-    a = sorted(map(tuple, one_shot.collect()))
-    b = sorted(map(tuple, served.collect()))
-    assert a == b
-
-
 def test_image_tiles_layout_and_size_guard(spark):
     """image_tiles must honor row-major layout (tile (r,c) covers
     bytes 16*(4r+i) + 4c + j) and fail fast on a short payload."""
@@ -1092,70 +1026,6 @@ def test_image_tiles_layout_and_size_guard(spark):
     )
     with pytest.raises(Exception, match="100 bytes, expected 256"):
         image_tiles(short, "doc_id").collect()
-
-
-def test_ivfpq_residual_index_roundtrip_and_recall(spark, sf_dir, tmp_path):
-    """The persisted residual-IVFPQ index (by_residual=TRUE, the FAISS
-    default) serves the IDENTICAL result as the one-shot plan —
-    train-once/serve-many is the production path — and the residual ADC
-    stage reaches the IVF ceiling at a generous rerank, like the
-    non-residual sibling."""
-    from cpx_etl_spark.operators.similarity import (
-        ivf_topk,
-        ivfpq_residual_topk,
-        ivfpq_residual_topk_indexed,
-        read_ivfpq_residual_index,
-        write_ivfpq_residual_index,
-    )
-    from cpx_etl_spark.sources import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 20)
-
-    def _recall(rows, truth):
-        got = {}
-        for r in rows:
-            got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        return sum(
-            len(truth[q] & got.get(q, set())) / len(truth[q]) for q in truth
-        ) / len(truth)
-
-    exact = brute_force_topk(emb, queries, "vec_id", "embedding", k=10).collect()
-    truth = {}
-    for r in exact:
-        truth.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    ivf_ceiling = _recall(
-        ivf_topk(emb, queries, "vec_id", "embedding", "label",
-                 k=10, nprobe=2).collect(),
-        truth,
-    )
-    res_recall = _recall(
-        ivfpq_residual_topk(
-            emb, queries, "vec_id", "embedding", "label",
-            k=10, nprobe=2, m=8, k_codes=16, dim=64, rerank=10,
-        ).collect(),
-        truth,
-    )
-    assert res_recall >= 0.9 * ivf_ceiling, (
-        f"residual ADC lost recall below the IVF ceiling: "
-        f"{res_recall:.2f} vs {ivf_ceiling:.2f}"
-    )
-
-    one_shot = ivfpq_residual_topk(
-        emb, queries, "vec_id", "embedding", "label",
-        k=10, nprobe=2, m=8, k_codes=16, dim=64, rerank=3,
-    )
-    path = str(tmp_path / "ivfpqr")
-    write_ivfpq_residual_index(emb, path, "vec_id", "embedding", "label",
-                               m=8, k_codes=16, dim=64)
-    idx = read_ivfpq_residual_index(spark, path)
-    assert idx.meta["by_residual"] is True
-    served = ivfpq_residual_topk_indexed(
-        queries, idx, "vec_id", "embedding", k=10, nprobe=2, rerank=3
-    )
-    a = sorted(map(tuple, one_shot.collect()))
-    b = sorted(map(tuple, served.collect()))
-    assert a == b
 
 
 def test_doc_fuzzy_verdict_classes_and_consistency(spark, sf_dir):
@@ -1291,40 +1161,91 @@ def test_opq_recall_not_below_pq(spark, sf_dir):
     assert r_opq >= 0.35, r_opq
 
 
-def test_opq_index_roundtrip_and_arrow_path_equality(spark, sf_dir, tmp_path):
-    """The persisted OPQ index serves the IDENTICAL result as the
-    one-shot rotated pipeline, and the Arrow matmul rotation is
-    bit-identical to the pure column-expression fold (the lsh_index
-    dual-path contract)."""
+_PQ_SHAPES = {
+    "pq": {},
+    "opq": {"tag": "opq"},
+    "ivfpq": {"cell_col": "label"},
+    "ivfpq_residual": {"cell_col": "label", "by_residual": True},
+}
+
+
+@pytest.mark.parametrize("shape", list(_PQ_SHAPES))
+def test_pq_index_roundtrip_equals_one_shot(spark, sf_dir, tmp_path, shape):
+    """Each PQ-family shape: the persisted index (write_pq_index ->
+    read_pq_index) serves the IDENTICAL result as the one-shot
+    in-memory build — train-once/serve-many is the production path.
+    Per shape also: OPQ's Arrow matmul rotation is bit-identical to the
+    pure column-expression fold (the lsh_index dual-path contract); a
+    cell index's ADC stage reaches the IVF recall ceiling at a generous
+    rerank; the residual index's meta says by_residual."""
     from cpx_etl_spark.operators.similarity import (
+        ivf_topk,
         opq_rotation,
-        opq_topk_indexed,
-        read_opq_index,
+        pq_build,
+        pq_serve,
+        read_pq_index,
         rotate_vectors,
-        write_opq_index,
+        write_pq_index,
     )
-    from cpx_etl_spark.queries.similarity import ann_opq_topk
     from cpx_etl_spark.sources import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    rot = opq_rotation(64)
-    fast = {r["vec_id"]: tuple(r["embedding"]) for r in
-            rotate_vectors(emb, "vec_id", "embedding", rot, 64).collect()}
-    slow = {r["vec_id"]: tuple(r["embedding"]) for r in
-            rotate_vectors(emb, "vec_id", "embedding", rot, 64,
-                           use_arrow=False).collect()}
-    assert fast == slow and len(fast) == emb.count()
+    queries = emb.filter(F.col("vec_id") < 20)
+    params = dict(m=8, k_codes=16, dim=64, **_PQ_SHAPES[shape])
 
-    path = str(tmp_path / "opq")
-    write_opq_index(emb, path, "vec_id", "embedding", m=8, k_codes=16, dim=64)
-    idx = read_opq_index(spark, path)
-    served = opq_topk_indexed(
-        emb.filter(F.col("vec_id") < 5), idx, "vec_id", "embedding",
-        k=10, rerank=3,
-    )
-    one_shot = ann_opq_topk(spark, sf_dir)
-    assert sorted(map(tuple, served.collect())) == \
-        sorted(map(tuple, one_shot.collect()))
+    if shape == "opq":
+        rot = opq_rotation(64)
+        fast = {r["vec_id"]: tuple(r["embedding"]) for r in
+                rotate_vectors(emb, "vec_id", "embedding", rot, 64).collect()}
+        slow = {r["vec_id"]: tuple(r["embedding"]) for r in
+                rotate_vectors(emb, "vec_id", "embedding", rot, 64,
+                               use_arrow=False).collect()}
+        assert fast == slow and len(fast) == emb.count()
+
+    if "cell_col" in params:
+        def _recall(rows, truth):
+            got = {}
+            for r in rows:
+                got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
+            return sum(
+                len(truth[q] & got.get(q, set())) / len(truth[q]) for q in truth
+            ) / len(truth)
+
+        exact = brute_force_topk(emb, queries, "vec_id", "embedding", k=10).collect()
+        truth = {}
+        for r in exact:
+            truth.setdefault(r["query_id"], set()).add(r["neighbor_id"])
+        # the IVF half bounds what ANY within-cell scan can recall: on this
+        # near-random corpus (cells barely separate) that ceiling is itself
+        # low (~0.36 at nprobe=2), so assert the PQ half RELATIVE to it —
+        # with a generous rerank the ADC stage must reach the IVF ceiling
+        ivf_ceiling = _recall(
+            ivf_topk(emb, queries, "vec_id", "embedding", "label",
+                     k=10, nprobe=2).collect(),
+            truth,
+        )
+        pq_recall = _recall(
+            pq_serve(queries, pq_build(emb, "vec_id", "embedding", **params),
+                     k=10, rerank=10, nprobe=2).collect(),
+            truth,
+        )
+        # observed at sf0.001: ivf 0.355, ivfpq(rerank=10) 0.355 — equal
+        assert pq_recall >= 0.9 * ivf_ceiling, (
+            f"ADC stage lost recall below the IVF ceiling: "
+            f"{pq_recall:.2f} vs {ivf_ceiling:.2f}"
+        )
+
+    one_shot = pq_serve(queries, pq_build(emb, "vec_id", "embedding", **params),
+                        k=10, rerank=3, nprobe=2)
+    path = str(tmp_path / shape)
+    write_pq_index(emb, path, "vec_id", "embedding", **params)
+    idx = read_pq_index(spark, path)
+    if shape == "ivfpq_residual":
+        assert idx.meta["by_residual"] is True
+    served = pq_serve(queries, idx, k=10, rerank=3, nprobe=2)
+    a = sorted(map(tuple, one_shot.collect()))
+    b = sorted(map(tuple, served.collect()))
+    assert a == b
 
 
 def test_ann_index_append_equals_rebuild(spark, sf_dir):
@@ -1333,34 +1254,25 @@ def test_ann_index_append_equals_rebuild(spark, sf_dir):
     encoding the full corpus against the SAME stored artifacts —
     bit-exactly — and serving against the appended index must equal
     serving against stored-artifact state built in one shot. Covers
-    IVF (assignments), PQ + OPQ (codes), IVFPQ and residual-IVFPQ
-    (cell-clustered codes)."""
+    IVF (assignments) and the four write_pq_index shapes: PQ + OPQ
+    (codes), IVFPQ and residual-IVFPQ (cell-clustered codes)."""
     import tempfile
 
     from pyspark.sql import functions as F
 
     from cpx_etl_spark.operators.similarity import (
         append_to_ivf_index,
-        append_to_ivfpq_index,
-        append_to_ivfpq_residual_index,
-        append_to_opq_index,
         append_to_pq_index,
         assign_to_centroids,
         opq_rotation,
         pack_codes,
         pq_encode,
         read_ivf_index,
-        read_ivfpq_index,
-        read_ivfpq_residual_index,
-        read_opq_index,
-        read_pq_index,
         rotate_vectors,
         write_ivf_index,
-        write_ivfpq_index,
-        write_ivfpq_residual_index,
-        write_opq_index,
         write_pq_index,
     )
+    from cpx_etl_spark.scratch import IndexHandle
     from cpx_etl_spark.sources import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1382,9 +1294,9 @@ def test_ann_index_append_equals_rebuild(spark, sf_dir):
         write_ivf_index(b1, p, "vec_id", "embedding", "label")
         append_to_ivf_index(b2, p, validate_unique=True)
         idx = read_ivf_index(spark, p)
-        assert idx.assignments_df.count() == n1 + n2
-        want = assign_to_centroids(emb, idx.centroids_df, "vec_id", "embedding")
-        assert rows(idx.assignments_df, ["neighbor_id", "cell"]) == rows(
+        assert idx.table("assignments").count() == n1 + n2
+        want = assign_to_centroids(emb, idx.table("centroids"), "vec_id", "embedding")
+        assert rows(idx.table("assignments"), ["neighbor_id", "cell"]) == rows(
             want, ["neighbor_id", "cell"]
         )
         # duplicate-id append refuses
@@ -1396,70 +1308,71 @@ def test_ann_index_append_equals_rebuild(spark, sf_dir):
         p = f"{tmp}/pq"
         write_pq_index(b1, p, "vec_id", "embedding", m=8, k_codes=16, dim=64)
         append_to_pq_index(b2, p, validate_unique=True)
-        idx = read_pq_index(spark, p)
-        assert idx.codes_df.count() == n1 + n2
-        assert idx.vectors_df.count() == n1 + n2
+        idx = IndexHandle(spark, p, "pq")
+        assert idx.table("codes").count() == n1 + n2
+        assert idx.table("vectors").count() == n1 + n2
         want = pack_codes(
-            pq_encode(emb, "vec_id", "embedding", idx.codebook_df, m=8, dim=64)
+            pq_encode(emb, "vec_id", "embedding", idx.table("codebook"), m=8, dim=64)
         )
-        assert rows(idx.codes_df, ["vid", "codes"]) == rows(
+        assert rows(idx.table("codes"), ["vid", "codes"]) == rows(
             want, ["vid", "codes"]
         )
 
         # --- OPQ: append rotates with the stored tag first -----------
         p = f"{tmp}/opq"
-        write_opq_index(b1, p, "vec_id", "embedding", m=8, k_codes=16, dim=64)
-        append_to_opq_index(b2, p, validate_unique=True)
-        idx = read_opq_index(spark, p)
-        assert idx.codes_df.count() == n1 + n2
+        write_pq_index(b1, p, "vec_id", "embedding", m=8, k_codes=16, dim=64,
+                       tag="opq")
+        append_to_pq_index(b2, p, validate_unique=True)
+        idx = IndexHandle(spark, p, "pq")
+        assert idx.table("codes").count() == n1 + n2
         rot = opq_rotation(64, tag=idx.meta["tag"])
         remb = rotate_vectors(emb, "vec_id", "embedding", rot, 64)
         want = pack_codes(
-            pq_encode(remb, "vec_id", "embedding", idx.codebook_df, m=8, dim=64)
+            pq_encode(remb, "vec_id", "embedding", idx.table("codebook"), m=8, dim=64)
         )
-        assert rows(idx.codes_df, ["vid", "codes"]) == rows(
+        assert rows(idx.table("codes"), ["vid", "codes"]) == rows(
             want, ["vid", "codes"]
         )
         # rerank table holds ORIGINAL vectors for appended rows too
-        assert idx.vectors_df.count() == n1 + n2
+        assert idx.table("vectors").count() == n1 + n2
 
         # --- IVFPQ: stored centroids + stored codebook ----------------
         p = f"{tmp}/ivfpq"
-        write_ivfpq_index(b1, p, "vec_id", "embedding", "label",
-                          m=8, k_codes=16, dim=64)
-        append_to_ivfpq_index(b2, p, validate_unique=True)
-        idx = read_ivfpq_index(spark, p)
-        assert idx.cells_df.count() == n1 + n2
-        wa = assign_to_centroids(emb, idx.centroids_df, "vec_id", "embedding")
+        write_pq_index(b1, p, "vec_id", "embedding", m=8, k_codes=16, dim=64,
+                       cell_col="label")
+        append_to_pq_index(b2, p, validate_unique=True)
+        idx = IndexHandle(spark, p, "pq")
+        assert idx.table("cells").count() == n1 + n2
+        wa = assign_to_centroids(emb, idx.table("centroids"), "vec_id", "embedding")
         wc = pack_codes(
-            pq_encode(emb, "vec_id", "embedding", idx.codebook_df, m=8, dim=64)
+            pq_encode(emb, "vec_id", "embedding", idx.table("codebook"), m=8, dim=64)
         )
         want = wa.select(F.col("neighbor_id").alias("vid"), "cell").join(
             wc, on="vid"
         )
-        assert rows(idx.cells_df, ["vid", "cell", "codes"]) == rows(
+        assert rows(idx.table("cells"), ["vid", "cell", "codes"]) == rows(
             want, ["vid", "cell", "codes"]
         )
 
         # --- residual IVFPQ: residuals vs stored centroids -----------
         p = f"{tmp}/ivfpqr"
-        write_ivfpq_residual_index(b1, p, "vec_id", "embedding", "label",
-                                   m=8, k_codes=16, dim=64)
-        append_to_ivfpq_residual_index(b2, p, validate_unique=True)
-        idx = read_ivfpq_residual_index(spark, p)
-        assert idx.cells_df.count() == n1 + n2
-        wa = assign_to_centroids(emb, idx.centroids_df, "vec_id", "embedding")
-        res = wa.join(F.broadcast(idx.centroids_df), "cell").select(
+        write_pq_index(b1, p, "vec_id", "embedding", m=8, k_codes=16, dim=64,
+                       cell_col="label", by_residual=True)
+        append_to_pq_index(b2, p, validate_unique=True)
+        idx = IndexHandle(spark, p, "pq")
+        assert idx.table("cells").count() == n1 + n2
+        wa = assign_to_centroids(emb, idx.table("centroids"), "vec_id", "embedding")
+        res = wa.join(F.broadcast(idx.table("centroids")), "cell").select(
             F.col("neighbor_id").alias("rid"),
             F.zip_with("v_c", "centroid", lambda a, b: a - b).alias("rvec"),
         )
         wc = pack_codes(
-            pq_encode(res, "rid", "rvec", idx.codebook_df, m=8, dim=64)
+            pq_encode(res, "rid", "rvec", idx.table("codebook"), m=8, dim=64)
         )
         want = wa.select(F.col("neighbor_id").alias("vid"), "cell").join(
             wc, on="vid"
         )
-        assert rows(idx.cells_df, ["vid", "cell", "codes"]) == rows(
+        assert rows(idx.table("cells"), ["vid", "cell", "codes"]) == rows(
             want, ["vid", "cell", "codes"]
         )
 
@@ -1700,7 +1613,7 @@ def test_knn_graph_index_append_equals_rebuild(spark, sf_dir):
             assert after[d] == before[d], f"{d} was rewritten"
 
         idx = read_knn_graph_index(spark, path)
-        assert idx.assignments_df.count() == emb.count()
+        assert idx.table("assignments").count() == emb.count()
 
         # reference: all vectors assigned at the FIXED stored centroids
         weights = hyperplane_weights(1, idx.meta["n_bits"],
@@ -1712,13 +1625,13 @@ def test_knn_graph_index_append_equals_rebuild(spark, sf_dir):
             F.col("_seed_cell"),
         )
         ref_assigned, _ = lsh_assign_to_cells(
-            vecs, idx.centroids_df, weights[0], "vec_id"
+            vecs, idx.table("centroids"), weights[0], "vec_id"
         )
         want = knn_edges_from_assigned(ref_assigned)
         cols = ["vec_id", "cell", "n1", "c1", "n2", "c2", "n3", "c3",
                 "mutual_cnt"]
         got_rows = sorted(tuple(r[c] for c in cols)
-                          for r in idx.edges_df.select(*cols).collect())
+                          for r in idx.table("edges").select(*cols).collect())
         want_rows = sorted(tuple(r[c] for c in cols)
                            for r in want.select(*cols).collect())
         assert got_rows == want_rows and len(got_rows) > 0
@@ -1744,9 +1657,9 @@ def test_pq_append_resumes_after_half_crash(spark, sf_dir):
     from cpx_etl_spark.functions.vectors import as_double
     from cpx_etl_spark.operators.similarity import (
         append_to_pq_index,
-        read_pq_index,
         write_pq_index,
     )
+    from cpx_etl_spark.scratch import IndexHandle
     from cpx_etl_spark.sources import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1761,16 +1674,16 @@ def test_pq_append_resumes_after_half_crash(spark, sf_dir):
         # simulate the crash: batch-2 vectors landed, codes did not
         b2.select(
             F.col("vec_id").alias("neighbor_id"),
-            as_double("embedding").alias("v"),
+            as_double("embedding").alias("v_c"),
         ).write.mode("append").parquet(os.path.join(path, "vectors"))
 
         # the retry — with validation ON — resumes and completes
         append_to_pq_index(b2, path, validate_unique=True)
-        idx = read_pq_index(spark, path)
-        assert idx.vectors_df.count() == n1 + n2  # no duplicates
-        assert idx.codes_df.count() == n1 + n2
+        idx = IndexHandle(spark, path, "pq")
+        assert idx.table("vectors").count() == n1 + n2  # no duplicates
+        assert idx.table("codes").count() == n1 + n2
         # rerank table is exactly one row per id
-        dup = (idx.vectors_df.groupBy("neighbor_id").count()
+        dup = (idx.table("vectors").groupBy("neighbor_id").count()
                .filter(F.col("count") > 1).count())
         assert dup == 0
 
@@ -1930,7 +1843,7 @@ def test_graph_beam_search_recall_and_walk_quality(spark, sf_dir):
         spark, build_knn_graph_standing_index(spark, sf_dir)
     )
     asg = {r["neighbor_id"]: r["cell"]
-           for r in idx.assignments_df.collect()}
+           for r in idx.table("assignments").collect()}
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     n = emb.count()
     qdf = emb.filter(F.col("vec_id") < 5).select(
@@ -1941,7 +1854,7 @@ def test_graph_beam_search_recall_and_walk_quality(spark, sf_dir):
         F.col("_c").desc(), F.col("cell").asc()
     )
     pr = (
-        qdf.crossJoin(idx.centroids_df)
+        qdf.crossJoin(idx.table("centroids"))
         .withColumn(
             "_c", F.round(cosine(F.col("v_q"), F.col("centroid")) - 1e-9, 6)
         )

@@ -410,9 +410,9 @@ def test_pq_broadcasts_are_query_sized_only(spark, sf_dir):
     (the m*k_codes codebook and the per-query ADC lookup table) — the
     corpus-scaled codes/vectors sides are never hinted, so the plan
     survives a billion-vector corpus. Counted on the logical plan
-    where only explicit hints appear: pq_topk hints exactly 3
-    broadcasts (codebook into the LUT build, LUT into the ADC join,
-    query vectors into the rerank)."""
+    where only explicit hints appear: pq_serve over a plain PQ build
+    hints exactly 3 broadcasts (codebook into the LUT build, LUT into
+    the ADC join, query vectors into the rerank)."""
     q, _ = load_registry()
     df = q["ann_pq_topk"](spark, sf_dir)
     logical = df._jdf.queryExecution().optimizedPlan().toString()

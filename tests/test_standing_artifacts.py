@@ -114,20 +114,25 @@ def test_rewritten_source_gets_a_new_location(tmp_path, monkeypatch):
     assert location() == after
 
 
-# index_serve's three queries, the one whose build is two steps, and the
-# mixture plan over two shard artifacts
+# index_serve's three queries, the one whose build is two steps, the
+# mixture plan over two shard artifacts, and the other two PQ-family
+# indexes (no cells; cells)
 SERVED = ("ann_opq_topk_indexed", "q_winnow_incremental", "q_training_shards",
-          "ann_ivf_append_serve", "q_training_mixture")
+          "ann_ivf_append_serve", "q_training_mixture", "ann_pq_topk_indexed",
+          "ann_ivfpq_topk_indexed")
 # construction jobs after setup: q_winnow_incremental's fingerprint cut
-# (operators/dedup.py _winnow_frames, ROADMAP item 2), and
+# (operators/dedup.py _winnow_frames, ROADMAP item 2),
 # q_training_mixture's one collect of both manifests' token sums (a
-# shuffle-map job and a result job)
-CONSTRUCTION_JOBS = {"q_winnow_incremental": 1, "q_training_mixture": 2}
+# shuffle-map job and a result job), and ann_ivfpq_topk_indexed's
+# collect of the probed cell ids for its literal prune (operators/
+# similarity.py pq_serve; 3 jobs, as tools/plan_build_audit.py counts)
+CONSTRUCTION_JOBS = {"q_winnow_incremental": 1, "q_training_mixture": 2,
+                     "ann_ivfpq_topk_indexed": 3}
 
 
 @pytest.fixture(scope="module")
 def served(spark, sf_dir, tmp_path_factory):
-    """The four queries with their setups run, under a cache root of
+    """The SERVED queries with their setups run, under a cache root of
     this module's own."""
     from cpx_etl_spark.queries import SETUPS, load_registry
 
@@ -180,10 +185,23 @@ def test_half_built_artifact_is_rebuilt(served, spark, sf_dir, monkeypatch, name
 def test_meta_of_the_wrong_kind_raises(served, spark, sf_dir):
     queries, setups = served
     path = setups["ann_opq_topk_indexed"](spark, sf_dir)
-    meta = scratch.read_meta(spark, path, "opq")
-    scratch.publish_meta(spark, path, "pq", meta)
+    meta = scratch.read_meta(spark, path, "pq")
+    scratch.publish_meta(spark, path, "ivf", meta)
     try:
-        with pytest.raises(ValueError, match="holds a 'pq' artifact, expected 'opq'"):
+        with pytest.raises(ValueError, match="holds a 'ivf' artifact, expected 'pq'"):
             queries["ann_opq_topk_indexed"](spark, sf_dir)
     finally:
-        scratch.publish_meta(spark, path, "opq", meta)
+        scratch.publish_meta(spark, path, "pq", meta)
+
+
+@pytest.mark.parametrize("name", ["ann_pq_topk", "ann_opq_topk", "ann_ivfpq_topk",
+                                  "ann_ivfpq_residual_topk", "ann_sq8_topk"])
+def test_one_shot_ann_construction_runs_no_job(spark, sf_dir, jobs_run, name):
+    """The one-shot PQ-family and SQ8 queries build their index inside
+    the plan: constructing one runs no Spark job."""
+    from cpx_etl_spark.queries import load_registry
+
+    queries = load_registry()[0]
+    queries[name](spark, sf_dir)  # the first construction infers input schemas
+    _, jobs = jobs_run(lambda: queries[name](spark, sf_dir))
+    assert jobs == 0

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cpx_etl_spark.operators.cut import cut
-from cpx_etl_spark.scratch import IndexHandle, publish_meta, read_meta
+from cpx_etl_spark.scratch import IndexHandle, Table, append_index, write_index
 
 
 def observe_count(df: DataFrame, stats: dict | None, name: str) -> DataFrame:
@@ -280,33 +280,16 @@ def km_coefficients(k: int, tag: str = "km") -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signatures(
-    index: DataFrame, id_col: str, k: int, hash_fn: str = "md5"
-) -> DataFrame:
-    """k minhash components per doc via double hashing (one digest per
-    shingle row, k codegen'd linear combos). One aggregation over the
-    exploded index.
-
-    hash_fn="md5" (default) is the cross-engine-replayable construction
-    the DuckDB oracles mirror. hash_fn="xxhash64" swaps in two JVM
-    xxhash64 intrinsics per shingle (no hex-string round trip). Same
-    (k, bands) statistics, same verify semantics; only the hash draws
-    differ, so it has no SQL oracle — equivalence with the md5 path is
-    pytest-asserted on the verified pair set. MEASURED at sf1
-    (min-of-3, k=64): 5.24 s vs 5.26 s — end-to-end the pipeline is
-    shuffle-bound (band join + signature groupBy), NOT digest-bound,
-    so the md5 construction costs nothing in practice and keeps the
-    oracle; the knob exists to prove hash-independence and for
-    digest-bound regimes (much longer shingles)."""
-    if hash_fn == "xxhash64":
-        h1 = F.pmod(F.xxhash64(F.lit("mh1"), F.col("sh")), F.lit(KM_PRIME))
-        h2 = F.pmod(F.xxhash64(F.lit("mh2"), F.col("sh")), F.lit(KM_PRIME))
-    elif hash_fn == "md5":
-        d = F.md5(F.col("sh"))
-        h1 = F.conv(F.substring(d, 1, 8), 16, 10).cast("long") % KM_PRIME
-        h2 = F.conv(F.substring(d, 9, 8), 16, 10).cast("long") % KM_PRIME
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
+def minhash_signatures(index: DataFrame, id_col: str, k: int) -> DataFrame:
+    """k minhash components per doc via double hashing (one md5 digest
+    per shingle row, k codegen'd linear combos), the cross-engine
+    construction the DuckDB oracles replay. One aggregation over the
+    exploded index. End to end the operator is shuffle-bound (band join
+    and signature groupBy), not digest-bound: two JVM xxhash64 draws in
+    place of the md5 measured 5.24 s vs 5.26 s at sf1 (PERF.md, r6)."""
+    d = F.md5(F.col("sh"))
+    h1 = F.conv(F.substring(d, 1, 8), 16, 10).cast("long") % KM_PRIME
+    h2 = F.conv(F.substring(d, 9, 8), 16, 10).cast("long") % KM_PRIME
     base = index.select(F.col(id_col), h1.alias("_h1"), h2.alias("_h2"))
     aggs = [
         F.min((F.lit(a) * F.col("_h1") + F.lit(b) * F.col("_h2")) % KM_PRIME).alias(
@@ -322,7 +305,6 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
                       threshold: float = 0.5,
                       min_band_collisions: int = 1,
                       stats: dict | None = None,
-                      hash_fn: str = "md5",
                       prune_verify: bool | None = None) -> DataFrame:
     """MinHash signatures -> LSH band buckets -> candidate pairs ->
     exact Jaccard verify. rows_per_band = k // bands.
@@ -355,7 +337,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     counts = rows.groupBy(id_col).agg(
         F.count_distinct(F.col("sh")).alias("n_sh")
     ).transform(cut)
-    sig = minhash_signatures(rows, id_col, k, hash_fn=hash_fn)
+    sig = minhash_signatures(rows, id_col, k)
     # kept: dedup_doc_fuzzy_verdict 3.31 s cut vs 3.63 s uncut, sf0.1 local[4]
     stacked = band_rows(sig, id_col, k, bands).transform(cut)
     s1 = stacked.select(F.col(id_col).alias("doc_a"), "band_idx", "band_key")
@@ -515,7 +497,7 @@ def cross_corpus_minhash_pairs(
     df_new: DataFrame, df_ref: DataFrame, id_col: str, text_col: str,
     n: int = 2, k: int = 8, bands: int = 4, threshold: float = 0.5,
     min_band_collisions: int = 1, max_ref_band_df: int | None = None,
-    stats: dict | None = None, hash_fn: str = "md5",
+    stats: dict | None = None,
 ) -> DataFrame:
     """Asymmetric near-dup join: docs in ``df_new`` (a fresh crawl)
     whose near-duplicate already exists in ``df_ref`` (the standing
@@ -543,7 +525,7 @@ def cross_corpus_minhash_pairs(
         # path, and no corpus-token-sized materialization (r18 — the
         # narrow-cut rule; see minhash_lsh_pairs)
         rows = shingle_rows(df, id_col, text_col, n)
-        sig = minhash_signatures(rows, id_col, k, hash_fn=hash_fn)
+        sig = minhash_signatures(rows, id_col, k)
         return rows, band_rows(sig, id_col, k, bands).withColumnRenamed(id_col, out)
 
     rows_new, banded_new = banded(df_new, "doc_a")
@@ -589,8 +571,8 @@ def cross_corpus_minhash_pairs(
 # verify-time semi-join on candidate docs touches few files.
 # ---------------------------------------------------------------------------
 
-def _index_frames(df: DataFrame, id_col: str, text_col: str,
-                  n: int, k: int, bands: int, hash_fn: str = "md5"):
+def _signature_tables(df: DataFrame, id_col: str, text_col: str,
+                      n: int, k: int, bands: int) -> list[Table]:
     # each frame is written exactly once, so no checkpoint: signatures
     # off the raw rows (min() is duplicate-insensitive — no distinct
     # shuffle on the sig path), counts in one count_distinct aggregate
@@ -598,32 +580,15 @@ def _index_frames(df: DataFrame, id_col: str, text_col: str,
     # index on executor-local storage; the index write IS its
     # materialization)
     rows = shingle_rows(df, id_col, text_col, n)
-    sig = minhash_signatures(rows, id_col, k, hash_fn=hash_fn)
-    banded = band_rows(sig, id_col, k, bands)
-    index = rows.dropDuplicates()
+    sig = minhash_signatures(rows, id_col, k)
     counts = rows.groupBy(id_col).agg(
         F.count_distinct(F.col("sh")).alias("n_sh"))
-    return banded, index, counts
-
-
-def validate_new_ids(df_new: DataFrame, stored_ids: DataFrame,
-                     id_col: str, fn_name: str, path: str) -> None:
-    """Refuse an append batch whose ids already exist in a persisted
-    index — an id ingested twice double-counts its derived rows. One
-    bounded semi-join + limit(1) probe. The single home of the check
-    shared by every index append (signature, winnowing, ANN families,
-    kNN graph — code-review r15)."""
-    clash = (
-        df_new.select(id_col)
-        .join(stored_ids, on=id_col, how="left_semi")
-        .limit(1)
-        .collect()
-    )
-    if clash:
-        raise ValueError(
-            f"{fn_name}: id {clash[0][0]!r} already exists in the "
-            f"index at {path}"
-        )
+    return [
+        Table("bands", band_rows(sig, id_col, k, bands), id_col,
+              cluster=("band_key",)),
+        Table("shingles", rows.dropDuplicates(), id_col, cluster=(id_col,)),
+        Table("counts", counts, id_col),
+    ]
 
 
 def write_signature_index(df: DataFrame, path: str, id_col: str,
@@ -631,43 +596,22 @@ def write_signature_index(df: DataFrame, path: str, id_col: str,
                           bands: int = 4) -> None:
     """Derive and persist the full signature index for ``df`` (the
     standing corpus). Overwrites any existing index at ``path``."""
-    import os
-
-    from cpx_etl_spark.sources.sinks import write_clustered_parquet
-
-    banded, index, counts = _index_frames(df, id_col, text_col, n, k, bands)
-    os.makedirs(path, exist_ok=True)
-    write_clustered_parquet(banded, os.path.join(path, "bands"), ["band_key"])
-    write_clustered_parquet(index, os.path.join(path, "shingles"), [id_col])
-    counts.write.mode("overwrite").parquet(os.path.join(path, "counts"))
-    publish_meta(df.sparkSession, path, "signature",
-                 {"id_col": id_col, "text_col": text_col, "n": n, "k": k,
-                  "bands": bands})
+    write_index(path, "signature",
+                {"id_col": id_col, "text_col": text_col, "n": n, "k": k,
+                 "bands": bands},
+                _signature_tables(df, id_col, text_col, n, k, bands))
 
 
-def append_to_signature_index(df: DataFrame, path: str,
-                              validate_unique: bool = False) -> None:
+def append_to_signature_index(df: DataFrame, path: str) -> None:
     """Add a new batch of docs (e.g. the crawl docs that SURVIVED dedup)
     to an existing index — the step that closes the incremental loop:
     sign once on ingestion, never re-derive. Parameters come from the
-    stored meta; ids must not already exist in the index (an id
-    appended twice double-counts its shingles and corrupts every
-    verify involving it). ``validate_unique=True`` pays one semi-join
-    against the stored counts to enforce that before writing."""
-    import os
-
-    meta = read_meta(df.sparkSession, path, "signature")
-    if validate_unique:
-        stored = df.sparkSession.read.parquet(os.path.join(path, "counts"))
-        validate_new_ids(df, stored.select(meta["id_col"]), meta["id_col"],
-                         "append_to_signature_index", path)
-    banded, index, counts = _index_frames(
-        df, meta["id_col"], meta["text_col"], meta["n"], meta["k"],
-        meta["bands"],
-    )
-    banded.write.mode("append").parquet(os.path.join(path, "bands"))
-    index.write.mode("append").parquet(os.path.join(path, "shingles"))
-    counts.write.mode("append").parquet(os.path.join(path, "counts"))
+    stored meta; the tables land bands, shingles, counts under
+    scratch.append_index's contract."""
+    idx = read_signature_index(df.sparkSession, path)
+    m = idx.meta
+    append_index(df, idx, _signature_tables(
+        df, m["id_col"], m["text_col"], m["n"], m["k"], m["bands"]))
 
 
 def read_signature_index(spark, path: str) -> IndexHandle:
@@ -837,50 +781,32 @@ def _winnow_frames(df: DataFrame, id_col: str, text_col: str,
     return fps, counts
 
 
+def _winnow_tables(df: DataFrame, id_col: str, text_col: str,
+                   k: int, w: int) -> list[Table]:
+    fps, counts = _winnow_frames(df, id_col, text_col, k, w)
+    return [Table("counts", counts, id_col),
+            Table("fps", fps, id_col, cluster=("h",))]
+
+
 def write_winnow_index(df: DataFrame, path: str, id_col: str,
                        text_col: str, k: int = 4, w: int = 4) -> None:
     """Derive and persist the winnowing index for ``df`` (the standing
     corpus). Overwrites any existing index at ``path``."""
-    import os
-
-    from cpx_etl_spark.sources.sinks import write_clustered_parquet
-
-    fps, counts = _winnow_frames(df, id_col, text_col, k, w)
-    os.makedirs(path, exist_ok=True)
-    write_clustered_parquet(fps, os.path.join(path, "fps"), ["h"])
-    counts.write.mode("overwrite").parquet(os.path.join(path, "counts"))
-    publish_meta(df.sparkSession, path, "winnow",
-                 {"id_col": id_col, "text_col": text_col, "k": k, "w": w})
+    write_index(path, "winnow",
+                {"id_col": id_col, "text_col": text_col, "k": k, "w": w},
+                _winnow_tables(df, id_col, text_col, k, w))
 
 
-def append_to_winnow_index(df: DataFrame, path: str,
-                           validate_unique: bool = True) -> None:
+def append_to_winnow_index(df: DataFrame, path: str) -> None:
     """Add a new batch (e.g. the crawl docs that SURVIVED the dedup
     decision) to an existing winnowing index — fingerprint once on
     ingestion, never re-derive. Parameters come from the stored meta;
-    ids must not already exist (a doc appended twice double-counts its
-    fingerprints and inflates n_shared/containment).
-
-    Crash contract (code-review r13): counts append BEFORE fps, and
-    ``validate_unique`` (default ON — one cheap semi-join against the
-    stored counts) refuses already-present ids. A crash between the
-    two appends leaves the batch's counts without its fps — its pairs
-    are simply absent until re-ingested — and the at-least-once RETRY
-    of that batch then fails the uniqueness check LOUDLY instead of
-    silently double-appending fingerprints. Recovery: rebuild via
-    write_winnow_index (idempotent overwrite)."""
-    import os
-
-    meta = read_meta(df.sparkSession, path, "winnow")
-    if validate_unique:
-        stored = df.sparkSession.read.parquet(os.path.join(path, "counts"))
-        validate_new_ids(df, stored.select(meta["id_col"]), meta["id_col"],
-                         "append_to_winnow_index", path)
-    fps, counts = _winnow_frames(
-        df, meta["id_col"], meta["text_col"], meta["k"], meta["w"]
-    )
-    counts.write.mode("append").parquet(os.path.join(path, "counts"))
-    fps.write.mode("append").parquet(os.path.join(path, "fps"))
+    the tables land counts, then fps, under scratch.append_index's
+    contract."""
+    idx = read_winnow_index(df.sparkSession, path)
+    m = idx.meta
+    append_index(df, idx, _winnow_tables(
+        df, m["id_col"], m["text_col"], m["k"], m["w"]))
 
 
 def read_winnow_index(spark, path: str) -> IndexHandle:

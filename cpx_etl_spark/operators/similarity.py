@@ -41,8 +41,8 @@ from pyspark.sql import functions as F
 
 from cpx_etl_spark.functions.vectors import as_double, cosine, dot, norm
 from cpx_etl_spark.operators.cut import cut
-from cpx_etl_spark.operators.dedup import observe_count, validate_new_ids
-from cpx_etl_spark.scratch import IndexHandle, publish_meta
+from cpx_etl_spark.operators.dedup import observe_count
+from cpx_etl_spark.scratch import IndexHandle, Table, append_index, write_index
 
 _QUANT = 1000000.0  # embedding quantization scale (floor(x * 1e6))
 
@@ -1121,18 +1121,15 @@ def write_ivf_index(
     """Train and persist the IVF index: centroids/ (one small file) and
     assignments/ (neighbor_id, v_c, cell) clustered by cell so serving
     scans prune to the probed cells' row groups."""
-    import os
-
-    from cpx_etl_spark.sources.sinks import write_clustered_parquet
-
     centroids, assigned = ivf_build(corpus, id_col, vec_col, cell_col)
-    os.makedirs(path, exist_ok=True)
-    centroids.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "centroids")
-    )
-    write_clustered_parquet(assigned, os.path.join(path, "assignments"), ["cell"])
-    publish_meta(corpus.sparkSession, path, "ivf",
-                 {"id_col": id_col, "vec_col": vec_col, "cell_col": cell_col})
+    write_index(path, "ivf",
+                {"id_col": id_col, "vec_col": vec_col, "cell_col": cell_col},
+                [Table("centroids", centroids, one_file=True),
+                 _assignments_table(assigned)])
+
+
+def _assignments_table(assigned: DataFrame) -> Table:
+    return Table("assignments", assigned, "neighbor_id", cluster=("cell",))
 
 
 def read_ivf_index(spark, path: str) -> IndexHandle:
@@ -1142,54 +1139,32 @@ def read_ivf_index(spark, path: str) -> IndexHandle:
     return IndexHandle(spark, path, "ivf")
 
 
-def append_to_ivf_index(
-    df_new: DataFrame, path: str, validate_unique: bool = False,
-) -> None:
+def _assign_to_stored(df_new: DataFrame, centroids: DataFrame, id_col: str,
+                      vec_col: str, dim: int | None = None):
+    """assign_to_centroids against an index's STORED centroids, as
+    (assigned, broadcast). The centroids broadcast only while the cell
+    count is classic-IVF small: an index trained with data-sized k must
+    not pin a corpus-scale centroid frame (ivf_build's guard; the count
+    is a tiny column-pruned scan)."""
+    broadcast = centroids.count() <= _IVF_BROADCAST_K_MAX
+    return assign_to_centroids(df_new, centroids, id_col, vec_col,
+                               broadcast_centroids=broadcast, dim=dim), broadcast
+
+
+def append_to_ivf_index(df_new: DataFrame, path: str) -> None:
     """FAISS ``add()`` for the persisted IVF index: a new crawl batch
     assigns to the STORED centroids (assign_to_centroids — the
     identical min_by construction training used, so append ==
     from-scratch rebuild at fixed centroids is bit-exact) and its
-    cell-clustered assignment rows append beside the standing ones.
-    Centroids never retrain — the daily-ingest serving posture; a
-    drifted corpus re-trains via write_ivf_index (FAISS's
-    train()/add() split). Parameters come from the stored meta.
-
-    Contract: INSERT-IF-ABSENT. The stored-id anti-join that makes a
-    crashed append re-runnable also means a re-ingested id with a
-    CHANGED vector is skipped, not updated (FAISS add() has no upsert
-    either) — pass validate_unique=True to refuse such batches loudly,
-    or rebuild via write_ivf_index to change existing vectors. The
-    same contract holds for every append in this module."""
-    import os
-
-    from cpx_etl_spark.sources.sinks import write_clustered_parquet
-
+    cell-clustered assignment rows append beside the standing ones
+    (scratch.append_index). Centroids never retrain — the daily-ingest
+    serving posture; a drifted corpus re-trains via write_ivf_index
+    (FAISS's train()/add() split). Parameters come from the stored
+    meta."""
     idx = read_ivf_index(df_new.sparkSession, path)
-    id_col, vec_col = idx.meta["id_col"], idx.meta["vec_col"]
-    if validate_unique:
-        validate_new_ids(
-            df_new,
-            idx.table("assignments").select(F.col("neighbor_id").alias(id_col)),
-            id_col, "append_to_ivf_index", path,
-        )
-    # bounded broadcast only while the cell count is (classic-IVF)
-    # small — an index trained with corpus-sized k must not pin a
-    # corpus-scale centroid frame on append either (the ivf_build
-    # guard; the centroid count is a tiny column-pruned scan)
-    k_cells = idx.table("centroids").count()
-    assigned = assign_to_centroids(
-        df_new, idx.table("centroids"), id_col, vec_col,
-        broadcast_centroids=(k_cells <= _IVF_BROADCAST_K_MAX),
-    )
-    # idempotent resume: drop rows already landed, so a crashed append
-    # re-runs to completion instead of duplicating serve candidates
-    assigned = assigned.join(
-        idx.table("assignments").select("neighbor_id"),
-        on="neighbor_id", how="left_anti",
-    )
-    write_clustered_parquet(
-        assigned, os.path.join(path, "assignments"), ["cell"], mode="append",
-    )
+    assigned, _ = _assign_to_stored(df_new, idx.table("centroids"),
+                                    idx.meta["id_col"], idx.meta["vec_col"])
+    append_index(df_new, idx, [_assignments_table(assigned)])
 
 
 # ---------------------------------------------------------------------------
@@ -1214,10 +1189,6 @@ def write_knn_graph_index(
     cells, one Lloyd step, bucket-bounded assignment, top-3 within-cell
     edges + mutual counts. Edges partition by cell % _KNN_EDGE_PARTS so
     append_to_knn_graph_index can overwrite only touched partitions."""
-    import os
-
-    from cpx_etl_spark.sources.sinks import write_clustered_parquet
-
     n = corpus.count()
     k = max(2, -(-n // target_cell))
     if n_bits is None:
@@ -1228,22 +1199,19 @@ def write_knn_graph_index(
     )
     # kept: write_knn_graph_index 4.82 s cut vs 6.68 s uncut, sf0.1 local[4]
     assigned = cut(assigned)
-    edges = knn_edges_from_assigned(assigned, dim=dim).withColumn(
-        "pcell", F.col("cell") % _KNN_EDGE_PARTS
+    write_index(path, "knn_graph",
+                {"id_col": id_col, "vec_col": vec_col, "k": k,
+                 "n_bits": n_bits, "dim": dim, "edge_parts": _KNN_EDGE_PARTS},
+                [Table("centroids", centroids, one_file=True),
+                 _assignments_table(assigned),
+                 _edges_table(assigned, _KNN_EDGE_PARTS, dim)])
+
+
+def _edges_table(members: DataFrame, parts: int, dim: int) -> Table:
+    edges = knn_edges_from_assigned(members, dim=dim).withColumn(
+        "pcell", F.col("cell") % parts
     )
-    os.makedirs(path, exist_ok=True)
-    centroids.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "centroids")
-    )
-    write_clustered_parquet(
-        assigned, os.path.join(path, "assignments"), ["cell"]
-    )
-    edges.write.partitionBy("pcell").mode("overwrite").parquet(
-        os.path.join(path, "edges")
-    )
-    publish_meta(corpus.sparkSession, path, "knn_graph",
-                 {"id_col": id_col, "vec_col": vec_col, "k": k,
-                  "n_bits": n_bits, "dim": dim, "edge_parts": _KNN_EDGE_PARTS})
+    return Table("edges", edges, partition="pcell")
 
 
 def read_knn_graph_index(spark, path: str) -> IndexHandle:
@@ -1253,39 +1221,25 @@ def read_knn_graph_index(spark, path: str) -> IndexHandle:
     return IndexHandle(spark, path, "knn_graph")
 
 
-def append_to_knn_graph_index(
-    df_new: DataFrame, path: str, validate_unique: bool = False,
-) -> list[int]:
+def append_to_knn_graph_index(df_new: DataFrame, path: str) -> list[int]:
     """INCREMENTAL kNN-graph maintenance (VERDICT r14 stretch): the
     new batch assigns to the STORED cells (same seeded-bucket rule as
     the build — a pure function of vector, stored centroids and
     hyperplanes, so append == rebuild at fixed centroids bit-exactly),
-    its assignment rows append, and ONLY the touched edge partitions
-    (pcell = cell % edge_parts) are recomputed from the stored members
-    of those partitions' cells plus the new rows, then swapped in via
-    dynamic partition overwrite. Untouched partitions' files are never
-    rewritten — the whole point: edge maintenance cost is bounded by
-    the touched-cell population, not the corpus. Returns the touched
-    pcell list. Not crash-atomic across the two writes (the
-    signature-index posture), but fully RE-RUNNABLE: the stored-id
-    anti-join makes a retry land each row exactly once (and makes the
-    append insert-if-absent — see append_to_ivf_index for the
-    changed-payload contract)."""
-    import os
-
-    from cpx_etl_spark.sources.sinks import write_clustered_parquet
-
+    ONLY the touched edge partitions (pcell = cell % edge_parts) are
+    recomputed from the stored members of those partitions' cells plus
+    the new rows and swapped in via dynamic partition overwrite, and
+    the assignment rows append (scratch.append_index). Untouched
+    partitions' files are never rewritten — the whole point: edge
+    maintenance cost is bounded by the touched-cell population, not the
+    corpus. Returns the touched pcell list. Edges land first: their plan
+    re-scans the assignments directory when it runs, so appending the
+    assignment rows before it would count the new batch twice."""
     spark = df_new.sparkSession
     idx = read_knn_graph_index(spark, path)
     meta = idx.meta
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     k, n_bits, parts = meta["k"], meta["n_bits"], meta["edge_parts"]
-    if validate_unique:
-        validate_new_ids(
-            df_new,
-            idx.table("assignments").select(F.col("neighbor_id").alias(id_col)),
-            id_col, "append_to_knn_graph_index", path,
-        )
     weights = hyperplane_weights(1, n_bits, meta["dim"], tag="tc")
     seeded = df_new.withColumn("_seed_cell", _md5_seed_cell(id_col, k))
     vecs = seeded.select(
@@ -1294,18 +1248,9 @@ def append_to_knn_graph_index(
     new_assigned, _fb = lsh_assign_to_cells(
         vecs, idx.table("centroids"), weights[0], id_col, dim=meta["dim"]
     )
-    # idempotent resume: drop rows already in the stored assignments —
-    # a full re-run becomes a no-op (no edge rewrite, no append) and a
-    # crashed half-append (edges landed, assignments not) completes;
-    # without this, a re-run would count the batch TWICE in the edge
-    # recompute (members = stored + new) and corrupt the touched
-    # partitions (code-review r15)
     # kept, not timed: the collect, the edge write and the append read
-    # one snapshot of this anti-join, whose input the append changes
-    new_assigned = new_assigned.join(
-        idx.table("assignments").select("neighbor_id"),
-        on="neighbor_id", how="left_anti",
-    ).transform(cut, eager=True)
+    # one snapshot of the batch's assignment
+    new_assigned = cut(new_assigned, eager=True)
     touched = sorted(
         {r["cell"] % parts for r in
          new_assigned.select("cell").distinct().collect()}
@@ -1317,28 +1262,8 @@ def append_to_knn_graph_index(
     members = idx.table("assignments").filter(
         (F.col("cell") % parts).isin(touched)
     ).unionByName(new_assigned)
-    edges_new = knn_edges_from_assigned(members, dim=meta["dim"]).withColumn(
-        "pcell", F.col("cell") % parts
-    )
-    # edges FIRST, assignments second: the edges plan lazily re-scans
-    # the assignments directory at execution time, so appending the
-    # assignment rows before running it would double-count the new
-    # batch; and a crash between the writes leaves an idempotently
-    # re-runnable state (edge overwrite recomputes identically, the
-    # assignment append then lands once). The dynamic-overwrite mode
-    # is a WRITER option, not a session conf toggle — a global toggle
-    # would race concurrent writers in the same session (code-review
-    # r15 second pass).
-    (
-        edges_new.write.partitionBy("pcell")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(os.path.join(path, "edges"))
-    )
-    write_clustered_parquet(
-        new_assigned, os.path.join(path, "assignments"), ["cell"],
-        mode="append",
-    )
+    append_index(df_new, idx, [_edges_table(members, parts, meta["dim"]),
+                               _assignments_table(new_assigned)])
     return touched
 
 
@@ -1376,10 +1301,6 @@ def write_embedding_index(
     (n_tables, n_bits) default to the lsh_params S-curve derivation for
     ``threshold`` — persisted in the meta so probes always use the
     exact same hyperplanes."""
-    import os
-
-    from cpx_etl_spark.sources.sinks import write_clustered_parquet
-
     if n_tables is None or n_bits is None:
         d_tables, d_bits = lsh_params(threshold)
         n_tables = n_tables if n_tables is not None else d_tables
@@ -1390,12 +1311,11 @@ def write_embedding_index(
         sketch=sketch_planes(dim),
     )
     vecs = df.select(F.col(id_col), as_double(vec_col).alias("_vec"))
-    os.makedirs(path, exist_ok=True)
-    write_clustered_parquet(idx, os.path.join(path, "buckets"), ["tbl", "bucket"])
-    write_clustered_parquet(vecs, os.path.join(path, "vectors"), [id_col])
-    publish_meta(df.sparkSession, path, "embedding_lsh",
-                 {"id_col": id_col, "vec_col": vec_col, "threshold": threshold,
-                  "dim": dim, "n_tables": n_tables, "n_bits": n_bits, "tag": tag})
+    write_index(path, "embedding_lsh",
+                {"id_col": id_col, "vec_col": vec_col, "threshold": threshold,
+                 "dim": dim, "n_tables": n_tables, "n_bits": n_bits, "tag": tag},
+                [Table("buckets", idx, cluster=("tbl", "bucket")),
+                 Table("vectors", vecs, cluster=(id_col,))])
 
 
 def read_embedding_index(spark, path: str) -> IndexHandle:
@@ -1933,25 +1853,25 @@ def write_pq_index(
     probed-cell scan reads few row groups. The build's meta, which
     carries the shape, is published last. Training, rotation,
     assignment and encoding run once; serving never re-derives them."""
-    import os
-
-    from cpx_etl_spark.sources.sinks import write_clustered_parquet
-
     built = pq_build(corpus, id_col, vec_col, m=m, k_codes=k_codes, dim=dim,
                      tag=tag, cell_col=cell_col, by_residual=by_residual)
-    packed = pack_codes(built.codes)
-    os.makedirs(path, exist_ok=True)
-    built.codebook.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "codebook"))
-    built.vectors.write.mode("overwrite").parquet(os.path.join(path, "vectors"))
-    if cell_col is None:
-        packed.write.mode("overwrite").parquet(os.path.join(path, "codes"))
-    else:
-        built.centroids.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, "centroids"))
-        write_clustered_parquet(built.cells.join(packed, on="vid"),
-                                os.path.join(path, "cells"), ["cell"])
-    publish_meta(corpus.sparkSession, path, "pq", built.meta)
+    trained = [Table("codebook", built.codebook, one_file=True)]
+    if cell_col is not None:
+        trained.append(Table("centroids", built.centroids, one_file=True))
+    write_index(path, "pq", built.meta,
+                trained + _pq_tables(built.meta, built.vectors,
+                                     pack_codes(built.codes), built.cells))
+
+
+def _pq_tables(meta: dict, vectors: DataFrame, packed: DataFrame,
+               cells: DataFrame | None) -> list[Table]:
+    """The rerank vectors, then the packed codes: codes/, or cells/
+    (the codes joined to each vid's cell) clustered by cell."""
+    out = [Table("vectors", vectors, "neighbor_id")]
+    if meta["cell_col"] is None:
+        return out + [Table("codes", packed, "vid")]
+    return out + [Table("cells", cells.join(packed, on="vid"), "vid",
+                        cluster=("cell",))]
 
 
 def read_pq_index(spark, path: str) -> PqFrames:
@@ -1967,69 +1887,35 @@ def read_pq_index(spark, path: str) -> PqFrames:
                     stored=True)
 
 
-def append_to_pq_index(
-    df_new: DataFrame, path: str, validate_unique: bool = False,
-) -> None:
+def append_to_pq_index(df_new: DataFrame, path: str) -> None:
     """FAISS ``add()`` for a persisted PQ-family index, shaped by its
     meta: the batch rotates with the stored tag, assigns to the STORED
     centroids, and its vectors (or residuals) encode against the STORED
     codebook — the build's own constructions at fixed artifacts, so
-    append == rebuild bit-exactly; nothing retrains.
-
-    Vectors land FIRST: a crash between the two writes leaves rerank
-    rows no scan reaches (harmless), while the reverse order would serve
-    candidates whose rerank join-back silently drops them (the
-    winnow-index crash-ordering contract, operators/dedup.py). Each
-    write anti-joins the stored ids, so a crashed append re-runs to
-    completion; ``validate_unique`` checks the codes table, written
-    last, so that re-run passes while a batch that landed whole is
-    refused. Insert-if-absent: see append_to_ivf_index for the
-    changed-payload contract."""
-    import os
-
-    from cpx_etl_spark.sources.sinks import write_clustered_parquet
-
+    append == rebuild bit-exactly; nothing retrains. Vectors land
+    first: rerank rows without codes are unreachable, while codes
+    without rerank rows would be scanned and then silently dropped by
+    the rerank join-back."""
     idx = IndexHandle(df_new.sparkSession, path, "pq")
     meta = idx.meta
     id_col, vec_col, m, dim = (meta["id_col"], meta["vec_col"], meta["m"],
                                meta["dim"])
-    codes_table = "codes" if meta["cell_col"] is None else "cells"
-    if validate_unique:
-        validate_new_ids(
-            df_new, idx.table(codes_table).select(F.col("vid").alias(id_col)),
-            id_col, "append_to_pq_index", path,
-        )
-    src = df_new
+    src, cells = df_new, None
     if meta["tag"] is not None:
         src = rotate_vectors(df_new, id_col, vec_col,
                              opq_rotation(dim, meta["tag"]), dim)
     if meta["cell_col"] is not None:
-        # classic-IVF k is bounded, but an index trained with data-sized
-        # k must not pin a corpus-scale centroid frame (ivf_build's
-        # broadcast guard; the count is a tiny column-pruned scan)
         centroids = idx.table("centroids")
-        small = centroids.count() <= _IVF_BROADCAST_K_MAX
-        assigned = assign_to_centroids(df_new, centroids, id_col, vec_col,
-                                       broadcast_centroids=small, dim=dim)
+        assigned, small = _assign_to_stored(df_new, centroids, id_col,
+                                            vec_col, dim=dim)
+        cells = assigned.select(F.col("neighbor_id").alias("vid"), "cell")
         if meta["by_residual"]:
             src = _residuals(assigned, centroids, id_col, vec_col, small)
     packed = pack_codes(
         pq_encode(src, id_col, vec_col, idx.table("codebook"), m=m, dim=dim))
-    if meta["cell_col"] is not None:
-        packed = assigned.select(
-            F.col("neighbor_id").alias("vid"), "cell").join(packed, on="vid")
-    packed = packed.join(idx.table(codes_table).select("vid"), on="vid",
-                         how="left_anti")
     vectors = df_new.select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("v_c")
-    ).join(idx.table("vectors").select("neighbor_id"), on="neighbor_id",
-           how="left_anti")
-    vectors.write.mode("append").parquet(os.path.join(path, "vectors"))
-    if meta["cell_col"] is None:
-        packed.write.mode("append").parquet(os.path.join(path, "codes"))
-    else:
-        write_clustered_parquet(packed, os.path.join(path, "cells"), ["cell"],
-                                mode="append")
+        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("v_c"))
+    append_index(df_new, idx, _pq_tables(meta, vectors, packed, cells))
 
 
 def pq_serve(

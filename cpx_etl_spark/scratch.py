@@ -12,6 +12,22 @@ deliberately outlive the process — live under user_cache_root() and go
 through standing_artifact: one location rule, one completeness rule,
 one meta publish/read pair and one read handle (IndexHandle) for every
 kind.
+
+Every persisted index writes its tables through write_index (each
+Table with its layout, the meta published last) and adds a batch
+through append_index, under one contract:
+
+- The kind lists the tables an append writes, in write order.
+- A batch is refused (ValueError) when any of its ids is already in
+  the LAST table, which an append writes last.
+- Every keyed table write anti-joins the ids already stored in that
+  table. A crash between two writes leaves a prefix of the tables
+  holding the batch; the retry passes the check on the last table and
+  each table gains the batch's rows exactly once.
+- A partitioned table (the kNN graph's edges) instead overwrites the
+  partitions its frame holds, so a retry rewrites them identically.
+- Insert-if-absent: an id already stored is never updated; a changed
+  payload for it means rebuilding the index with its writer.
 """
 
 from __future__ import annotations
@@ -20,6 +36,7 @@ import atexit
 import os
 import shutil
 import tempfile
+from dataclasses import dataclass, replace
 
 _ROOT: str | None = None
 
@@ -143,6 +160,85 @@ class IndexHandle:
             self._tables[name] = read_parquet(
                 self._spark, os.path.join(self.path, name))
         return self._tables[name]
+
+
+@dataclass(frozen=True)
+class Table:
+    """One table of a persisted index: its directory ``name`` under the
+    index, its ``frame`` and its layout — ``cluster`` (range-partitioned
+    and sorted on those columns, write_clustered_parquet), ``one_file``
+    (coalesce(1)), ``partition`` (hive-partitioned on that column) or,
+    with none of them, plain. ``key`` names the column holding the
+    batch ids, which append_index anti-joins and checks."""
+
+    name: str
+    frame: object
+    key: str | None = None
+    cluster: tuple[str, ...] = ()
+    one_file: bool = False
+    partition: str | None = None
+
+
+def write_index(path: str, kind: str, meta: dict, tables: list[Table]) -> None:
+    """Write a persisted index of ``kind`` at ``path``: make the
+    directory, write (overwrite) each table with its layout, then
+    publish ``meta`` last, which makes the index complete."""
+    os.makedirs(path, exist_ok=True)
+    for t in tables:
+        _write_table(path, t, append=False)
+    publish_meta(tables[0].frame.sparkSession, path, kind, meta)
+
+
+def append_index(df_new, index: IndexHandle, tables: list[Table]) -> None:
+    """Add the batch ``df_new`` (ids in the meta's ``id_col``) to
+    ``index`` under the append contract of this module's docstring:
+    refuse it when an id is already in the last of ``tables``, then
+    write each table in order, anti-joined on its ``key``."""
+    from pyspark.sql import functions as F
+
+    id_col, last = index.meta["id_col"], tables[-1]
+    validate_new_ids(
+        df_new, index.table(last.name).select(F.col(last.key).alias(id_col)),
+        id_col, index.path,
+    )
+    for t in tables:
+        if t.key is not None:
+            t = replace(t, frame=t.frame.join(
+                index.table(t.name).select(t.key), on=t.key, how="left_anti"))
+        _write_table(index.path, t, append=True)
+
+
+def validate_new_ids(df_new, stored_ids, id_col: str, path: str) -> None:
+    """Refuse a batch whose ids already exist in the index at ``path``
+    (``stored_ids``: one column ``id_col``): an id ingested twice
+    double-counts its derived rows. One semi-join and limit(1) probe."""
+    clash = (
+        df_new.select(id_col)
+        .join(stored_ids, on=id_col, how="left_semi")
+        .limit(1)
+        .collect()
+    )
+    if clash:
+        raise ValueError(
+            f"id {clash[0][0]!r} already exists in the index at {path}")
+
+
+def _write_table(path: str, t: Table, append: bool) -> None:
+    from cpx_etl_spark.sources.sinks import write_clustered_parquet
+
+    out = os.path.join(path, t.name)
+    mode = "append" if append and t.partition is None else "overwrite"
+    if t.cluster:
+        write_clustered_parquet(t.frame, out, list(t.cluster), mode=mode)
+        return
+    writer = (t.frame.coalesce(1) if t.one_file else t.frame).write.mode(mode)
+    if t.partition is not None:
+        writer = writer.partitionBy(t.partition)
+        if append:
+            # a writer option, not the session conf, so concurrent
+            # writers in one session keep their own overwrite mode
+            writer = writer.option("partitionOverwriteMode", "dynamic")
+    writer.parquet(out)
 
 
 def _rebuild(path: str, build) -> None:

@@ -776,6 +776,13 @@ def _commit_manifest(path: str, version: str) -> None:
     old or the new version name, never a torn file. Used where
     last-writer-wins is the intended semantics (rollback)."""
     with _pointer_lock(path):
+        current = _read_manifest(path)
+        if current is not None:
+            # the outgoing head is provably committed: heal its witness
+            # before the pointer leaves it, or a head whose writer died
+            # between the swing and the witness keeps a claim without a
+            # witness and reads as a never-committed orphan from then on
+            _heal_head_witness(path, current)
         _write_pointer(path, version)
 
 

@@ -319,29 +319,3 @@ def test_schema_evolution_merge_and_union(spark, tmp_path):
     u = a.unionByName(b, allowMissingColumns=True)
     assert set(u.columns) == {"id", "v", "extra"}
     assert u.count() == 2
-
-
-def test_minhash_xxhash64_fast_path_matches_md5_pairs(spark, sf_dir):
-    """The deployment fast path (xxhash64 double hashing, pure JVM
-    long math) must return the same VERIFIED near-dup pair set as the
-    oracle-replayable md5 construction: exact-Jaccard verification
-    makes the result hash-function-independent as long as candidate
-    recall holds, and at k=64/16 bands both paths find every pair at
-    these similarities."""
-    from cpx_etl_spark.operators.dedup import minhash_lsh_pairs
-    from cpx_etl_spark.sources import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    kw = dict(n=4, k=64, bands=16, threshold=0.5, min_band_collisions=2)
-    slow = {
-        (r["doc_a"], r["doc_b"])
-        for r in minhash_lsh_pairs(docs, "doc_id", "text", **kw).collect()
-    }
-    fast = {
-        (r["doc_a"], r["doc_b"])
-        for r in minhash_lsh_pairs(
-            docs, "doc_id", "text", hash_fn="xxhash64", **kw
-        ).collect()
-    }
-    assert slow, "fixture should contain near-dup pairs"
-    assert fast == slow

@@ -848,35 +848,6 @@ def test_mp4_box_walk_rejects_torn_containers(spark):
     assert walk_mp4_boxes(b"\x00\x00\x00\x08junk") == (None, None, None, None)
 
 
-def test_signature_index_append_rejects_duplicate_ids(spark, tmp_path):
-    """validate_unique: appending an id already in the index fails fast
-    (a double-signed id corrupts every verify involving it)."""
-    import pytest
-
-    from cpx_etl_spark.operators.dedup import (
-        append_to_signature_index,
-        write_signature_index,
-    )
-
-    ref = spark.createDataFrame(
-        [(100, "the quick brown fox jumps over the lazy dog")],
-        "doc_id long, text string",
-    )
-    path = str(tmp_path / "idx")
-    write_signature_index(ref, path, "doc_id", "text", n=2, k=8, bands=4)
-    dup = spark.createDataFrame(
-        [(100, "entirely different text but the same identifier")],
-        "doc_id long, text string",
-    )
-    with pytest.raises(ValueError, match="already"):
-        append_to_signature_index(dup, path, validate_unique=True)
-    fresh = spark.createDataFrame(
-        [(200, "a genuinely new standing document")],
-        "doc_id long, text string",
-    )
-    append_to_signature_index(fresh, path, validate_unique=True)  # ok
-
-
 def test_dhash_56_bit_packing_and_perturbation(spark):
     """dhash_56 packs bit (r, c) = p[r][c] > p[r][c+1] at position
     r*8+c; perturbing pixel[0][0] flips at most bit 0."""
@@ -1072,9 +1043,8 @@ def test_winnow_index_two_batch_ingestion(spark, sf_dir, tmp_path):
     """Incremental winnowing index (judge r12 item 5): build the index
     from batch 1, APPEND batch 2 (fingerprint once, never re-derive),
     and the probe result must equal a from-scratch index over the
-    union bit-exactly; duplicate-id appends are refused."""
-    import pytest as _pytest
-
+    union bit-exactly (tests/test_index_append.py covers the retry of
+    a crashed append and the refusal of a batch that landed whole)."""
     from cpx_etl_spark.operators.dedup import (
         append_to_winnow_index,
         cross_corpus_winnow_pairs_indexed,
@@ -1103,9 +1073,6 @@ def test_winnow_index_two_batch_ingestion(spark, sf_dir, tmp_path):
 
     got, want = probe(inc), probe(full)
     assert got == want and len(got) > 0
-    # appending an id that already exists must be refused
-    with _pytest.raises(ValueError, match="already"):
-        append_to_winnow_index(b1.limit(1), inc, validate_unique=True)
 
 
 def test_opq_rotation_exact_orthogonal_and_distortion_win(spark, sf_dir):
@@ -1292,22 +1259,18 @@ def test_ann_index_append_equals_rebuild(spark, sf_dir):
         # --- IVF: append assigns to STORED centroids -----------------
         p = f"{tmp}/ivf"
         write_ivf_index(b1, p, "vec_id", "embedding", "label")
-        append_to_ivf_index(b2, p, validate_unique=True)
+        append_to_ivf_index(b2, p)
         idx = read_ivf_index(spark, p)
         assert idx.table("assignments").count() == n1 + n2
         want = assign_to_centroids(emb, idx.table("centroids"), "vec_id", "embedding")
         assert rows(idx.table("assignments"), ["neighbor_id", "cell"]) == rows(
             want, ["neighbor_id", "cell"]
         )
-        # duplicate-id append refuses
-        import pytest as _pytest
-        with _pytest.raises(ValueError, match="already exists"):
-            append_to_ivf_index(b2.limit(1), p, validate_unique=True)
 
         # --- PQ: append encodes against the STORED codebook ----------
         p = f"{tmp}/pq"
         write_pq_index(b1, p, "vec_id", "embedding", m=8, k_codes=16, dim=64)
-        append_to_pq_index(b2, p, validate_unique=True)
+        append_to_pq_index(b2, p)
         idx = IndexHandle(spark, p, "pq")
         assert idx.table("codes").count() == n1 + n2
         assert idx.table("vectors").count() == n1 + n2
@@ -1322,7 +1285,7 @@ def test_ann_index_append_equals_rebuild(spark, sf_dir):
         p = f"{tmp}/opq"
         write_pq_index(b1, p, "vec_id", "embedding", m=8, k_codes=16, dim=64,
                        tag="opq")
-        append_to_pq_index(b2, p, validate_unique=True)
+        append_to_pq_index(b2, p)
         idx = IndexHandle(spark, p, "pq")
         assert idx.table("codes").count() == n1 + n2
         rot = opq_rotation(64, tag=idx.meta["tag"])
@@ -1340,7 +1303,7 @@ def test_ann_index_append_equals_rebuild(spark, sf_dir):
         p = f"{tmp}/ivfpq"
         write_pq_index(b1, p, "vec_id", "embedding", m=8, k_codes=16, dim=64,
                        cell_col="label")
-        append_to_pq_index(b2, p, validate_unique=True)
+        append_to_pq_index(b2, p)
         idx = IndexHandle(spark, p, "pq")
         assert idx.table("cells").count() == n1 + n2
         wa = assign_to_centroids(emb, idx.table("centroids"), "vec_id", "embedding")
@@ -1358,7 +1321,7 @@ def test_ann_index_append_equals_rebuild(spark, sf_dir):
         p = f"{tmp}/ivfpqr"
         write_pq_index(b1, p, "vec_id", "embedding", m=8, k_codes=16, dim=64,
                        cell_col="label", by_residual=True)
-        append_to_pq_index(b2, p, validate_unique=True)
+        append_to_pq_index(b2, p)
         idx = IndexHandle(spark, p, "pq")
         assert idx.table("cells").count() == n1 + n2
         wa = assign_to_centroids(emb, idx.table("centroids"), "vec_id", "embedding")
@@ -1603,7 +1566,7 @@ def test_knn_graph_index_append_equals_rebuild(spark, sf_dir):
             }
 
         before = part_files()
-        touched = append_to_knn_graph_index(b2, path, validate_unique=True)
+        touched = append_to_knn_graph_index(b2, path)
         assert touched and len(touched) <= 6
         after = part_files()
         untouched = [d for d in before
@@ -1635,62 +1598,6 @@ def test_knn_graph_index_append_equals_rebuild(spark, sf_dir):
         want_rows = sorted(tuple(r[c] for c in cols)
                            for r in want.select(*cols).collect())
         assert got_rows == want_rows and len(got_rows) > 0
-
-        # a replayed id refuses
-        import pytest as _pytest
-        with _pytest.raises(ValueError, match="already exists"):
-            append_to_knn_graph_index(b2.limit(1), path,
-                                      validate_unique=True)
-
-
-def test_pq_append_resumes_after_half_crash(spark, sf_dir):
-    """Code-review r15: a PQ append that crashed between the vectors
-    write and the codes write must be RE-RUNNABLE: validation checks
-    the last-written table (codes), and the per-table anti-joins land
-    each row exactly once — no duplicated rerank vectors, no
-    permanently-refused batch."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from cpx_etl_spark.functions.vectors import as_double
-    from cpx_etl_spark.operators.similarity import (
-        append_to_pq_index,
-        write_pq_index,
-    )
-    from cpx_etl_spark.scratch import IndexHandle
-    from cpx_etl_spark.sources import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    b1 = emb.filter(F.col("vec_id") % 2 == 0)
-    b2 = emb.filter(F.col("vec_id") % 2 == 1)
-    n1, n2 = b1.count(), b2.count()
-
-    with tempfile.TemporaryDirectory() as tmp:
-        path = f"{tmp}/pq"
-        write_pq_index(b1, path, "vec_id", "embedding",
-                       m=8, k_codes=16, dim=64)
-        # simulate the crash: batch-2 vectors landed, codes did not
-        b2.select(
-            F.col("vec_id").alias("neighbor_id"),
-            as_double("embedding").alias("v_c"),
-        ).write.mode("append").parquet(os.path.join(path, "vectors"))
-
-        # the retry — with validation ON — resumes and completes
-        append_to_pq_index(b2, path, validate_unique=True)
-        idx = IndexHandle(spark, path, "pq")
-        assert idx.table("vectors").count() == n1 + n2  # no duplicates
-        assert idx.table("codes").count() == n1 + n2
-        # rerank table is exactly one row per id
-        dup = (idx.table("vectors").groupBy("neighbor_id").count()
-               .filter(F.col("count") > 1).count())
-        assert dup == 0
-
-        # a FULLY-applied batch now refuses loudly
-        import pytest as _pytest
-        with _pytest.raises(ValueError, match="already exists"):
-            append_to_pq_index(b2.limit(1), path, validate_unique=True)
 
 
 def test_dedup_semantic_pair_volume_near_linear(spark):

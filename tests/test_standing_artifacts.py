@@ -85,6 +85,42 @@ def test_bench_and_tools_call_no_builder():
     assert stray == []
 
 
+PKG = ROOT / "cpx_etl_spark"
+# the removed knobs: the appends' opt-in id check (now always on) and
+# MinHash's hash choice (md5 only); spelled in parts so a search of the
+# tree for either name finds no use of it
+GONE_PARAMS = {"_".join(("validate", "unique")), "_".join(("hash", "fn"))}
+INDEX_MODULES = ("operators/dedup.py", "operators/similarity.py")
+INDEX_WRITES = {"publish_meta", "validate_new_ids", "write_clustered_parquet"}
+
+
+def test_no_function_takes_a_removed_knob():
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                a = node.args
+                for arg in [*a.posonlyargs, *a.args, *a.kwonlyargs]:
+                    if arg.arg in GONE_PARAMS:
+                        found.append(f"{path.relative_to(ROOT)}:{node.lineno} {arg.arg}")
+    assert found == []
+
+
+def test_index_tables_are_written_only_by_the_one_writer_and_append():
+    """The index families derive their tables; scratch.write_index and
+    scratch.append_index write them, check the ids and publish the
+    meta."""
+    found = []
+    for rel in INDEX_MODULES:
+        path = PKG / rel
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            name = (node.attr if isinstance(node, ast.Attribute)
+                    else node.id if isinstance(node, ast.Name) else None)
+            if name in INDEX_WRITES or name == "write":
+                found.append(f"{rel}:{node.lineno} {name}")
+    assert found == []
+
+
 def test_rewritten_source_gets_a_new_location(tmp_path, monkeypatch):
     """The location keys the source by the file signature of
     sources.registry (size and mtime in ns, recursive, hidden files

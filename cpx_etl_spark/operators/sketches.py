@@ -97,51 +97,42 @@ def sql_count_min(d: int, w: int, stream_rel: str = "stream",
         GROUP BY p.{key_col})"""
 
 
+def count_min_fold(batch_df: DataFrame, key_col: str, out_path: str,
+                   d: int, w: int) -> None:
+    """One micro-batch of count_min_stream_upsert: ADD the batch's delta
+    sketch (<= d*w cells) into the stored sketch table, derived from the
+    base the commit compares against (sources/sinks.py commit_snapshot)."""
+    from cpx_etl_spark.operators.relational import additive_rollup_merge
+    from cpx_etl_spark.sources.sinks import commit_snapshot
+
+    if not batch_df.take(1):
+        return
+    delta = count_min_build(batch_df, key_col, d=d, w=w)
+    cell = ["row_idx", "bucket"]
+    commit_snapshot(
+        batch_df.sparkSession, out_path,
+        lambda base: additive_rollup_merge(base, delta, cell, ["cnt"]), cell,
+    )
+
+
 def count_min_stream_upsert(sdf: DataFrame, key_col: str, out_path: str,
                             checkpoint: str, d: int = 4, w: int = 1024):
     """Maintain a Count-Min sketch OVER A STREAM: each micro-batch
     builds its delta sketch (bounded: <= d*w cells) and ADDS it into
-    the parquet-backed sketch table — counters are additive, so the
-    maintained sketch equals the batch-built sketch over the full
-    stream EXACTLY (no approximation drift from incremental
-    maintenance; pytest asserts cell-level equality). The sketch table
-    never exceeds d*w rows regardless of stream volume — the
-    bounded-state frequency tracker for unbounded key domains, where a
-    per-key streaming aggregation's state would grow without limit.
-
-    "Is there a base yet?" probes has_readable_base (committed manifest
-    OR legacy flat parquet — code-review r11: a manifest-only probe
-    silently REPLACED a flat-layout base instead of merging into it),
-    not a try/except around the read: a transient read failure must
-    raise (the batch retries) rather than be mistaken for "first batch"
-    and silently zero the accumulated counters, and an orphan version
-    dir left by a crash before its manifest commit still reads as "no
-    base" instead of routing into a torn directory (judge-advice
-    r10)."""
-    from cpx_etl_spark.operators.relational import additive_rollup_merge
-    from cpx_etl_spark.sources.sinks import (
-        has_readable_base,
-        read_upsert_table,
-        upsert_parquet_table,
-    )
-
-    def upsert_delta(batch_df: DataFrame, _bid: int) -> None:
-        if not batch_df.take(1):
-            return
-        delta = count_min_build(batch_df, key_col, d=d, w=w)
-        if has_readable_base(out_path):
-            base = read_upsert_table(batch_df.sparkSession, out_path)
-        else:
-            base = None
-        merged = additive_rollup_merge(
-            base, delta, ["row_idx", "bucket"], ["cnt"]
-        )
-        upsert_parquet_table(merged, out_path, keys=["row_idx", "bucket"])
-
+    the parquet-backed sketch table (count_min_fold) — counters are
+    additive, so the maintained sketch equals the batch-built sketch
+    over the full stream EXACTLY (no approximation drift from
+    incremental maintenance; pytest asserts cell-level equality). The
+    sketch table never exceeds d*w rows regardless of stream volume —
+    the bounded-state frequency tracker for unbounded key domains,
+    where a per-key streaming aggregation's state would grow without
+    limit."""
     return (
         sdf.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint)
-        .foreachBatch(upsert_delta)
+        .foreachBatch(
+            lambda bdf, _bid: count_min_fold(bdf, key_col, out_path, d=d, w=w)
+        )
         .trigger(availableNow=True)
         .start()
     )
@@ -238,18 +229,29 @@ def bloom_probe(
     )
 
 
+def bloom_merge(a: DataFrame | None, b: DataFrame) -> DataFrame:
+    """Word-wise OR of two bitmaps — the Bloom union law (the union of
+    Blooms is the Bloom of the union). ``a`` may be None (no stored
+    bitmap yet)."""
+    if a is None:
+        return b
+    return a.unionByName(b).groupBy("word_idx").agg(
+        F.bit_or("bits").alias("bits")
+    )
+
+
 def write_bloom(bloom: DataFrame, path: str) -> None:
     """Persist the bitmap as a single-file parquet artifact (a few KB
-    to a few MB — the whole point vs shipping the raw key set) under
-    the versioned snapshot-commit protocol: the write is DISTRIBUTED
-    (executor-side, no driver round-trip — at production m_bits of
-    2^30+ the bitmap is ~130 MB, which must never transit the driver
-    per micro-batch), lands in a fresh version dir while readers (and
-    the merge plan itself) still scan the previous committed version,
-    and commits via an atomic manifest repoint."""
-    from cpx_etl_spark.sources.sinks import commit_versioned_parquet
+    to a few MB — the whole point vs shipping the raw key set),
+    replacing the stored one whole through sinks.commit_snapshot: the
+    write is DISTRIBUTED (executor-side — at production m_bits of 2^30+
+    the bitmap is ~130 MB, which must never transit the driver)."""
+    from cpx_etl_spark.sources.sinks import commit_snapshot
 
-    commit_versioned_parquet(bloom.coalesce(1), path)
+    commit_snapshot(
+        bloom.sparkSession, path, lambda _base: bloom.coalesce(1),
+        ["word_idx"],
+    )
 
 
 def read_bloom(spark, path: str) -> DataFrame:
@@ -305,44 +307,39 @@ def hll_merge(a: DataFrame | None, b: DataFrame) -> DataFrame:
     )
 
 
+def hll_fold(batch_df: DataFrame, key_col: str, out_path: str,
+             m: int) -> None:
+    """One micro-batch of hll_stream_upsert: MAX-merge the batch's
+    delta registers (<= m rows) into the stored register table, derived
+    from the base the commit compares against (sources/sinks.py
+    commit_snapshot)."""
+    from cpx_etl_spark.sources.sinks import commit_snapshot
+
+    if not batch_df.take(1):
+        return
+    delta = hll_build(batch_df, key_col, m=m)
+    commit_snapshot(
+        batch_df.sparkSession, out_path, lambda base: hll_merge(base, delta),
+        ["bucket"],
+    )
+
+
 def hll_stream_upsert(sdf: DataFrame, key_col: str, out_path: str,
                       checkpoint: str, m: int = 256):
     """Maintain an HLL distinct-count sketch OVER A STREAM: each
     micro-batch builds its delta registers (<= m rows) and MAX-merges
-    them into the parquet-backed register table. Register max is
-    order- and duplication-insensitive, so the maintained sketch
+    them into the parquet-backed register table (hll_fold). Register
+    max is order- and duplication-insensitive, so the maintained sketch
     equals the batch-built sketch over the full stream EXACTLY (pytest
     asserts register-level equality) — the bounded-state distinct
     tracker where a streaming dropDuplicates' state would grow with
-    the key domain.
-
-    The merged register table is committed REPLACE-WHOLE via the
-    versioned-manifest protocol (commit_versioned_parquet — the helper
-    for artifacts replaced rather than merged row-wise): one base read
-    per batch, no redundant PK merge, and "is there a base yet?" is an
-    explicit committed-base probe — a transient read FAILURE raises and the
-    batch retries, instead of being mistaken for "first batch" and
-    silently REGRESSING the stored maxima (code-review r10)."""
-    from cpx_etl_spark.sources.sinks import (
-        commit_versioned_parquet,
-        has_readable_base,
-        read_upsert_table,
-    )
-
-    def upsert_delta(batch_df: DataFrame, _bid: int) -> None:
-        if not batch_df.take(1):
-            return
-        delta = hll_build(batch_df, key_col, m=m)
-        if has_readable_base(out_path):
-            base = read_upsert_table(batch_df.sparkSession, out_path)
-        else:
-            base = None
-        commit_versioned_parquet(hll_merge(base, delta), out_path)
-
+    the key domain."""
     return (
         sdf.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint)
-        .foreachBatch(upsert_delta)
+        .foreachBatch(
+            lambda bdf, _bid: hll_fold(bdf, key_col, out_path, m=m)
+        )
         .trigger(availableNow=True)
         .start()
     )

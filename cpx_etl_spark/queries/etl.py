@@ -2403,15 +2403,15 @@ def q_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", (F.col("bal") + 999).cast("decimal(20,4)").alias("bal")
     )
     upsert_parquet_table(bad, path, ["c_custkey"])
-    v1 = list_upsert_versions(path)[0]
+    v1, bad_v = list_upsert_versions(path)
     rollback_upsert_table(path, v1)
     good = cust.filter(hh % 5 == 0).select(
         "c_custkey", (F.col("bal") + 100).cast("decimal(20,4)").alias("bal")
     )
     upsert_parquet_table(good, path, ["c_custkey"])
     versions = list_upsert_versions(path)
-    # the abandoned v2 slot was GC'd and renumbered: exactly {v1, v2}
-    rolled_back = versions == [v1, f"v{int(v1[1:]) + 1:08d}"]
+    # the abandoned slot was GC'd and reused: exactly {v1, bad_v}
+    rolled_back = versions == [v1, bad_v]
     cur = read_upsert_table(spark, path)
     return cur.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -2950,35 +2950,29 @@ def q_upsert_concurrent_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-writer OVERLAPPING-PK convergence, hash-gated (judge r13
     item 2 — the data half of the optimistic commit; the CAS tests
     prove only pointer survival): orders load as the base snapshot,
-    then writer B (+10 on the md5%7 cohort) stages its merge against
-    that head — claim slot, merge, speculative snapshot written —
-    while writer C (+100 on the independent md5%11 cohort, ~1/77 of
-    keys OVERLAP with B) commits first through the public API. B's
-    CAS must REFUSE (its base moved — the in-row ``conflicted`` flag
-    pins that the conflict actually fired), its speculative snapshot
-    drops, and the retry re-applies B's batch against C's snapshot.
-    The final table must equal the SERIAL application C-then-B: every
-    overlapping key carries B's value (``n_overlap_from_b ==
-    n_overlap`` in-row; the oracle replays the same serial CASE over
-    the source), and the decimal-exact price total covers both
-    batches — a retry that silently dropped either batch, or merged
-    against the stale base, breaks the totals. This is the
-    Iceberg/Delta validate-and-retry commit loop
-    (upsert_parquet_table runs the identical re-merge internally; the
-    staged dance here makes the loser path deterministic). Scratch
-    table per invocation."""
+    then writer B (+10 on the md5%7 cohort) commits through
+    commit_snapshot, and on its first ``derive`` call — with its slot
+    claimed against the base head — writer C (+100 on the independent
+    md5%11 cohort, ~1/77 of keys OVERLAP with B) commits first through
+    the public API. B's CAS must REFUSE (its base moved), its
+    speculative snapshot drops, and the loop derives B's batch again
+    on C's snapshot; the in-row ``conflicted`` flag pins that
+    ``derive`` ran twice. The final table must equal the SERIAL
+    application C-then-B: every overlapping key carries B's value
+    (``n_overlap_from_b == n_overlap`` in-row; the oracle replays the
+    same serial CASE over the source), and the decimal-exact price
+    total covers both batches — a retry that silently dropped either
+    batch, or merged against the stale base, breaks the totals. This
+    is the Iceberg/Delta validate-and-retry commit loop. Scratch table
+    per invocation."""
     import os
-    import shutil
 
     from cpx_etl_spark.operators.relational import merge_upsert
     from cpx_etl_spark.scratch import scratch_dir
     from cpx_etl_spark.sources.sinks import (
-        _commit_manifest_cas,
-        _gc_and_claim_version,
-        _release_claim,
+        commit_snapshot,
         read_upsert_table,
         upsert_parquet_table,
-        write_version_stats,
     )
 
     orders = load_table(spark, sf_dir, "orders")
@@ -3004,29 +2998,17 @@ def q_upsert_concurrent_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = os.path.join(scratch_dir("cpx_ccm_"), "t")
     upsert_parquet_table(base, path, ["k"])
-    # writer B: stage the merge against the current head (the loser's
-    # commit window, held open deliberately)
-    current, base_entry, slot = _gc_and_claim_version(path, 4)
-    existing = spark.read.parquet(os.path.join(path, current)).select(
-        "k", "price", "tag"
-    )
-    vdir = os.path.join(path, slot)
-    merge_upsert(existing, batch_b, keys=["k"]).write.mode(
-        "overwrite"
-    ).parquet(vdir)
-    write_version_stats(vdir, ["k"])
-    # writer C commits first through the public API
-    upsert_parquet_table(batch_c, path, ["k"], retain_versions=4)
-    # B's CAS must refuse — its base entry is stale
-    conflicted = not _commit_manifest_cas(
-        path, slot, expected_entry=base_entry
-    )
-    shutil.rmtree(vdir, ignore_errors=True)
-    _release_claim(path, slot)
-    # the loser's retry: the SAME batch, re-merged against the
-    # winner's snapshot (the path upsert_parquet_table's internal
-    # loop takes on a real race)
-    upsert_parquet_table(batch_b, path, ["k"], retain_versions=4)
+    derived = []
+
+    def derive_b(head: DataFrame) -> DataFrame:
+        if not derived:
+            # writer C commits inside B's commit window
+            upsert_parquet_table(batch_c, path, ["k"], retain_versions=4)
+        derived.append(head)
+        return merge_upsert(head.select("k", "price", "tag"), batch_b, ["k"])
+
+    commit_snapshot(spark, path, derive_b, ["k"], retain_versions=4)
+    conflicted = len(derived) == 2
     final = read_upsert_table(spark, path)
     fh = F.md5(F.col("k").cast("string"))
     fin = final.select(

@@ -782,16 +782,58 @@ def read_trending_topk(spark: SparkSession, out_path: str, k: int = 3) -> DataFr
 # Bounded-state streaming dedup via the persisted Bloom artifact
 # ---------------------------------------------------------------------------
 
+def bloom_dedup_fold(
+    batch_df: DataFrame, out_path: str, bloom_path: str,
+    key_col: str, k: int, m_bits: int,
+) -> None:
+    """One micro-batch of bloom_dedup_stream. The probe and the sink
+    append run on the first base sources/sinks.py commit_snapshot
+    hands ``derive``, before the bitmap commits; a retry on a newer
+    head only re-folds, because every key that head added is either
+    already appended by this batch or not fresh. The batch's own bits
+    fold in whole: the bits of a key the bitmap already contains are
+    all set, so OR-ing them changes nothing."""
+    from cpx_etl_spark.operators.sketches import (
+        bloom_build, bloom_merge, bloom_probe,
+    )
+    from cpx_etl_spark.sources.sinks import commit_snapshot
+
+    if not batch_df.take(1):
+        return
+    batch = batch_df.dropDuplicates([key_col]).withColumn(
+        "_k", F.col(key_col).cast("string")
+    )
+    bits = bloom_build(batch.select("_k"), "_k", k=k, m_bits=m_bits)
+    appended = False
+
+    def derive(base: DataFrame | None) -> DataFrame:
+        nonlocal appended
+        if not appended:
+            fresh = batch if base is None else (
+                bloom_probe(base, batch, "_k", k=k, m_bits=m_bits)
+                .filter(~F.col("maybe_present"))
+                .drop("maybe_present")
+            )
+            fresh.drop("_k").write.mode("append").parquet(out_path)
+            appended = True
+        return bloom_merge(base, bits).coalesce(1)
+
+    commit_snapshot(batch_df.sparkSession, bloom_path, derive, ["word_idx"])
+
+
 def bloom_dedup_stream(
     sdf: DataFrame, out_path: str, bloom_path: str, checkpoint: str,
     key_col: str = "event_id", k: int = 4, m_bits: int = 1 << 18,
 ):
     """Streaming first-occurrence dedup whose state is a FIXED-SIZE
     bitmap instead of dropDuplicates' unbounded per-key store: each
-    micro-batch (1) dedups within itself, (2) drops keys the persisted
-    Bloom filter already contains, (3) appends survivors to the sink
-    and (4) folds their bits into the stored bitmap (bit_or of the old
-    and new bitmaps — union of Blooms IS the Bloom of the union).
+    micro-batch (bloom_dedup_fold) (1) dedups within itself, (2) drops
+    keys the persisted Bloom filter already contains, (3) appends
+    survivors to the sink and (4) folds its bits into the stored bitmap
+    (bit_or of the old and new bitmaps — union of Blooms IS the Bloom
+    of the union), committed executor-side through
+    sources/sinks.py commit_snapshot (at production m_bits the bitmap
+    is 100+ MB per micro-batch and never transits the driver).
 
     Trade-off, stated plainly: false positives DROP genuinely-new rows
     at the bitmap's FP rate (size m_bits for the expected key volume;
@@ -799,70 +841,26 @@ def bloom_dedup_stream(
     contract for at-most-once keys over unbounded streams — the exact
     variant (dropDuplicates + watermark) holds per-key state forever
     within the watermark and is the right tool when memory allows.
-    The bitmap commits via the versioned snapshot protocol
-    (sinks.commit_versioned_parquet): the merged bitmap is written
-    executor-side to a fresh version dir while the merge plan still
-    reads the previous committed version, then the manifest repoints
-    atomically — no driver round-trip of the bitmap (ADVICE r6; at
-    production m_bits the bitmap is 100+ MB per micro-batch).
 
     Crash-window caveat (ADVICE r6): the sink append and the bitmap
     commit are two non-atomic steps. A foreachBatch retry that crashes
-    AFTER the append but BEFORE the bitmap write re-appends that
+    AFTER the append but BEFORE the bitmap commit re-appends that
     batch's fresh rows on replay — the plain append sink is
     at-least-once for the crashed batch, though the bitmap (union of
     Blooms) stays correct. When the sink must hold exactly the
     first-occurrence set across crashes, pair this dedup with the
     PK-upsert sink (upsert_parquet_table on the key column), as
-    ingest_new_files does — the upsert absorbs the replayed rows.
-    Single-writer assumption throughout, identical to the upsert sink."""
-    from cpx_etl_spark.operators.sketches import (
-        bloom_build, bloom_probe, read_bloom, write_bloom,
-    )
-
-    def apply_batch(batch_df: DataFrame, _bid: int):
-        if not batch_df.take(1):
-            return
-        spark = batch_df.sparkSession
-        batch = batch_df.dropDuplicates([key_col])
-        import os
-
-        if os.path.isdir(bloom_path):
-            bloom = read_bloom(spark, bloom_path)
-            keyed = batch.withColumn("_k", F.col(key_col).cast("string"))
-            fresh = (
-                bloom_probe(bloom, keyed, "_k", k=k, m_bits=m_bits)
-                .filter(~F.col("maybe_present"))
-                .drop("maybe_present")
-            ).persist()  # two actions below — probe once, not twice
-            fresh.drop("_k").write.mode("append").parquet(out_path)
-            add = bloom_build(
-                fresh.select("_k"), "_k", k=k, m_bits=m_bits
-            )
-            merged = (
-                bloom.unionByName(add)
-                .groupBy("word_idx")
-                .agg(F.bit_or("bits").alias("bits"))
-            )
-            # executor-side write into a NEW version dir: the plan
-            # keeps reading the previous committed version, so no
-            # materialize-then-overwrite driver round-trip is needed
-            write_bloom(merged, bloom_path)
-            fresh.unpersist()
-        else:
-            batch.write.mode("append").parquet(out_path)
-            write_bloom(
-                bloom_build(
-                    batch.select(F.col(key_col).cast("string").alias("_k")),
-                    "_k", k=k, m_bits=m_bits,
-                ),
-                bloom_path,
-            )
-
+    ingest_new_files does — the upsert absorbs the replayed rows. Two
+    writers folding into one bitmap keep every bit, but a key both
+    see as fresh is appended by both."""
     return (
         sdf.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint)
-        .foreachBatch(apply_batch)
+        .foreachBatch(
+            lambda bdf, _bid: bloom_dedup_fold(
+                bdf, out_path, bloom_path, key_col=key_col, k=k, m_bits=m_bits
+            )
+        )
         .trigger(availableNow=True)
         .start()
     )
@@ -999,56 +997,44 @@ def _attr_window_delta(batch_df: DataFrame) -> DataFrame:
 
 def additive_window_merge(batch_df: DataFrame, bid: int, out_path: str) -> None:
     """IDEMPOTENT additive merge of one micro-batch's per-window
-    deltas into the versioned rollup table. foreachBatch is
-    at-least-once: when the snapshot commit lands but the streaming
-    checkpoint doesn't (driver death in between), Spark replays the
-    SAME batch id on restart — an unguarded additive merge would
-    double-count it (code-review r14). Every committed row carries
-    ``_last_bid``, the id of the newest batch applied; a batch with
-    bid <= that is a replay of already-committed work and is skipped.
-    Batch ids are monotone per checkpoint, so the guard is one MAX
-    over the (window-domain-sized) base. Reusing one output table
-    across DIFFERENT checkpoints is not supported (same as any
-    foreachBatch sink — ids restart at 0)."""
-    from cpx_etl_spark.sources.sinks import (
-        commit_versioned_parquet,
-        has_readable_base,
-        read_upsert_table,
-    )
+    deltas into the versioned rollup table: the window sums are
+    derived from the base the commit compares against (sources/sinks.py
+    commit_snapshot). foreachBatch is at-least-once: when the snapshot
+    commit lands but the streaming checkpoint doesn't (driver death in
+    between), Spark replays the SAME batch id on restart — an
+    unguarded additive merge would double-count it (code-review r14).
+    Every committed row carries ``_last_bid``, the id of the newest
+    batch applied; a batch with bid <= that is a replay of
+    already-committed work and commits nothing. Batch ids are monotone
+    per checkpoint, so the guard is one MAX over the
+    (window-domain-sized) base. Reusing one output table across
+    DIFFERENT checkpoints is not supported (same as any foreachBatch
+    sink — ids restart at 0)."""
+    from cpx_etl_spark.sources.sinks import commit_snapshot
 
     if not batch_df.take(1):
         return
     delta = _attr_window_delta(batch_df)
-    if has_readable_base(out_path):
-        base = read_upsert_table(batch_df.sparkSession, out_path)
-        # a table committed before the guard existed has no _last_bid
-        # column: treat it as unguarded (the pre-guard behavior) rather
-        # than crash the stream on an unresolved column
-        last = (
-            base.agg(F.max("_last_bid")).first()[0]
-            if "_last_bid" in base.columns else None
-        )
-        if last is not None and bid <= last:
-            return  # replayed batch: its delta is already committed
-    else:
-        base = None
-    if base is not None:
-        merged = (
-            base.select("window_start", "n_purchases", "revenue")
-            .unionByName(delta)
-            .groupBy("window_start")
+
+    def derive(base: DataFrame | None) -> DataFrame | None:
+        if base is None:
+            rows = delta
+        elif bid <= base.agg(F.max("_last_bid")).first()[0]:
+            return None  # replayed batch: its delta is already committed
+        else:
+            rows = base.select(
+                "window_start", "n_purchases", "revenue"
+            ).unionByName(delta)
+        return (
+            rows.groupBy("window_start")
             .agg(
                 F.sum("n_purchases").cast("long").alias("n_purchases"),
                 F.sum("revenue").cast("decimal(20,4)").alias("revenue"),
             )
+            .withColumn("_last_bid", F.lit(bid).cast("long"))
         )
-    else:
-        merged = delta.withColumn(
-            "n_purchases", F.col("n_purchases").cast("long")
-        )
-    commit_versioned_parquet(
-        merged.withColumn("_last_bid", F.lit(bid).cast("long")), out_path
-    )
+
+    commit_snapshot(batch_df.sparkSession, out_path, derive, ["window_start"])
 
 
 def attributed_revenue_update_upsert(

@@ -1374,3 +1374,41 @@ def test_xlsx_none_cell_reads_back_as_null(spark, tmp_path):
     assert [tuple(r) for r in df.collect()] == [
         (True, 1.5, "a"), (None, None, None), (False, 2.0, "c"),
     ]
+
+
+def test_only_sinks_touches_the_snapshot_protocol():
+    """Every versioned-table commit goes through sources/sinks.py
+    commit_snapshot: no other package module imports a private name
+    from sinks or spells a version directory or protocol file name
+    (manifest, claim, commit witness) itself. Tests are exempt."""
+    import ast
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "cpx_etl_spark"
+    version_name = re.compile(r"v\d{8}")
+    protocol_files = ("_MANIFEST", "_CLAIM.", "_COMMITTED.")
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "sources/sinks.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            where = f"{rel}:{getattr(node, 'lineno', '?')}"
+            if (isinstance(node, ast.ImportFrom)
+                    and (node.module or "").split(".")[-1] == "sinks"):
+                found += [f"{where} imports {a.name}"
+                          for a in node.names if a.name.startswith("_")]
+            elif (isinstance(node, ast.Attribute) and node.attr.startswith("_")
+                  and isinstance(node.value, ast.Name)
+                  and node.value.id == "sinks"):
+                found.append(f"{where} uses sinks.{node.attr}")
+            elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                  and (version_name.fullmatch(node.value)
+                       or node.value.startswith(protocol_files))):
+                found.append(f"{where} spells {node.value!r}")
+            elif (isinstance(node, ast.FormattedValue)
+                  and node.format_spec is not None
+                  and "08d" in ast.unparse(node.format_spec)):
+                found.append(f"{where} formats a version name")
+    assert found == []

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from cpx_etl_spark.sources import load_table
 from cpx_etl_spark.streaming.events import (
@@ -944,3 +945,162 @@ def test_kafka_wire_decode_stream_equals_batch(spark, tmp_path):
 
     got, want = canon(spark.read.parquet(out)), canon(batch)
     assert got == want and len(got) == 20
+
+
+# ---------------------------------------------------------------------------
+# Streaming folds commit through sources/sinks.py commit_snapshot
+# ---------------------------------------------------------------------------
+
+def _fold(spark, tmp_path, kind):
+    """(apply(rows, bid), state(), want(row lists)) for one streaming
+    fold into the versioned table at tmp_path/t. ``rows`` are key
+    lists, or (timestamp, value) pairs for the additive window."""
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    from cpx_etl_spark.operators.sketches import (
+        bloom_build, count_min_build, count_min_fold, hll_build, hll_fold,
+    )
+    from cpx_etl_spark.sources.sinks import read_upsert_table
+    from cpx_etl_spark.streaming.events import (
+        _attr_window_delta, additive_window_merge, bloom_dedup_fold,
+    )
+
+    out, sink = str(tmp_path / "t"), str(tmp_path / "sink")
+
+    def frame(rows):
+        if kind == "window":
+            return spark.createDataFrame(
+                [(datetime.datetime(2024, 1, 1, h, m), v) for h, m, v in rows],
+                "p_ts timestamp, value double",
+            )
+        if kind == "bloom":
+            return spark.createDataFrame(
+                [(k, f"p{k}") for k in rows], "event_id long, payload string"
+            )
+        return spark.createDataFrame([(k,) for k in rows], "k string")
+
+    def table(df, cols):
+        return {tuple(r[c] for c in cols) for r in df.collect()}
+
+    if kind == "count_min":
+        def apply(rows, _bid):
+            count_min_fold(frame(rows), "k", out, 4, 64)
+
+        def want(df):
+            return table(count_min_build(df, "k", d=4, w=64),
+                         ["row_idx", "bucket", "cnt"])
+        cols = ["row_idx", "bucket", "cnt"]
+    elif kind == "hll":
+        def apply(rows, _bid):
+            hll_fold(frame(rows), "k", out, 256)
+
+        def want(df):
+            return table(hll_build(df, "k", m=256), ["bucket", "r"])
+        cols = ["bucket", "r"]
+    elif kind == "bloom":
+        def apply(rows, _bid):
+            bloom_dedup_fold(frame(rows), sink, out, "event_id", 4, 1 << 16)
+
+        def want(df):
+            keys = df.select(F.col("event_id").cast("string").alias("_k"))
+            return table(bloom_build(keys, "_k", m_bits=1 << 16),
+                         ["word_idx", "bits"])
+        cols = ["word_idx", "bits"]
+    else:
+        def apply(rows, bid):
+            additive_window_merge(frame(rows), bid, out)
+
+        def want(df):
+            return table(_attr_window_delta(df),
+                         ["window_start", "n_purchases", "revenue"])
+        cols = ["window_start", "n_purchases", "revenue"]
+
+    def state():
+        return table(read_upsert_table(spark, out), cols)
+
+    def want_all(*batches):
+        dfs = [frame(b) for b in batches]
+        union = dfs[0]
+        for df in dfs[1:]:
+            union = union.unionByName(df)
+        return want(union)
+
+    return apply, state, want_all, out, sink
+
+
+FOLD_ROWS = {
+    "window": ([(10, 5, 1.5), (11, 0, 2.0)], [(10, 30, 4.0), (12, 0, 8.0)],
+               [(11, 15, 16.0), (12, 45, 32.0)]),
+    "bloom": ([1, 2, 3], [1, 4, 5], [2, 6, 7]),
+    "count_min": (["a", "b", "c"], ["a", "d", "d"], ["b", "d", "e"]),
+    "hll": (["a", "b", "c"], ["a", "d", "d"], ["b", "d", "e"]),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(FOLD_ROWS))
+def test_fold_committed_inside_another_writers_commit_is_kept(
+    spark, tmp_path, monkeypatch, kind
+):
+    """Writer B's whole batch commits while writer A is inside its
+    commit (A's snapshot written, its CAS not yet run). A's CAS then
+    refuses and A derives again on B's snapshot, so the table equals
+    the fold over the seed and both batches. B carries the lower batch
+    id: the window fold's replay guard keeps the newest committed id,
+    and in commit order B precedes A."""
+    import cpx_etl_spark.sources.sinks as sinks
+
+    apply, state, want_all, _out, sink = _fold(spark, tmp_path, kind)
+    seed, rows_a, rows_b = FOLD_ROWS[kind]
+    apply(seed, 0)
+    real_cas = sinks._commit_manifest_cas
+    calls = []
+
+    def cas_with_b_inside(path, version, expected_entry):
+        calls.append(version)
+        monkeypatch.setattr(sinks, "_commit_manifest_cas", real_cas)
+        apply(rows_b, 1)
+        return real_cas(path, version, expected_entry)
+
+    monkeypatch.setattr(sinks, "_commit_manifest_cas", cas_with_b_inside)
+    apply(rows_a, 2)
+    assert len(calls) == 1
+    assert state() == want_all(seed, rows_a, rows_b)
+    if kind == "bloom":
+        # A and B each append the keys new against the seed's bitmap
+        got = sorted(r["event_id"] for r in spark.read.parquet(sink).collect())
+        assert got == [1, 2, 3, 4, 5, 6, 7]
+
+
+@pytest.mark.parametrize("kind", ["bloom", "hll"])
+def test_fold_over_orphan_first_version_starts_clean(spark, tmp_path, kind):
+    """A writer that crashed before its first commit leaves v00000001/
+    and a stale claim, with no manifest. The next batch must read that
+    as no base (not as a table, not as a flat layout), commit, and let
+    the claim-time GC reap the orphan."""
+    import os
+    import time
+
+    from cpx_etl_spark.sources.sinks import list_upsert_versions
+
+    apply, state, want_all, out, _sink = _fold(spark, tmp_path, kind)
+    orphan = os.path.join(out, "v00000001")
+    # the torn write holds a row no fold of the batch produces
+    spark.createDataFrame(
+        [(0, 60)], "word_idx long, bits long" if kind == "bloom"
+        else "bucket long, r int",
+    ).write.parquet(orphan)
+    claim = os.path.join(out, "_CLAIM.v00000001")
+    open(claim, "w").close()
+    old = time.time() - 7200
+    os.utime(claim, (old, old))
+    os.utime(orphan, (old, old))
+
+    rows = FOLD_ROWS[kind][0]
+    apply(rows, 0)
+    assert state() == want_all(rows)
+    assert list_upsert_versions(out) == ["v00000001"]
+    assert not [e for e in os.listdir(out) if e.startswith("_CLAIM.")]
+    apply(FOLD_ROWS[kind][1], 1)  # and the stream goes on
+    assert state() == want_all(rows, FOLD_ROWS[kind][1])
